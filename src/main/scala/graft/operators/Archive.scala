@@ -1,12 +1,13 @@
 package graft.operators
 
 import java.io.ByteArrayOutputStream
-import java.util.zip.{CRC32, Deflater, Inflater}
+import java.util.zip.{CRC32, Deflater}
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
+import graft.operators.Bytes.{i64le, le16, le32, le64, u16le, u32le}
 
 /** Archive member walks — the packaging layer of training shards.
   *
@@ -294,14 +295,6 @@ object Archive {
   final case class ZipEntryMeta(name: String, method: Int, compSize: Long,
       uncompSize: Long, crc32: Long, localOffset: Long)
 
-  private def u16le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def u32le(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xff).toLong | ((b(i + 1) & 0xff).toLong << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-  private def u64le(b: Array[Byte], i: Int): Long =
-    u32le(b, i) | (u32le(b, i + 4) << 32)
-
   /** Central-directory walk: locate the EOCD record (PK\05\06 scanned
     * back through the ≤65535-byte comment space, comment length
     * cross-checked against the tail), then parse `nEntries` central
@@ -340,15 +333,15 @@ object Archive {
         return zipCentral(b, eocd, n, cdSize, cdOff)
       }
       if (u32le(b, loc + 16) != 1L) return None // single-disk only
-      val z64 = u64le(b, loc + 8)
+      val z64 = i64le(b, loc + 8)
       if (z64 < 0 || z64 + 56 > loc) return None
       val z = z64.toInt
       if (!(b(z) == 'P' && b(z + 1) == 'K' && b(z + 2) == 6 && b(z + 3) == 6))
         return None
-      n = u64le(b, z + 32) // total entry count
-      if (n != u64le(b, z + 24)) return None // this-disk vs total
-      cdSize = u64le(b, z + 40)
-      cdOff = u64le(b, z + 48)
+      n = i64le(b, z + 32) // total entry count
+      if (n != i64le(b, z + 24)) return None // this-disk vs total
+      cdSize = i64le(b, z + 40)
+      cdOff = i64le(b, z + 48)
     } else if (n != u16le(b, eocd + 8)) return None // single-disk only
     zipCentral(b, eocd, n, cdSize, cdOff)
   }
@@ -390,9 +383,9 @@ object Archive {
           if (eo + 4 + hlen > eEnd) return None
           if (hid == 1) {
             var p = eo + 4
-            if (uncomp == 0xffffffffL) { uncomp = u64le(b, p); p += 8 }
-            if (comp == 0xffffffffL) { comp = u64le(b, p); p += 8 }
-            if (localOff == 0xffffffffL) { localOff = u64le(b, p); p += 8 }
+            if (uncomp == 0xffffffffL) { uncomp = i64le(b, p); p += 8 }
+            if (comp == 0xffffffffL) { comp = i64le(b, p); p += 8 }
+            if (localOff == 0xffffffffL) { localOff = i64le(b, p); p += 8 }
             if (p > eo + 4 + hlen) return None
             found = true
           } else eo += 4 + hlen
@@ -427,22 +420,9 @@ object Archive {
           if (e.compSize != e.uncompSize) return None
           java.util.Arrays.copyOfRange(b, start.toInt, (start + e.compSize).toInt)
         case 8 =>
-          val inf = new Inflater(true)
-          inf.setInput(b, start.toInt, e.compSize.toInt)
-          val out = new ByteArrayOutputStream(math.max(64, e.uncompSize.toInt))
-          val buf = new Array[Byte](8192)
-          var dummyFed = false
-          while (!inf.finished()) {
-            val nOut = inf.inflate(buf)
-            if (nOut == 0 && inf.needsInput()) {
-              if (dummyFed) throw new RuntimeException("trunc")
-              inf.setInput(Array[Byte](0)); dummyFed = true
-            }
-            out.write(buf, 0, nOut)
-            if (out.size() > e.uncompSize) throw new RuntimeException("overrun")
-          }
-          inf.end()
-          out.toByteArray
+          if (e.uncompSize > Bytes.MaxInflate) return None
+          Bytes.inflate(b, start.toInt, e.compSize.toInt, e.uncompSize.toInt,
+            nowrap = true).getOrElse(return None)._1
         case 12 => // bzip2 (APPNOTE 4.4.5): payload is one .bz2 stream
           Bzip2.bunzip2(java.util.Arrays.copyOfRange(b, start.toInt,
             (start + e.compSize).toInt)) match {
@@ -474,10 +454,6 @@ object Archive {
     * real CRCs, real deflate streams, central dir + EOCD. */
   def encodeZip(entries: Seq[(String, Array[Byte], Boolean)]): Array[Byte] = {
     val out = new ByteArrayOutputStream(entries.map(_._2.length + 128).sum + 64)
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = {
-      le16((v & 0xffff).toInt); le16(((v >> 16) & 0xffff).toInt)
-    }
     val metas = entries.map { case (name, payload, deflate) =>
       val nb = name.getBytes("UTF-8")
       val crc = new CRC32(); crc.update(payload)
@@ -494,10 +470,11 @@ object Archive {
         }
       val localOff = out.size().toLong
       out.write('P'); out.write('K'); out.write(3); out.write(4)
-      le16(20); le16(0); le16(if (deflate) 8 else 0)
-      le16(0); le16(0x21) // fixed DOS time/date (1980-01-01 00:01)
-      le32(crc.getValue); le32(comp.length.toLong); le32(payload.length.toLong)
-      le16(nb.length); le16(0)
+      le16(out, 20); le16(out, 0); le16(out, if (deflate) 8 else 0)
+      le16(out, 0); le16(out, 0x21) // fixed DOS time/date (1980-01-01 00:01)
+      le32(out, crc.getValue); le32(out, comp.length.toLong)
+      le32(out, payload.length.toLong)
+      le16(out, nb.length); le16(out, 0)
       out.write(nb, 0, nb.length)
       out.write(comp, 0, comp.length)
       ZipEntryMeta(name, if (deflate) 8 else 0, comp.length.toLong,
@@ -507,17 +484,18 @@ object Archive {
     metas.foreach { m =>
       val nb = m.name.getBytes("UTF-8")
       out.write('P'); out.write('K'); out.write(1); out.write(2)
-      le16(20); le16(20); le16(0); le16(m.method)
-      le16(0); le16(0x21)
-      le32(m.crc32); le32(m.compSize); le32(m.uncompSize)
-      le16(nb.length); le16(0); le16(0); le16(0); le16(0); le32(0)
-      le32(m.localOffset)
+      le16(out, 20); le16(out, 20); le16(out, 0); le16(out, m.method)
+      le16(out, 0); le16(out, 0x21)
+      le32(out, m.crc32); le32(out, m.compSize); le32(out, m.uncompSize)
+      le16(out, nb.length); le16(out, 0); le16(out, 0); le16(out, 0)
+      le16(out, 0); le32(out, 0)
+      le32(out, m.localOffset)
       out.write(nb, 0, nb.length)
     }
     val cdSize = out.size().toLong - cdOff
     out.write('P'); out.write('K'); out.write(5); out.write(6)
-    le16(0); le16(0); le16(metas.size); le16(metas.size)
-    le32(cdSize); le32(cdOff); le16(0)
+    le16(out, 0); le16(out, 0); le16(out, metas.size); le16(out, metas.size)
+    le32(out, cdSize); le32(out, cdOff); le16(out, 0)
     out.toByteArray
   }
 
@@ -534,11 +512,6 @@ object Archive {
     * no EOS marker so general-purpose bit 1 stays 0). */
   def encodeZipMethods(entries: Seq[(String, Array[Byte], Int)]): Array[Byte] = {
     val out = new ByteArrayOutputStream(512)
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = {
-      var k = 0
-      while (k < 4) { out.write(((v >> (8 * k)) & 0xff).toInt); k += 1 }
-    }
     val centrals = Vector.newBuilder[(String, Int, Long, Long, Long, Long)]
     entries.foreach { case (name, data, method) =>
       val comp: Array[Byte] = method match {
@@ -558,12 +531,13 @@ object Archive {
       val crc = new CRC32(); crc.update(data)
       val localOff = out.size.toLong
       out.write('P'); out.write('K'); out.write(3); out.write(4)
-      le16(63); le16(0); le16(method)
-      le16(0); le16(0) // time, date
-      le32(crc.getValue); le32(comp.length.toLong); le32(data.length.toLong)
+      le16(out, 63); le16(out, 0); le16(out, method)
+      le16(out, 0); le16(out, 0) // time, date
+      le32(out, crc.getValue); le32(out, comp.length.toLong)
+      le32(out, data.length.toLong)
       // length fields count UTF-8 BYTES, not UTF-16 chars
       val nb = name.getBytes("UTF-8")
-      le16(nb.length); le16(0)
+      le16(out, nb.length); le16(out, 0)
       out.write(nb, 0, nb.length)
       out.write(comp, 0, comp.length)
       centrals += ((name, method, crc.getValue, comp.length.toLong,
@@ -572,29 +546,25 @@ object Archive {
     val cdStart = out.size.toLong
     centrals.result().foreach { case (name, method, crc, cs, us, off) =>
       out.write('P'); out.write('K'); out.write(1); out.write(2)
-      le16(63); le16(63); le16(0); le16(method)
-      le16(0); le16(0)
-      le32(crc); le32(cs); le32(us)
+      le16(out, 63); le16(out, 63); le16(out, 0); le16(out, method)
+      le16(out, 0); le16(out, 0)
+      le32(out, crc); le32(out, cs); le32(out, us)
       val nb = name.getBytes("UTF-8")
-      le16(nb.length); le16(0); le16(0)
-      le16(0); le16(0); le32(0)
-      le32(off)
+      le16(out, nb.length); le16(out, 0); le16(out, 0)
+      le16(out, 0); le16(out, 0); le32(out, 0)
+      le32(out, off)
       out.write(nb, 0, nb.length)
     }
     val cdSize = out.size.toLong - cdStart
     out.write('P'); out.write('K'); out.write(5); out.write(6)
-    le16(0); le16(0); le16(entries.length); le16(entries.length)
-    le32(cdSize); le32(cdStart); le16(0)
+    le16(out, 0); le16(out, 0); le16(out, entries.length)
+    le16(out, entries.length)
+    le32(out, cdSize); le32(out, cdStart); le16(out, 0)
     out.toByteArray
   }
 
   def encodeZip64(entries: Seq[(String, Array[Byte], Boolean)]): Array[Byte] = {
     val out = new ByteArrayOutputStream(entries.map(_._2.length + 192).sum + 160)
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = {
-      le16((v & 0xffff).toInt); le16(((v >> 16) & 0xffff).toInt)
-    }
-    def le64(v: Long): Unit = { le32(v & 0xffffffffL); le32(v >>> 32) }
     val metas = entries.map { case (name, payload, deflate) =>
       val nb = name.getBytes("UTF-8")
       val crc = new CRC32(); crc.update(payload)
@@ -611,12 +581,14 @@ object Archive {
         }
       val localOff = out.size().toLong
       out.write('P'); out.write('K'); out.write(3); out.write(4)
-      le16(45); le16(0); le16(if (deflate) 8 else 0) // version 4.5
-      le16(0); le16(0x21)
-      le32(crc.getValue); le32(0xffffffffL); le32(0xffffffffL)
-      le16(nb.length); le16(20) // zip64 extra: id+len+two u64s
+      // version 4.5
+      le16(out, 45); le16(out, 0); le16(out, if (deflate) 8 else 0)
+      le16(out, 0); le16(out, 0x21)
+      le32(out, crc.getValue); le32(out, 0xffffffffL); le32(out, 0xffffffffL)
+      le16(out, nb.length); le16(out, 20) // zip64 extra: id+len+two u64s
       out.write(nb, 0, nb.length)
-      le16(1); le16(16); le64(payload.length.toLong); le64(comp.length.toLong)
+      le16(out, 1); le16(out, 16); le64(out, payload.length.toLong)
+      le64(out, comp.length.toLong)
       out.write(comp, 0, comp.length)
       ZipEntryMeta(name, if (deflate) 8 else 0, comp.length.toLong,
         payload.length.toLong, crc.getValue, localOff)
@@ -625,29 +597,30 @@ object Archive {
     metas.foreach { m =>
       val nb = m.name.getBytes("UTF-8")
       out.write('P'); out.write('K'); out.write(1); out.write(2)
-      le16(45); le16(45); le16(0); le16(m.method)
-      le16(0); le16(0x21)
-      le32(m.crc32); le32(0xffffffffL); le32(0xffffffffL)
-      le16(nb.length); le16(28); le16(0); le16(0); le16(0); le32(0)
-      le32(0xffffffffL)
+      le16(out, 45); le16(out, 45); le16(out, 0); le16(out, m.method)
+      le16(out, 0); le16(out, 0x21)
+      le32(out, m.crc32); le32(out, 0xffffffffL); le32(out, 0xffffffffL)
+      le16(out, nb.length); le16(out, 28); le16(out, 0); le16(out, 0)
+      le16(out, 0); le32(out, 0)
+      le32(out, 0xffffffffL)
       out.write(nb, 0, nb.length)
-      le16(1); le16(24)
-      le64(m.uncompSize); le64(m.compSize); le64(m.localOffset)
+      le16(out, 1); le16(out, 24)
+      le64(out, m.uncompSize); le64(out, m.compSize); le64(out, m.localOffset)
     }
     val cdSize = out.size().toLong - cdOff
     val z64Off = out.size().toLong
     // ZIP64 EOCD record (56 bytes, "size of record" excludes sig+size)
     out.write('P'); out.write('K'); out.write(6); out.write(6)
-    le64(44); le16(45); le16(45); le32(0); le32(0)
-    le64(metas.size.toLong); le64(metas.size.toLong)
-    le64(cdSize); le64(cdOff)
+    le64(out, 44); le16(out, 45); le16(out, 45); le32(out, 0); le32(out, 0)
+    le64(out, metas.size.toLong); le64(out, metas.size.toLong)
+    le64(out, cdSize); le64(out, cdOff)
     // ZIP64 EOCD locator
     out.write('P'); out.write('K'); out.write(6); out.write(7)
-    le32(0); le64(z64Off); le32(1)
+    le32(out, 0); le64(out, z64Off); le32(out, 1)
     // classic EOCD, counts/offsets pinned
     out.write('P'); out.write('K'); out.write(5); out.write(6)
-    le16(0); le16(0); le16(0xffff); le16(0xffff)
-    le32(0xffffffffL); le32(0xffffffffL); le16(0)
+    le16(out, 0); le16(out, 0); le16(out, 0xffff); le16(out, 0xffff)
+    le32(out, 0xffffffffL); le32(out, 0xffffffffL); le16(out, 0)
     out.toByteArray
   }
 

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
+import graft.operators.Bytes.{i32le, i64le, u16le}
 
 /** Arrow IPC stream reader — from the public Arrow columnar
   * specification, including the FLATBUFFERS layer parsed from scratch
@@ -34,46 +35,36 @@ object ArrowIpc {
 
   // ---- flatbuffers primitives -----------------------------------------
 
-  private def i16(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-
-  private def i32(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) |
-      ((b(i + 3) & 0xff) << 24)
-
-  private def i64(b: Array[Byte], i: Int): Long =
-    (i32(b, i) & 0xffffffffL) | (i32(b, i + 4).toLong << 32)
-
   private final class Corrupt extends RuntimeException(null, null, false, false)
   private def fail(): Nothing = throw new Corrupt
 
   /** Field slot address inside a flatbuffer table, or -1 if absent. */
   private def slot(b: Array[Byte], table: Int, fieldId: Int): Int = {
     if (table < 0 || table + 4 > b.length) fail()
-    val vtable = table - i32(b, table)
+    val vtable = table - i32le(b, table)
     if (vtable < 0 || vtable + 4 > b.length) fail()
-    val vsize = i16(b, vtable)
+    val vsize = u16le(b, vtable)
     val at = 4 + 2 * fieldId
     if (at + 2 > vsize) return -1
-    val off = i16(b, vtable + at)
+    val off = u16le(b, vtable + at)
     if (off == 0) -1 else table + off
   }
 
   private def tableAt(b: Array[Byte], pos: Int): Int = {
     if (pos + 4 > b.length) fail()
-    pos + i32(b, pos)
+    pos + i32le(b, pos)
   }
 
   private def stringAt(b: Array[Byte], pos: Int): String = {
-    val s = pos + i32(b, pos)
-    val len = i32(b, s)
+    val s = pos + i32le(b, pos)
+    val len = i32le(b, s)
     if (len < 0 || s + 4 + len > b.length) fail()
     new String(b, s + 4, len, "UTF-8")
   }
 
   private def vectorAt(b: Array[Byte], pos: Int): (Int, Int) = {
-    val v = pos + i32(b, pos)
-    val len = i32(b, v)
+    val v = pos + i32le(b, pos)
+    val len = i32le(b, v)
     if (len < 0) fail()
     (v + 4, len) // (first element, count)
   }
@@ -100,11 +91,11 @@ object ArrowIpc {
       while (!done) {
         if (i + 4 > b.length) { done = true }
         else {
-          var metaLen = i32(b, i)
+          var metaLen = i32le(b, i)
           var metaOff = i + 4
           if (metaLen == -1) { // continuation marker
             if (i + 8 > b.length) fail()
-            metaLen = i32(b, i + 4)
+            metaLen = i32le(b, i + 4)
             metaOff = i + 8
           }
           if (metaLen == 0) { done = true; i = metaOff }
@@ -116,7 +107,7 @@ object ArrowIpc {
             val headerType = if (htSlot < 0) 0 else b(htSlot) & 0xff
             val hSlot = slot(b, msg, 2)
             val blSlot = slot(b, msg, 3)
-            val bodyLen = if (blSlot < 0) 0L else i64(b, blSlot)
+            val bodyLen = if (blSlot < 0) 0L else i64le(b, blSlot)
             if (bodyLen < 0 || metaOff + metaLen + bodyLen > b.length) fail()
             val bodyOff = metaOff + metaLen
             headerType match {
@@ -140,7 +131,7 @@ object ArrowIpc {
                       if (tSlot < 0) fail()
                       val it = tableAt(b, tSlot)
                       val bwSlot = slot(b, it, 0)
-                      val bw = if (bwSlot < 0) 0 else i32(b, bwSlot)
+                      val bw = if (bwSlot < 0) 0 else i32le(b, bwSlot)
                       if (bw != 64) return None
                       CLong
                     case 5 => CUtf8
@@ -157,7 +148,7 @@ object ArrowIpc {
                 if (fields == null || hSlot < 0) fail()
                 val rb = tableAt(b, hSlot)
                 val lenSlot = slot(b, rb, 0)
-                val nRows = if (lenSlot < 0) 0L else i64(b, lenSlot)
+                val nRows = if (lenSlot < 0) 0L else i64le(b, lenSlot)
                 if (nRows < 0 || nRows > maxRows) fail()
                 totalRows += nRows
                 if (totalRows > maxRows) fail()
@@ -190,8 +181,8 @@ object ArrowIpc {
                 var bufIdx = 0
                 def bufBytes(k: Int): Array[Byte] = {
                   if (k >= bn) fail()
-                  val off = i64(b, bv + 16 * k)
-                  val len = i64(b, bv + 16 * k + 8)
+                  val off = i64le(b, bv + 16 * k)
+                  val len = i64le(b, bv + 16 * k + 8)
                   if (off < 0 || len < 0 || off + len > bodyLen) fail()
                   val start = bodyOff + off.toInt
                   if (compCodec < 0 || len == 0)
@@ -199,7 +190,7 @@ object ArrowIpc {
                       start + len.toInt)
                   else {
                     if (len < 8) fail()
-                    val uncomp = i64(b, start)
+                    val uncomp = i64le(b, start)
                     val payload = java.util.Arrays.copyOfRange(b,
                       start + 8, start + len.toInt)
                     if (uncomp == -1L) payload
@@ -219,7 +210,7 @@ object ArrowIpc {
                 }
                 var f = 0
                 while (f < fields.length) {
-                  val nodeLen = i64(b, nv + 16 * f).toInt
+                  val nodeLen = i64le(b, nv + 16 * f).toInt
                   val vArr = bufBytes(bufIdx); bufIdx += 1
                   def validAt(r: Int): Boolean =
                     vArr.length == 0 ||
@@ -231,7 +222,7 @@ object ArrowIpc {
                       var r = 0
                       while (r < nodeLen) {
                         cols(f) += (if (validAt(r))
-                          Some(Right(i64(dArr, 8 * r)))
+                          Some(Right(i64le(dArr, 8 * r)))
                         else None)
                         r += 1
                       }
@@ -245,8 +236,8 @@ object ArrowIpc {
                       var r = 0
                       while (r < nodeLen) {
                         if (validAt(r)) {
-                          val s0 = i32(oArr, 4 * r)
-                          val s1 = i32(oArr, 4 * (r + 1))
+                          val s0 = i32le(oArr, 4 * r)
+                          val s1 = i32le(oArr, 4 * (r + 1))
                           if (s0 < 0 || s1 < s0 || s1 > dArr.length) fail()
                           cols(f) += Some(Left(new String(dArr,
                             s0, s1 - s0, "UTF-8")))
@@ -285,7 +276,7 @@ object ArrowIpc {
       k += 1
     }
     if (b(6) != 0 || b(7) != 0) return None
-    val footerLen = i32(b, b.length - 10)
+    val footerLen = i32le(b, b.length - 10)
     if (footerLen <= 0 || footerLen > b.length - 18) return None
     // the stream body sits between the 8-byte magic pad and the footer
     val streamEnd = b.length - 10 - footerLen

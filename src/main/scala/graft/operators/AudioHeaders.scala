@@ -2,6 +2,8 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
+import graft.operators.Bytes.{i64le, le16, le32, u16le, u32le}
+
 /** Pure-JVM audio header codec: parse (and, for fixtures, emit) the
   * metadata-bearing prefix of WAV (RIFF/WAVE) streams — the audio
   * sibling of [[ImageHeaders]], no codec libraries, no native deps.
@@ -27,11 +29,6 @@ object AudioHeaders {
   final case class WavMeta(channels: Int, sampleRate: Int,
       bitsPerSample: Int, nSamples: Long)
 
-  private def u16le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def u32le(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xff).toLong | ((b(i + 1) & 0xff).toLong << 8) |
-      ((b(i + 2) & 0xff).toLong << 16) | ((b(i + 3) & 0xff).toLong << 24)
   private def tag(b: Array[Byte], i: Int): String =
     new String(b, i, 4, "US-ASCII")
 
@@ -254,7 +251,7 @@ object AudioHeaders {
     if (b == null || b.length < 8) return None
     if (b(0) != 'f' || b(1) != 'L' || b(2) != 'a' || b(3) != 'C') return None
     if ((b(4) & 0x7f) != 0) return None // first block must be STREAMINFO
-    val len = ((b(5) & 0xff) << 16) | ((b(6) & 0xff) << 8) | (b(7) & 0xff)
+    val len = Bytes.u24be(b, 5)
     if (len < 34 || 8 + 34 > b.length) return None
     val p = 8 // STREAMINFO payload; packed fields start at byte 10
     def u(i: Int): Int = b(p + i) & 0xff
@@ -317,12 +314,6 @@ object AudioHeaders {
     * granules run at `sampleRate`). */
   final case class OggMeta(codec: String, channels: Int, sampleRate: Int,
       preSkip: Int, nPages: Long, nSamples: Long)
-
-  private def i64le(b: Array[Byte], i: Int): Long = {
-    var v = 0L; var k = 7
-    while (k >= 0) { v = (v << 8) | (b(i + k) & 0xff); k -= 1 }
-    v
-  }
 
   /** Ogg page CRC: CRC-32 poly 0x04c11db7, init 0, NO reflection, NO
     * final xor (RFC 3533 appendix A) — deliberately not java.util.zip's
@@ -402,7 +393,7 @@ object AudioHeaders {
     if (p.length >= 19 && new String(p, 0, 8, "US-ASCII") == "OpusHead") {
       if (u8(8) != 1) return None // OpusHead version
       val ch = u8(9)
-      val preSkip = (p(10) & 0xff) | ((p(11) & 0xff) << 8)
+      val preSkip = u16le(p, 10)
       val inRate = u32le(p, 12)
       val samples = lastGranule - preSkip
       if (ch <= 0 || inRate <= 0 || inRate > Int.MaxValue || samples < 0)
@@ -564,16 +555,12 @@ object AudioHeaders {
   def vorbisCommentBody(vendor: String,
       comments: Seq[(String, String)]): Array[Byte] = {
     val out = new ByteArrayOutputStream(64)
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
     val vb = vendor.getBytes("UTF-8")
-    le32(vb.length.toLong); out.write(vb, 0, vb.length)
-    le32(comments.length.toLong)
+    le32(out, vb.length.toLong); out.write(vb, 0, vb.length)
+    le32(out, comments.length.toLong)
     comments.foreach { case (k, v) =>
       val cb = s"$k=$v".getBytes("UTF-8")
-      le32(cb.length.toLong); out.write(cb, 0, cb.length)
+      le32(out, cb.length.toLong); out.write(cb, 0, cb.length)
     }
     out.toByteArray
   }
@@ -629,8 +616,7 @@ object AudioHeaders {
         val hdr = b(off.toInt) & 0xff
         last = (hdr & 0x80) != 0
         val typ = hdr & 0x7f
-        val len = ((b(off.toInt + 1) & 0xff) << 16) |
-          ((b(off.toInt + 2) & 0xff) << 8) | (b(off.toInt + 3) & 0xff)
+        val len = Bytes.u24be(b, off.toInt + 1)
         if (off + 4 + len > b.length) return None
         if (typ == 4)
           return parseVorbisBody(b, off.toInt + 4, (off + 4 + len).toInt)
@@ -678,30 +664,25 @@ object AudioHeaders {
       s"data chunk size ${nSamples * block} exceeds u32")
     val out = new ByteArrayOutputStream(note.length + 64)
     def ascii(s: String): Unit = out.write(s.getBytes("US-ASCII"), 0, 4)
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
     // a LIST payload starts with a mandatory 4-byte list-type ('INFO');
     // omitting it is nonstandard RIFF that third-party tools reject even
     // though a hop-by-size walker tolerates it. Payload = type + note.
     val listPayload = 4 + note.length
     val noteChunk = 8 + listPayload + (listPayload & 1)
     val riffSize = 4 + noteChunk + (8 + 16) + 8 // WAVE + LIST + fmt + data hdr
-    ascii("RIFF"); le32(riffSize); ascii("WAVE")
-    ascii("LIST"); le32(listPayload)
+    ascii("RIFF"); le32(out, riffSize); ascii("WAVE")
+    ascii("LIST"); le32(out, listPayload)
     ascii("INFO")
     out.write(note, 0, note.length)
     if ((listPayload & 1) == 1) out.write(0) // RIFF even padding
-    ascii("fmt "); le32(16)
-    le16(1) // PCM
-    le16(channels)
-    le32(sampleRate)
-    le32(sampleRate.toLong * block) // byte rate
-    le16(block)
-    le16(bitsPerSample)
-    ascii("data"); le32(nSamples * block) // declared, not carried
+    ascii("fmt "); le32(out, 16)
+    le16(out, 1) // PCM
+    le16(out, channels)
+    le32(out, sampleRate)
+    le32(out, sampleRate.toLong * block) // byte rate
+    le16(out, block)
+    le16(out, bitsPerSample)
+    ascii("data"); le32(out, nSamples * block) // declared, not carried
     out.toByteArray
   }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import java.io.ByteArrayOutputStream
 
 import graft.engine.Tables
+import graft.operators.Bytes.{i32le, le32}
 
 /** AVI container walk — the RIFF-based video container that completes
   * the trio with MP4 (q241) and WebM (q344); legacy crawls and
@@ -22,10 +23,6 @@ import graft.engine.Tables
   */
 object Avi {
 
-  private def le32(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-
   /** Byte-valid AVI: avih from the given parameters, one strl per
     * stream type, movi with the payload chunks, idx1 over them. */
   def encodeAvi(usPerFrame: Int, width: Int, height: Int,
@@ -34,24 +31,20 @@ object Avi {
     def chunk(tag: String, payload: Array[Byte]): Array[Byte] = {
       val out = new ByteArrayOutputStream(payload.length + 8)
       out.write(tag.getBytes("US-ASCII"), 0, 4)
-      out.write(payload.length & 0xff); out.write((payload.length >> 8) & 0xff)
-      out.write((payload.length >> 16) & 0xff)
-      out.write((payload.length >> 24) & 0xff)
+      le32(out, payload.length)
       out.write(payload, 0, payload.length)
       if (payload.length % 2 == 1) out.write(0)
       out.toByteArray
     }
-    def u32(v: Long): Array[Byte] = Array(
-      (v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
-      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
     def list(kind: String, body: Array[Byte]): Array[Byte] =
       chunk("LIST", kind.getBytes("US-ASCII") ++ body)
 
-    val avih = u32(usPerFrame.toLong) ++ u32(0) ++ u32(0) ++ u32(0x10) ++
-      u32(frames.count(_._1.endsWith("dc")).toLong) ++ u32(0) ++
-      u32(streamTypes.size.toLong) ++ u32(0) ++
-      u32(width.toLong) ++ u32(height.toLong) ++
-      u32(0) ++ u32(0) ++ u32(0) ++ u32(0)
+    val avihOut = new ByteArrayOutputStream(56)
+    Seq(usPerFrame.toLong, 0L, 0L, 0x10L,
+      frames.count(_._1.endsWith("dc")).toLong, 0L,
+      streamTypes.size.toLong, 0L, width.toLong, height.toLong,
+      0L, 0L, 0L, 0L).foreach(le32(avihOut, _))
+    val avih = avihOut.toByteArray
     val strls = streamTypes.map { t =>
       val strh = t.getBytes("US-ASCII") ++ Array.fill(52)(0.toByte)
       list("strl", chunk("strh", strh) ++
@@ -63,15 +56,18 @@ object Avi {
       .fold(Array.emptyByteArray)(_ ++ _)
     val movi = list("movi", moviBody)
     // idx1: 16 bytes per frame chunk (tag, flags, offset, size)
-    val idxBody = frames.map { case (tag, payload) =>
-      tag.getBytes("US-ASCII") ++ u32(0x10) ++ u32(4) ++
-        u32(payload.length.toLong)
-    }.fold(Array.emptyByteArray)(_ ++ _)
+    val idx = new ByteArrayOutputStream(16 * frames.size)
+    frames.foreach { case (tag, payload) =>
+      val t = tag.getBytes("US-ASCII")
+      idx.write(t, 0, t.length)
+      le32(idx, 0x10); le32(idx, 4); le32(idx, payload.length)
+    }
+    val idxBody = idx.toByteArray
     val body = "AVI ".getBytes("US-ASCII") ++ hdrl ++ movi ++
       chunk("idx1", idxBody)
     val out = new ByteArrayOutputStream(body.length + 8)
     out.write("RIFF".getBytes("US-ASCII"), 0, 4)
-    out.write(u32(body.length.toLong), 0, 4)
+    le32(out, body.length)
     out.write(body, 0, body.length)
     out.toByteArray
   }
@@ -88,7 +84,7 @@ object Avi {
       if (bytes.length < 12) return None
       if (new String(bytes, 0, 4, "US-ASCII") != "RIFF" ||
         new String(bytes, 8, 4, "US-ASCII") != "AVI ") return None
-      val riffLen = le32(bytes, 4)
+      val riffLen = i32le(bytes, 4)
       if (riffLen < 4 || 8 + riffLen > bytes.length) return None
       var usPerFrame = -1L; var totalFrames = -1L
       var width = -1; var height = -1; var declaredStreams = -1
@@ -99,7 +95,7 @@ object Avi {
         var off = from
         while (off + 8 <= until) {
           val tag = new String(bytes, off, 4, "US-ASCII")
-          val len = le32(bytes, off + 8 - 4)
+          val len = i32le(bytes, off + 8 - 4)
           if (len < 0 || off + 8 + len > until) return false
           tag match {
             case "LIST" =>
@@ -108,11 +104,11 @@ object Avi {
               if (!walk(off + 12, off + 8 + len, kind)) return false
             case "avih" =>
               if (len < 40 || ctx != "hdrl") return false
-              usPerFrame = le32(bytes, off + 8).toLong & 0xffffffffL
-              totalFrames = le32(bytes, off + 24).toLong & 0xffffffffL
-              declaredStreams = le32(bytes, off + 32)
-              width = le32(bytes, off + 40)
-              height = le32(bytes, off + 44)
+              usPerFrame = i32le(bytes, off + 8).toLong & 0xffffffffL
+              totalFrames = i32le(bytes, off + 24).toLong & 0xffffffffL
+              declaredStreams = i32le(bytes, off + 32)
+              width = i32le(bytes, off + 40)
+              height = i32le(bytes, off + 44)
             case "strh" =>
               if (len < 4 || ctx != "strl") return false
               streams += 1

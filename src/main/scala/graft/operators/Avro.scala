@@ -23,7 +23,7 @@ object Avro {
 
   /** Zigzag-varint at `off` (Avro's long encoding): (value, next). */
   private[operators] def zigzagVarint(b: Array[Byte], off: Int): Option[(Long, Int)] =
-    Protobuf.varint(b, off).map { case (u, next) =>
+    Bytes.varint(b, off).map { case (u, next) =>
       ((u >>> 1) ^ -(u & 1L), next)
     }
 
@@ -84,7 +84,7 @@ object Avro {
   // --------------------------------------------------- fixture emitter
 
   private def putZigzag(out: ByteArrayOutputStream, v: Long): Unit =
-    Protobuf.putVarint(out, (v << 1) ^ (v >> 63))
+    Bytes.putVarint(out, (v << 1) ^ (v >> 63))
 
   private def putBytes(out: ByteArrayOutputStream, b: Array[Byte]): Unit = {
     putZigzag(out, b.length.toLong); out.write(b, 0, b.length)

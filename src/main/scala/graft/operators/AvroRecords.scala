@@ -165,37 +165,17 @@ object AvroRecords {
     }
   }
 
-  private def inflateRaw(b: Array[Byte]): Option[Array[Byte]] =
-    try {
-      val inf = new java.util.zip.Inflater(true)
-      inf.setInput(b)
-      val out = new ByteArrayOutputStream(b.length * 2)
-      val buf = new Array[Byte](8192)
-      var stuck = false
-      while (!inf.finished() && !stuck) {
-        val k = inf.inflate(buf)
-        if (k == 0 && inf.needsInput()) stuck = true else out.write(buf, 0, k)
-        if (out.size > (1 << 26)) stuck = true
-      }
-      val ok = inf.finished()
-      inf.end()
-      if (ok) Some(out.toByteArray) else None
-    } catch { case _: Exception => None }
-
   private def decodeBlockPayload(codec: String,
       b: Array[Byte]): Option[Array[Byte]] = codec match {
     case "null"    => Some(b)
-    case "deflate" => inflateRaw(b)
+    case "deflate" => Bytes.inflate(b, 0, b.length, nowrap = true).map(_._1)
     case "snappy" =>
       if (b.length < 4) return None
       val comp = java.util.Arrays.copyOfRange(b, 0, b.length - 4)
       SnappyCodec.decompressRaw(comp, 1 << 26).filter { raw =>
         val crc = new java.util.zip.CRC32
         crc.update(raw)
-        val want = ((b(b.length - 4) & 0xffL) << 24) |
-          ((b(b.length - 3) & 0xffL) << 16) |
-          ((b(b.length - 2) & 0xffL) << 8) | (b(b.length - 1) & 0xffL)
-        crc.getValue == want
+        crc.getValue == Bytes.u32be(b, b.length - 4)
       }
     case _ => None
   }
@@ -281,7 +261,7 @@ object AvroRecords {
   // --------------------------------------------------- fixture emitter
 
   private def putZig(out: ByteArrayOutputStream, v: Long): Unit =
-    Protobuf.putVarint(out, (v << 1) ^ (v >> 63))
+    Bytes.putVarint(out, (v << 1) ^ (v >> 63))
 
   private def encodeValue(out: ByteArrayOutputStream, t: AType,
       v: AV): Unit = (t, v) match {

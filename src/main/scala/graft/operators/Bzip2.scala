@@ -5,6 +5,7 @@ import java.io.ByteArrayOutputStream
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
+import graft.operators.Bytes.BitReader
 
 /** bzip2 CODEC — pure JVM, from the public format description (the
   * format has no official spec; the de-facto references are bzlib's
@@ -73,31 +74,7 @@ object Bzip2 {
     def result: Int = ~v
   }
 
-  // ---- MSB-first bit IO ----------------------------------------------
-
-  private final class BitReader(b: Array[Byte]) {
-    var pos = 0L // bit position
-    def bits(n: Int): Int = {
-      var v = 0
-      var k = 0
-      while (k < n) {
-        val byteAt = (pos >>> 3).toInt
-        if (byteAt >= b.length) fail()
-        v = (v << 1) | ((b(byteAt) >>> (7 - (pos & 7).toInt)) & 1)
-        pos += 1
-        k += 1
-      }
-      v
-    }
-    def bit(): Int = bits(1)
-    def bitsLong(n: Int): Long = {
-      var v = 0L
-      var k = 0
-      while (k < n) { v = (v << 1) | bit(); k += 1 }
-      v
-    }
-    def atByteEndOrLess: Boolean = ((pos + 7) >>> 3) <= b.length
-  }
+  // ---- MSB-first bit IO (the reader is Bytes.BitReader) ---------------
 
   private final class BitWriter(out: ByteArrayOutputStream) {
     private var acc = 0
@@ -390,8 +367,8 @@ object Bzip2 {
         }
         streams += 1
         // next stream begins byte-aligned
-        r.pos = (r.pos + 7) & ~7L
-        if ((r.pos >>> 3) >= b.length) done = true
+        r.alignByte()
+        if (r.bytePos >= b.length) done = true
       }
       if (streams == 0) fail()
       Some(out.toByteArray)

@@ -60,6 +60,21 @@ object Dedup {
   /** First 15 hex digits of md5 as a non-negative long (60 bits) —
     * identical in DuckDB as CAST(concat('0x', substring(md5(x),1,15)) AS
     * BIGINT). The shared cross-engine hash primitive. */
+  /** Write `df` under `dir` partitioned by its `k` column, whose values
+    * are 0 until `n`. A class with no rows still gets its `k=<n>`
+    * directory, holding one schema-bearing empty file, so every class
+    * reads back as a frame. */
+  private[operators] def stageClasses(df: DataFrame, dir: String,
+      n: Int): Unit = {
+    df.write.partitionBy("k").parquet(dir)
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    (0 until n).foreach { k =>
+      val part = new org.apache.hadoop.fs.Path(dir, s"k=$k")
+      if (!part.getFileSystem(conf).exists(part))
+        df.drop("k").limit(0).write.parquet(part.toString)
+    }
+  }
+
   private[operators] def h60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
@@ -1766,8 +1781,7 @@ object Dedup {
         // scans; each batch job reads its k=<n> subdirectory, whose files
         // carry exactly the original columns). Batch contents and every
         // survivor set are byte-identical to the per-filter staging.
-        docs.withColumn("k", $"doc_id" % 3)
-          .write.partitionBy("k").parquet(s"$root/in")
+        stageClasses(docs.withColumn("k", $"doc_id" % 3), s"$root/in", 3)
         Seq("a", "b", "c").zipWithIndex.foreach { case (name, k) =>
           q.submit(graft.jobs.IncrementalJobs
             .nearDupBatchJob(name, s"$root/in/k=$k", indexDir, outDir, 0.8))

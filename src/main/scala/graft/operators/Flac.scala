@@ -4,6 +4,7 @@ import java.io.ByteArrayOutputStream
 import java.security.MessageDigest
 
 import graft.engine.Tables
+import graft.operators.Bytes.BitReader
 
 /** FLAC subset codec — REAL lossless audio decode, pure JVM.
   *
@@ -56,32 +57,13 @@ object Flac {
     def toBytes: Array[Byte] = { alignByte(); out.toByteArray }
   }
 
-  private final class BitReader(bytes: Array[Byte], startByte: Int) {
-    private var pos = startByte
-    private var bit = 0
-    def bytePos: Int = pos
-    def aligned: Boolean = bit == 0
-    def readBits(n: Int): Long = {
-      var v = 0L
-      var i = 0
-      while (i < n) {
-        if (pos >= bytes.length) throw new IllegalStateException("eof")
-        v = (v << 1) | ((bytes(pos) >> (7 - bit)) & 1)
-        bit += 1
-        if (bit == 8) { bit = 0; pos += 1 }
-        i += 1
-      }
-      v
+  private def readUnary(r: BitReader): Int = {
+    var q = 0
+    while (r.bit() == 0) {
+      q += 1
+      if (q > (1 << 20)) throw new IllegalStateException("runaway unary")
     }
-    def readUnary(): Int = {
-      var q = 0
-      while (readBits(1) == 0) {
-        q += 1
-        if (q > (1 << 20)) throw new IllegalStateException("runaway unary")
-      }
-      q
-    }
-    def alignByte(): Unit = if (bit != 0) { bit = 0; pos += 1 }
+    q
   }
 
   // ------------------------------------------------------------------
@@ -134,12 +116,12 @@ object Flac {
   }
 
   private def readUtf8Number(r: BitReader): Long = {
-    val b0 = r.readBits(8)
+    val b0 = r.bitsLong(8)
     if ((b0 & 0x80) == 0) b0
     else if ((b0 & 0xe0) == 0xc0)
-      ((b0 & 0x1f) << 6) | (r.readBits(8) & 0x3f)
+      ((b0 & 0x1f) << 6) | (r.bitsLong(8) & 0x3f)
     else if ((b0 & 0xf0) == 0xe0) {
-      val b1 = r.readBits(8) & 0x3f; val b2 = r.readBits(8) & 0x3f
+      val b1 = r.bitsLong(8) & 0x3f; val b2 = r.bitsLong(8) & 0x3f
       ((b0 & 0x0f) << 12) | (b1 << 6) | b2
     } else throw new IllegalStateException("bad utf8 frame number")
   }
@@ -429,11 +411,11 @@ object Flac {
   /** Read one residual block (both Rice methods + the raw-width
     * escape), returning the n-ord residual values (RFC 9639 §9.2.7). */
   private def readResiduals(r: BitReader, n: Int, ord: Int): Array[Long] = {
-    val method = r.readBits(2).toInt
+    val method = r.bitsLong(2).toInt
     if (method > 1) throw new IllegalStateException("bad residual method")
     val pBits = if (method == 0) 4 else 5
     val escape = (1 << pBits) - 1
-    val partOrder = r.readBits(4).toInt
+    val partOrder = r.bitsLong(4).toInt
     val nParts = 1 << partOrder
     if (partOrder > 0 && (n % nParts != 0 || n / nParts <= ord))
       throw new IllegalStateException("bad partition order")
@@ -443,19 +425,19 @@ object Flac {
     while (part < nParts) {
       val count = (if (partOrder == 0) n else n / nParts) -
         (if (part == 0) ord else 0)
-      val p = r.readBits(pBits).toInt
+      val p = r.bitsLong(pBits).toInt
       if (p == escape) {
-        val width = r.readBits(5).toInt // 0 = all-zero residuals
+        val width = r.bitsLong(5).toInt // 0 = all-zero residuals
         var j = 0
         while (j < count) {
-          res(idx) = if (width == 0) 0L else sext(r.readBits(width), width)
+          res(idx) = if (width == 0) 0L else sext(r.bitsLong(width), width)
           idx += 1; j += 1
         }
       } else {
         var j = 0
         while (j < count) {
-          val q = r.readUnary().toLong
-          res(idx) = unzigzag((q << p) | (if (p > 0) r.readBits(p) else 0L))
+          val q = readUnary(r).toLong
+          res(idx) = unzigzag((q << p) | (if (p > 0) r.bitsLong(p) else 0L))
           idx += 1; j += 1
         }
       }
@@ -468,21 +450,21 @@ object Flac {
     * orders 0–4 / LPC orders 1–32 with quantized-coefficient
     * reconstruction (64-bit accumulator, arithmetic shift). */
   private def readSubframe(r: BitReader, n: Int, bps: Int): Array[Int] = {
-    if (r.readBits(1) != 0) throw new IllegalStateException("pad bit")
-    val typ = r.readBits(6).toInt
-    if (r.readBits(1) != 0) // wasted bits unsupported
+    if (r.bitsLong(1) != 0) throw new IllegalStateException("pad bit")
+    val typ = r.bitsLong(6).toInt
+    if (r.bitsLong(1) != 0) // wasted bits unsupported
       throw new IllegalStateException("wasted bits")
     val block = new Array[Int](n)
     if (typ == 0) { // CONSTANT
-      java.util.Arrays.fill(block, sext(r.readBits(bps), bps))
+      java.util.Arrays.fill(block, sext(r.bitsLong(bps), bps))
     } else if (typ == 1) { // VERBATIM
       var i = 0
-      while (i < n) { block(i) = sext(r.readBits(bps), bps); i += 1 }
+      while (i < n) { block(i) = sext(r.bitsLong(bps), bps); i += 1 }
     } else if (typ >= 8 && typ <= 12) { // FIXED order 0-4
       val k = typ - 8
       if (k > n) throw new IllegalStateException("order > block")
       var i = 0
-      while (i < k) { block(i) = sext(r.readBits(bps), bps); i += 1 }
+      while (i < k) { block(i) = sext(r.bitsLong(bps), bps); i += 1 }
       val res = readResiduals(r, n, k)
       i = k
       while (i < n) { block(i) = fixedRestore(block, i, k, res(i - k)); i += 1 }
@@ -490,14 +472,14 @@ object Flac {
       val ord = typ - 31
       if (ord > n) throw new IllegalStateException("order > block")
       var i = 0
-      while (i < ord) { block(i) = sext(r.readBits(bps), bps); i += 1 }
-      val precM1 = r.readBits(4).toInt
+      while (i < ord) { block(i) = sext(r.bitsLong(bps), bps); i += 1 }
+      val precM1 = r.bitsLong(4).toInt
       if (precM1 == 15) throw new IllegalStateException("invalid precision")
       val prec = precM1 + 1
-      val shift = r.readBits(5).toInt
+      val shift = r.bitsLong(5).toInt
       if ((shift & 0x10) != 0) // 5-bit two's complement; negative invalid
         throw new IllegalStateException("negative lpc shift")
-      val coefs = Array.fill(ord)(sext(r.readBits(prec), prec))
+      val coefs = Array.fill(ord)(sext(r.bitsLong(prec), prec))
       val res = readResiduals(r, n, ord)
       i = ord
       while (i < n) {
@@ -529,19 +511,18 @@ object Flac {
         val hdr = bytes(off) & 0xff
         last = (hdr & 0x80) != 0
         val typ = hdr & 0x7f
-        val len = ((bytes(off + 1) & 0xff) << 16) |
-          ((bytes(off + 2) & 0xff) << 8) | (bytes(off + 3) & 0xff)
+        val len = Bytes.u24be(bytes, off + 1)
         if (off + 4 + len > bytes.length) return None
         if (typ == 0) {
           if (len != 34) return None
           val r = new BitReader(bytes, off + 4)
-          r.readBits(16); r.readBits(16); r.readBits(24); r.readBits(24)
-          rate = r.readBits(20).toInt
-          channels = r.readBits(3).toInt + 1
-          val bps = r.readBits(5).toInt + 1
+          r.bitsLong(16); r.bitsLong(16); r.bitsLong(24); r.bitsLong(24)
+          rate = r.bitsLong(20).toInt
+          channels = r.bitsLong(3).toInt + 1
+          val bps = r.bitsLong(5).toInt + 1
           if (channels > 2 || bps != 16) return None // subset contract
-          totalSamples = r.readBits(36)
-          md5 = Array.tabulate(16)(_ => r.readBits(8).toByte)
+          totalSamples = r.bitsLong(36)
+          md5 = Array.tabulate(16)(_ => r.bitsLong(8).toByte)
           sawStreamInfo = true
         }
         off += 4 + len
@@ -554,29 +535,29 @@ object Flac {
       while (got < totalSamples) {
         val frameStart = off
         val r = new BitReader(bytes, off)
-        if (r.readBits(14) != 0x3ffe) return None // sync
-        r.readBits(1) // reserved
-        if (r.readBits(1) != 0) return None // fixed blocksize only
-        val bsBits = r.readBits(4).toInt
-        val srBits = r.readBits(4).toInt
-        val chan = r.readBits(4).toInt
-        val ssBits = r.readBits(3).toInt
-        r.readBits(1)
+        if (r.bitsLong(14) != 0x3ffe) return None // sync
+        r.bitsLong(1) // reserved
+        if (r.bitsLong(1) != 0) return None // fixed blocksize only
+        val bsBits = r.bitsLong(4).toInt
+        val srBits = r.bitsLong(4).toInt
+        val chan = r.bitsLong(4).toInt
+        val ssBits = r.bitsLong(3).toInt
+        r.bitsLong(1)
         if (ssBits != 4) return None // 16-bit only
         val frameChannels =
           if (chan <= 7) chan + 1 else if (chan <= 10) 2 else return None
         if (frameChannels != channels) return None
         readUtf8Number(r)
         val n = bsBits match {
-          case 0x6 => r.readBits(8).toInt + 1
-          case 0x7 => r.readBits(16).toInt + 1
+          case 0x6 => r.bitsLong(8).toInt + 1
+          case 0x7 => r.bitsLong(16).toInt + 1
           case 0x1 => 192
           case b if b >= 2 && b <= 5 => 576 << (b - 2)
           case b if b >= 8 => 256 << (b - 8)
           case _ => return None
         }
-        if (srBits == 0xc) r.readBits(8)
-        else if (srBits == 0xd || srBits == 0xe) r.readBits(16)
+        if (srBits == 0xc) r.bitsLong(8)
+        else if (srBits == 0xd || srBits == 0xe) r.bitsLong(16)
         else if (srBits == 0xf) return None
         if (!r.aligned) return None // header is byte-aligned here
         val headerEnd = r.bytePos
@@ -615,8 +596,7 @@ object Flac {
         br.alignByte()
         val bodyEnd = br.bytePos
         if (bodyEnd + 2 > bytes.length) return None
-        val declared = ((bytes(bodyEnd) & 0xff) << 8) |
-          (bytes(bodyEnd + 1) & 0xff)
+        val declared = Bytes.u16be(bytes, bodyEnd)
         if (crc16(bytes, frameStart, bodyEnd) != declared) return None
         got += n
         frames += 1

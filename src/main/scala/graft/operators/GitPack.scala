@@ -5,6 +5,7 @@ import java.io.ByteArrayOutputStream
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
+import graft.operators.Bytes.u32be
 
 /** Git packfile + pack-index DECODER — pure JVM, from the public
   * format documentation (git's Documentation/gitformat-pack.txt).
@@ -37,9 +38,6 @@ import graft.engine.Tables
   */
 object GitPack {
 
-  /** Decoded-object cap per pack entry (hostile-size posture). */
-  val MaxObject: Int = 1 << 26
-
   private final class Corrupt extends RuntimeException(null, null, false, false)
   private def fail(): Nothing = throw new Corrupt
 
@@ -65,63 +63,30 @@ object GitPack {
     c.getValue
   }
 
-  private def u32be(b: Array[Byte], i: Int): Long = {
-    if (i + 4 > b.length) fail()
-    ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-      ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-  }
-
   /** Inflate one zlib stream starting at `off`; the declared
     * uncompressed length must match exactly. Returns (data, consumed
     * compressed bytes). */
   private def inflateAt(b: Array[Byte], off: Int,
       declared: Long): (Array[Byte], Int) = {
-    if (declared < 0 || declared > MaxObject) fail()
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(b, off, b.length - off)
-      val out = new Array[Byte](declared.toInt)
-      var n = 0
-      var stuck = false
-      while (n < out.length && !inf.finished() && !stuck) {
-        val k = inf.inflate(out, n, out.length - n)
-        if (k == 0 && (inf.needsInput() || inf.needsDictionary())) stuck = true
-        n += k
-      }
-      if (stuck || n != out.length) fail()
-      if (!inf.finished()) {
-        // the stream must END here — extra uncompressed bytes = corrupt
-        val extra = new Array[Byte](1)
-        if (inf.inflate(extra, 0, 1) != 0 || !inf.finished()) fail()
-      }
-      (out, (b.length - off) - inf.getRemaining)
-    } catch {
-      case _: java.util.zip.DataFormatException => fail()
-    } finally inf.end()
+    if (declared < 0 || declared > Bytes.MaxInflate) fail()
+    Bytes.inflate(b, off, b.length - off, declared.toInt)
+      .filter(_._1.length == declared).getOrElse(fail())
   }
 
   /** git delta application (gitformat-pack: copy/insert commands). */
   private def applyDelta(base: Array[Byte],
       delta: Array[Byte]): Array[Byte] = {
     var i = 0
-    def sizeVarint(): Long = {
-      var v = 0L
-      var shift = 0
-      var done = false
-      while (!done) {
-        if (i >= delta.length || shift > 56) fail()
-        val c = delta(i) & 0xff
-        i += 1
-        v |= (c & 0x7fL) << shift
-        shift += 7
-        if ((c & 0x80) == 0) done = true
-      }
+    def sizeVarint(): Long = { // at most 9 bytes (63 bits)
+      val (v, next) = Bytes.varint(delta, i).filter(_._2 - i <= 9)
+        .getOrElse(fail())
+      i = next
       v
     }
     val srcSize = sizeVarint()
     if (srcSize != base.length) fail()
     val tgtSize = sizeVarint()
-    if (tgtSize < 0 || tgtSize > MaxObject) fail()
+    if (tgtSize < 0 || tgtSize > Bytes.MaxInflate) fail()
     val out = new Array[Byte](tgtSize.toInt)
     var o = 0
     while (i < delta.length) {
@@ -197,17 +162,16 @@ object GitPack {
       while (k < count) {
         val entryStart = off
         if (off >= pack.length - 20) fail()
-        var c = pack(off) & 0xff
+        val c = pack(off) & 0xff
         off += 1
         val otypeId = (c >>> 4) & 7
         var size = (c & 15).toLong
-        var shift = 4
-        while ((c & 0x80) != 0) {
-          if (off >= pack.length - 20 || shift > 56) fail()
-          c = pack(off) & 0xff
-          off += 1
-          size |= (c & 0x7fL) << shift
-          shift += 7
+        if ((c & 0x80) != 0) { // the rest of the size: at most 8 more bytes
+          val (rest, next) = Bytes.varint(pack, off)
+            .filter { case (_, nx) => nx - off <= 8 && nx <= pack.length - 20 }
+            .getOrElse(fail())
+          size |= rest << 4
+          off = next
         }
         val (otype, content, depth) = otypeId match {
           case 1 | 2 | 3 | 4 =>
@@ -379,16 +343,8 @@ object GitPack {
   /** A minimal delta: copy the whole base, then insert `tail`. */
   def buildDelta(base: Array[Byte], tail: Array[Byte]): Array[Byte] = {
     val out = new ByteArrayOutputStream(tail.length + 16)
-    def sizeVarint(v0: Long): Unit = {
-      var v = v0
-      var more = true
-      while (more) {
-        if ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-        else { out.write(v.toInt); more = false }
-      }
-    }
-    sizeVarint(base.length.toLong)
-    sizeVarint(base.length.toLong + tail.length)
+    Bytes.putVarint(out, base.length.toLong)
+    Bytes.putVarint(out, base.length.toLong + tail.length)
     if (base.nonEmpty) {
       // copy command: offset 0 (no bytes), explicit size bytes
       val n = base.length
@@ -481,25 +437,25 @@ object GitPack {
       val out = new ByteArrayOutputStream(1024)
       out.write(0xff); out.write('t'); out.write('O'); out.write('c')
       out.write(Array[Byte](0, 0, 0, 2), 0, 4)
-      def be32(v: Long): Unit = {
-        var k = 3
-        while (k >= 0) { out.write(((v >>> (8 * k)) & 0xff).toInt); k -= 1 }
-      }
       var cum = 0
       (0 until 256).foreach { fb =>
         cum += sorted.count(o => Integer.parseInt(o.sha.take(2), 16) == fb)
-        be32(cum.toLong)
+        Bytes.be32(out, cum.toLong)
       }
       sorted.foreach(o =>
         o.sha.grouped(2).foreach(h => out.write(Integer.parseInt(h, 16))))
-      sorted.foreach(o => be32(o.crc32))
+      sorted.foreach(o => Bytes.be32(out, o.crc32))
       val large = Vector.newBuilder[Long]
       var nLarge = 0
       sorted.foreach { o =>
-        if (o.offset <= 0x7fffffffL) be32(o.offset)
-        else { be32(0x80000000L | nLarge); large += o.offset; nLarge += 1 }
+        if (o.offset <= 0x7fffffffL) Bytes.be32(out, o.offset)
+        else {
+          Bytes.be32(out, 0x80000000L | nLarge); large += o.offset; nLarge += 1
+        }
       }
-      large.result().foreach { v => be32(v >>> 32); be32(v & 0xffffffffL) }
+      large.result().foreach { v =>
+        Bytes.be32(out, v >>> 32); Bytes.be32(out, v & 0xffffffffL)
+      }
       out.write(pack, pack.length - 20, 20) // pack trailer checksum
       val md = java.security.MessageDigest.getInstance("SHA-1")
       md.update(out.toByteArray)
@@ -518,7 +474,9 @@ object GitPack {
     * compressed garbage → None. */
   def looseObject(b: Array[Byte]): Option[(String, String, Array[Byte])] = {
     if (b == null || b.length < 8) return None
-    inflateAll(b, MaxObject).flatMap { raw =>
+    Bytes.inflate(b, 0, b.length).collect {
+      case (raw, used) if used == b.length => raw
+    }.flatMap { raw =>
       val nul = raw.indexOf(0.toByte)
       if (nul <= 0 || nul > 31) return None
       val hdr = new String(raw, 0, nul, "US-ASCII")
@@ -531,27 +489,6 @@ object GitPack {
       val content = java.util.Arrays.copyOfRange(raw, nul + 1, raw.length)
       Some((objectSha(otype, content), otype, content))
     }
-  }
-
-  private def inflateAll(b: Array[Byte], cap: Int): Option[Array[Byte]] = {
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(b, 0, b.length)
-      val out = new ByteArrayOutputStream(math.min(b.length * 4, 1 << 16))
-      val buf = new Array[Byte](8192)
-      var stuck = false
-      while (!inf.finished() && !stuck) {
-        val k = inf.inflate(buf, 0, buf.length)
-        if (k == 0 && (inf.needsInput() || inf.needsDictionary())) stuck = true
-        else {
-          out.write(buf, 0, k)
-          if (out.size > cap) return None
-        }
-      }
-      if (stuck || inf.getRemaining != 0) None else Some(out.toByteArray)
-    } catch {
-      case _: java.util.zip.DataFormatException => None
-    } finally inf.end()
   }
 
   /** Emit a loose object for fixtures. */

@@ -2,6 +2,8 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
+import graft.operators.Bytes.{be16, putBe32, u16be, u32be}
+
 /** ICC profile extraction from JPEG APP2 (public specs: ICC.1 /
   * ISO 15076-1 profile format; the APP2 embedding convention from the
   * ICC spec annex). Color management is a real curation signal — a
@@ -23,10 +25,6 @@ object Icc {
   final case class IccProfile(deviceClass: String, colorSpace: String,
       pcs: String, renderingIntent: Int, profileSize: Long, nTags: Int,
       nSegments: Int)
-
-  private def u32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xff).toLong << 24) | ((b(i + 1) & 0xff) << 16) |
-      ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
 
   /** Walk the JPEG marker chain collecting ICC APP2 parts, then
     * assemble and parse. The walk tolerates fill bytes and standalone
@@ -50,7 +48,7 @@ object Icc {
           off = mOff + 1
         else {
           if (mOff + 3 > b.length) return None
-          val len = ((b(mOff + 1) & 0xff) << 8) | (b(mOff + 2) & 0xff)
+          val len = u16be(b, mOff + 1)
           if (len < 2 || mOff + 1 + len > b.length) return None
           val p = mOff + 3
           if (marker == 0xe2 && len >= 2 + 14 &&
@@ -74,15 +72,15 @@ object Icc {
       while (s <= declared) { profile.write(parts(s)); s += 1 }
       val prof = profile.toByteArray
       if (prof.length < 132) return None
-      val size = u32(prof, 0)
+      val size = u32be(prof, 0)
       if (size != prof.length) return None // declared vs assembled
       val deviceClass = new String(prof, 12, 4, "US-ASCII")
       val colorSpace = new String(prof, 16, 4, "US-ASCII")
       val pcs = new String(prof, 20, 4, "US-ASCII")
       if (new String(prof, 36, 4, "US-ASCII") != "acsp") return None
-      val intent = u32(prof, 64)
+      val intent = u32be(prof, 64)
       if (intent > 3) return None // perceptual..absolute colorimetric
-      val nTags = u32(prof, 128)
+      val nTags = u32be(prof, 128)
       if (nTags < 0 || 132 + nTags * 12 > prof.length) return None
       Some(IccProfile(deviceClass, colorSpace, pcs, intent.toInt, size,
         nTags.toInt, declared))
@@ -98,23 +96,19 @@ object Icc {
     require(intent >= 0 && intent <= 3 && nTags >= 1 && nTags <= 64)
     val size = 132 + nTags * 12 + 12
     val out = new Array[Byte](size)
-    def w32(i: Int, v: Long): Unit = {
-      out(i) = ((v >> 24) & 0xff).toByte; out(i + 1) = ((v >> 16) & 0xff).toByte
-      out(i + 2) = ((v >> 8) & 0xff).toByte; out(i + 3) = (v & 0xff).toByte
-    }
     def cc(i: Int, s: String): Unit =
       s.getBytes("US-ASCII").copyToArray(out, i)
-    w32(0, size.toLong)
-    w32(8, 0x04300000L) // profile version 4.3
+    putBe32(out, 0, size.toLong)
+    putBe32(out, 8, 0x04300000L) // profile version 4.3
     cc(12, deviceClass); cc(16, colorSpace); cc(20, pcs)
     cc(36, "acsp")
-    w32(64, intent.toLong)
-    w32(128, nTags.toLong)
+    putBe32(out, 64, intent.toLong)
+    putBe32(out, 128, nTags.toLong)
     var t = 0
     while (t < nTags) {
       cc(132 + t * 12, f"tg$t%02d") // unique tag signature
-      w32(132 + t * 12 + 4, (132 + nTags * 12).toLong)
-      w32(132 + t * 12 + 8, 12L)
+      putBe32(out, 132 + t * 12 + 4, (132 + nTags * 12).toLong)
+      putBe32(out, 132 + t * 12 + 8, 12L)
       t += 1
     }
     cc(132 + nTags * 12, "text")
@@ -131,7 +125,6 @@ object Icc {
     require(profile.length >= nSegments, "more segments than bytes")
     val out = new ByteArrayOutputStream(profile.length + 128)
     def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def be16(v: Int): Unit = { out.write((v >> 8) & 0xff); out.write(v & 0xff) }
     marker(0xd8)
     val per = (profile.length + nSegments - 1) / nSegments
     var seq = nSegments
@@ -139,19 +132,19 @@ object Icc {
       val from = (seq - 1) * per
       val until = math.min(profile.length, seq * per)
       marker(0xe2)
-      be16(2 + 14 + (until - from))
+      be16(out, 2 + 14 + (until - from))
       out.write("ICC_PROFILE".getBytes("US-ASCII"), 0, 11)
       out.write(0); out.write(seq); out.write(nSegments)
       out.write(profile, from, until - from)
       if (seq > 1) { // COM decoy between parts
-        marker(0xfe); be16(2 + 5)
+        marker(0xfe); be16(out, 2 + 5)
         out.write("decoy".getBytes("US-ASCII"), 0, 5)
       }
       seq -= 1
     }
     marker(0xc0)
-    be16(8 + 3 * 3)
-    out.write(8); be16(height); be16(width); out.write(3)
+    be16(out, 8 + 3 * 3)
+    out.write(8); be16(out, height); be16(out, width); out.write(3)
     var c = 1
     while (c <= 3) { out.write(c); out.write(0x11); out.write(0); c += 1 }
     marker(0xd9)

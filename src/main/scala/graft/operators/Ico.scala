@@ -2,6 +2,8 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
+import graft.operators.Bytes.{i32be, le16, le32, putLe32, u16le, u32le}
+
 /** Pure-JVM ICO (Windows icon) codec — the favicon container, a
   * non-trivial image population of any web crawl (nearly every site
   * root serves one). Public spec: the ICONDIR/ICONDIRENTRY layout
@@ -25,11 +27,6 @@ object Ico {
     * kind ("png" | "dib"), its dims, and its luma pixels. */
   final case class IcoImage(nEntries: Int, entryFormat: String,
       width: Int, height: Int, luma: Array[Int])
-
-  private def u16le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def u32le(b: Array[Byte], i: Int): Long =
-    u16le(b, i).toLong | (u16le(b, i + 2).toLong << 16)
 
   private def isPng(b: Array[Byte]): Boolean =
     b.length >= 8 && b(0) == 0x89.toByte && b(1) == 'P' && b(2) == 'N' &&
@@ -75,15 +72,10 @@ object Ico {
         val offBits = 14 + biSize + palSize * 4
         val bmp = new Array[Byte](14 + img.length)
         bmp(0) = 'B'; bmp(1) = 'M'
-        def w32(at: Int, v: Long): Unit = {
-          bmp(at) = (v & 0xff).toByte; bmp(at + 1) = ((v >> 8) & 0xff).toByte
-          bmp(at + 2) = ((v >> 16) & 0xff).toByte
-          bmp(at + 3) = ((v >> 24) & 0xff).toByte
-        }
-        w32(2, 14L + img.length)
-        w32(10, offBits)
+        putLe32(bmp, 2, 14L + img.length)
+        putLe32(bmp, 10, offBits)
         System.arraycopy(img, 0, bmp, 14, img.length)
-        w32(14 + 8, h) // un-double biHeight
+        putLe32(bmp, 14 + 8, h) // un-double biHeight
         Pixels.decodeGrayBmp(bmp).map { case (w, dh, px) =>
           IcoImage(n, "dib", w, dh, px)
         }
@@ -101,10 +93,7 @@ object Ico {
     val entries = blobs.map { blob =>
       if (isPng(blob)) {
         // IHDR dims: big-endian u32s at offsets 16/20
-        def be32(i: Int): Int =
-          ((blob(i) & 0xff) << 24) | ((blob(i + 1) & 0xff) << 16) |
-            ((blob(i + 2) & 0xff) << 8) | (blob(i + 3) & 0xff)
-        (be32(16), be32(20), 32, blob)
+        (i32be(blob, 16), i32be(blob, 20), 32, blob)
       } else {
         require(blob.length >= 54 && blob(0) == 'B' && blob(1) == 'M',
           "entry must be PNG or BMP")
@@ -126,19 +115,15 @@ object Ico {
     }
     val out = new ByteArrayOutputStream(
       6 + entries.size * 16 + entries.map(_._4.length).sum)
-    def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def w32(v: Long): Unit = {
-      w16((v & 0xffff).toInt); w16(((v >> 16) & 0xffff).toInt)
-    }
-    w16(0); w16(1); w16(entries.size)
+    le16(out, 0); le16(out, 1); le16(out, entries.size)
     var off = 6L + entries.size * 16
     entries.foreach { case (w, h, bits, data) =>
       out.write(if (w == 256) 0 else w)
       out.write(if (h == 256) 0 else h)
       out.write(0); out.write(0) // colorCount (0 = 256+), reserved
-      w16(1); w16(bits)
-      w32(data.length.toLong)
-      w32(off)
+      le16(out, 1); le16(out, bits)
+      le32(out, data.length.toLong)
+      le32(out, off)
       off += data.length
     }
     entries.foreach { case (_, _, _, data) => out.write(data, 0, data.length) }

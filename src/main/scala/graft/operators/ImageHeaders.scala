@@ -3,6 +3,9 @@ package graft.operators
 import java.io.ByteArrayOutputStream
 import java.util.zip.CRC32
 
+import graft.operators.Bytes.{i32le, le16, le24, le32, putBe32, u16be, u16le,
+  u24le, u32be, u32le, u8}
+
 /** Pure-JVM image header codec: parse (and, for fixtures, emit) the
   * metadata-bearing prefix of PNG and JPEG streams — no codec libraries,
   * no native deps.
@@ -38,12 +41,6 @@ object ImageHeaders {
   private val PngSig: Array[Byte] =
     Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
-  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
-  private def be16(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
-  private def be32(b: Array[Byte], i: Int): Long =
-    (u8(b, i).toLong << 24) | (u8(b, i + 1) << 16) |
-      (u8(b, i + 2) << 8) | u8(b, i + 3)
-
   /** Sniff-and-parse: PNG first (unambiguous signature), then JPEG,
     * then GIF/BMP (fixed-offset headers), then WEBP (RIFF container),
     * then TIFF ([[TiffHeaders]] — II/MM order mark + IFD walk), then
@@ -54,14 +51,6 @@ object ImageHeaders {
       .orElse(decodeWebp(b))
       .orElse(TiffHeaders.decodeTiff(b))
       .orElse(VideoHeaders.decodeAvif(b))
-
-  private def u16le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-  private def u24le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16)
-  private def u32le(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xff).toLong | ((b(i + 1) & 0xff).toLong << 8) |
-      ((b(i + 2) & 0xff).toLong << 16) | ((b(i + 3) & 0xff).toLong << 24)
 
   /** WEBP (public spec, RFC 9649 / Google container spec): 'RIFF' +
     * u32 LE size + 'WEBP', then a chunk chain of (4-byte id, u32 LE
@@ -188,25 +177,17 @@ object ImageHeaders {
     val xmpBytes = xmp.getBytes("UTF-8")
     val out = new java.io.ByteArrayOutputStream(exifPayload.length + 96)
     def ascii(s: String): Unit = out.write(s.getBytes("US-ASCII"), 0, 4)
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    def le24(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff)
-    }
     def chunk(id: String, payload: Array[Byte]): Unit = {
-      ascii(id); le32(payload.length.toLong)
+      ascii(id); le32(out, payload.length.toLong)
       out.write(payload, 0, payload.length)
       if (payload.length % 2 == 1) out.write(0) // RIFF pad byte
     }
-    ascii("RIFF"); le32(0) // size patched below
+    ascii("RIFF"); le32(out, 0) // size patched below
     ascii("WEBP")
-    ascii("VP8X"); le32(10L)
+    ascii("VP8X"); le32(out, 10L)
     out.write(0x08 | (if (xmpBytes.nonEmpty) 0x04 else 0)) // EXIF [+XMP]
     out.write(0); out.write(0); out.write(0) // reserved
-    le24(width - 1); le24(height - 1)
+    le24(out, width - 1); le24(out, height - 1)
     chunk("EXIF", exifPayload)
     if (xmpBytes.nonEmpty) chunk("XMP ", xmpBytes)
     // minimal VP8L header (signature + dims bits) so decodeWebp works
@@ -236,8 +217,8 @@ object ImageHeaders {
     if (b == null || b.length < 11) return None
     val sig = new String(b, 0, 6, "US-ASCII")
     if (sig != "GIF87a" && sig != "GIF89a") return None
-    val w = (b(6) & 0xff) | ((b(7) & 0xff) << 8)
-    val h = (b(8) & 0xff) | ((b(9) & 0xff) << 8)
+    val w = u16le(b, 6)
+    val h = u16le(b, 8)
     if (w == 0 || h == 0) return None
     val depth = (((b(10) >> 4) & 0x07) + 1) // color resolution, bits/primary
     Some(ImageMeta("gif", w, h, depth))
@@ -249,14 +230,11 @@ object ImageHeaders {
   def decodeBmp(b: Array[Byte]): Option[ImageMeta] = {
     if (b == null || b.length < 30) return None
     if (b(0) != 'B'.toByte || b(1) != 'M'.toByte) return None
-    def i32le(i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-        ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-    val hdrSize = i32le(14)
+    val hdrSize = i32le(b, 14)
     if (hdrSize < 40) return None // BITMAPCOREHEADER etc. out of scope
-    val w = i32le(18)
-    val h = i32le(22)
-    val bits = (b(28) & 0xff) | ((b(29) & 0xff) << 8)
+    val w = i32le(b, 18)
+    val h = i32le(b, 22)
+    val bits = u16le(b, 28)
     if (w <= 0 || h == 0) return None
     // BMP-legal bit counts only — a zero/garbage depth field is as
     // malformed as a zero dimension (the sibling decoders' discipline)
@@ -273,7 +251,7 @@ object ImageHeaders {
     // IHDR must be first per spec, but walk the chain anyway so a
     // spec-violating-but-parseable stream still yields its header
     while (off + 8 <= b.length) {
-      val len = be32(b, off)
+      val len = u32be(b, off)
       // a declared length that cannot fit in the remaining buffer is
       // malformed — and advancing by it could overflow the Int offset
       // into negative territory (index crash, not a clean None)
@@ -282,8 +260,8 @@ object ImageHeaders {
         u8(b, off + 6) == 'D' && u8(b, off + 7) == 'R'
       if (isIhdr) {
         if (len < 13 || off + 8 + 13 > b.length) return None
-        val w = be32(b, off + 8)
-        val h = be32(b, off + 12)
+        val w = u32be(b, off + 8)
+        val h = u32be(b, off + 12)
         val depth = u8(b, off + 16)
         if (w <= 0 || h <= 0 || w > Int.MaxValue || h > Int.MaxValue)
           return None
@@ -310,7 +288,7 @@ object ImageHeaders {
         off = mOff + 1 // RSTn / TEM: standalone, no length field
       } else {
         if (mOff + 3 > b.length) return None // need the u16 length field
-        val len = be16(b, mOff + 1)
+        val len = u16be(b, mOff + 1)
         if (len < 2) return None
         val isSof = marker >= 0xc0 && marker <= 0xcf &&
           marker != 0xc4 && marker != 0xc8 && marker != 0xcc
@@ -318,8 +296,8 @@ object ImageHeaders {
           // segment payload: precision u8, height u16, width u16, ncomp u8
           if (mOff + 3 + 5 > b.length) return None
           val depth = u8(b, mOff + 3)
-          val h = be16(b, mOff + 4)
-          val w = be16(b, mOff + 6)
+          val h = u16be(b, mOff + 4)
+          val w = u16be(b, mOff + 6)
           if (w == 0 || h == 0) return None
           val fmt = if (marker == 0xc2) "jpeg_progressive" else "jpeg"
           return Some(ImageMeta(fmt, w, h, depth))
@@ -424,48 +402,32 @@ object ImageHeaders {
       s"$variant dims limited to $dimCap, got ${width}x$height")
     val out = new ByteArrayOutputStream(note.length + 48)
     def ascii(s: String): Unit = out.write(s.getBytes("US-ASCII"), 0, 4)
-    def le16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def le24(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-      out.write((v >> 16) & 0xff)
-    }
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
     val noteChunk = 8 + note.length + (note.length & 1)
     val imgChunk = variant match {
       case "vp8" => 18; case "vp8l" => 14; case "vp8x" => 18
     }
-    ascii("RIFF"); le32(4L + noteChunk + imgChunk); ascii("WEBP")
-    ascii("EXIF"); le32(note.length.toLong)
+    ascii("RIFF"); le32(out, 4L + noteChunk + imgChunk); ascii("WEBP")
+    ascii("EXIF"); le32(out, note.length.toLong)
     out.write(note, 0, note.length)
     if ((note.length & 1) == 1) out.write(0) // RIFF even padding
     variant match {
       case "vp8" =>
-        ascii("VP8 "); le32(10L)
+        ascii("VP8 "); le32(out, 10L)
         out.write(0x30); out.write(0); out.write(0) // frame tag (keyframe)
         out.write(0x9d); out.write(0x01); out.write(0x2a) // start code
-        le16(width); le16(height)
+        le16(out, width); le16(out, height)
       case "vp8l" =>
-        ascii("VP8L"); le32(5L)
+        ascii("VP8L"); le32(out, 5L)
         out.write(0x2f)
-        le32(((width - 1).toLong & 0x3fff) |
+        le32(out, ((width - 1).toLong & 0x3fff) |
           (((height - 1).toLong & 0x3fff) << 14))
         out.write(0) // 5 is odd: RIFF even padding
       case "vp8x" =>
-        ascii("VP8X"); le32(10L)
-        le32(0L) // flags + reserved
-        le24(width - 1); le24(height - 1)
+        ascii("VP8X"); le32(out, 10L)
+        le32(out, 0L) // flags + reserved
+        le24(out, width - 1); le24(out, height - 1)
     }
     out.toByteArray
-  }
-
-  private def putBe32(b: Array[Byte], i: Int, v: Int): Unit = {
-    b(i) = ((v >>> 24) & 0xff).toByte
-    b(i + 1) = ((v >>> 16) & 0xff).toByte
-    b(i + 2) = ((v >>> 8) & 0xff).toByte
-    b(i + 3) = (v & 0xff).toByte
   }
 
   private def writeChunk(out: ByteArrayOutputStream, typ: String,

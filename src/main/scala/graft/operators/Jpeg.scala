@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.engine.Tables
+import graft.operators.Bytes.u16be
 
 /** JPEG decode — DQT quantization tables, DHT canonical Huffman
   * tables, SOF0 (baseline sequential) AND SOF2 (progressive) frames,
@@ -72,7 +73,9 @@ object Jpeg {
   /** Entropy-coded-segment reader: refills honor 0xFF00 stuffing; a
     * real marker STOPS the reader (zero-pad from there on, position
     * remembered) instead of consuming it — progressive scans end at
-    * the next DHT/SOS/EOI, which the caller then parses. */
+    * the next DHT/SOS/EOI, which the caller then parses. Kept apart
+    * from [[Bytes.BitReader]]: byte stuffing and marker stops are JPEG's
+    * own. */
   private final class BitReader(b: Array[Byte], var pos: Int) {
     private var cur = 0
     private var nbits = 0
@@ -179,9 +182,6 @@ object Jpeg {
     out
   }
 
-  private def be16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-
   /** One frame component and its decode state. */
   private final class Comp(val id: Int, val h: Int, val v: Int, val tq: Int) {
     var coefs: Array[Int] = null // natural-order, blockIndex*64 strided
@@ -229,7 +229,7 @@ object Jpeg {
           off += 2 // standalone markers
         } else {
           if (off + 4 > bytes.length) return None
-          val len = be16(bytes, off + 2)
+          val len = u16be(bytes, off + 2)
           if (len < 2 || off + 2 + len > bytes.length) return None
           marker match {
             case 0xdb => // DQT (possibly several tables per segment)
@@ -264,7 +264,7 @@ object Jpeg {
               if (comps != null) return None // one frame only
               progressive = marker == 0xc2
               if ((bytes(off + 4) & 0xff) != 8) return None // 8-bit only
-              h = be16(bytes, off + 5); w = be16(bytes, off + 7)
+              h = u16be(bytes, off + 5); w = u16be(bytes, off + 7)
               val nc = bytes(off + 9) & 0xff
               if (nc != 1 && nc != 3) return None
               if (w <= 0 || h <= 0 || w.toLong * h > (1 << 26)) return None
@@ -296,7 +296,7 @@ object Jpeg {
               return None // extended/lossless/arithmetic out of contract
             case 0xdd =>
               if (len != 4) return None
-              restartInterval = be16(bytes, off + 4)
+              restartInterval = u16be(bytes, off + 4)
             case 0xda => // SOS — decode one scan's entropy data
               if (comps == null) return None
               val ns = bytes(off + 4) & 0xff

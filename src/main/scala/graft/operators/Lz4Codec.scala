@@ -5,6 +5,7 @@ import java.io.ByteArrayOutputStream
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
+import graft.operators.Bytes.{le32, u16le, u32le}
 
 /** LZ4 block + frame DECODER — pure JVM, from the public specs
   * (lz4_Block_format.md / lz4_Frame_format.md). [[Compression]]
@@ -71,7 +72,7 @@ object Lz4Codec {
         }
         // match
         if (i + 2 > end) return None
-        val offset = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
+        val offset = u16le(b, i)
         i += 2
         if (offset == 0 || offset > n) return None
         var matchLen = (token & 0x0f) + 4
@@ -107,10 +108,6 @@ object Lz4Codec {
     out.write(data, 0, data.length)
     out.toByteArray
   }
-
-  private def u32le(b: Array[Byte], i: Int): Long =
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
 
   /** Full frame decode: one or more frames (content frames +
     * skippable frames), every checksum verified. */
@@ -209,11 +206,7 @@ object Lz4Codec {
       blockChecksums: Boolean = false): Array[Byte] = {
     require(blockMaxCode >= 4 && blockMaxCode <= 7)
     val out = new ByteArrayOutputStream(payload.length + 64)
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
-    le32(0x184d2204L)
+    le32(out, 0x184d2204L)
     val flg = 0x40 | 0x20 | 0x08 | (if (contentChecksum) 0x04 else 0) |
       (if (blockChecksums) 0x10 else 0)
     out.write(flg)
@@ -231,15 +224,15 @@ object Lz4Codec {
       val n = math.min(blockMax - blockMax / 255 - 16, payload.length - off)
       val block = lz4CompressBlockLiteral(
         java.util.Arrays.copyOfRange(payload, off, off + n))
-      le32(block.length.toLong) // compressed block (high bit clear)
+      le32(out, block.length.toLong) // compressed block (high bit clear)
       out.write(block, 0, block.length)
       if (blockChecksums)
-        le32(Compression.xxh32(block, 0, block.length) & 0xffffffffL)
+        le32(out, Compression.xxh32(block, 0, block.length) & 0xffffffffL)
       off += n
     }
-    le32(0L)
+    le32(out, 0L)
     if (contentChecksum)
-      le32(Compression.xxh32(payload, 0, payload.length) & 0xffffffffL)
+      le32(out, Compression.xxh32(payload, 0, payload.length) & 0xffffffffL)
     out.toByteArray
   }
 

@@ -42,14 +42,14 @@ object Orc {
       f: (Int, Int, Long, Int, Int) => Unit): Boolean = {
     var i = from
     while (i < until) {
-      val tag = Protobuf.varint(b, i).getOrElse(return false)
+      val tag = Bytes.varint(b, i).getOrElse(return false)
       i = tag._2
       val no = (tag._1 >>> 3).toInt
       val wt = (tag._1 & 7).toInt
       if (no <= 0) return false
       wt match {
         case 0 =>
-          val v = Protobuf.varint(b, i).getOrElse(return false)
+          val v = Bytes.varint(b, i).getOrElse(return false)
           f(no, 0, v._1, 0, 0)
           i = v._2
         case 1 =>
@@ -57,7 +57,7 @@ object Orc {
           f(no, 1, 0L, i, 8)
           i += 8
         case 2 =>
-          val len = Protobuf.varint(b, i).getOrElse(return false)
+          val len = Bytes.varint(b, i).getOrElse(return false)
           if (len._1 < 0 || len._1 > until - len._2) return false
           f(no, 2, len._1, len._2, len._1.toInt)
           i = len._2 + len._1.toInt
@@ -73,23 +73,6 @@ object Orc {
 
   // ---- chunked compression --------------------------------------------
 
-  private def inflateRaw(b: Array[Byte], off: Int, len: Int): Option[Array[Byte]] =
-    try {
-      val inf = new java.util.zip.Inflater(true)
-      inf.setInput(b, off, len)
-      val out = new ByteArrayOutputStream(len * 3)
-      val buf = new Array[Byte](8192)
-      var stuck = false
-      while (!inf.finished() && !stuck) {
-        val k = inf.inflate(buf)
-        if (k == 0 && inf.needsInput()) stuck = true else out.write(buf, 0, k)
-        if (out.size > (1 << 26)) stuck = true
-      }
-      val ok = inf.finished()
-      inf.end()
-      if (ok) Some(out.toByteArray) else None
-    } catch { case _: Exception => None }
-
   /** Decode one (possibly chunk-framed) stream region. kind: 0 NONE,
     * 1 ZLIB, 2 SNAPPY, 5 ZSTD. */
   private def decodeStream(b: Array[Byte], off: Int, len: Int,
@@ -102,8 +85,7 @@ object Orc {
     val end = off + len
     while (i < end) {
       if (i + 3 > end) return None
-      val h = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) |
-        ((b(i + 2) & 0xff) << 16)
+      val h = Bytes.u24le(b, i)
       val original = (h & 1) == 1
       val clen = h >>> 1
       i += 3
@@ -111,7 +93,7 @@ object Orc {
       if (original) out.write(b, i, clen)
       else {
         val chunk = kind match {
-          case 1 => inflateRaw(b, i, clen)
+          case 1 => Bytes.inflate(b, i, clen, nowrap = true).map(_._1)
           case 2 => SnappyCodec.decompressRaw(
             java.util.Arrays.copyOfRange(b, i, i + clen), 1 << 26)
           case 5 => ZstdCodec.zstdDecompress(
@@ -236,10 +218,10 @@ object Orc {
             val len = (((h & 1) << 8) | (b(i + 1) & 0xff)) + 1
             if (k + len > n) return None
             var p = i + 2
-            val baseR = Protobuf.varint(b, p).getOrElse(return None)
+            val baseR = Bytes.varint(b, p).getOrElse(return None)
             val base = if (signed) zz(baseR._1) else baseR._1
             p = baseR._2
-            val dbR = Protobuf.varint(b, p).getOrElse(return None)
+            val dbR = Bytes.varint(b, p).getOrElse(return None)
             val deltaBase = zz(dbR._1)
             p = dbR._2
             out(k) = base; k += 1

@@ -40,15 +40,9 @@ object ParquetFooter {
   private[operators] final class Reader(val b: Array[Byte], var pos: Int) {
     def u8(): Int = { val v = b(pos) & 0xff; pos += 1; v }
     def varint(): Long = {
-      var v = 0L; var shift = 0
-      var more = true
-      while (more) {
-        val x = u8()
-        v |= (x & 0x7fL) << shift
-        shift += 7
-        if (shift > 70) throw new IllegalStateException("varint overrun")
-        more = (x & 0x80) != 0
-      }
+      val (v, next) = Bytes.varint(b, pos)
+        .getOrElse(throw new IllegalStateException("varint overrun"))
+      pos = next
       v
     }
     def zigzag(): Long = { val u = varint(); (u >>> 1) ^ -(u & 1) }
@@ -241,8 +235,7 @@ object ParquetFooter {
       raf.readFully(tail)
       if (!(tail(4) == 'P' && tail(5) == 'A' && tail(6) == 'R' &&
         tail(7) == '1')) return None
-      val fLen = (tail(0) & 0xff) | ((tail(1) & 0xff) << 8) |
-        ((tail(2) & 0xff) << 16) | ((tail(3) & 0xff) << 24)
+      val fLen = Bytes.i32le(tail, 0)
       if (fLen <= 0 || fLen > len - 12) return None
       raf.seek(len - 8 - fLen)
       val footer = new Array[Byte](fLen)

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.engine.Tables
 import ParquetFooter.{struct => thriftStruct, _}
 
+import graft.operators.Bytes.i32le
+
 /** Parquet PAGE-level column reader — from the public parquet-format
   * spec, no parquet-mr classes. [[ParquetFooter]] stops at file
   * metadata; this walks the actual column chunks: per-chunk
@@ -239,8 +241,7 @@ object ParquetPages {
     var end = end0
     if (lengthPrefixed) {
       if (off + 4 > end0) return None
-      val len = (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-        ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
+      val len = i32le(b, off)
       off += 4
       if (len < 0 || off + len > end0) return None
       end = off + len
@@ -251,17 +252,11 @@ object ParquetPages {
     var i = off
     while (k < n) {
       if (i >= end) return None
-      // ULEB128 run header
-      var hdr = 0L
-      var shift = 0
-      var c = 0x80
-      while ((c & 0x80) != 0) {
-        if (i >= end || shift > 35) return None
-        c = b(i) & 0xff
-        i += 1
-        hdr |= (c & 0x7fL) << shift
-        shift += 7
-      }
+      // ULEB128 run header, at most 6 bytes
+      val (hdr, next) = Bytes.varint(b, i)
+        .filter { case (_, nx) => nx <= end && nx - i <= 6 }
+        .getOrElse(return None)
+      i = next
       if ((hdr & 1) == 0) {
         // RLE run: count = hdr >> 1, one bit-packed value in byteW bytes
         val count = (hdr >>> 1).toInt
@@ -306,16 +301,9 @@ object ParquetPages {
       n: Int): Option[(Array[Long], Int)] = try {
     var i = off0
     def uv(): Long = {
-      var v = 0L
-      var shift = 0
-      var c = 0x80
-      while ((c & 0x80) != 0) {
-        if (i >= b.length || shift > 63) throw new MatchError("varint")
-        c = b(i) & 0xff
-        i += 1
-        v |= (c & 0x7fL) << shift
-        shift += 7
-      }
+      val (v, next) =
+        Bytes.varint(b, i).getOrElse(throw new MatchError("varint"))
+      i = next
       v
     }
     def zzv(): Long = { val u = uv(); (u >>> 1) ^ -(u & 1L) }
@@ -461,8 +449,7 @@ object ParquetPages {
               var cnt = 0
               while (cnt < ph.numValues) {
                 if (i + 4 > page.length) return None
-                val len = (page(i) & 0xff) | ((page(i + 1) & 0xff) << 8) |
-                  ((page(i + 2) & 0xff) << 16) | ((page(i + 3) & 0xff) << 24)
+                val len = i32le(page, i)
                 i += 4
                 if (len < 0 || i + len > page.length) return None
                 ds += new String(page, i, len, "UTF-8")
@@ -511,10 +498,7 @@ object ParquetPages {
                     if (defs(emitted) == 0) out += None
                     else {
                       if (vi + 4 > page.length) return None
-                      val len = (page(vi) & 0xff) |
-                        ((page(vi + 1) & 0xff) << 8) |
-                        ((page(vi + 2) & 0xff) << 16) |
-                        ((page(vi + 3) & 0xff) << 24)
+                      val len = i32le(page, vi)
                       vi += 4
                       if (len < 0 || vi + len > page.length) return None
                       out += Some(Left(new String(page, vi, len, "UTF-8")))
@@ -717,8 +701,7 @@ object ParquetPages {
             out += Right(v)
           } else {
             if (vi + 4 > page.length) return None
-            val len = (page(vi) & 0xff) | ((page(vi + 1) & 0xff) << 8) |
-              ((page(vi + 2) & 0xff) << 16) | ((page(vi + 3) & 0xff) << 24)
+            val len = i32le(page, vi)
             vi += 4
             if (len < 0 || vi + len > page.length) return None
             out += Left(new String(page, vi, len, "UTF-8"))
@@ -834,8 +817,7 @@ object ParquetPages {
               var cnt = 0
               while (cnt < ph.numValues) {
                 if (i + 4 > page.length) return None
-                val len = (page(i) & 0xff) | ((page(i + 1) & 0xff) << 8) |
-                  ((page(i + 2) & 0xff) << 16) | ((page(i + 3) & 0xff) << 24)
+                val len = i32le(page, i)
                 i += 4
                 if (len < 0 || i + len > page.length) return None
                 ds += new String(page, i, len, "UTF-8")
@@ -951,8 +933,7 @@ object ParquetPages {
     val n = file.length
     if (file(n - 4) != 'P' || file(n - 3) != 'A' || file(n - 2) != 'R' ||
       file(n - 1) != '1') return None
-    val len = (file(n - 8) & 0xff) | ((file(n - 7) & 0xff) << 8) |
-      ((file(n - 6) & 0xff) << 16) | ((file(n - 5) & 0xff) << 24)
+    val len = i32le(file, n - 8)
     if (len < 0 || len > n - 12) return None
     Some(java.util.Arrays.copyOfRange(file, n - 8 - len, n - 8))
   }

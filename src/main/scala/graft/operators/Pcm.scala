@@ -3,6 +3,7 @@ package graft.operators
 import java.io.ByteArrayOutputStream
 
 import graft.engine.Tables
+import graft.operators.Bytes.{i32le, le16, le32, u16le}
 
 /** REAL WAV PCM sample decode — the audio twin of `Pixels`.
   *
@@ -27,18 +28,6 @@ import graft.engine.Tables
   */
 object Pcm {
 
-  private def putLe32(b: Array[Byte], off: Int, v: Int): Unit = {
-    b(off) = v.toByte; b(off + 1) = (v >>> 8).toByte
-    b(off + 2) = (v >>> 16).toByte; b(off + 3) = (v >>> 24).toByte
-  }
-
-  private def le32(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8) |
-      ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
-
-  private def le16(b: Array[Byte], off: Int): Int =
-    (b(off) & 0xff) | ((b(off + 1) & 0xff) << 8)
-
   /** Byte-valid RIFF/WAVE with REAL PCM payload: a LIST/INFO chunk
     * carrying `comment` (variable length + RIFF even-padding — the
     * walk must hop it), a 16-byte PCM fmt chunk, and a data chunk of
@@ -53,21 +42,20 @@ object Pcm {
     val riffLen = 4 + (8 + listBody.length + listPad) + (8 + 16) + (8 + dataLen)
     val out = new ByteArrayOutputStream(riffLen + 8)
     def tag(t: String): Unit = out.write(t.getBytes("US-ASCII"), 0, 4)
-    def u32(v: Int): Unit = { val b = new Array[Byte](4); putLe32(b, 0, v); out.write(b, 0, 4) }
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-    tag("RIFF"); u32(riffLen); tag("WAVE")
-    tag("LIST"); u32(listBody.length); out.write(listBody, 0, listBody.length)
+    tag("RIFF"); le32(out, riffLen); tag("WAVE")
+    tag("LIST"); le32(out, listBody.length)
+    out.write(listBody, 0, listBody.length)
     if (listPad == 1) out.write(0)
-    tag("fmt "); u32(16)
-    u16(1) // PCM
-    u16(channels); u32(sampleRate)
-    u32(sampleRate * channels * 2) // byte rate
-    u16(channels * 2) // block align
-    u16(16) // bits per sample
-    tag("data"); u32(dataLen)
+    tag("fmt "); le32(out, 16)
+    le16(out, 1) // PCM
+    le16(out, channels); le32(out, sampleRate)
+    le32(out, sampleRate * channels * 2) // byte rate
+    le16(out, channels * 2) // block align
+    le16(out, 16) // bits per sample
+    tag("data"); le32(out, dataLen)
     samples.foreach { s =>
       require(s >= -32768 && s <= 32767, s"sample $s out of s16 range")
-      u16(s & 0xffff)
+      le16(out, s & 0xffff)
     }
     out.toByteArray
   }
@@ -125,21 +113,21 @@ object Pcm {
       var samples: Array[Int] = null
       while (off + 8 <= bytes.length) {
         val tag = new String(bytes, off, 4, "US-ASCII")
-        val len = le32(bytes, off + 4)
+        val len = i32le(bytes, off + 4)
         if (len < 0 || off + 8 + len > bytes.length) return None
         tag match {
           case "fmt " =>
             if (len < 16) return None
-            fmtCode = le16(bytes, off + 8)
-            channels = le16(bytes, off + 10)
-            rate = le32(bytes, off + 12)
-            bits = le16(bytes, off + 22)
+            fmtCode = u16le(bytes, off + 8)
+            channels = u16le(bytes, off + 10)
+            rate = i32le(bytes, off + 12)
+            bits = u16le(bytes, off + 22)
             if (fmtCode == 0xfffe) {
               // WAVE_FORMAT_EXTENSIBLE: the real format lives in the
               // SubFormat GUID's first two bytes; the remaining 14 must
               // be the fixed KSDATAFORMAT tail (a stray GUID is not a
               // format we know). Most real-world 24-bit WAVs use this.
-              if (len < 40 || le16(bytes, off + 24) < 22) return None
+              if (len < 40 || u16le(bytes, off + 24) < 22) return None
               val guidAt = off + 8 + 24
               val tail = Array(0x00, 0x00, 0x00, 0x00, 0x10, 0x00, 0x80,
                 0x00, 0x00, 0xaa, 0x00, 0x38, 0x9b, 0x71)
@@ -148,7 +136,7 @@ object Pcm {
                 if ((bytes(guidAt + 2 + i) & 0xff) != tail(i)) return None
                 i += 1
               }
-              fmtCode = le16(bytes, guidAt)
+              fmtCode = u16le(bytes, guidAt)
             }
             val supported = (fmtCode == 1 && (bits == 16 || bits == 24)) ||
               ((fmtCode == 6 || fmtCode == 7) && bits == 8)
@@ -158,15 +146,13 @@ object Pcm {
             if (fmtCode == 1 && bits == 16) {
               if (len % 2 != 0) return None
               samples = Array.tabulate(len / 2) { i =>
-                le16(bytes, off + 8 + i * 2).toShort.toInt // sign-extend
+                u16le(bytes, off + 8 + i * 2).toShort.toInt // sign-extend
               }
             } else if (fmtCode == 1) { // 24-bit LE, sign-extended
               if (len % 3 != 0) return None
               samples = Array.tabulate(len / 3) { i =>
                 val p = off + 8 + i * 3
-                val v = (bytes(p) & 0xff) | ((bytes(p + 1) & 0xff) << 8) |
-                  ((bytes(p + 2) & 0xff) << 16)
-                (v << 8) >> 8 // sign-extend bit 23
+                (Bytes.u24le(bytes, p) << 8) >> 8 // sign-extend bit 23
               }
             } else if (fmtCode == 7) {
               samples = Array.tabulate(len) { i =>
@@ -212,18 +198,17 @@ object Pcm {
       (8 + dataLen + dataPad)
     val out = new ByteArrayOutputStream(riffLen + 8)
     def tag(t: String): Unit = out.write(t.getBytes("US-ASCII"), 0, 4)
-    def u32(v: Int): Unit = { val b = new Array[Byte](4); putLe32(b, 0, v); out.write(b, 0, 4) }
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-    tag("RIFF"); u32(riffLen); tag("WAVE")
-    tag("LIST"); u32(listBody.length); out.write(listBody, 0, listBody.length)
+    tag("RIFF"); le32(out, riffLen); tag("WAVE")
+    tag("LIST"); le32(out, listBody.length)
+    out.write(listBody, 0, listBody.length)
     if (listPad == 1) out.write(0)
-    tag("fmt "); u32(16)
-    u16(1) // PCM
-    u16(channels); u32(sampleRate)
-    u32(sampleRate * channels * 3) // byte rate
-    u16(channels * 3) // block align
-    u16(24) // bits per sample
-    tag("data"); u32(dataLen)
+    tag("fmt "); le32(out, 16)
+    le16(out, 1) // PCM
+    le16(out, channels); le32(out, sampleRate)
+    le32(out, sampleRate * channels * 3) // byte rate
+    le16(out, channels * 3) // block align
+    le16(out, 24) // bits per sample
+    tag("data"); le32(out, dataLen)
     samples.foreach { s =>
       require(s >= -(1 << 23) && s < (1 << 23), s"sample $s out of s24 range")
       out.write(s & 0xff); out.write((s >>> 8) & 0xff)
@@ -248,24 +233,23 @@ object Pcm {
       (8 + dataLen + dataPad)
     val out = new ByteArrayOutputStream(riffLen + 8)
     def tag(t: String): Unit = out.write(t.getBytes("US-ASCII"), 0, 4)
-    def u32(v: Int): Unit = { val b = new Array[Byte](4); putLe32(b, 0, v); out.write(b, 0, 4) }
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-    tag("RIFF"); u32(riffLen); tag("WAVE")
-    tag("LIST"); u32(listBody.length); out.write(listBody, 0, listBody.length)
+    tag("RIFF"); le32(out, riffLen); tag("WAVE")
+    tag("LIST"); le32(out, listBody.length)
+    out.write(listBody, 0, listBody.length)
     if (listPad == 1) out.write(0)
-    tag("fmt "); u32(40)
-    u16(0xfffe) // WAVE_FORMAT_EXTENSIBLE
-    u16(channels); u32(sampleRate)
-    u32(sampleRate * channels * 3)
-    u16(channels * 3)
-    u16(24)
-    u16(22) // cbSize
-    u16(24) // valid bits per sample
-    u32(0) // channel mask: unspecified
-    u16(1) // SubFormat: PCM
+    tag("fmt "); le32(out, 40)
+    le16(out, 0xfffe) // WAVE_FORMAT_EXTENSIBLE
+    le16(out, channels); le32(out, sampleRate)
+    le32(out, sampleRate * channels * 3)
+    le16(out, channels * 3)
+    le16(out, 24)
+    le16(out, 22) // cbSize
+    le16(out, 24) // valid bits per sample
+    le32(out, 0) // channel mask: unspecified
+    le16(out, 1) // SubFormat: PCM
     Seq(0x00, 0x00, 0x00, 0x00, 0x10, 0x00, 0x80, 0x00, 0x00, 0xaa,
       0x00, 0x38, 0x9b, 0x71).foreach(out.write)
-    tag("data"); u32(dataLen)
+    tag("data"); le32(out, dataLen)
     samples.foreach { s =>
       require(s >= -(1 << 23) && s < (1 << 23), s"sample $s out of s24 range")
       out.write(s & 0xff); out.write((s >>> 8) & 0xff)
@@ -286,18 +270,17 @@ object Pcm {
       (8 + mulaw.length + dataPad)
     val out = new ByteArrayOutputStream(riffLen + 8)
     def tag(t: String): Unit = out.write(t.getBytes("US-ASCII"), 0, 4)
-    def u32(v: Int): Unit = { val b = new Array[Byte](4); putLe32(b, 0, v); out.write(b, 0, 4) }
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
-    tag("RIFF"); u32(riffLen); tag("WAVE")
-    tag("LIST"); u32(listBody.length); out.write(listBody, 0, listBody.length)
+    tag("RIFF"); le32(out, riffLen); tag("WAVE")
+    tag("LIST"); le32(out, listBody.length)
+    out.write(listBody, 0, listBody.length)
     if (listPad == 1) out.write(0)
-    tag("fmt "); u32(16)
-    u16(code) // G.711: 6 = A-law, 7 = µ-law
-    u16(channels); u32(sampleRate)
-    u32(sampleRate * channels) // byte rate: one byte per sample
-    u16(channels) // block align
-    u16(8) // bits per sample
-    tag("data"); u32(mulaw.length)
+    tag("fmt "); le32(out, 16)
+    le16(out, code) // G.711: 6 = A-law, 7 = µ-law
+    le16(out, channels); le32(out, sampleRate)
+    le32(out, sampleRate * channels) // byte rate: one byte per sample
+    le16(out, channels) // block align
+    le16(out, 8) // bits per sample
+    tag("data"); le32(out, mulaw.length)
     out.write(mulaw, 0, mulaw.length)
     if (dataPad == 1) out.write(0)
     out.toByteArray

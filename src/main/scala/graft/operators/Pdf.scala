@@ -355,7 +355,7 @@ object Pdf {
     val raw = java.util.Arrays.copyOfRange(b, dataFrom, dataFrom + len.toInt)
     val inflated =
       if (keyIdx(b, "/FlateDecode", dictFrom, kw) >= 0)
-        inflate(raw, 0, raw.length).getOrElse(return None)
+        Bytes.inflate(raw, 0, raw.length).getOrElse(return None)._1
       else raw
     val predictor = keyNum(b, "/Predictor", dictFrom, kw).getOrElse(1L).toInt
     val columns = keyNum(b, "/Columns", dictFrom, kw).getOrElse(1L).toInt
@@ -515,7 +515,7 @@ object Pdf {
         dataFrom + len.toInt)
       val data =
         if (keyIdx(b, "/FlateDecode", from, kw) >= 0)
-          inflate(raw, 0, raw.length).getOrElse(return None)
+          Bytes.inflate(raw, 0, raw.length).getOrElse(return None)._1
         else raw
       if (first < 0 || first > data.length) return None
       val nums = new Array[Long](nObjs.toInt)
@@ -577,23 +577,6 @@ object Pdf {
   // ------------------------------------------------------------------
   // content-stream text extraction (round 14)
   // ------------------------------------------------------------------
-
-  /** Inflate a FlateDecode stream (JDK zlib). */
-  private def inflate(b: Array[Byte], from: Int, until: Int)
-      : Option[Array[Byte]] =
-    try {
-      val inf = new java.util.zip.Inflater()
-      inf.setInput(b, from, until - from)
-      val out = new ByteArrayOutputStream(math.max(64, (until - from) * 3))
-      val buf = new Array[Byte](4096)
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && inf.needsInput()) return None // truncated
-        out.write(buf, 0, n)
-      }
-      inf.end()
-      Some(out.toByteArray)
-    } catch { case _: Exception => None }
 
   /** One text-run tokenizer pass over a decoded content stream.
     * Model (deliberately deterministic, the standard-14 assumption —
@@ -861,7 +844,8 @@ object Pdf {
             dataFrom + dataLen.toInt)
           val flate = indexOf(b, "/FlateDecode", sFrom, kw) >= 0
           val data =
-            if (flate) inflate(raw, 0, raw.length).getOrElse(return None)
+            if (flate)
+              Bytes.inflate(raw, 0, raw.length).getOrElse(return None)._1
             else raw
           out ++= tokenizeText(data).getOrElse(return None)
         }

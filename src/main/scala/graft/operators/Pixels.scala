@@ -1,11 +1,13 @@
 package graft.operators
 
 import java.io.ByteArrayOutputStream
-import java.util.zip.{CRC32, Deflater, Inflater}
+import java.util.zip.{CRC32, Deflater}
 
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
+import graft.operators.Bytes.{i32be, i32le, le16, le32, putBe32, u16, u16le,
+  u32}
 
 /** REAL PNG pixel decode — the step the multimodal family had stubbed.
   *
@@ -46,15 +48,6 @@ object Pixels {
 
   private val PngSig =
     Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
-
-  private def putBe32(b: Array[Byte], off: Int, v: Int): Unit = {
-    b(off) = (v >>> 24).toByte; b(off + 1) = (v >>> 16).toByte
-    b(off + 2) = (v >>> 8).toByte; b(off + 3) = v.toByte
-  }
-
-  private def be32(b: Array[Byte], off: Int): Int =
-    ((b(off) & 0xff) << 24) | ((b(off + 1) & 0xff) << 16) |
-      ((b(off + 2) & 0xff) << 8) | (b(off + 3) & 0xff)
 
   private def writeChunk(out: ByteArrayOutputStream, typ: String,
       payload: Array[Byte]): Unit = {
@@ -162,16 +155,16 @@ object Pixels {
       val idat = new ByteArrayOutputStream(bytes.length)
       var done = false
       while (!done && off + 12 <= bytes.length) {
-        val len = be32(bytes, off)
+        val len = i32be(bytes, off)
         if (len < 0 || off + 12 + len > bytes.length) return None
         val typ = new String(bytes, off + 4, 4, "US-ASCII")
         val crc = new CRC32()
         crc.update(bytes, off + 4, 4 + len)
-        if (crc.getValue.toInt != be32(bytes, off + 8 + len)) return None
+        if (crc.getValue.toInt != i32be(bytes, off + 8 + len)) return None
         typ match {
           case "IHDR" =>
             if (len != 13) return None
-            w = be32(bytes, off + 8); h = be32(bytes, off + 12)
+            w = i32be(bytes, off + 8); h = i32be(bytes, off + 12)
             depth = bytes(off + 16) & 0xff
             color = bytes(off + 17) & 0xff
             interlace = bytes(off + 20) & 0xff
@@ -183,9 +176,7 @@ object Pixels {
           case "PLTE" =>
             if (len % 3 != 0 || len > 768) return None
             palette = Array.tabulate(len / 3)(p =>
-              ((bytes(off + 8 + p * 3) & 0xff) << 16) |
-                ((bytes(off + 8 + p * 3 + 1) & 0xff) << 8) |
-                (bytes(off + 8 + p * 3 + 2) & 0xff))
+              Bytes.u24be(bytes, off + 8 + p * 3))
           case "IDAT" => idat.write(bytes, off + 8, len)
           case "IEND" => done = true
           case _ => () // ancillary (tEXt, ...) — hop
@@ -213,22 +204,9 @@ object Pixels {
         val pw = passW(p); val ph = passH(p)
         if (pw > 0 && ph > 0) total += ph * (rowBytesOf(pw) + 1)
       }
-      val raw = new Array[Byte](total)
-      val inf = new Inflater(false) // zlib wrapper, adler32-verified
-      inf.setInput(idat.toByteArray)
-      var got = 0
-      while (got < raw.length && !inf.finished()) {
-        val n = inf.inflate(raw, got, raw.length - got)
-        // needsDictionary: a hostile zlib stream demanding a preset
-        // dictionary would otherwise return 0 forever — reject, don't
-        // spin (PNG never uses preset dictionaries)
-        if (n == 0 && (inf.needsInput() || inf.needsDictionary())) {
-          inf.end(); return None
-        }
-        got += n
-      }
-      inf.end()
-      if (got != raw.length) return None
+      // the stream must decode to exactly the bytes the image needs
+      val raw = Bytes.inflate(idat.toByteArray, 0, idat.size, total)
+        .filter(_._1.length == total).getOrElse(return None)._1
       val out = new Array[Int](w * h * (if (depth == 8) spp else 1))
       var roff = 0
       passes.foreach { case p @ (xs, xStep, ys, yStep) =>
@@ -591,9 +569,8 @@ object Pixels {
     require(pixels.length == width * height,
       s"pixel buffer ${pixels.length} != ${width}x$height")
     val out = new ByteArrayOutputStream(pixels.length / 2 + 900)
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
     out.write("GIF87a".getBytes("US-ASCII"), 0, 6)
-    u16(width); u16(height)
+    le16(out, width); le16(out, height)
     out.write(0xf7) // GCT present, 8-bit color resolution, 256 entries
     out.write(0); out.write(0) // bg color, aspect
     var i = 0
@@ -607,7 +584,8 @@ object Pixels {
     }
     out.write(0)
     // image descriptor
-    out.write(0x2c); u16(0); u16(0); u16(width); u16(height); out.write(0)
+    out.write(0x2c); le16(out, 0); le16(out, 0); le16(out, width)
+    le16(out, height); out.write(0)
     out.write(8) // LZW minimum code size
     val lzw = lzwCompress(pixels)
     off = 0
@@ -634,9 +612,8 @@ object Pixels {
     val gctSize = 1 << gctBits
     val mc = math.max(2, gctBits)
     val out = new ByteArrayOutputStream(indices.length / 2 + gctSize * 3 + 64)
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
     out.write("GIF87a".getBytes("US-ASCII"), 0, 6)
-    u16(width); u16(height)
+    le16(out, width); le16(out, height)
     out.write(0x80 | ((gctBits - 1) & 7) | 0x70) // GCT, 8-bit res, size
     out.write(0); out.write(0)
     var i = 0
@@ -645,7 +622,8 @@ object Pixels {
       out.write(g); out.write(g); out.write(g)
       i += 1
     }
-    out.write(0x2c); u16(0); u16(0); u16(width); u16(height); out.write(0)
+    out.write(0x2c); le16(out, 0); le16(out, 0); le16(out, width)
+    le16(out, height); out.write(0)
     out.write(mc)
     val lzw = lzwCompress(indices, mc)
     var off = 0
@@ -667,7 +645,6 @@ object Pixels {
       if (bytes.length < 13 + 10) return None
       val sig = new String(bytes, 0, 6, "US-ASCII")
       if (sig != "GIF87a" && sig != "GIF89a") return None
-      def le16(off: Int): Int = (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
       val flags = bytes(10) & 0xff
       var off = 13
       // palette: grayscale value per index (we read R; gray GIFs have
@@ -686,7 +663,7 @@ object Pixels {
               off += 1 + (bytes(off) & 0xff)
             off += 1
           case 0x2c =>
-            val w = le16(off + 5); val h = le16(off + 7)
+            val w = u16le(bytes, off + 5); val h = u16le(bytes, off + 7)
             val iflags = bytes(off + 9) & 0xff
             val interlaced = (iflags & 0x40) != 0
             off += 10
@@ -747,16 +724,15 @@ object Pixels {
     frames.foreach { case (px, _) =>
       require(px.length == width * height, "frame size mismatch") }
     val out = new ByteArrayOutputStream(frames.size * width * height / 2 + 900)
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >>> 8) & 0xff) }
     out.write("GIF89a".getBytes("US-ASCII"), 0, 6)
-    u16(width); u16(height)
+    le16(out, width); le16(out, height)
     out.write(0xf7); out.write(0); out.write(0)
     var i = 0
     while (i < 256) { out.write(i); out.write(i); out.write(i); i += 1 }
     // NETSCAPE2.0 loop-forever application extension
     out.write(0x21); out.write(0xff); out.write(11)
     out.write("NETSCAPE2.0".getBytes("US-ASCII"), 0, 11)
-    out.write(3); out.write(1); u16(0); out.write(0)
+    out.write(3); out.write(1); le16(out, 0); out.write(0)
     // comment extension (variable length — the walk must hop it)
     out.write(0x21); out.write(0xfe)
     var off = 0
@@ -768,8 +744,9 @@ object Pixels {
     frames.foreach { case (px, delayCs) =>
       // Graphic Control Extension: disposal 1 (leave), no transparency
       out.write(0x21); out.write(0xf9); out.write(4)
-      out.write(0x04); u16(delayCs); out.write(0); out.write(0)
-      out.write(0x2c); u16(0); u16(0); u16(width); u16(height); out.write(0)
+      out.write(0x04); le16(out, delayCs); out.write(0); out.write(0)
+      out.write(0x2c); le16(out, 0); le16(out, 0); le16(out, width)
+      le16(out, height); out.write(0)
       out.write(8)
       val lzw = lzwCompress(px)
       var o = 0
@@ -796,9 +773,7 @@ object Pixels {
       if (bytes.length < 13 + 10) return None
       val sig = new String(bytes, 0, 6, "US-ASCII")
       if (sig != "GIF87a" && sig != "GIF89a") return None
-      def le16(off: Int): Int =
-        (bytes(off) & 0xff) | ((bytes(off + 1) & 0xff) << 8)
-      val sw = le16(6); val sh = le16(8)
+      val sw = u16le(bytes, 6); val sh = u16le(bytes, 8)
       if (sw <= 0 || sh <= 0 || sw.toLong * sh > (1 << 26)) return None
       val flags = bytes(10) & 0xff
       var off = 13
@@ -815,7 +790,7 @@ object Pixels {
         (bytes(off) & 0xff) match {
           case 0x21 if (bytes(off + 1) & 0xff) == 0xf9 => // GCE
             if ((bytes(off + 2) & 0xff) != 4) return None
-            pendingDelay = le16(off + 4)
+            pendingDelay = u16le(bytes, off + 4)
             if ((bytes(off + 7) & 0xff) != 0) return None // terminator
             off += 8
           case 0x21 => // other extension: label + sub-block chain
@@ -824,8 +799,8 @@ object Pixels {
               off += 1 + (bytes(off) & 0xff)
             off += 1
           case 0x2c =>
-            val left = le16(off + 1); val top = le16(off + 3)
-            val w = le16(off + 5); val h = le16(off + 7)
+            val left = u16le(bytes, off + 1); val top = u16le(bytes, off + 3)
+            val w = u16le(bytes, off + 5); val h = u16le(bytes, off + 7)
             val iflags = bytes(off + 9) & 0xff
             // full-rect replacement frames only; LCT/interlace out of
             // contract
@@ -949,9 +924,7 @@ object Pixels {
       }
     }
     val out = new ByteArrayOutputStream(pixels.length + 256)
-    def w16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def w32(v: Long): Unit = { w16((v & 0xffff).toInt); w16(((v >> 16) & 0xffff).toInt) }
-    out.write('I'); out.write('I'); w16(42)
+    out.write('I'); out.write('I'); le16(out, 42)
     // layout: header(8) + strips + [strip arrays if out-of-line] + IFD
     val stripOffsets = new Array[Long](nStrips)
     var cursor = 8L
@@ -961,11 +934,11 @@ object Pixels {
     val arraysAt = cursor
     val arrayBytes = if (nStrips > 1) nStrips * 8L else 0L // two LONG arrays
     val ifdAt = arraysAt + arrayBytes
-    w32(ifdAt)
+    le32(out, ifdAt)
     strips.foreach(st => out.write(st, 0, st.length))
     if (nStrips > 1) {
-      stripOffsets.foreach(w32)
-      strips.foreach(st => w32(st.length.toLong))
+      stripOffsets.foreach(le32(out, _))
+      strips.foreach(st => le32(out, st.length.toLong))
     }
     val entries = Seq[(Int, Int, Long, Long)](
       (256, 4, 1, width.toLong), // ImageWidth LONG
@@ -980,13 +953,13 @@ object Pixels {
       (279, 4, nStrips.toLong,
         if (nStrips > 1) arraysAt + nStrips * 4L
         else strips(0).length.toLong)) // StripByteCounts
-    w16(entries.size)
+    le16(out, entries.size)
     entries.foreach { case (tag, typ, cnt, value) =>
-      w16(tag); w16(typ); w32(cnt)
-      if (typ == 3 && cnt == 1) { w16(value.toInt); w16(0) }
-      else w32(value)
+      le16(out, tag); le16(out, typ); le32(out, cnt)
+      if (typ == 3 && cnt == 1) { le16(out, value.toInt); le16(out, 0) }
+      else le32(out, value)
     }
-    w32(0) // next IFD
+    le32(out, 0) // next IFD
     out.toByteArray
   }
 
@@ -1111,16 +1084,10 @@ object Pixels {
       val be = bytes(0) == 'M' && bytes(1) == 'M'
       val le = bytes(0) == 'I' && bytes(1) == 'I'
       if (!be && !le) return None
-      def u16(i: Long): Int =
-        if (be) ((bytes(i.toInt) & 0xff) << 8) | (bytes(i.toInt + 1) & 0xff)
-        else (bytes(i.toInt) & 0xff) | ((bytes(i.toInt + 1) & 0xff) << 8)
-      def u32(i: Long): Long =
-        if (be) (u16(i).toLong << 16) | u16(i + 2)
-        else u16(i).toLong | (u16(i + 2).toLong << 16)
-      if (u16(2) != 42) return None
-      val ifdAt = u32(4)
+      if (u16(bytes, 2, be) != 42) return None
+      val ifdAt = u32(bytes, 4, be)
       if (ifdAt + 2 > bytes.length) return None
-      val n = u16(ifdAt)
+      val n = u16(bytes, ifdAt.toInt, be)
       var w = -1; var h = -1; var bps = 8; var comp = 1
       var rowsPerStrip = Long.MaxValue
       var offCnt = 0L; var offAt = -1L; var offInline = -1L
@@ -1131,9 +1098,12 @@ object Pixels {
       while (e < n) {
         val at = ifdAt + 2 + e * 12
         if (at + 12 > bytes.length) return None
-        val tag = u16(at); val typ = u16(at + 2); val cnt = u32(at + 4)
+        val tag = u16(bytes, at.toInt, be)
+        val typ = u16(bytes, (at + 2).toInt, be)
+        val cnt = u32(bytes, (at + 4).toInt, be)
         def scalar(): Long =
-          if (typ == 3) u16(at + 8).toLong else u32(at + 8)
+          if (typ == 3) u16(bytes, (at + 8).toInt, be).toLong
+          else u32(bytes, (at + 8).toInt, be)
         tag match {
           case 256 => w = scalar().toInt
           case 257 => h = scalar().toInt
@@ -1142,11 +1112,13 @@ object Pixels {
           case 262 => photometric = scalar().toInt
           case 273 =>
             offCnt = cnt
-            if (cnt == 1) offInline = scalar() else offAt = u32(at + 8)
+            if (cnt == 1) offInline = scalar()
+            else offAt = u32(bytes, (at + 8).toInt, be)
           case 278 => rowsPerStrip = scalar()
           case 279 =>
             cntCnt = cnt
-            if (cnt == 1) cntInline = scalar() else cntAt = u32(at + 8)
+            if (cnt == 1) cntInline = scalar()
+            else cntAt = u32(bytes, (at + 8).toInt, be)
           case 317 => predictor = scalar().toInt
           case _ => () // hop
         }
@@ -1160,7 +1132,7 @@ object Pixels {
       val nStrips = offCnt.toInt
       def arr(cntN: Int, inline: Long, atOff: Long): Array[Long] =
         if (cntN == 1) Array(inline)
-        else Array.tabulate(cntN)(i => u32(atOff + i * 4L))
+        else Array.tabulate(cntN)(i => u32(bytes, (atOff + i * 4L).toInt, be))
       val offs = arr(nStrips, offInline, offAt)
       val cnts = arr(nStrips, cntInline, cntAt)
       val px = new Array[Int](w * h)
@@ -1216,14 +1188,14 @@ object Pixels {
     val dataSize = stride * height
     val offBits = 14 + 40 + 256 * 4
     val out = new ByteArrayOutputStream(offBits + dataSize)
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def u32(v: Int): Unit = { u16(v & 0xffff); u16((v >>> 16) & 0xffff) }
     out.write('B'); out.write('M')
-    u32(offBits + dataSize); u32(0); u32(offBits)
-    u32(40); u32(width); u32(height) // positive height = bottom-up
-    u16(1); u16(8) // planes, bpp
-    u32(0); u32(dataSize) // BI_RGB, image size
-    u32(2835); u32(2835); u32(256); u32(0) // dpi, palette size, important
+    le32(out, offBits + dataSize); le32(out, 0); le32(out, offBits)
+    // positive height = bottom-up
+    le32(out, 40); le32(out, width); le32(out, height)
+    le16(out, 1); le16(out, 8) // planes, bpp
+    le32(out, 0); le32(out, dataSize) // BI_RGB, image size
+    // dpi, palette size, important
+    le32(out, 2835); le32(out, 2835); le32(out, 256); le32(out, 0)
     var i = 0
     while (i < 256) { out.write(i); out.write(i); out.write(i); out.write(0); i += 1 }
     var y = height - 1
@@ -1290,14 +1262,12 @@ object Pixels {
     val data = body.toByteArray
     val offBits = 14 + 40 + 256 * 4
     val out = new ByteArrayOutputStream(offBits + data.length)
-    def u16(v: Int): Unit = { out.write(v & 0xff); out.write((v >> 8) & 0xff) }
-    def u32(v: Int): Unit = { u16(v & 0xffff); u16((v >>> 16) & 0xffff) }
     out.write('B'); out.write('M')
-    u32(offBits + data.length); u32(0); u32(offBits)
-    u32(40); u32(width); u32(height)
-    u16(1); u16(8)
-    u32(1); u32(data.length) // BI_RLE8
-    u32(2835); u32(2835); u32(256); u32(0)
+    le32(out, offBits + data.length); le32(out, 0); le32(out, offBits)
+    le32(out, 40); le32(out, width); le32(out, height)
+    le16(out, 1); le16(out, 8)
+    le32(out, 1); le32(out, data.length) // BI_RLE8
+    le32(out, 2835); le32(out, 2835); le32(out, 256); le32(out, 0)
     var i = 0
     while (i < 256) { out.write(i); out.write(i); out.write(i); out.write(0); i += 1 }
     out.write(data, 0, data.length)
@@ -1314,19 +1284,18 @@ object Pixels {
   def decodeGrayBmp(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
     try {
       if (bytes.length < 54 || bytes(0) != 'B' || bytes(1) != 'M') return None
-      def u16(i: Int): Int = (bytes(i) & 0xff) | ((bytes(i + 1) & 0xff) << 8)
-      def u32(i: Int): Int = u16(i) | (u16(i + 2) << 16)
-      val offBits = u32(10)
-      val hdrSize = u32(14)
+      val offBits = i32le(bytes, 10)
+      val hdrSize = i32le(bytes, 14)
       if (hdrSize < 40) return None // BITMAPCOREHEADER out of contract
-      val w = u32(18)
-      val hRaw = u32(22)
+      val w = i32le(bytes, 18)
+      val hRaw = i32le(bytes, 22)
       val topDown = hRaw < 0
       val h = math.abs(hRaw)
-      if (u16(26) != 1 || u16(28) != 8) return None // 8-bit palette only
-      val compression = u32(30)
+      // 8-bit palette only
+      if (u16le(bytes, 26) != 1 || u16le(bytes, 28) != 8) return None
+      val compression = i32le(bytes, 30)
       if (compression != 0 && compression != 1) return None // RGB / RLE8
-      var palSize = u32(46)
+      var palSize = i32le(bytes, 46)
       if (palSize == 0) palSize = 256
       if (w <= 0 || h <= 0 || w.toLong * h > (1 << 26)) return None
       val palAt = 14 + hdrSize

@@ -1,7 +1,9 @@
 package graft.operators
 
 import java.io.ByteArrayOutputStream
-import java.util.zip.{CRC32, Deflater, Inflater}
+import java.util.zip.{CRC32, Deflater}
+
+import graft.operators.Bytes.{be32, u32be}
 
 /** PNG metadata chunks (public spec, PNG third edition / RFC 2083):
   * tEXt (Latin-1 keyword/value), zTXt (Latin-1, zlib-deflated value),
@@ -30,29 +32,8 @@ object PngMeta {
   final case class PngMetadata(texts: Seq[PngText],
       exif: Option[TiffHeaders.ExifMeta], nChunks: Int)
 
-  private val MaxInflate = 1 << 24
-
-  private def be32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xff).toLong << 24) | ((b(i + 1) & 0xff) << 16) |
-      ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-
-  private def inflate(b: Array[Byte], off: Int, len: Int): Option[Array[Byte]] =
-    try {
-      val inf = new Inflater()
-      inf.setInput(b, off, len)
-      val out = new ByteArrayOutputStream(math.min(len * 4, 1 << 16))
-      val buf = new Array[Byte](8192)
-      while (!inf.finished()) {
-        val n = inf.inflate(buf)
-        if (n == 0 && (inf.needsInput() || inf.needsDictionary())) {
-          inf.end(); return None // truncated or preset-dictionary stream
-        }
-        out.write(buf, 0, n)
-        if (out.size > MaxInflate) { inf.end(); return None } // bomb cap
-      }
-      inf.end()
-      Some(out.toByteArray)
-    } catch { case _: Exception => None }
+  /** Inflated text cap (16 MiB). */
+  private val MaxText = 1 << 24
 
   private def nulAt(b: Array[Byte], from: Int, until: Int): Int = {
     var i = from
@@ -75,7 +56,7 @@ object PngMeta {
       var exif: Option[TiffHeaders.ExifMeta] = None
       var nChunks = 0
       while (off + 8 <= b.length) {
-        val len = be32(b, off)
+        val len = u32be(b, off)
         if (len < 0 || len > b.length - off - 12) return None
         val typ = new String(b, off + 4, 4, "US-ASCII")
         val p = off + 8
@@ -84,7 +65,7 @@ object PngMeta {
         def crcOk: Boolean = {
           val crc = new CRC32()
           crc.update(b, off + 4, 4 + len.toInt)
-          crc.getValue == be32(b, e)
+          crc.getValue == u32be(b, e)
         }
         def keywordEnd: Int = {
           val k = nulAt(b, p, e)
@@ -101,7 +82,8 @@ object PngMeta {
             if (!crcOk) return None
             val k = keywordEnd
             if (k < 0 || k + 2 > e || b(k + 1) != 0) return None // method 0
-            val v = inflate(b, k + 2, e - k - 2).getOrElse(return None)
+            val v = Bytes.inflate(b, k + 2, e - k - 2, MaxText)
+              .getOrElse(return None)._1
             texts :+= PngText(new String(b, p, k - p, "ISO-8859-1"),
               new String(v, "ISO-8859-1"), "ztxt", "")
           case "iTXt" =>
@@ -116,8 +98,8 @@ object PngMeta {
             if (transEnd < 0) return None
             val raw =
               if (compressed)
-                inflate(b, transEnd + 1, e - transEnd - 1)
-                  .getOrElse(return None)
+                Bytes.inflate(b, transEnd + 1, e - transEnd - 1, MaxText)
+                  .getOrElse(return None)._1
               else java.util.Arrays.copyOfRange(b, transEnd + 1, e)
             texts :+= PngText(new String(b, p, k - p, "ISO-8859-1"),
               new String(raw, "UTF-8"), "itxt",
@@ -143,18 +125,14 @@ object PngMeta {
 
   private def chunk(typ: String, payload: Array[Byte]): Array[Byte] = {
     val out = new ByteArrayOutputStream(payload.length + 12)
-    def w32(v: Long): Unit = {
-      out.write(((v >> 24) & 0xff).toInt); out.write(((v >> 16) & 0xff).toInt)
-      out.write(((v >> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
-    }
-    w32(payload.length.toLong)
+    be32(out, payload.length.toLong)
     val t = typ.getBytes("US-ASCII")
     out.write(t, 0, 4)
     out.write(payload, 0, payload.length)
     val crc = new CRC32()
     crc.update(t, 0, 4)
     crc.update(payload, 0, payload.length)
-    w32(crc.getValue)
+    be32(out, crc.getValue)
     out.toByteArray
   }
 

@@ -30,7 +30,7 @@ object Postings {
     ids.foreach { id =>
       val v = id - prev
       require(v >= 0, s"unsorted postings: $id after $prev")
-      Protobuf.putVarint(out, v)
+      Bytes.putVarint(out, v)
       prev = id
     }
     out.toByteArray
@@ -44,7 +44,7 @@ object Postings {
     var prev = base
     var i = 0
     while (i < b.length) {
-      val (gap, next) = Protobuf.varint(b, i).getOrElse(return None)
+      val (gap, next) = Bytes.varint(b, i).getOrElse(return None)
       i = next
       prev += gap
       out += prev

@@ -5,6 +5,7 @@ import java.io.ByteArrayOutputStream
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
+import graft.operators.Bytes.{putVarint, varint}
 
 /** Protobuf wire-format field census — the binary sibling of the JSON
   * path/type census (q301). A blob store full of serialized protobuf
@@ -60,32 +61,7 @@ object Protobuf {
     Some(out.result())
   }
 
-  /** Base-128 varint at `off`: (value, nextOffset). None past 10 bytes
-    * (the 64-bit maximum) or on truncation. */
-  private[operators] def varint(b: Array[Byte], off: Int): Option[(Long, Int)] = {
-    var v = 0L
-    var shift = 0
-    var i = off
-    while (i < b.length && shift <= 63) {
-      val x = b(i) & 0xff
-      v |= (x & 0x7fL) << shift
-      i += 1
-      if ((x & 0x80) == 0) return Some((v, i))
-      shift += 7
-    }
-    None
-  }
-
   // --------------------------------------------------- fixture emitter
-
-  /** Base-128 varint writer — the single write-side twin of [[varint]],
-    * shared by the zip/avro/postings encoders so encode and decode
-    * cannot drift apart per module. */
-  private[operators] def putVarint(out: ByteArrayOutputStream, v0: Long): Unit = {
-    var v = v0
-    while ((v & ~0x7fL) != 0) { out.write(((v & 0x7f) | 0x80).toInt); v >>>= 7 }
-    out.write(v.toInt)
-  }
 
   private def putTag(out: ByteArrayOutputStream, fieldNo: Int, wt: Int): Unit =
     putVarint(out, (fieldNo.toLong << 3) | wt)

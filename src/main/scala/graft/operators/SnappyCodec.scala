@@ -2,6 +2,8 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
+import graft.operators.Bytes.{u16le, u24le, u32le}
+
 /** Snappy, from the public format descriptions in google/snappy
   * (`format_description.txt` — the raw block format — and
   * `framing_format.txt` — the `sNaPpY` chunked stream with masked
@@ -31,33 +33,16 @@ object SnappyCodec {
   // raw block format
   // ------------------------------------------------------------------
 
-  /** LE base-128 varint at `at`; (value, indexAfter). Five bytes max
-    * (32-bit lengths per the spec). */
-  private def varint(b: Array[Byte], at: Int): Option[(Long, Int)] = {
-    var v = 0L
-    var i = at
-    var shift = 0
-    while (shift <= 28) {
-      if (i >= b.length) return None
-      val x = b(i) & 0xff
-      v |= (x & 0x7fL) << shift
-      i += 1
-      if ((x & 0x80) == 0) {
-        if (v > 0xffffffffL) return None
-        return Some((v, i))
-      }
-      shift += 7
-    }
-    None
-  }
-
   /** Decode one raw snappy block in `b[from, until)`. */
   def decompressRaw(b: Array[Byte], from: Int, until: Int,
       maxOut: Int): Option[Array[Byte]] = {
     try {
       if (b == null || from < 0 || until > b.length || from >= until)
         return None
-      val (total, dataAt) = varint(b, from).getOrElse(return None)
+      // the preamble is a 32-bit length: five bytes at most
+      val (total, dataAt) = Bytes.varint(b, from)
+        .filter { case (v, next) => next - from <= 5 && v <= 0xffffffffL }
+        .getOrElse(return None)
       if (total > maxOut) return None
       val out = new Array[Byte](total.toInt)
       var pos = 0
@@ -94,13 +79,12 @@ object SnappyCodec {
             } else if (tp == 2) {
               if (i + 2 > until) return None
               len = (tag >> 2) + 1
-              offset = (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8)
+              offset = u16le(b, i)
               i += 2
             } else {
               if (i + 4 > until) return None
               len = (tag >> 2) + 1
-              offset = (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-                ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
+              offset = u32le(b, i)
               i += 4
             }
             if (offset <= 0 || offset > pos) return None // before start
@@ -177,11 +161,6 @@ object SnappyCodec {
     val crc = c.getValue
     (((crc >>> 15) | (crc << 17)) + 0xa282ead8L) & 0xffffffffL
   }
-
-  private def u24le(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16)
-  private def u32le(b: Array[Byte], i: Int): Long =
-    (u24le(b, i).toLong & 0xffffffL) | ((b(i + 3) & 0xffL) << 24)
 
   /** Decode a framed snappy stream: the leading stream-identifier
     * chunk, compressed (0x00) and uncompressed (0x01) data chunks

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.operators.Bytes.{putBe32, u16be, u32be}
+
 /** SQLite database header sniff (public spec: sqlite.org file-format
   * documentation — the 100-byte header). SQLite files are a real
   * crawl/dataset population (app exports, open-data dumps, browser
@@ -15,12 +17,6 @@ object Sqlite {
       encoding: String, userVersion: Long, applicationId: Long,
       fileBytes: Long)
 
-  private def u16(b: Array[Byte], i: Int): Int =
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-  private def u32(b: Array[Byte], i: Int): Long =
-    ((b(i) & 0xff).toLong << 24) | ((b(i + 1) & 0xff) << 16) |
-      ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-
   private val Magic = "SQLite format 3".getBytes("US-ASCII") :+ 0.toByte
 
   def decodeSqlite(b: Array[Byte]): Option[SqliteMeta] =
@@ -28,25 +24,25 @@ object Sqlite {
       if (b == null || b.length < 100) return None
       var i = 0
       while (i < 16) { if (b(i) != Magic(i)) return None; i += 1 }
-      val rawPage = u16(b, 16)
+      val rawPage = u16be(b, 16)
       // value 1 encodes 65536; otherwise a power of two in 512..32768
       val pageSize =
         if (rawPage == 1) 65536
         else if (rawPage >= 512 && rawPage <= 32768 &&
           Integer.bitCount(rawPage) == 1) rawPage
         else return None
-      val nPages = u32(b, 28)
+      val nPages = u32be(b, 28)
       if (nPages < 1) return None
       // declared extent must equal the actual bytes — a truncated or
       // padded dump is not a healthy database
       if (pageSize.toLong * nPages != b.length) return None
-      val encoding = u32(b, 56) match {
+      val encoding = u32be(b, 56) match {
         case 1 => "utf8"
         case 2 => "utf16le"
         case 3 => "utf16be"
         case _ => return None
       }
-      Some(SqliteMeta(pageSize, nPages, encoding, u32(b, 60), u32(b, 68),
+      Some(SqliteMeta(pageSize, nPages, encoding, u32be(b, 60), u32be(b, 68),
         b.length.toLong))
     } catch { case _: Exception => None }
 
@@ -66,14 +62,10 @@ object Sqlite {
     out(16) = ((rawPage >> 8) & 0xff).toByte; out(17) = (rawPage & 0xff).toByte
     out(18) = 1; out(19) = 1 // legacy write/read versions
     out(21) = 64; out(22) = 32; out(23) = 32 // payload fractions (spec)
-    def w32(i: Int, v: Long): Unit = {
-      out(i) = ((v >> 24) & 0xff).toByte; out(i + 1) = ((v >> 16) & 0xff).toByte
-      out(i + 2) = ((v >> 8) & 0xff).toByte; out(i + 3) = (v & 0xff).toByte
-    }
-    w32(28, nPages.toLong)
-    w32(56, encoding.toLong)
-    w32(60, userVersion)
-    w32(68, applicationId)
+    putBe32(out, 28, nPages.toLong)
+    putBe32(out, 56, encoding.toLong)
+    putBe32(out, 60, userVersion)
+    putBe32(out, 68, applicationId)
     out
   }
 }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.operators.Bytes.{le32, u32le}
+
 /** Pure-JVM WebP-lossless (VP8L) codec — RFC 9649 §3 ("Specification
   * for WebP Lossless Bitstream"), no image libraries, no native deps.
   *
@@ -41,6 +43,7 @@ object Vp8l {
   // bit IO — LSB-first within bytes (RFC 9649 §3.2)
   // ------------------------------------------------------------------
 
+  // LSB-first, so not the MSB-first [[Bytes.BitReader]]
   private final class BitReader(b: Array[Byte], start: Int, end: Int) {
     private var bytePos = start
     private var bitPos = 0
@@ -625,14 +628,11 @@ object Vp8l {
     try {
       if (b == null || b.length < 20) return None
       def fourcc(at: Int) = new String(b, at, 4, "ISO-8859-1")
-      def le32(at: Int): Long =
-        (b(at) & 0xffL) | ((b(at + 1) & 0xffL) << 8) |
-          ((b(at + 2) & 0xffL) << 16) | ((b(at + 3) & 0xffL) << 24)
       if (fourcc(0) != "RIFF" || fourcc(8) != "WEBP") return None
       var off = 12
       while (off + 8 <= b.length) {
         val id = fourcc(off)
-        val size = le32(off + 4)
+        val size = u32le(b, off + 4)
         if (size > b.length - off - 8) return None
         if (id == "VP8L")
           return decodePayload(b, off + 8, off + 8 + size.toInt)
@@ -813,13 +813,9 @@ object Vp8l {
     val payload = w.toBytes
     val out = new java.io.ByteArrayOutputStream(payload.length + 20)
     def ascii(s: String): Unit = out.write(s.getBytes("ISO-8859-1"))
-    def le32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt); out.write(((v >> 24) & 0xff).toInt)
-    }
     val padded = payload.length + (payload.length & 1)
-    ascii("RIFF"); le32(4L + 8 + padded); ascii("WEBP")
-    ascii("VP8L"); le32(payload.length.toLong)
+    ascii("RIFF"); le32(out, 4L + 8 + padded); ascii("WEBP")
+    ascii("VP8L"); le32(out, payload.length.toLong)
     out.write(payload, 0, payload.length)
     if ((payload.length & 1) == 1) out.write(0)
     out.toByteArray

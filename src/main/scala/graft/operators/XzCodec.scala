@@ -5,6 +5,7 @@ import java.io.ByteArrayOutputStream
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
+import graft.operators.Bytes.{i64le, le32, u16be, u32le}
 
 /** XZ container + LZMA2/LZMA DECODER — pure JVM, from spec.
   *
@@ -96,39 +97,11 @@ object XzCodec {
   // 7 bits per byte, 0x80 continuation, max 9 bytes, minimal encoding)
   // ------------------------------------------------------------------
 
-  private def u16be(b: Array[Byte], i: Int): Int = {
-    if (i + 2 > b.length) fail()
-    ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-  }
-
-  private def u32le(b: Array[Byte], i: Int): Long = {
-    if (i + 4 > b.length) fail()
-    (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-      ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-  }
-
-  private def u64le(b: Array[Byte], i: Int): Long = {
-    if (i + 8 > b.length) fail()
-    u32le(b, i) | (u32le(b, i + 4) << 32)
-  }
-
-  private def vli(b: Array[Byte], off: Int): (Long, Int) = {
-    var v = 0L
-    var i = 0
-    var done = false
-    while (!done) {
-      if (off + i >= b.length || i >= 9) fail()
-      val x = b(off + i) & 0xff
-      v |= (x & 0x7fL) << (7 * i)
-      if ((x & 0x80) == 0) {
-        if (x == 0 && i > 0) fail() // non-minimal encoding
-        done = true
-      }
-      i += 1
-    }
-    if (v < 0) fail()
-    (v, off + i)
-  }
+  private def vli(b: Array[Byte], off: Int): (Long, Int) =
+    // at most 9 bytes, and no zero final byte (a non-minimal encoding)
+    Bytes.varint(b, off).filter { case (_, next) =>
+      next - off <= 9 && (next - off == 1 || b(next - 1) != 0)
+    }.getOrElse(fail())
 
   // ------------------------------------------------------------------
   // output window: linear buffer with a dictionary-reset barrier —
@@ -559,7 +532,7 @@ object XzCodec {
       case 1 =>
         if (crc32(out.buf, outStart, out.len - outStart) != u32le(b, q)) fail()
       case 4 =>
-        if (crc64(out.buf, outStart, out.len - outStart) != u64le(b, q)) fail()
+        if (crc64(out.buf, outStart, out.len - outStart) != i64le(b, q)) fail()
       case 10 =>
         val md = java.security.MessageDigest.getInstance("SHA-256")
         md.update(out.buf, outStart, out.len - outStart)
@@ -752,11 +725,6 @@ object XzCodec {
     out.toByteArray
   }
 
-  private def writeU32le(out: ByteArrayOutputStream, v: Long): Unit = {
-    var k = 0
-    while (k < 4) { out.write(((v >>> (8 * k)) & 0xff).toInt); k += 1 }
-  }
-
   private def writeVli(out: ByteArrayOutputStream, v0: Long): Unit = {
     var v = v0
     var more = true
@@ -776,7 +744,7 @@ object XzCodec {
     out.write(Array[Byte](0xfd.toByte, '7', 'z', 'X', 'Z', 0), 0, 6)
     val flags = Array[Byte](0, checkType.toByte)
     out.write(flags, 0, 2)
-    writeU32le(out, crc32(flags, 0, 2))
+    le32(out, crc32(flags, 0, 2))
     val checkSz = checkSizeOf(checkType)
     var records = Vector.empty[(Long, Long)]
     if (data.nonEmpty) {
@@ -789,7 +757,7 @@ object XzCodec {
       val hb = hdr.toByteArray
       hb(0) = ((hb.length + 4) / 4 - 1).toByte
       out.write(hb, 0, hb.length)
-      writeU32le(out, crc32(hb, 0, hb.length))
+      le32(out, crc32(hb, 0, hb.length))
       val filtered = if (deltaDist > 0) deltaEncode(data, deltaDist) else data
       val comp = if (literal) lzma2Literal(filtered) else lzma2Stored(filtered)
       out.write(comp, 0, comp.length)
@@ -797,10 +765,10 @@ object XzCodec {
       while (pad > 0) { out.write(0); pad -= 1 }
       checkType match {
         case 0 =>
-        case 1 => writeU32le(out, crc32(data, 0, data.length))
+        case 1 => le32(out, crc32(data, 0, data.length))
         case 4 =>
           val c = crc64(data, 0, data.length)
-          writeU32le(out, c & 0xffffffffL); writeU32le(out, c >>> 32)
+          le32(out, c & 0xffffffffL); le32(out, c >>> 32)
         case 10 =>
           val md = java.security.MessageDigest.getInstance("SHA-256")
           val dig = md.digest(data)
@@ -816,12 +784,12 @@ object XzCodec {
     while (idx.size % 4 != 0) idx.write(0)
     val ib = idx.toByteArray
     out.write(ib, 0, ib.length)
-    writeU32le(out, crc32(ib, 0, ib.length))
+    le32(out, crc32(ib, 0, ib.length))
     val tail = new ByteArrayOutputStream(8)
-    writeU32le(tail, (ib.length + 4).toLong / 4 - 1)
+    le32(tail, (ib.length + 4).toLong / 4 - 1)
     tail.write(flags, 0, 2)
     val tb = tail.toByteArray
-    writeU32le(out, crc32(tb, 0, tb.length))
+    le32(out, crc32(tb, 0, tb.length))
     out.write(tb, 0, tb.length)
     out.write('Y'); out.write('Z')
     out.toByteArray
@@ -849,7 +817,7 @@ object XzCodec {
       val lpv = (props / 9) % 5
       val pbv = props / 45
       val dictSize = math.max(u32le(b, 1), 4096L)
-      val declared = u64le(b, 5)
+      val declared = i64le(b, 5)
       val known = declared != -1L
       if (known && (declared < 0 || declared > maxOut)) return None
       val out = new OutBuf(maxOut)

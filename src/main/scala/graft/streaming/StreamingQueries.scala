@@ -131,8 +131,9 @@ object StreamingQueries {
     * the per-batch writes (partitionBy drops `_b` from the files, so
     * each file carries exactly the payload columns); names gain a
     * `b<k>_` prefix because one staging task writes an identically
-    * named part file into every `_b=` directory. Returns deliver(k). */
-  private def stageArrivals(withBatchCol: DataFrame,
+    * named part file into every `_b=` directory. Returns deliver(k),
+    * which throws an `IOException` naming the path when a move fails. */
+  private[streaming] def stageArrivals(withBatchCol: DataFrame,
       inputDir: String): Int => Unit = {
     val staging = tmp("arrstage_")
     withBatchCol.write.mode("overwrite").partitionBy("_b").parquet(staging)
@@ -141,24 +142,26 @@ object StreamingQueries {
       withBatchCol.schema.filterNot(_.name == "_b"))
     val dst = new org.apache.hadoop.fs.Path(inputDir)
     val fs = dst.getFileSystem(s.sparkContext.hadoopConfiguration)
-    fs.mkdirs(dst)
+    if (!fs.mkdirs(dst)) throw new java.io.IOException(s"cannot create $dst")
     (k: Int) => {
       val src = new org.apache.hadoop.fs.Path(staging, s"_b=$k")
-      val moved =
-        if (!fs.exists(src)) 0
-        else fs.listStatus(src).iterator
+      val parts =
+        if (!fs.exists(src)) Seq.empty
+        else fs.listStatus(src).toSeq
           .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
             !st.getPath.getName.startsWith("."))
-          .map { st =>
-            fs.rename(st.getPath, new org.apache.hadoop.fs.Path(
-              dst, s"b${k}_${st.getPath.getName}"))
-          }.size
+      parts.foreach { st =>
+        val to = new org.apache.hadoop.fs.Path(dst,
+          s"b${k}_${st.getPath.getName}")
+        if (!fs.rename(st.getPath, to)) throw new java.io.IOException(
+          s"arrival $k: cannot move ${st.getPath} to $to")
+      }
       // an EMPTY batch must still deliver one schema-bearing empty file:
       // the per-batch write pattern this replaces did (Spark writes one
       // empty part file for an empty frame), and the arrival's fold —
       // hence the state VERSION SEQUENCE a drift series reads — depends
       // on the stream source seeing a new file per arrival
-      if (moved == 0)
+      if (parts.isEmpty)
         s.createDataFrame(java.util.Collections.emptyList[
             org.apache.spark.sql.Row](), payloadSchema)
           .repartition(1).write.mode("append").parquet(inputDir)

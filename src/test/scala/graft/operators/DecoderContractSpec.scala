@@ -1,0 +1,248 @@
+package graft.operators
+
+import java.lang.management.ManagementFactory
+import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicReference
+
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+
+import graft.SparkSpec
+
+/** The hostile-input contract of every decoder whose code inflates or
+  * reads fixed-width integers through [[Bytes]]: on ANY input it returns
+  * (`None` or a value) without throwing, within 2 s of wall clock and
+  * 256 MiB allocated on the calling thread.
+  *
+  * Inputs are valid blobs from each module's own encoder, then
+  * truncated, bit-flipped, or with four bytes overwritten by a hostile
+  * length (0x7FFFFFF0 or 0xFFFFFFFF, either byte order). The fixed cases
+  * are streams built to hang or exhaust a decoder: a zlib header asking
+  * for a preset dictionary, a zip entry declaring a ~2 GiB size, and a
+  * gzip member inflating past the 64 MiB cap. */
+class DecoderContractSpec extends SparkSpec {
+  import DecoderContractSpec._
+
+  private val text = ("graft decoder contract " * 40).getBytes("UTF-8")
+
+  private def orcFile: Array[Byte] = {
+    val dir = Files.createTempDirectory("contract_orc").toString
+    spark.range(200).selectExpr("id", "id % 7 AS m").coalesce(1)
+      .write.mode("overwrite").option("compression", "zlib").orc(dir)
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".orc"))
+      .map(f => Files.readAllBytes(f.toPath)).head
+  }
+
+  private def unzipAll(b: Array[Byte]): Option[Vector[Option[Array[Byte]]]] =
+    Archive.zipEntries(b).map(_.map(e => Archive.unzipEntry(b, e)))
+
+  /** (name, valid blob, decode). */
+  private lazy val decoders: Seq[(String, Array[Byte], Array[Byte] => Any)] = {
+    val pages = Seq(Seq("hello world", "second line"), Seq("page two"))
+    val pdf = Pdf.encodeTextPdf("1.7", pages, flate = true)
+    val xrefPdf = Pdf.encodeXrefPdf("1.7", pages, encrypted = false,
+      predictor = 12, outline = Seq(Pdf.OItem("one", Seq(Pdf.OItem("two")))))
+    val png = Pixels.encodeGrayPng(16, 12,
+      Array.tabulate(192)(i => (i * 7) % 256), Array.emptyByteArray)
+    val (pack, head) = GitPack.fixtureChainPack(5L, "contract body", 3)
+    val sync = Array.tabulate(16)(_.toByte)
+    val recs = (0 until 30).map { i =>
+      Seq[AvroRecords.AV](AvroRecords.ALong(i.toLong),
+        if (i % 4 == 0) AvroRecords.ANull else AvroRecords.AStr(s"v$i"),
+        AvroRecords.ADbl(i * 0.5),
+        AvroRecords.AArr(Vector.tabulate(i % 3)(j => AvroRecords.AStr(s"g$j"))))
+    }
+    val orc = orcFile
+    Seq(
+      ("Pdf.extractText", pdf, Pdf.extractText _),
+      ("Pdf.decodePdf", pdf, Pdf.decodePdf _),
+      ("Pdf.extractText xref stream", xrefPdf, Pdf.extractText _),
+      ("Pdf.decodeOutline", xrefPdf, Pdf.decodeOutline _),
+      ("PdfFilters.decodeChain", zlib(text),
+        (b: Array[Byte]) => PdfFilters.decodeChain(b, Seq("FlateDecode"))),
+      ("Font.decodeFont woff",
+        Font.encodeWoff("ttf", "Contract", "Regular", 5, 1000), Font.decodeFont _),
+      ("Font.decodeFont sfnt",
+        Font.encodeSfnt("otf", "Contract", "Bold", 7, 2048), Font.decodeFont _),
+      ("Font.decodeWoff2Font", Font.encodeWoff2Font("ttf", "Contract",
+        "Regular", 5, 1000, fixedHuffman = true), Font.decodeWoff2Font _),
+      ("PngMeta.decodePngMeta", PngMeta.withChunks(png, Seq(
+        PngMeta.textChunk("Title", "t"),
+        PngMeta.ztxtChunk("Description", "contract " * 20),
+        PngMeta.itxtChunk("Comment", "ü contract", "en-US", true),
+        PngMeta.exifChunk(3, "Cam", bigEndian = true))), PngMeta.decodePngMeta _),
+      ("Pixels.decodeGrayPng", png, Pixels.decodeGrayPng _),
+      ("Pixels.decodeImage", png, Pixels.decodeImage _),
+      ("Pixels.decodePngLuma rgb", Pixels.encodeRgbPng(9, 7,
+        Array.tabulate(63)(i => i * 0x010203), Array.emptyByteArray),
+        Pixels.decodePngLuma _),
+      ("Pixels.decodePngLuma palette", Pixels.encodePalettePng(9, 7,
+        Array.tabulate(63)(_ % 4), Array(0x000000, 0xff0000, 0x00ff00, 0xffffff),
+        Array.emptyByteArray), Pixels.decodePngLuma _),
+      ("GitPack.packObjects", pack, GitPack.packObjects _),
+      ("GitPack.idxEntries", GitPack.encodeIdx(pack).get, GitPack.idxEntries _),
+      ("GitPack.looseObject", GitPack.encodeLoose("blob", text),
+        GitPack.looseObject _),
+      ("GitPack.bundle", GitPack.encodeBundle(
+        Seq((head, "refs/heads/main")), pack), GitPack.bundle _),
+      ("Compression.gunzip", Compression.encodeGzip(text, 7L, Some("f.txt"),
+        None), Compression.gunzip _),
+      ("Compression.gunzipMembers", Compression.encodeGzip(text, 1L, None,
+        None) ++ Compression.encodeGzip(text.take(99), 2L, None, Some("c")),
+        Compression.gunzipMembers _),
+      ("Archive zip", Archive.encodeZip(Seq(("a.txt", text, true),
+        ("b.txt", text.take(50), false))), unzipAll _),
+      ("Archive zip64", Archive.encodeZip64(Seq(("a.txt", text, true))),
+        unzipAll _),
+      ("AvroRecords.records", AvroRecords.encodeRecordFile(
+        AvroRecords.FixtureSchema, "deflate", sync, recs),
+        (b: Array[Byte]) => AvroRecords.records(b)),
+      ("Orc", orc, (b: Array[Byte]) =>
+        Orc.parseTail(b).map(m => Orc.readColumn(b, m, "m"))))
+  }
+
+  test("every valid blob decodes to a value") {
+    decoders.foreach { case (name, blob, decode) =>
+      val got = withinBudget(name)(decode(blob))
+      assert(got match {
+        case None | Some(None) => false
+        case v: Vector[_] => v.nonEmpty
+        case _ => true
+      }, s"$name: valid blob did not decode")
+    }
+  }
+
+  test("truncated, bit-flipped and length-overwritten blobs stay in budget") {
+    decoders.foreach { case (name, blob, decode) =>
+      val res = SCTest.check(SCTest.Parameters.default
+        .withMinSuccessfulTests(40).withInitialSeed(name.hashCode.toLong),
+        Prop.forAll(mutant(blob)) { b => withinBudget(name)(decode(b)); true })
+      assert(res.passed, s"$name: ${res.status}")
+    }
+  }
+
+  test("a PDF stream asking for a preset dictionary is rejected, not spun on") {
+    val pdf = Pdf.encodeTextPdf("1.7", Seq(Seq("locked text")), flate = true)
+    val at = indexOf(pdf, "/FlateDecode >> stream\n") +
+      "/FlateDecode >> stream\n".length
+    assert(withinBudget("Pdf FDICT")(Pdf.extractText(withFdict(pdf, at)))
+      == None)
+  }
+
+  test("a WOFF table asking for a preset dictionary is rejected, not spun on") {
+    val woff = Font.encodeWoff("ttf", "Locked", "Regular", 5, 1000)
+    val dir = java.nio.ByteBuffer.wrap(woff) // big-endian table directory
+    val nameAt = (0 until dir.getShort(12)).map(44 + 20 * _)
+      .find(e => new String(woff, e, 4, "US-ASCII") == "name").get
+    assert(withinBudget("Font FDICT")(
+      Font.decodeFont(withFdict(woff, dir.getInt(nameAt + 4)))) == None)
+  }
+
+  test("a zip entry declaring a ~2 GiB size is rejected without allocating it") {
+    val zip = Archive.encodeZip(Seq(("a.txt", text, true)))
+    val central = indexOf(zip, "PK\u0001\u0002")
+    val local = indexOf(zip, "PK\u0003\u0004")
+    val hostile = overwrite(overwrite(zip, central + 24, 0x7FFFFFF0L, be = false),
+      local + 22, 0x7FFFFFF0L, be = false)
+    val entries = Archive.zipEntries(hostile).get
+    assert(entries.head.uncompSize == 0x7FFFFFF0L)
+    assert(withinBudget("zip declared size")(
+      Archive.unzipEntry(hostile, entries.head)) == None)
+  }
+
+  test("a gzip member inflating past 64 MiB is cut off at the cap") {
+    val bos = new java.io.ByteArrayOutputStream()
+    val gz = new java.util.zip.GZIPOutputStream(bos)
+    val zeros = new Array[Byte](1 << 20)
+    (0 until 160).foreach(_ => gz.write(zeros))
+    gz.close()
+    val bomb = bos.toByteArray
+    assert(withinBudget("gzip bomb")(Compression.gunzip(bomb)) == None)
+    assert(withinBudget("gzip bomb members")(
+      Compression.gunzipMembers(bomb)) == Vector.empty)
+  }
+}
+
+object DecoderContractSpec {
+  val WallMs = 2000L
+  val AllocBytes: Long = 256L << 20
+
+  private val threads = ManagementFactory.getThreadMXBean
+    .asInstanceOf[com.sun.management.ThreadMXBean]
+
+  /** Run `f` on a fresh daemon thread and return its value; fail if it
+    * throws, outlives the wall-clock budget or allocates past the
+    * allocation budget. A hung call is left spinning on its daemon
+    * thread. */
+  def withinBudget[A](label: String)(f: => A): A = {
+    val result = new AtomicReference[Either[Throwable, (A, Long)]]()
+    val worker = new Thread(() => {
+      val id = Thread.currentThread.getId
+      val before = threads.getThreadAllocatedBytes(id)
+      try {
+        val v = f
+        result.set(Right((v, threads.getThreadAllocatedBytes(id) - before)))
+      } catch { case e: Throwable => result.set(Left(e)) }
+    }, s"contract-$label")
+    worker.setDaemon(true)
+    worker.start()
+    worker.join(WallMs)
+    if (worker.isAlive)
+      throw new AssertionError(s"$label: still running after $WallMs ms")
+    result.get match {
+      case Left(e) => throw new AssertionError(s"$label: threw $e", e)
+      case Right((_, alloc)) if alloc > AllocBytes =>
+        throw new AssertionError(s"$label: allocated ${alloc >> 20} MiB")
+      case Right((v, _)) => v
+    }
+  }
+
+  def zlib(b: Array[Byte]): Array[Byte] = {
+    val d = new java.util.zip.Deflater()
+    d.setInput(b); d.finish()
+    val out = new Array[Byte](b.length + 64)
+    val n = d.deflate(out)
+    d.end()
+    java.util.Arrays.copyOf(out, n)
+  }
+
+  def indexOf(b: Array[Byte], s: String): Int = {
+    val i = new String(b, "ISO-8859-1").indexOf(s)
+    require(i >= 0, s"marker not found: $s")
+    i
+  }
+
+  /** Overwrite `b(at)` with a zlib header whose FDICT bit is set (0x78
+    * 0x20: check bits valid, level 0) and a dictionary id: the JDK
+    * inflater then asks for a dictionary forever. */
+  def withFdict(b: Array[Byte], at: Int): Array[Byte] = {
+    val c = b.clone()
+    Array(0x78, 0x20, 0, 0, 0, 1).zipWithIndex.foreach { case (v, i) =>
+      c(at + i) = v.toByte
+    }
+    c
+  }
+
+  def overwrite(b: Array[Byte], at: Int, v: Long, be: Boolean): Array[Byte] = {
+    val c = b.clone()
+    (0 until 4).foreach { i =>
+      val shift = if (be) 24 - 8 * i else 8 * i
+      c(at + i) = (v >>> shift).toByte
+    }
+    c
+  }
+
+  /** A valid blob, damaged one of three ways. */
+  def mutant(b: Array[Byte]): Gen[Array[Byte]] = Gen.oneOf(
+    Gen.choose(0, b.length - 1).map(n => b.take(n)),
+    Gen.listOfN(3, Gen.zip(Gen.choose(0, b.length - 1), Gen.choose(0, 7)))
+      .map { flips =>
+        val c = b.clone()
+        flips.foreach { case (i, bit) => c(i) = (c(i) ^ (1 << bit)).toByte }
+        c
+      },
+    for {
+      at <- Gen.choose(0, b.length - 4)
+      v <- Gen.oneOf(0x7FFFFFF0L, 0xFFFFFFFFL)
+      be <- Gen.oneOf(true, false)
+    } yield overwrite(b, at, v, be))
+}

@@ -474,4 +474,15 @@ class DedupSpec extends SparkSpec {
     assert(r.select("doc_id").distinct().count() == r.count())
     assert(r.select("split").distinct().count() == 3)
   }
+
+  test("class staging leaves a readable directory for an empty class") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("classes_")
+      .resolve("in").toString
+    val rows = Seq((0L, "a"), (3L, "b"), (1L, "c")).toDF("doc_id", "text")
+    Dedup.stageClasses(rows.withColumn("k", $"doc_id" % 3), dir, 3)
+    val staged = (0 until 3).map(k => spark.read.parquet(s"$dir/k=$k"))
+    assert(staged.map(_.count()) == Seq(2L, 1L, 0L))
+    assert(staged.forall(_.columns.toSeq == Seq("doc_id", "text")))
+  }
 }
