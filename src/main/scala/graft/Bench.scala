@@ -6,14 +6,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // driver contract: bench runs at local[32]
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = graft.engine.GraftSession
-      .builder(s"local[$cpus]", shufflePartitions = cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // harness-scoped: drop the benign per-free localCheckpoint warning
-    // so the bench tail stays readable (see GraftSession scaladoc)
-    graft.engine.GraftSession.muteLocalCheckpointUnpersistWarn()
+    val spark = Harness.session(defaultCpus = 32)
     // JIT/codegen warmup so the first measured query isn't charged for
     // JVM startup (no query data is cached — catalog stays cold)
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
@@ -106,76 +99,27 @@ object Bench {
     // first query whose watchdog-killed worker refused to die: every
     // measurement after it shares cores with the zombie (ADVICE r5)
     var degradedFrom: Option[String] = None
-    /** One measured execution with the standard between-query hygiene. */
+    /** One measured execution under Harness.runOne's hygiene and stall
+      * watchdog; a timed-out query's elapsed time lands in the artifact
+      * and the retry pass re-measures it. */
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Double) = {
-      // no cross-query cache reuse: a cached frame left by an earlier
-      // query must not flatter a later query's timing
-      spark.catalog.clearCache()
-      // clearCache only drops SQL-cached frames — RDDs pinned by
-      // localCheckpoint (connected components, incremental dedup) survive
-      // it and accumulate block-manager memory across a 162-query
-      // session, degrading late queries (round-4: trivial scalar queries
-      // 25-45x slower late-run)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      // drop staged bucketed tables so every measurement of q155/q161
-      // pays the staging write: stageBucketed's tableExists guard would
-      // otherwise make the retry (or whichever of the two runs second)
-      // structurally cheaper than the first pass, and a min-of-two
-      // report would record a staging-free time as the query's cost
-      spark.catalog.listTables().collect()
-        .map(_.name).filter(_.startsWith("graft_bkt_"))
-        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
       // periodic GC breathing room: the ContextCleaner reclaims shuffle
       // files and broadcast blocks only when their weak refs are
       // collected, so a long run without GC pressure leaks tmp space
       ranSinceGc += 1
       if (ranSinceGc % 20 == 0) System.gc()
       streamNanos = 0L
-      val t0 = System.nanoTime()
-      // stall watchdog (Verify's recipe): a query wedged by the
-      // sandbox's 10-100x single-core stalls must not hang the whole
-      // bench — after the bound, cancel its job group, stop any active
-      // stream (stream jobs run under their own runId group, out of
-      // cancelJobGroup's reach), interrupt, and move on; the elapsed
-      // time lands in the artifact and the retry pass re-measures it
-      val timeoutMs = sys.env
-        .getOrElse("SPARK_GRAFT_BENCH_TIMEOUT_SEC", "240").toLong * 1000
-      val worker = new Thread(() => {
-        try {
-          spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
-          fn(spark, sfDir).count(); ()
-        } catch { case _: Throwable => () }
-        finally spark.sparkContext.clearJobGroup()
-      }, s"bench-$name")
-      worker.setDaemon(true)
-      worker.start()
-      worker.join(timeoutMs)
-      if (worker.isAlive) {
-        System.err.println(s"[watchdog] $name exceeded ${timeoutMs / 1000}s - cancelling")
-        spark.sparkContext.cancelJobGroup(name)
-        spark.streams.active.foreach(sq =>
-          try sq.stop() catch { case _: Throwable => () })
-        worker.interrupt()
-        worker.join(30000)
-        // a worker that survives the interrupt (uninterruptible native /
-        // parquet IO) keeps running CONCURRENTLY with every later
-        // measurement, contending for cores — record the session as
-        // degraded from this query on so overlapped timings are
-        // identifiable in the artifact
-        if (worker.isAlive) {
-          System.err.println(s"[watchdog] $name zombie survived interrupt - session degraded")
-          degradedFrom = degradedFrom.orElse(Some(name))
-        }
-      }
+      val run = Harness.runOne(spark, name, timeoutMs) { fn(spark, sfDir).count(); () }
+      if (run.zombie) degradedFrom = degradedFrom.orElse(Some(name))
       // terminated events post asynchronously — drain briefly so a
       // stream's runtime is attributed to the query that ran it; then
       // abandon any still-pending entry so a delayed event can neither
       // leak its time into a later query nor stall every later drain
-      val deadline = System.nanoTime() + 2000000000L
+      val d0 = System.nanoTime()
+      val deadline = d0 + 2000000000L
       while (starts.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
       starts.clear()
-      val total = (System.nanoTime() - t0) / 1e9
+      val total = run.seconds + (System.nanoTime() - d0) / 1e9
       // session-health telemetry (stderr only): when a run degrades, this
       // trace says whether heap, GC, threads, class count or CPU
       // starvation is the thing that grew
@@ -412,6 +356,10 @@ object Bench {
     println(line)
     spark.stop()
   }
+
+  /** Per-query watchdog bound, shared with Scratch. */
+  def timeoutMs: Long =
+    sys.env.getOrElse("SPARK_GRAFT_BENCH_TIMEOUT_SEC", "240").toLong * 1000
 
   /** Upper median (s(n/2) of the sorted values) — robust reference for
     * the regression flag; pure so BenchSpec can pin it. */

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Dev tool (like Bench/Verify — not library surface): generates an
@@ -35,11 +35,8 @@ object FixtureGen {
   def main(args: Array[String]): Unit = {
     val out = args(0)
     val scale = if (args.length > 1) args(1).toDouble else 1.0
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors(), 16).toString).toInt
-    val spark = graft.engine.GraftSession
-      .builder(s"local[$cpus]", shufflePartitions = cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(
+      defaultCpus = math.min(Runtime.getRuntime.availableProcessors(), 16))
     import spark.implicits._
 
     def n(base: Long): Long = math.max(1L, (base * scale).toLong)

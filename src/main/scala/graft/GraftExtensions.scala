@@ -4,13 +4,14 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CosineSimilarity, RhpSignature}
+import graft.functions.{CosineSimilarity, DamerauLevenshtein, JaroWinkler,
+  NormalizeUrl, RhpSignature}
 
-/** Session extension point: makes the engine's native functions available
-  * to ANY session (SQL included) via
-  * `spark.sql.extensions=graft.GraftExtensions` or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` — no
-  * per-session register() calls.
+/** Session extension point: the one way the engine's native functions
+  * reach a session (SQL included). Every `GraftSession` builder sets
+  * `spark.sql.extensions=graft.GraftExtensions`; any other session gets
+  * them from `SparkSession.builder().withExtensions(new GraftExtensions)`.
+  * Each function's argument checking lives in its companion's `build`.
   *
   * This is tier (b)/(c) of the customization ladder (custom Expression,
   * injected through SparkSessionExtensions). No custom LogicalPlan /
@@ -21,20 +22,21 @@ import graft.functions.{CosineSimilarity, RhpSignature}
   * built-in machinery).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "cosine_sim takes exactly 2 arguments")
-        CosineSimilarity(exprs.head, exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("rhp_signature"),
-      new ExpressionInfo(classOf[RhpSignature].getName, "rhp_signature"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "rhp_signature takes exactly 1 argument")
-        RhpSignature(exprs.head)
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
+}
+
+object GraftExtensions {
+  /** (SQL name, expression class, argument builder) of every native
+    * function. */
+  private val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("cosine_sim", classOf[CosineSimilarity], CosineSimilarity.build),
+    ("rhp_signature", classOf[RhpSignature], RhpSignature.build),
+    ("jaro_winkler", classOf[JaroWinkler], JaroWinkler.build),
+    ("damerau_levenshtein", classOf[DamerauLevenshtein],
+      DamerauLevenshtein.build),
+    ("normalize_url", classOf[NormalizeUrl], NormalizeUrl.build))
 }

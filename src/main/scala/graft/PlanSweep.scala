@@ -10,11 +10,10 @@ package graft
 object PlanSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = graft.engine.GraftSession.builder("local[8]", 8).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(defaultCpus = 8)
     var hits = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      try {
+      val run = Harness.runOne(spark, name, Bench.timeoutMs) {
         val p = graft.plans.PlanInspector.formatted(fn(spark, sfDir))
         val cart = "CartesianProduct".r.findAllIn(p).size
         val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(p).size
@@ -32,13 +31,9 @@ object PlanSweep {
             else scans.map { case (t, n) => s"$t×$n" }.mkString(" scans[", ",", "]")
           println(s"[plansweep] $name cartesian=$cart bnlj=$bnlj$sc")
         }
-      } catch {
-        case e: Throwable =>
-          println(s"[plansweep] $name ERROR ${e.getClass.getSimpleName}")
       }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      run.error.foreach(e =>
+        println(s"[plansweep] $name ERROR ${e.getClass.getSimpleName}"))
     }
     println(s"[plansweep] done: $hits queries flagged (cartesian/BNLJ or scan fan-out)")
     spark.stop()

@@ -1,53 +1,33 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc timing harness for plan iteration (not part of the driver
-  * contract). Usage: runMain graft.Scratch <queryName> [sfDir] [reps] */
+  * contract): each rep runs through Harness.runOne on the bench's session,
+  * so it pays the bench's between-query reset and its timings compare.
+  * Usage: runMain graft.Scratch <queryName>[,<queryName>...] [sfDir] [reps] */
 object Scratch {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
     // SPARK_GRAFT_EVENTLOG=<dir>: write the Spark event log for offline
-    // stage-time profiling (the UI is disabled in this sandbox)
-    val evDir = sys.env.get("SPARK_GRAFT_EVENTLOG")
-    evDir.foreach(d => new java.io.File(d).mkdirs())
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_SCRATCH_MASTER", "local[8]"))
-      .config("spark.eventLog.enabled", evDir.isDefined.toString)
-      .config("spark.eventLog.dir", evDir.getOrElse("/tmp"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_warehouse")
-      .config("spark.sql.adaptive.enabled", "true")
-      // mirror GraftSession's join-strategy posture so Scratch A/Bs are
-      // faithful to the bench session (guide §3.1/§9);
-      // SPARK_GRAFT_PREFER_SMJ=true flips back for A/B comparison
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        if (sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "false") == "true") "0"
-        else (64L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.engine.GraftSession.muteLocalCheckpointUnpersistWarn()
+    // stage-time profiling (the UI is disabled); SparkConf reads spark.*
+    // system properties when the session is built
+    sys.env.get("SPARK_GRAFT_EVENTLOG").foreach { d =>
+      new java.io.File(d).mkdirs()
+      sys.props("spark.eventLog.enabled") = "true"
+      sys.props("spark.eventLog.dir") = d
+    }
+    val spark = Harness.session(defaultCpus = 32)
     name.split(',').foreach { q =>
       val fn = SparkEntry.queries(q)
       (1 to reps).foreach { r =>
-        // bench-faithful mode: pay cache population every rep, so the
-        // remaining rep1-vs-rep2 delta is pure codegen/JIT warmup
-        if (sys.env.contains("SPARK_GRAFT_CLEARCACHE"))
-          spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        val n = fn(spark, sfDir).count()
-        println(f"[scratch] $q rep$r: ${(System.nanoTime() - t0) / 1e9}%.2fs rows=$n")
+        var rows = 0L
+        val run = Harness.runOne(spark, q, Bench.timeoutMs) {
+          rows = fn(spark, sfDir).count()
+        }
+        run.error.foreach(throw _)
+        println(f"[scratch] $q rep$r: ${run.seconds}%.2fs rows=$rows")
       }
-      if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))
-        fn(spark, sfDir).explain("formatted")
     }
     spark.stop()
   }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,15 +10,8 @@ object Verify {
     val subset: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
     def keep(name: String): Boolean = subset.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(Runtime.getRuntime.availableProcessors(), 16).toString).toInt
-    val spark = graft.engine.GraftSession
-      .builder(s"local[$cpus]", shufflePartitions = cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // harness-scoped: drop the benign per-free localCheckpoint warning
-    // (see GraftSession.muteLocalCheckpointUnpersistWarn scaladoc)
-    graft.engine.GraftSession.muteLocalCheckpointUnpersistWarn()
+    val spark = Harness.session(
+      defaultCpus = math.min(Runtime.getRuntime.availableProcessors(), 16))
     // recursive delete, tolerant of files vanishing mid-walk (listFiles
     // returns null for a dir deleted under us — e.g. a task-abort
     // cleaning its _temporary dir concurrently)
@@ -62,54 +54,22 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // sorted order (same as Bench): a timed-out partial run then loses a
     // deterministic tail instead of a hash-order-random subset, and the
-    // per-query stderr times line up across rounds
-    // per-query stall watchdog: this sandbox intermittently wedges a
-    // single query 10-100x (see BENCH history); without a bound, one
+    // per-query stderr times line up across rounds.
+    // Harness.runOne's stall watchdog bounds each query: without it, one
     // wedged query eats the driver's whole verify budget and the round
-    // loses every query after it. The query runs on a worker thread
-    // with its own job group; on timeout the group is cancelled
-    // (interruptOnCancel) and the query records as _FAILED — the rest
-    // of the catalog still gets attested.
+    // loses every query after it; a timed-out query records as _FAILED
+    // and the rest of the catalog still gets attested.
     val perQueryTimeoutMs = sys.env
       .getOrElse("SPARK_GRAFT_VERIFY_TIMEOUT_SEC", "300").toLong * 1000
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      @volatile var err: Option[Throwable] = None
-      val worker = new Thread(() => {
-        try {
-          // job group is thread-local: set it on the thread that
-          // submits the jobs so cancelJobGroup reaches them
-          spark.sparkContext.setJobGroup(name, name, interruptOnCancel = true)
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-        } catch { case e: Throwable => err = Some(e) }
-        finally spark.sparkContext.clearJobGroup()
-      }, s"verify-$name")
-      worker.setDaemon(true)
-      worker.start()
-      worker.join(perQueryTimeoutMs)
-      if (worker.isAlive) {
-        spark.sparkContext.cancelJobGroup(name)
-        // streaming queries do NOT run under the caller's job group
-        // (StreamExecution submits under its own runId group), so the
-        // cancel above cannot reach them: stop any active stream
-        // directly, and interrupt the worker so a thread blocked in
-        // awaitTermination unwinds — its finally blocks then restore
-        // any session confs the query set (withStatePartitions,
-        // RocksDB provider) instead of leaking them into later queries
-        spark.streams.active.foreach(sq =>
-          try sq.stop() catch { case _: Throwable => () })
-        worker.interrupt()
-        worker.join(30000)
-        if (err.isEmpty)
-          err = Some(new RuntimeException(
-            s"timed out after ${perQueryTimeoutMs / 1000}s (watchdog cancel)"))
+      val run = Harness.runOne(spark, name, perQueryTimeoutMs) {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
       }
-      err match {
+      run.error match {
         case None =>
-          System.err.println(
-            f"[verify] $name ok ${(System.nanoTime() - t0) / 1e9}%.1fs")
+          System.err.println(f"[verify] $name ok ${run.seconds}%.1fs")
         case Some(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
           // drop any partial output dir: a half-written parquet dir
@@ -121,7 +81,7 @@ object Verify {
           try {
             val partial = new java.io.File(s"$outDir/$name")
             if (partial.exists()) {
-              if (worker.isAlive)
+              if (run.zombie)
                 partial.renameTo(new java.io.File(
                   outFile.getAbsoluteFile.getParentFile, s".abandoned_$name"))
               else rm(partial)
@@ -132,12 +92,6 @@ object Verify {
           Files.writeString(Paths.get(s"$outDir/$name._FAILED"),
             String.valueOf(e.getMessage))
       }
-      // queries that cache intermediates (shingle passes, LSH bands, key
-      // counts) would otherwise accumulate across the 100+-query run;
-      // clearCache misses localCheckpoint-pinned RDDs, so drop those too
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
     }
     // Attestation-completeness gate: every query in the catalog must leave
     // a trace in outDir — either a result parquet dir or a _FAILED marker.

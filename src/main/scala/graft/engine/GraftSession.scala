@@ -61,24 +61,15 @@ object GraftSession {
     dir.getAbsolutePath
   }
 
-  def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
+  /** Settings every graft session shares, local or cluster: AQE with
+    * coalescing and skew splitting, the UTC zone, the fixture timestamp
+    * reads (below) and the native functions of [[graft.GraftExtensions]]. */
+  private def base: SparkSession.Builder =
     SparkSession.builder()
-      .master(master)
       .appName("graft")
-      .config("spark.local.dir", scratchRoot)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // guide §3.1/§9: let the planner pick shuffled-hash over sort-merge
-      // when its size conditions hold (no sort of either side), and let
-      // AQE rewrite a planned SMJ to SHJ at runtime when every
-      // post-shuffle partition is small enough to hash (64 MiB — the
-      // per-partition build cap that makes SHJ memory-safe at any total
-      // scale; partitions at 100 TB are sized by AQE's advisory anyway)
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        (64L * 1024 * 1024).toString)
       .config("spark.sql.session.timeZone", "UTC")
       // fixture events.ts is parquet TIMESTAMP(NANOS); read as long and
       // convert in Tables.load (Spark has no nanos timestamp type)
@@ -89,6 +80,22 @@ object GraftSession {
       // withWatermark and unix_micros both reject. Tables.load carries a
       // defensive NTZ cast for sessions built elsewhere.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+
+  def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
+    base
+      .master(master)
+      .config("spark.local.dir", scratchRoot)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      // guide §3.1/§9: let the planner pick shuffled-hash over sort-merge
+      // when its size conditions hold (no sort of either side), and let
+      // AQE rewrite a planned SMJ to SHJ at runtime when every
+      // post-shuffle partition is small enough to hash (64 MiB — the
+      // per-partition build cap that makes SHJ memory-safe at any total
+      // scale; partitions at 100 TB are sized by AQE's advisory anyway)
+      .config("spark.sql.join.preferSortMergeJoin", "false")
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
+        (64L * 1024 * 1024).toString)
       // bucketed saveAsTable target, under the per-pid scratch root: keeps
       // test/verify runs from dropping a spark-warehouse/ dir into the
       // repo working copy, isolates concurrent JVMs (chunked Bench runs,
@@ -109,7 +116,7 @@ object GraftSession {
     * site is inside RDD.unpersist itself), so this installs a DENY
     * filter on the root logger config matching exactly that message
     * from `org.apache.spark.rdd.*` loggers. Scoped to the HARNESS
-    * mains (Bench/Verify/Scratch call it; library users never get
+    * mains (Harness.session calls it; library users never get
     * their logging touched). */
   def muteLocalCheckpointUnpersistWarn(): Unit = {
     import org.apache.logging.log4j.LogManager
@@ -132,12 +139,6 @@ object GraftSession {
     }
   }
 
-  def local(cores: Int = 4): SparkSession = {
-    val s = builder(s"local[$cores]", math.max(cores, 4)).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** Production posture for a real cluster (master/resources come from
     * spark-submit / the resource manager — never hardcoded here). Sizing
     * rules, per SCALING.md:
@@ -150,12 +151,8 @@ object GraftSession {
     *  - 128 MB scan partitions keep a task's batch + shuffle buffers
     *    inside executor memory. */
   def clusterBuilder(totalCores: Int): SparkSession.Builder =
-    SparkSession.builder()
-      .appName("graft")
+    base
       .config("spark.sql.shuffle.partitions", (totalCores * 3).toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (200L * 1024 * 1024).toString)
       .config("spark.sql.files.maxPartitionBytes", (128L * 1024 * 1024).toString)
       // runtime row-group pruning on the fact side of selective joins:
@@ -163,8 +160,4 @@ object GraftSession {
       // the shuffle (complements static partition pruning)
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.sql.optimizer.runtimeFilter.semiJoinReduction.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
 }

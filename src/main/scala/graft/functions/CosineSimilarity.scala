@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -111,13 +110,9 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
-  /** Register `cosine_sim(a, b)` for SQL/expr() use on this session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim",
-      exprs => {
-        require(exprs.length == 2, "cosine_sim takes exactly 2 arguments")
-        CosineSimilarity(exprs.head, exprs(1))
-      },
-      "built-in")
+  /** SQL builder for `cosine_sim(a, b)` (injected by GraftExtensions). */
+  def build(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 2, "cosine_sim takes exactly 2 arguments")
+    CosineSimilarity(exprs.head, exprs(1))
+  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
@@ -126,14 +125,10 @@ object DamerauLevenshtein {
     d((n1 + 1) * w + n2 + 1)
   }
 
-  /** Register `damerau_levenshtein(a, b)` for SQL/expr() use. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "damerau_levenshtein",
-      exprs => {
-        require(exprs.length == 2,
-          "damerau_levenshtein takes exactly 2 arguments")
-        DamerauLevenshtein(exprs.head, exprs(1))
-      },
-      "built-in")
+  /** SQL builder for `damerau_levenshtein(a, b)` (injected by
+    * GraftExtensions). */
+  def build(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 2, "damerau_levenshtein takes exactly 2 arguments")
+    DamerauLevenshtein(exprs.head, exprs(1))
+  }
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
@@ -131,13 +130,9 @@ object JaroWinkler {
     jaro + l * 0.1 * (1.0 - jaro)
   }
 
-  /** Register `jaro_winkler(a, b)` for SQL/expr() use on this session. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler",
-      exprs => {
-        require(exprs.length == 2, "jaro_winkler takes exactly 2 arguments")
-        JaroWinkler(exprs.head, exprs(1))
-      },
-      "built-in")
+  /** SQL builder for `jaro_winkler(a, b)` (injected by GraftExtensions). */
+  def build(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 2, "jaro_winkler takes exactly 2 arguments")
+    JaroWinkler(exprs.head, exprs(1))
+  }
 }

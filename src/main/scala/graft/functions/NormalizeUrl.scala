@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, StringType}
@@ -61,12 +60,9 @@ object NormalizeUrl {
     graft.operators.HtmlExtract.normalizeUrl(u.toString)
       .map(UTF8String.fromString).orNull
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "normalize_url",
-      exprs => {
-        require(exprs.length == 1, "normalize_url takes exactly 1 argument")
-        NormalizeUrl(exprs.head)
-      },
-      "built-in")
+  /** SQL builder for `normalize_url(u)` (injected by GraftExtensions). */
+  def build(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 1, "normalize_url takes exactly 1 argument")
+    NormalizeUrl(exprs.head)
+  }
 }

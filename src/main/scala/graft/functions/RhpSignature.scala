@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -144,29 +143,25 @@ object RhpSignature {
     out
   }
 
-  /** Register `rhp_signature(v[, planes])` for SQL/expr() use on this
-    * session. 1-arg form = 8 planes (back-compat with q47/q98). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rhp_signature",
-      exprs => {
-        require(exprs.length == 1 || exprs.length == 2,
-          "rhp_signature takes 1 or 2 arguments")
-        if (exprs.length == 1) RhpSignature(exprs.head)
-        else {
-          val p = exprs(1) match {
-            case lit: org.apache.spark.sql.catalyst.expressions.Literal =>
-              lit.value match {
-                case i: Int => i
-                case l: Long => l.toInt
-                case other => throw new IllegalArgumentException(
-                  s"rhp_signature planes must be an integer literal, got $other")
-              }
+  /** SQL builder for `rhp_signature(v[, planes])` (injected by
+    * GraftExtensions). 1-arg form = 8 planes (back-compat with q47/q98). */
+  def build(exprs: Seq[Expression]): Expression = {
+    require(exprs.length == 1 || exprs.length == 2,
+      "rhp_signature takes 1 or 2 arguments")
+    if (exprs.length == 1) RhpSignature(exprs.head)
+    else {
+      val p = exprs(1) match {
+        case lit: org.apache.spark.sql.catalyst.expressions.Literal =>
+          lit.value match {
+            case i: Int => i
+            case l: Long => l.toInt
             case other => throw new IllegalArgumentException(
-              s"rhp_signature planes must be a literal, got $other")
+              s"rhp_signature planes must be an integer literal, got $other")
           }
-          RhpSignature(exprs.head, p)
-        }
-      },
-      "built-in")
+        case other => throw new IllegalArgumentException(
+          s"rhp_signature planes must be a literal, got $other")
+      }
+      RhpSignature(exprs.head, p)
+    }
+  }
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Materialize, Tables}
-import graft.functions.CosineSimilarity
 
 /** Deduplication operator family over document corpora — the
   * training-data pipeline surface (exact, n-gram Jaccard with and
@@ -423,7 +422,6 @@ object Dedup {
   def embeddingNearDupPairs(embeddings: DataFrame, threshold: Double): DataFrame = {
     val s = embeddings.sparkSession
     import s.implicits._
-    CosineSimilarity.register(s)
     val e = embeddings.select($"vec_id", $"embedding")
     // the theta join plans as BroadcastNestedLoopJoin with `a` STREAMED:
     // every candidate pair's cosine is evaluated in a's scan stage, so an
@@ -465,7 +463,6 @@ object Dedup {
   def embeddingNearDupLshPairs(embeddings: DataFrame, threshold: Double): DataFrame = {
     val s = embeddings.sparkSession
     import s.implicits._
-    CosineSimilarity.register(s)
     val sig = Similarity.lshBuckets(embeddings, planes = 64)
       .select($"vec_id", $"bucket")
     val bandStructs = (0 until 8).map { m =>
@@ -512,7 +509,6 @@ object Dedup {
       threshold: Double): DataFrame = {
     val s = embeddings.sparkSession
     import s.implicits._
-    CosineSimilarity.register(s)
     // fanned out: the broadcast-centroid crossJoin streams `e`, so an
     // under-parallel scan serializes the n x k scoring pass on one core
     val e = Tables.fanout(embeddings.select($"vec_id", $"embedding"))

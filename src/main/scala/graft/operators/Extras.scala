@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
-import graft.functions.{CosineSimilarity, WeightedAverage}
+import graft.functions.WeightedAverage
 
 /** Remaining Table-B / extension surface: native-expression KNN, typed
   * Aggregator, sampling (deterministic + seeded), pivot, scalar subquery,
@@ -26,7 +26,6 @@ object Extras {
       "q61_knn_native_expr",
       (s, dir) => {
         import s.implicits._
-        CosineSimilarity.register(s)
         val e = t(s, dir, "embeddings").select($"vec_id", $"embedding")
         val queries = e.filter($"vec_id" < 5).toDF("qid", "qv")
         val cands = e.filter($"vec_id" >= 5).toDF("cid", "cv")

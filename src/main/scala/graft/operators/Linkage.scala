@@ -106,7 +106,6 @@ object Linkage {
       "q280_jaro_winkler_linkage",
       (s, dir) => {
         import s.implicits._
-        graft.functions.JaroWinkler.register(s)
         val win = 12
         val p = Tables.load(s, dir, "part")
           .select($"p_partkey", $"p_name", $"p_brand",
@@ -161,7 +160,6 @@ object Linkage {
       "q282_damerau_linkage",
       (s, dir) => {
         import s.implicits._
-        graft.functions.DamerauLevenshtein.register(s)
         val sup = Tables.load(s, dir, "supplier")
           .select($"s_name", substring($"s_name", 10, 6).as("blk"))
         val a = sup.select($"s_name".as("name_a"), $"blk")

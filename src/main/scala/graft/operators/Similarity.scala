@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.engine.{Materialize, Tables}
-import graft.functions.{CosineSimilarity, RhpSignature}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table.
   *
@@ -56,7 +55,6 @@ object Similarity {
   def bruteForceTopK(embeddings: DataFrame, isQuery: Column, k: Int): DataFrame = {
     val s = embeddings.sparkSession
     import s.implicits._
-    CosineSimilarity.register(s)
     val e = embeddings.select($"vec_id", $"embedding")
     val queries = e.filter(isQuery).toDF("qid", "qv")
     // the broadcast-query join streams cands: fan out so the corpus x
@@ -81,7 +79,6 @@ object Similarity {
   def lshBuckets(embeddings: DataFrame, planes: Int = 8): DataFrame = {
     val s = embeddings.sparkSession
     import s.implicits._
-    RhpSignature.register(s)
     // fan out BEFORE the signature pass so the per-vector hyperplane
     // math runs across cores, not in an under-parallel scan stage
     Tables.fanout(embeddings)
@@ -96,7 +93,6 @@ object Similarity {
   def lshTopK(embeddings: DataFrame, isQuery: Column, k: Int): DataFrame = {
     val s = embeddings.sparkSession
     import s.implicits._
-    CosineSimilarity.register(s)
     val e = lshBuckets(embeddings).select($"vec_id", $"v", $"bucket")
     val queries = e.filter(isQuery).toDF("qid", "qv", "bucket")
     val cands = e.filter(!isQuery).toDF("cid", "cv", "bucket")
@@ -118,7 +114,6 @@ object Similarity {
   def lshTopKMultiProbe(embeddings: DataFrame, isQuery: Column, k: Int): DataFrame = {
     val s = embeddings.sparkSession
     import s.implicits._
-    CosineSimilarity.register(s)
     val e = lshBuckets(embeddings).select($"vec_id", $"v", $"bucket")
     val probeCols = $"qb" +: (0 until Planes).map(m =>
       $"qb".bitwiseXOR(lit(1L << m)))
@@ -152,7 +147,6 @@ object Similarity {
       k: Int): DataFrame = {
     val s = embeddings.sparkSession
     import s.implicits._
-    CosineSimilarity.register(s)
     // the broadcast-centroid assignment pass streams `e`: an
     // under-parallel scan (single-row-group fixture) serializes corpus x K
     // scoring on one core — fan out (scale-adaptive no-op at real scale)

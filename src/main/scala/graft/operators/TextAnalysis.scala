@@ -1673,7 +1673,6 @@ object TextAnalysis {
         // round 12: the catalog's last corpus-path UDF retired — the
         // codegen Expression keeps the WholeStageCodegen span intact
         // (no encoder boxing; the same normalizeUrl body runs)
-        graft.functions.NormalizeUrl.register(s)
         urls.selectExpr("doc_id", "normalize_url(url) AS url")
           .groupBy($"doc_id", $"url")
           .agg(count(lit(1)).as("n_spellings"))

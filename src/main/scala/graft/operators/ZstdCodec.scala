@@ -579,7 +579,7 @@ object ZstdCodec {
       numSeq = ((s0 - 0x80) << 8) | (b(off + 1) & 0xff); off += 2
     } else {
       if (off + 3 > end) fail()
-      numSeq = (b(off + 1) & 0xff) | ((b(off + 2) & 0xff) << 8) | 0x7f00
+      numSeq = (b(off + 1) & 0xff) + ((b(off + 2) & 0xff) << 8) + 0x7f00
       off += 3
     }
     if (numSeq == 0) {

@@ -18,10 +18,14 @@ object PlanInspector {
   def formatted(df: DataFrame): String =
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
-  /** Physical plan string AFTER adaptive execution finalized (requires an
-    * action to have run). */
-  def executed(df: DataFrame): String =
-    df.queryExecution.executedPlan.toString
+  /** Runs `df`'s own executed plan to completion (draining every row on
+    * the executors) and returns it: the adaptive plan is final
+    * (`isFinalPlan=true`) only once this very plan instance has run. */
+  def executed(df: DataFrame): String = {
+    val plan = df.queryExecution.executedPlan
+    plan.execute().foreach(_ => ())
+    plan.toString
+  }
 
   /** Does any parquet scan carry this pushed filter (substring of the
     * PushedFilters list, e.g. "GreaterThan(o_totalprice,100000.0)")? */

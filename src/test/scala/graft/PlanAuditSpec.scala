@@ -26,6 +26,12 @@ class PlanAuditSpec extends SparkSpec {
     assert(!graft.plans.PlanInspector.readSchemaContains(q2, "o_comment"))
   }
 
+  test("PlanInspector.executed returns the final adaptive plan") {
+    val p = graft.plans.PlanInspector.executed(
+      SparkEntry.queries("q03_join_revenue_by_nation")(spark, sf))
+    assert(p.contains("isFinalPlan=true"), p.take(1500))
+  }
+
   test("q02: predicate pushdown reaches the parquet scan, columns pruned") {
     val p = plan("q02_filter_project")
     assert(p.contains("PushedFilters"), "no pushdown section")

@@ -22,6 +22,8 @@ object SparkSpec {
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft_warehouse_test")
       .config("spark.ui.enabled", "false")
+      // the native functions, as every GraftSession gets them
+      .withExtensions(new GraftExtensions)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

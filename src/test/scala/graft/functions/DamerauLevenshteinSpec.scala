@@ -58,7 +58,6 @@ class DamerauLevenshteinSpec extends SparkSpec {
 
   test("expression evaluates through codegen with null semantics and " +
       "the size guard") {
-    DamerauLevenshtein.register(spark)
     val df = Seq(("ca", "abc"), ("ab", "ba"), (null, "x"))
       .toDF("a", "b")
     val out = df.selectExpr("damerau_levenshtein(a, b) AS d").collect()

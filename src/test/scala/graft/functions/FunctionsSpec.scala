@@ -8,7 +8,6 @@ class FunctionsSpec extends SparkSpec {
 
   private def cosineOf(a: Seq[Float], b: Seq[Float]): Option[Double] = {
     import spark.implicits._
-    CosineSimilarity.register(spark)
     Seq((a, b)).toDF("a", "b")
       .selectExpr("cosine_sim(a, b) AS c")
       .collect().headOption.flatMap(r => if (r.isNullAt(0)) None else Some(r.getDouble(0)))
@@ -23,7 +22,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("cosine_sim agrees with the higher-order-function formulation") {
     import spark.implicits._
-    CosineSimilarity.register(spark)
     val df = Seq.tabulate(50)(i =>
       (Seq.tabulate(16)(j => (i * 31 + j * 7 % 13).toFloat / 10f),
        Seq.tabulate(16)(j => (i * 17 + j * 11 % 7).toFloat / 10f)))
@@ -49,7 +47,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("cosine_sim: a null ELEMENT propagates null (both eval paths)") {
     import spark.implicits._
-    CosineSimilarity.register(spark)
     // codegen path via DataFrame
     val viaDf = Seq((Seq(Some(1f), None, Some(3f)), Seq(Some(1f), Some(2f), Some(3f))))
       .toDF("a", "b")
@@ -83,7 +80,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("rhp_signature agrees with the higher-order-function formulation") {
     import spark.implicits._
-    RhpSignature.register(spark)
     val planes: Seq[Seq[Double]] = (0 until 8).map(m =>
       (0 until 64).map(i => RhpSignature.flatPlanes(m * 64 + i)))
     val hp = typedLit(planes)
@@ -106,7 +102,6 @@ class FunctionsSpec extends SparkSpec {
     // fixed 64x64 constant; narrower signatures read a prefix), so the
     // 64-plane banding of q86 stays consistent with the q47/q98 index
     import spark.implicits._
-    RhpSignature.register(spark)
     val df = Seq.tabulate(40)(s =>
       Tuple1(Seq.tabulate(64)(j => math.sin(s * 13 + j * 3)))).toDF("v")
     df.selectExpr("rhp_signature(v) AS s8", "rhp_signature(v, 64) AS s64")
@@ -116,7 +111,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("rhp_signature: null on wrong length, null element, or null input") {
     import spark.implicits._
-    RhpSignature.register(spark)
     def sigOf(v: Seq[Option[Double]]): Boolean =
       Seq(Tuple1(v)).toDF("v").selectExpr("rhp_signature(v) AS s")
         .collect().head.isNullAt(0)

@@ -45,7 +45,6 @@ class JaroWinklerSpec extends SparkSpec {
 
   test("expression evaluates through codegen AND interpreted paths " +
       "with SQL null semantics") {
-    JaroWinkler.register(spark)
     val df = Seq(("MARTHA", "MARHTA"), ("same", "same"), (null, "x"))
       .toDF("a", "b")
     val out = df.selectExpr("jaro_winkler(a, b) AS s").collect()

@@ -266,4 +266,65 @@ class ZstdSpec extends AnyFunSuite {
     out.write(1); out.write(0); out.write(0) // last raw block, size 0
     assert(ZstdCodec.zstdDecompress(out.toByteArray).isEmpty)
   }
+
+  /** (byte0, count) of the sequences-section header of every compressed
+    * block in a single zstd frame (RFC 8878 §3.1.1.2-3.1.1.3). */
+  private def sequenceHeaders(z: Array[Byte]): Seq[(Int, Int)] = {
+    def u(i: Int) = z(i) & 0xff
+    val fhd = u(4)
+    val fcsFlag = fhd >> 6
+    val single = (fhd & 0x20) != 0
+    val fcsLen = Seq(if (single) 1 else 0, 2, 4, 8)(fcsFlag)
+    var off = 5 + (if (single) 0 else 1) + Seq(0, 1, 2, 4)(fhd & 3) + fcsLen
+    val out = Seq.newBuilder[(Int, Int)]
+    var last = false
+    while (!last) {
+      val h = u(off) | u(off + 1) << 8 | u(off + 2) << 16
+      last = (h & 1) == 1
+      val size = h >>> 3
+      val body = off + 3
+      if (((h >> 1) & 3) == 2) {
+        val b0 = u(body)
+        val sf = (b0 >> 2) & 3
+        val litLen = (b0 & 3) match {
+          case t if t < 2 => // raw or RLE
+            val (hdr, regen) = sf match {
+              case 1 => (2, (b0 >> 4) + (u(body + 1) << 4))
+              case 3 => (3, (b0 >> 4) + (u(body + 1) << 4) + (u(body + 2) << 12))
+              case _ => (1, b0 >> 3)
+            }
+            hdr + (if (t == 0) regen else 1)
+          case _ => // compressed or treeless: sizes share one LE field
+            val (hdr, bits) = Seq((3, 10), (3, 10), (4, 14), (5, 18))(sf)
+            val v = (0 until hdr).foldLeft(0L)((a, i) => a | u(body + i).toLong << (8 * i))
+            hdr + ((v >> (4 + bits)) & ((1L << bits) - 1)).toInt
+        }
+        val s = body + litLen
+        val c = u(s) match {
+          case n if n < 128 => n
+          case n if n < 255 => ((n - 0x80) << 8) + u(s + 1)
+          case _ => u(s + 1) + (u(s + 2) << 8) + 0x7f00
+        }
+        out += ((u(s), c))
+      }
+      off = body + (if (((h >> 1) & 3) == 1) 1 else size)
+    }
+    out.result()
+  }
+
+  test("3-byte sequence count: a block of 32768+ sequences round-trips") {
+    // 3-byte words from a 4096-word vocabulary, each written once up
+    // front: at level 19 (minimum match 3) every later word is one 3-byte
+    // match, so a full 128 KiB block carries ~43k sequences
+    val rng = new scala.util.Random(7)
+    val vocab = Array.fill(4096)(Array.fill[Byte](3)(rng.nextInt(256).toByte))
+    val data = (vocab ++ Array.fill(200000)(vocab(rng.nextInt(vocab.length))))
+      .flatten
+    val z = jniCompress(data, 19)
+    val long = sequenceHeaders(z).filter(_._1 == 0xff)
+    assert(long.exists(_._2 >= 32768),
+      s"no block uses the 3-byte count form with >= 32768 sequences: " +
+        sequenceHeaders(z))
+    assert(ZstdCodec.zstdDecompress(z).exists(java.util.Arrays.equals(_, data)))
+  }
 }
