@@ -2,6 +2,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
+import graft.engine.Tables
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -10,7 +12,7 @@ object Bench {
     // JIT/codegen warmup so the first measured query isn't charged for
     // JVM startup (no query data is cached — catalog stays cold)
     spark.range(1000000).selectExpr("sum(id * 2)").collect()
-    spark.read.parquet(s"$sfDir/region.parquet").count()
+    Tables.parquet(spark, s"$sfDir/region.parquet").count()
 
     // Environment calibration: a FIXED compute-bound plan over an
     // in-memory range (no IO, no fixture dependence, shape of the q01

@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
+import graft.engine.Tables
+
 /** Dev tool (like Bench/Verify — not library surface): generates an
   * sf1 fixture set (10x sf0.1) under a target directory, mirroring the
   * driver fixtures' schemas and distributions (verified against
@@ -50,8 +52,8 @@ object FixtureGen {
     // region/nation are SF-invariant — copy them verbatim from the
     // smallest driver fixture so joins see byte-identical dimensions
     val src = "/root/testdata/sf0.001"
-    write(spark.read.parquet(s"$src/region.parquet"), "region")
-    write(spark.read.parquet(s"$src/nation.parquet"), "nation")
+    write(Tables.parquet(spark, s"$src/region.parquet"), "region")
+    write(Tables.parquet(spark, s"$src/nation.parquet"), "nation")
 
     val nCust = n(150000L)
     val nSupp = n(10000L)
@@ -123,7 +125,7 @@ object FixtureGen {
     // (l_extendedprice, l_partkey), which ARE independent per duplicate
     // row (seeded off the unique lkey), so the sfN correctness gate now
     // includes the window family.
-    val li = spark.read.parquet(s"$out/orders.parquet")
+    val li = Tables.parquet(spark, s"$out/orders.parquet")
       .select($"o_orderkey", $"o_orderdate",
         (pmod(xxhash64($"o_orderkey", lit(17)), lit(7)) + 1).cast("int")
           .as("nl"))

@@ -52,7 +52,7 @@ object Compact {
       s"outDir must not be inDir or nested with it (in=$uIn out=$uOut)")
     val inputBytes = fs.getContentSummary(in).getLength
     val parts = math.max(1L, (inputBytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(inDir)
+    Tables.parquet(spark, inDir)
       .repartition(parts)
       .write.mode("overwrite").parquet(outDir)
     outFs.listStatus(out).count(st => st.getPath.getName.startsWith("part-")).toLong

@@ -1,5 +1,8 @@
 package graft.engine
 
+import java.net.URLClassLoader
+
+import org.apache.spark.api.plugin.{DriverPlugin, ExecutorPlugin, SparkPlugin}
 import org.apache.spark.sql.SparkSession
 
 /** Session factory for the graft engine.
@@ -81,9 +84,27 @@ object GraftSession {
       // defensive NTZ cast for sessions built elsewhere.
       .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      // graft adds no session artifacts (jars, files, REPL classes), so
+      // tasks need no per-session class loader: with isolation off they
+      // run under the executor's default loader instead of an
+      // ExecutorClassLoader that sends every class-lookup miss to the
+      // driver's artifact server
+      .config(ArtifactIsolation, "false")
+
+  private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
+
+  /** Codegen settings of a local session: each generated class compiles
+    * once per JVM. Spark keys its compile cache by the thread's context
+    * class loader; the driver compiles every whole-stage class under the
+    * app loader, and without these settings the first task compiles it
+    * again under its own loader. Repeats `base`'s isolation switch so
+    * that the test session, which is not built from `base`, gets it. */
+  private[graft] def localCodegen(b: SparkSession.Builder): SparkSession.Builder =
+    b.config(ArtifactIsolation, "false")
+      .config("spark.plugins", classOf[TaskLoaderPlugin].getName)
 
   def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
-    base
+    localCodegen(base)
       .master(master)
       .config("spark.local.dir", scratchRoot)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
@@ -160,4 +181,24 @@ object GraftSession {
       // the shuffle (complements static partition pruning)
       .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
       .config("spark.sql.optimizer.runtimeFilter.semiJoinReduction.enabled", "true")
+}
+
+/** Runs each task under its context class loader's parent when that
+  * loader is a `URLClassLoader` with no URLs, which resolves exactly
+  * what its parent resolves: a local executor's default loader. The
+  * task then finds the driver's compiled classes in Spark's codegen
+  * cache. Spark resets the loader at every task start; on a cluster
+  * executor the loader holds the app jar and this does nothing. */
+final class TaskLoaderPlugin extends SparkPlugin {
+  override def driverPlugin(): DriverPlugin = null
+  override def executorPlugin(): ExecutorPlugin = new ExecutorPlugin {
+    override def onTaskStart(): Unit = {
+      val t = Thread.currentThread()
+      t.getContextClassLoader match {
+        case u: URLClassLoader if u.getURLs.isEmpty && u.getParent != null =>
+          t.setContextClassLoader(u.getParent)
+        case _ => ()
+      }
+    }
+  }
 }

@@ -1,7 +1,7 @@
 package graft.engine
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.{lit, round, sum}
 
@@ -34,33 +34,10 @@ object MoneyGuard {
   /** Footer-only row count through the Hadoop FileSystem API, so the
     * guard works on any scheme the cluster can reach (hdfs/object
     * stores), not just local files — the same IO plane the transfer
-    * job uses. Reads the 8-byte tail (footer length + "PAR1" magic),
-    * then the footer thrift slice; the file body is never touched. */
-  private def footerRows(path: String, conf: Configuration): Long = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val len = fs.getFileStatus(p).getLen
-    if (len < 12) throw new IllegalStateException(s"not parquet: $path")
-    val in = fs.open(p)
-    val footer = try {
-      val tail = new Array[Byte](8)
-      in.readFully(len - 8, tail)
-      if (!(tail(4) == 'P' && tail(5) == 'A' && tail(6) == 'R' &&
-        tail(7) == '1'))
-        throw new IllegalStateException(s"missing PAR1 magic: $path")
-      val fLen = (tail(0) & 0xff) | ((tail(1) & 0xff) << 8) |
-        ((tail(2) & 0xff) << 16) | ((tail(3) & 0xff) << 24)
-      if (fLen <= 0 || fLen > len - 12)
-        throw new IllegalStateException(s"bad footer length: $path")
-      val buf = new Array[Byte](fLen)
-      in.readFully(len - 8 - fLen, buf)
-      buf
-    } finally in.close()
-    graft.operators.ParquetFooter.parseFooter(footer)
-      .map(_.numRows)
-      .getOrElse(throw new IllegalStateException(
-        s"unreadable parquet footer: $path"))
-  }
+    * job uses. Reads the footer through the loader's reader (the file
+    * body is never touched); a file that is not parquet throws. */
+  private def footerRows(path: String, conf: Configuration): Long =
+    Tables.footer(new Path(path), conf)(_.getRecordCount)
 
   /** Exact row count for `dir/table.parquet` from parquet footers
     * only. Single files and part-file directories both resolve; an

@@ -1,8 +1,16 @@
 package graft.engine
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated fixture tables (TESTDATA.md /
   * FIXTURES.md). Parquet at rest — columnar scan + predicate pushdown +
@@ -15,7 +23,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    normalizeEventTime(spark.read.parquet(s"$sfDir/$name.parquet"),
+    normalizeEventTime(parquet(spark, s"$sfDir/$name.parquet"),
       // the nanos-as-long coercion is events-specific knowledge: a plain
       // long `ts` on some future table (epoch seconds, a sequence id)
       // must NOT be silently divided and retyped
@@ -50,7 +58,66 @@ object Tables {
     * UNION ALL (/root/reference/mapper.py:75-85); Spark's multi-path read
     * is the same thing with split planning + locality built in. */
   def loadMulti(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.parquet(paths: _*)
+    parquet(spark, paths: _*)
+
+  /** The one parquet reader. `read.parquet` infers the schema with a
+    * Spark job that reads one footer (100+ ms and one job per load);
+    * this reads the same footer on the driver and hands its schema to
+    * `read.schema`, so a load launches no job. The footer is read on
+    * every call: nothing is remembered across queries. With no footer
+    * to read (no file, an unreadable one) it falls back to
+    * `read.parquet`, so the error is Spark's own. */
+  def parquet(spark: SparkSession, paths: String*): DataFrame =
+    footerSchema(spark, paths) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  /** The schema `read.parquet(paths)` would infer, from the footer that
+    * Spark's `ParquetUtils.inferSchema` picks: `_common_metadata`, then
+    * `_metadata`, then the first data file by full path string, over the
+    * leaf files its file index lists (hidden names skipped). Partition
+    * columns are not in it: the file index still infers them. */
+  private def footerSchema(spark: SparkSession,
+      paths: Seq[String]): Option[StructType] =
+    try {
+      val conf = spark.sessionState.newHadoopConf()
+      val leaves = paths.flatMap { p =>
+        val path = new Path(p)
+        val fs = path.getFileSystem(conf)
+        Option(fs.globStatus(path)).toSeq.flatten.flatMap(st =>
+          leafFiles(fs, st.getPath, st.isDirectory))
+      }.sortBy(_.toString)
+      def named(n: String) = leaves.find(_.getName == n)
+      named("_common_metadata").orElse(named("_metadata"))
+        .orElse(leaves.find(p =>
+          p.getName != "_common_metadata" && p.getName != "_metadata"))
+        .map { f =>
+          footer(f, conf)(r => ParquetFileFormat.readSchemaFromFooter(
+            new Footer(f, r.getFooter),
+            new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+        }
+    } catch { case NonFatal(_) => None }
+
+  /** Files under `p` as Spark's file index lists them: names starting
+    * with `_` (but not `k=v` partition directories or the summary files)
+    * or `.`, and in-flight `._COPYING_` files, are skipped. */
+  private def leafFiles(fs: FileSystem, p: Path, isDir: Boolean): Seq[Path] =
+    if (!isDir) Seq(p)
+    else fs.listStatus(p).toSeq.filterNot { st =>
+      val n = st.getPath.getName
+      ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")) &&
+        !(n.startsWith("_common_metadata") || n.startsWith("_metadata"))
+    }.flatMap(st => leafFiles(fs, st.getPath, st.isDirectory))
+
+  /** Opens one parquet file's footer (the body is never read) and
+    * applies `f` to the reader; throws if the file is not parquet. */
+  private[engine] def footer[A](path: Path, conf: Configuration)(
+      f: ParquetFileReader => A): A = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf))
+    try f(r) finally r.close()
+  }
 
   /** Scale-adaptive scan fan-out for CPU-heavy map stages (per-blob
     * decode, per-shingle hashing): the optimization guide's fix for

@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.engine.Tables
 import graft.operators.Dedup
 
 /** The reference's operational story for incremental pipelines — a
@@ -15,7 +16,7 @@ import graft.operators.Dedup
   * State layout: `indexDir/batch=<name>/` parquet per batch, so
   *  - a batch job is idempotent (overwrite of its own partition — a
   *    retried/re-forced job cannot double its keys),
-  *  - `spark.read.parquet(indexDir)` unions all history via partition
+  *  - `Tables.parquet(spark, indexDir)` unions all history via partition
   *    discovery with no manifest to maintain,
   *  - the state stays O(kept docs): ≤ 4 band keys per survivor, no
   *    text, no shingles — at 100 TB the index is GB-scale while the
@@ -64,7 +65,7 @@ object IncrementalJobs {
   def runBatch(spark: SparkSession, batchName: String, batchDir: String,
       indexDir: String, outDir: String, threshold: Double): Unit = {
     import spark.implicits._
-    val newDocs = spark.read.parquet(batchDir)
+    val newDocs = Tables.parquet(spark, batchDir)
     val seq = batchSeq(spark, indexDir, batchName)
     val survivors = Dedup.incrementalNearDedup(newDocs,
       readIndexParts(spark, indexDir, beforeSeq = Some(seq)),
@@ -80,7 +81,7 @@ object IncrementalJobs {
     // rerunnable job (both writes are overwrite-idempotent per batch
     // partition, and the semi-join reads the survivor FILES, not the
     // pre-write plan).
-    val survivorIds = spark.read.parquet(outPath).select($"doc_id")
+    val survivorIds = Tables.parquet(spark, outPath).select($"doc_id")
     Dedup.bandKeysOf(newDocs)
       .join(survivorIds, Seq("doc_id"), "left_semi")
       .select($"band", $"bk").distinct()
@@ -106,7 +107,7 @@ object IncrementalJobs {
     val own = new org.apache.hadoop.fs.Path(s"$indexDir/batch=$batchName")
     val fs = own.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(own)) {
-      val prior = spark.read.parquet(own.toString)
+      val prior = Tables.parquet(spark, own.toString)
       if (prior.columns.contains("seq"))
         return prior.select($"seq").head(1).headOption
           .map(_.getLong(0)).getOrElse(0L)
@@ -115,7 +116,7 @@ object IncrementalJobs {
       _.getName == s"batch=$batchName")
     if (parts.isEmpty) 0L
     else {
-      val hist = spark.read.parquet(parts.map(_.toString).toIndexedSeq: _*)
+      val hist = Tables.parquet(spark, parts.map(_.toString).toIndexedSeq: _*)
       if (!hist.columns.contains("seq")) parts.length.toLong
       else hist.agg(org.apache.spark.sql.functions.max($"seq")).head()
         .getLong(0) + 1L
@@ -146,7 +147,7 @@ object IncrementalJobs {
     import spark.implicits._
     val parts = listParts(spark, indexDir)
     if (parts.nonEmpty) {
-      val all = spark.read.parquet(parts.map(_.toString).toIndexedSeq: _*)
+      val all = Tables.parquet(spark, parts.map(_.toString).toIndexedSeq: _*)
       val scoped = beforeSeq match {
         // seq-scoped history; a legacy partition without the column
         // (pre-ordering layout) counts as oldest history

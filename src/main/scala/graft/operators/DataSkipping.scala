@@ -98,7 +98,7 @@ object DataSkipping {
     * new group in production. */
   def statsManifest(spark: SparkSession, dataDir: String,
       statsCol: String): DataFrame =
-    spark.read.parquet(dataDir)
+    Tables.parquet(spark, dataDir)
       .groupBy(col("fg"))
       .agg(count(lit(1)).as("n_rows"),
         min(col(statsCol)).as("mn"), max(col(statsCol)).as("mx"))
@@ -109,7 +109,7 @@ object DataSkipping {
     * either axis. One indexing scan, same as [[statsManifest]]. */
   def statsManifest2(spark: SparkSession, dataDir: String,
       colA: String, colB: String): DataFrame =
-    spark.read.parquet(dataDir)
+    Tables.parquet(spark, dataDir)
       .groupBy(col("fg"))
       .agg(count(lit(1)).as("n_rows"),
         min(col(colA)).as("mna"), max(col(colA)).as("mxa"),
@@ -140,9 +140,9 @@ object DataSkipping {
         _.getLong(0))
     val rows =
       if (selected.isEmpty)
-        spark.read.parquet(dataDir).filter(lit(false)).drop("fg")
+        Tables.parquet(spark, dataDir).filter(lit(false)).drop("fg")
       else
-        spark.read.parquet(selected.map(g => s"$dataDir/fg=$g"): _*)
+        Tables.parquet(spark, selected.map(g => s"$dataDir/fg=$g"): _*)
           .filter(col(colA).between(loA, hiA) &&
             col(colB).between(loB, hiB))
     (rows, selected.length.toLong, total)
@@ -202,7 +202,7 @@ object DataSkipping {
         _.getString(0))
     val rows =
       if (selected.isEmpty) emptyLike.filter(lit(false))
-      else spark.read.parquet(selected: _*)
+      else Tables.parquet(spark, selected: _*)
         .filter(col(statsCol).between(lo, hi))
     (rows, selected.length.toLong, total)
   }
@@ -226,7 +226,7 @@ object DataSkipping {
     val removed = (oldFiles -- newFiles).size.toLong
     val rows =
       if (added.isEmpty) emptyLike.filter(lit(false))
-      else spark.read.parquet(added: _*)
+      else Tables.parquet(spark, added: _*)
     (added.size.toLong, removed, rows)
   }
 
@@ -239,7 +239,7 @@ object DataSkipping {
     * each group. */
   def scanWithDeletes(spark: SparkSession, dataDir: String,
       tombstones: DataFrame, keyCol: String): DataFrame =
-    spark.read.parquet(dataDir)
+    Tables.parquet(spark, dataDir)
       .join(broadcast(tombstones.select(col("fg"), col("k").as(keyCol))),
         Seq("fg", keyCol), "left_anti")
 
@@ -256,7 +256,7 @@ object DataSkipping {
       outDir: String): (Long, Long) = {
     val affected = tombstones.select(col("fg").cast("long"))
       .distinct().collect().map(_.getLong(0)).toSet
-    val allFgs = spark.read.parquet(dataDir)
+    val allFgs = Tables.parquet(spark, dataDir)
       .select(col("fg").cast("long")).distinct().collect()
       .map(_.getLong(0)).sorted
     val outRoot = new java.io.File(outDir)
@@ -274,7 +274,7 @@ object DataSkipping {
       val src = s"$dataDir/fg=$g"
       val dst = s"$outDir/fg=$g"
       if (affected.contains(g)) {
-        spark.read.parquet(src)
+        Tables.parquet(spark, src)
           .join(broadcast(tombstones.filter(col("fg") === g)
             .select(col("k").as(keyCol))), Seq(keyCol), "left_anti")
           .write.mode("overwrite").parquet(dst)
@@ -305,7 +305,7 @@ object DataSkipping {
   def membershipManifest(spark: SparkSession, dataDir: String,
       column: String, buckets: Int): DataFrame = {
     require(buckets >= 2, "need buckets >= 2")
-    spark.read.parquet(dataDir)
+    Tables.parquet(spark, dataDir)
       .select(col("fg"), (Maintenance.mix32(col(column)) % buckets).as("bkt"))
       .distinct()
   }
@@ -333,9 +333,9 @@ object DataSkipping {
     val rows =
       if (selected.isEmpty) {
         // typed empty frame: no group can contain the range
-        spark.read.parquet(dataDir).filter(lit(false)).drop("fg")
+        Tables.parquet(spark, dataDir).filter(lit(false)).drop("fg")
       } else {
-        spark.read.parquet(selected.map(g => s"$dataDir/fg=$g"): _*)
+        Tables.parquet(spark, selected.map(g => s"$dataDir/fg=$g"): _*)
           .filter(col(statsCol).between(lo, hi))
       }
     (rows, selected.length.toLong, total)
@@ -358,9 +358,9 @@ object DataSkipping {
       .map(_.getLong(0)).sorted
     val rows =
       if (selected.isEmpty)
-        spark.read.parquet(dataDir).filter(lit(false)).drop("fg")
+        Tables.parquet(spark, dataDir).filter(lit(false)).drop("fg")
       else
-        spark.read.parquet(selected.map(g => s"$dataDir/fg=$g"): _*)
+        Tables.parquet(spark, selected.map(g => s"$dataDir/fg=$g"): _*)
           .filter(col(column) === probe)
     (rows, selected.length.toLong)
   }
@@ -559,7 +559,7 @@ object DataSkipping {
           .select(floor($"o_orderkey" / 4000L).as("fg"),
             $"o_orderkey".as("k"))
           .write.mode("overwrite").parquet(del)
-        val tombs = s.read.parquet(del)
+        val tombs = Tables.parquet(s, del)
         val nDel = tombs.count()
         // exact-cents money: per-priority sums cover ~300k rows at
         // sf1, past the point where double summation order stays
@@ -611,7 +611,7 @@ object DataSkipping {
         val (nRw, nCp) = majorCompaction(s, out, tombs, "o_orderkey",
           compacted)
         // post-compaction scan: NO tombstone join — the files are clean
-        s.read.parquet(compacted)
+        Tables.parquet(s, compacted)
           .groupBy($"o_orderpriority")
           .agg(count(lit(1)).as("n_orders"),
             sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
@@ -659,7 +659,7 @@ object DataSkipping {
         // the receipt guard — the bench line measures the LOOKUP
         writeClusteredCached(orders, col("o_orderkey"), span = 500L, out)
         val membership = membershipManifest(s, out, "o_custkey", 4096)
-        val nTot = s.read.parquet(out).select(col("fg")).distinct().count()
+        val nTot = Tables.parquet(s, out).select(col("fg")).distinct().count()
         val (rows, nSel) = membershipPointScan(s, membership, out,
           "o_custkey", probe = 371L, buckets = 4096, nGroupsTotal = nTot)
         rows.agg(count(lit(1)).as("n_orders"),

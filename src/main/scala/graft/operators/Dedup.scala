@@ -738,6 +738,7 @@ object Dedup {
       // was sort-merge, re-sorting the edge frame AND the labels every
       // round; hashing labels costs O(nodes/P) per partition at any
       // total scale and lets the edge side stream unsorted
+      // hint skips the size check: O(nodes/P) holds while P grows with nodes
       val viaNbr = sym.join(labels.hint("shuffle_hash"),
           sym("dst") === labels("id"))
         .select(sym("src").as("id"), labels("comp"))
@@ -751,6 +752,7 @@ object Dedup {
       // relaxations compounds recomputation — measured 35% slower)
       val byId = relaxed.toDF("jid", "jcomp")
       // both sides node-scale; hash the renamed side, stream the other
+      // hint skips the size check: O(nodes/P) holds while P grows with nodes
       val next = relaxed.join(byId.hint("shuffle_hash"),
           relaxed("comp") === byId("jid"))
         .select(relaxed("id"), least(relaxed("comp"), byId("jcomp")).as("comp"))
@@ -1785,7 +1787,7 @@ object Dedup {
         val rs = q.runAll(s)
         require(rs.size == 3 && rs.forall(_.ok),
           s"incremental jobs failed: ${rs.filterNot(_.ok)}")
-        s.read.parquet(outDir)
+        Tables.parquet(s, outDir)
           .select($"doc_id", $"source", $"n_chars")
           .orderBy($"doc_id")
       },

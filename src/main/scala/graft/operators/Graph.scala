@@ -100,6 +100,7 @@ object Graph {
       // Hashing the node-scale rank side per partition costs O(nodes/P)
       // memory (safe at any total scale — P grows with the data) and
       // lets the edge side stream through unsorted.
+      // hint skips the size check: O(nodes/P) holds while P grows with nodes
       val contribs = e2.join(r.hint("shuffle_hash"),
           e2("src") === r("node"))
         .select($"dst", expr("(rank * w) div deg").as("c"))
@@ -291,6 +292,7 @@ object Graph {
       // per-round join is mid-plan (AQE can't rewrite it), sort-merge
       // re-sorted edges AND labels every round, and the node-scale label
       // side hashes in O(nodes/P) per partition at any total scale
+      // hint skips the size check: O(nodes/P) holds while P grows with nodes
       val cnt = e.join(lab.hint("shuffle_hash"), e("src") === lab("node"))
         .groupBy($"dst", $"label").agg(sum($"w").as("c"))
       lab = cnt.groupBy($"dst".as("node"))

@@ -302,7 +302,7 @@ object SourceCoverage {
           .write.mode("overwrite").partitionBy("event_type")
           .option("compression", "zstd") // the SCALING.md at-rest codec
           .parquet(staged)
-        s.read.parquet(staged)
+        Tables.parquet(s, staged)
           .filter($"event_type" === "purchase")
           .groupBy($"user_id")
           .agg(count(lit(1)).as("n_purchases"),

@@ -411,7 +411,7 @@ object TrainingPipeline {
         pmod(Dedup.h60($"doc_id".cast("string")), lit(nShards.toLong))
           .as("shard"))
       .write.mode("overwrite").partitionBy("shard").parquet(outDir)
-    s.read.parquet(outDir)
+    Tables.parquet(s, outDir)
       .groupBy($"shard".cast("long").as("shard"))
       .agg(count(lit(1)).as("n_docs"),
         sum(size(split($"text", " ")).cast("long")).as("n_tokens"),

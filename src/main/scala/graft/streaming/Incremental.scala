@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
 
+import graft.engine.Tables
+
 /** Incrementally-maintained aggregate over a growing directory of files —
   * the reference's whole "incrementation" design point
   * (f(A+B) = f(A) + f(B), /root/reference/README.txt:18) plus its
@@ -127,7 +129,7 @@ final class IncrementalQuantile(
     val current = Files.readString(pointer).trim
     IncrementalAgg.listVersions(stateDir).reverse
       .dropWhile(_ != current).drop(1).headOption
-      .map(v => spark.read.parquet(Paths.get(stateDir, v).toString))
+      .map(v => Tables.parquet(spark, Paths.get(stateDir, v).toString))
   }
 
   /** PSI between the previous retained state version and the current
@@ -142,7 +144,7 @@ final class IncrementalQuantile(
 
   /** A specific retained state version. */
   def stateAt(version: String): DataFrame =
-    spark.read.parquet(Paths.get(stateDir, version).toString)
+    Tables.parquet(spark, Paths.get(stateDir, version).toString)
 
   /** The N-version drift SERIES (round 12 — q245 generalized past its
     * consecutive pair): with retainVersions > 2, every adjacent
@@ -243,7 +245,7 @@ final class IncrementalJsonCensus(
   def versions(): Seq[String] = IncrementalAgg.listVersions(stateDir)
 
   def stateAt(version: String): DataFrame =
-    spark.read.parquet(Paths.get(stateDir, version).toString)
+    Tables.parquet(spark, Paths.get(stateDir, version).toString)
 
   /** Version-over-version census drift (shared scaffold:
     * [[graft.operators.Json.censusOuter]]). Cumulative counts never
@@ -309,7 +311,7 @@ final class IncrementalManifest(
 
   /** The manifest as of a retained version (from [[versions]]). */
   def stateAt(version: String): DataFrame =
-    spark.read.parquet(Paths.get(stateDir, version).toString)
+    Tables.parquet(spark, Paths.get(stateDir, version).toString)
 }
 
 object IncrementalAgg {
@@ -325,7 +327,7 @@ object IncrementalAgg {
       stateDir: String): Option[DataFrame] = {
     val pointer = pointerOf(stateDir)
     if (Files.exists(pointer))
-      Some(spark.read.parquet(
+      Some(Tables.parquet(spark, 
         Paths.get(stateDir, Files.readString(pointer).trim).toString))
     else None
   }

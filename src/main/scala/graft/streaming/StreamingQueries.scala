@@ -9,6 +9,7 @@ import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
 
+import graft.engine.Tables
 import graft.operators.QueryDef
 
 /** Structured Streaming surface (SURVEY.md §2 Table B streaming rows,
@@ -124,7 +125,8 @@ object StreamingQueries {
     * §2.4 — the per-batch `filter(...).write` pattern this replaces
     * re-scanned the input once per arrival): rows are written once,
     * partitioned by a precomputed `_b` column (0..n-1, must cover every
-    * row), and delivering arrival k is a file RENAME into `inputDir` —
+    * row; a NULL `_b` fails the staging), and delivering arrival k is
+    * a file RENAME into `inputDir` —
     * the same write-then-rename atomic-visibility contract the A4
     * operator documents, so the stream source can never observe a
     * half-delivered batch. File contents per arrival are identical to
@@ -142,6 +144,12 @@ object StreamingQueries {
       withBatchCol.schema.filterNot(_.name == "_b"))
     val dst = new org.apache.hadoop.fs.Path(inputDir)
     val fs = dst.getFileSystem(s.sparkContext.hadoopConfiguration)
+    // every row must land in an `_b=<int>` batch: a NULL `_b` is written
+    // to `_b=__HIVE_DEFAULT_PARTITION__`, which no delivery would move
+    fs.listStatus(new org.apache.hadoop.fs.Path(staging))
+      .filter(st => st.isDirectory && !st.getPath.getName.matches("_b=-?\\d+"))
+      .foreach(st => throw new java.io.IOException(
+        s"arrival staging: ${st.getPath} is not an _b=<int> batch"))
     if (!fs.mkdirs(dst)) throw new java.io.IOException(s"cannot create $dst")
     (k: Int) => {
       val src = new org.apache.hadoop.fs.Path(staging, s"_b=$k")
@@ -210,7 +218,7 @@ object StreamingQueries {
       stageParquet(path, d)
       d.toString
     })
-    val schema = s.read.parquet(path).schema
+    val schema = Tables.parquet(s, path).schema
     val raw = s.readStream.schema(schema).parquet(srcDir)
     // same ts contract as batch: nanos-long / NTZ-micros / timestamp all
     // normalize to TimestampType before any watermark is applied
@@ -248,7 +256,7 @@ object StreamingQueries {
       // the sentinel batches at sf1 and the outer joins dropped them.
       val src = java.nio.file.Paths.get(path)
       if (Files.isDirectory(src))
-        s.read.parquet(path).coalesce(1)
+        Tables.parquet(s, path).coalesce(1)
           .write.mode("append").parquet(d.toString)
       else stageParquet(path, d)
       // pin the processing order EXPLICITLY: the file source orders by
@@ -269,7 +277,7 @@ object StreamingQueries {
         all
       }
       var stamped = stampNew(t0, Set.empty)
-      val base = s.read.parquet(path)
+      val base = Tables.parquet(s, path)
       val isLongTs =
         base.schema("ts").dataType == org.apache.spark.sql.types.LongType
       def sentinel(days: Int, id: Long) = {
@@ -293,7 +301,7 @@ object StreamingQueries {
         System.currentTimeMillis() - 20000L), stamped)
       d.toString
     })
-    val schema = s.read.parquet(path).schema
+    val schema = Tables.parquet(s, path).schema
     val raw = s.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(srcDir)
     graft.engine.Tables.normalizeEventTime(raw)
@@ -365,7 +373,7 @@ object StreamingQueries {
         }
         runOnce()
         runOnce() // second run: checkpoint says all files seen -> no-op
-        s.read.parquet(out).orderBy($"event_id")
+        Tables.parquet(s, out).orderBy($"event_id")
       },
       Some("""
         SELECT event_id, user_id, ts, round(value, 4) AS value
@@ -977,7 +985,7 @@ object StreamingQueries {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        s.read.parquet(out).orderBy($"w_start", $"event_type")
+        Tables.parquet(s, out).orderBy($"w_start", $"event_type")
       },
       Some("""
         WITH w AS (
@@ -1061,7 +1069,7 @@ object StreamingQueries {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        s.read.parquet(out)
+        Tables.parquet(s, out)
           .groupBy($"user_id")
           .agg(max($"n_events").as("n_events"),
             round(max($"max_value"), 4).as("max_value"))
@@ -1115,7 +1123,7 @@ object StreamingQueries {
               s.conf.unset("spark.sql.streaming.stateStore.providerClass")
           }
         }
-        s.read.parquet(out)
+        Tables.parquet(s, out)
           .groupBy($"user_id")
           .agg(max($"n_events").as("n_events"),
             round(min($"min_value"), 4).as("min_value"),
@@ -1156,7 +1164,7 @@ object StreamingQueries {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        s.read.parquet(out).orderBy($"user_id", $"event_type")
+        Tables.parquet(s, out).orderBy($"user_id", $"event_type")
       },
       Some("""
         SELECT DISTINCT user_id, event_type
@@ -1190,7 +1198,7 @@ object StreamingQueries {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        s.read.parquet(out).orderBy($"user_id", $"event_type")
+        Tables.parquet(s, out).orderBy($"user_id", $"event_type")
       },
       Some("""
         SELECT DISTINCT user_id, event_type
@@ -1271,7 +1279,7 @@ object StreamingQueries {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        s.read.parquet(out).orderBy($"p_id", $"c_id")
+        Tables.parquet(s, out).orderBy($"p_id", $"c_id")
       },
       Some("""
         SELECT p.event_id AS p_id, p.user_id, c.event_id AS c_id, c.ts AS c_ts
@@ -1326,7 +1334,7 @@ object StreamingQueries {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        s.read.parquet(out)
+        Tables.parquet(s, out)
           .filter($"p_id" >= 0L) // the sentinels' own rows
           .orderBy($"p_id", $"c_id")
       },
@@ -1386,7 +1394,7 @@ object StreamingQueries {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        s.read.parquet(out)
+        Tables.parquet(s, out)
           .filter(($"p_id".isNull || $"p_id" >= 0L) &&
             ($"c_id".isNull || $"c_id" >= 0L)) // sentinels' own rows
           .orderBy($"p_id", $"c_id")
@@ -1440,7 +1448,7 @@ object StreamingQueries {
           .trigger(Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        s.read.parquet(out)
+        Tables.parquet(s, out)
           .filter($"c_id" >= 0L &&
             ($"p_id".isNull || $"p_id" >= 0L)) // sentinels' own rows
           .orderBy($"c_id", $"p_id")
@@ -1514,7 +1522,7 @@ object StreamingQueries {
         }
         runOnce()
         runOnce() // replay: all files seen -> no new batches, sink intact
-        s.read.parquet(out)
+        Tables.parquet(s, out)
           .select($"event_id", $"user_id", $"ts")
           .orderBy($"event_id")
       },
@@ -1562,7 +1570,7 @@ object StreamingQueries {
           case Some(p) => s.conf.set(key, p)
           case None => s.conf.unset(key)
         }
-        s.read.parquet(out)
+        Tables.parquet(s, out)
           .select($"user_id", $"n_events",
             timestamp_micros($"closed_us").as("closed_at"))
           .orderBy($"user_id")
@@ -1606,7 +1614,7 @@ object StreamingQueries {
             .start()
           q.awaitTermination()
         }
-        s.read.parquet(out)
+        Tables.parquet(s, out)
           .groupBy($"event_type")
           .agg(max_by($"n", $"_b").as("n"),
             max_by($"cents", $"_b").as("cents"))
@@ -1665,7 +1673,7 @@ object StreamingQueries {
           // n_rows>0 counter). The oracle derives the same number from
           // the raw table, so a fixture where some class is empty stays
           // green instead of burning the drain deadline on a constant.
-          val staged = s.read.parquet(eventsSplitDir(s, dir))
+          val staged = Tables.parquet(s, eventsSplitDir(s, dir))
           val expectedBatches = staged
             .groupBy(pmod($"event_id", lit(4))).count().count()
           val expectedRows = staged.count()
@@ -1718,7 +1726,7 @@ object StreamingQueries {
     val path = s"$dir/events.parquet"
     stagedSplit.getOrElseUpdate(path, {
       val d = Files.createTempDirectory("events_split_")
-      val base = graft.engine.Tables.normalizeEventTime(s.read.parquet(path))
+      val base = Tables.normalizeEventTime(Tables.parquet(s, path))
       for (i <- 0 until 4)
         base.filter(pmod($"event_id", lit(4)) === i)
           .coalesce(1).write.mode("append").parquet(d.toString)
@@ -1728,7 +1736,7 @@ object StreamingQueries {
 
   private def eventsStreamSplit(s: SparkSession, dir: String): DataFrame = {
     val srcDir = eventsSplitDir(s, dir)
-    val schema = s.read.parquet(srcDir).schema
+    val schema = Tables.parquet(s, srcDir).schema
     s.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(srcDir)
   }
 }

@@ -1,9 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.TimeoutException
-
-import scala.jdk.CollectionConverters._
 
 import org.apache.spark.storage.StorageLevel
 
@@ -59,31 +56,11 @@ class HarnessSpec extends SparkSpec {
     * engine/GraftSession.scala, job groups are set only by Harness, and
     * functions reach sessions only through GraftExtensions. */
   test("no session builder, job group or function registration outside its home") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repository root: $root")
-    def code(line: String): String = {
-      val t = line.trim
-      if (t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) ""
-      else line.replaceAll("//.*$", "")
-    }
-    val rules: Seq[(String, Option[String])] = Seq(
+    val offenders = SourceGuard.offenders(Seq(
       "createOrReplaceTempFunction" -> None,
       "setJobGroup(" -> Some("graft/Harness.scala"),
       "cancelJobGroup(" -> Some("graft/Harness.scala"),
-      "SparkSession.builder()" -> Some("graft/engine/GraftSession.scala"))
-    val walk = Files.walk(root)
-    val offenders =
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .flatMap { (f: Path) =>
-          Files.readAllLines(f).asScala.zipWithIndex.flatMap { case (line, i) =>
-            rules.collect {
-              case (needle, home) if code(line).contains(needle) &&
-                  !home.exists(h => f.endsWith(Paths.get(h))) =>
-                s"$f:${i + 1}: $line"
-            }
-          }
-        }.toList
-      finally walk.close()
+      "SparkSession.builder()" -> Some("graft/engine/GraftSession.scala")))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.engine.GraftSession
+
 /** Shared local SparkSession for specs (one JVM-wide session; ScalaTest
   * runs suites sequentially in the forked test JVM). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -12,7 +14,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    // the local codegen settings every GraftSession.builder session gets
+    val s = GraftSession.localCodegen(SparkSession.builder())
       .master("local[2]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")

@@ -1,0 +1,84 @@
+package graft.engine
+
+import java.io.File
+import java.nio.file.Files
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+
+import graft.{SourceGuard, SparkSpec}
+
+/** The one parquet loader: the schema it reads from a footer on the
+  * driver is the schema Spark infers, and a load launches no job. */
+class TablesLoaderSpec extends SparkSpec {
+
+  private val sf = "/root/testdata/sf0.001"
+
+  private def tmp(prefix: String): String =
+    Files.createTempDirectory(prefix).toString
+
+  test("the footer schema equals the inferred schema") {
+    val tables = new File(sf).listFiles().map(_.getPath)
+      .filter(_.endsWith(".parquet")).sorted.toSeq
+    assert(tables.size >= Tables.all.size, tables)
+    tables.foreach { p =>
+      assert(Tables.parquet(spark, p).schema == spark.read.parquet(p).schema, p)
+    }
+
+    // the `_b=` layout arrival staging writes: partition columns are
+    // still discovered from the directory names
+    val staged = s"${tmp("loader_part_")}/staged"
+    spark.range(12).selectExpr("id", "CAST(id AS STRING) AS s",
+      "CAST(id % 3 AS INT) AS _b").write.partitionBy("_b").parquet(staged)
+    val partitioned = spark.read.parquet(staged).schema
+    assert(partitioned.fieldNames.last == "_b")
+    assert(Tables.parquet(spark, staged).schema == partitioned)
+
+    // several paths: Spark reads the first data file by full path, here
+    // under `a`, whose schema lacks `b`'s extra column
+    val root = tmp("loader_multi_")
+    spark.range(5).selectExpr("id").write.parquet(s"$root/a")
+    spark.range(5).selectExpr("id", "id * 2 AS extra").write.parquet(s"$root/b")
+    Seq(Seq(s"$root/a", s"$root/b"), Seq(s"$root/b", s"$root/a")).foreach { ps =>
+      assert(Tables.loadMulti(spark, ps).schema == spark.read.parquet(ps: _*).schema, ps)
+    }
+  }
+
+  test("a path with no footer fails with Spark's own error") {
+    val missing = s"${tmp("loader_missing_")}/none.parquet"
+    val ours = intercept[Exception](Tables.parquet(spark, missing))
+    val spark0 = intercept[Exception](spark.read.parquet(missing))
+    assert(ours.getClass == spark0.getClass && ours.getMessage == spark0.getMessage)
+  }
+
+  test("a load and its schema launch no Spark job") {
+    val sc = spark.sparkContext
+    val marker = "graft.test.marker"
+    val starts = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        starts.put(Option(e.properties).flatMap(p => Option(p.getProperty(marker)))
+          .getOrElse(s"job ${e.jobId}"))
+    }
+    sc.addSparkListener(listener)
+    try {
+      Tables.load(spark, sf, "lineitem").schema
+      Tables.load(spark, sf, "events").schema
+      // events reach listeners in order: once this marked job is seen,
+      // every job the loads started has been seen too
+      sc.setLocalProperty(marker, "end")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(marker, null)
+      val seen = Iterator.continually(starts.poll(60, TimeUnit.SECONDS))
+        .takeWhile(e => e != null && e != "end").toList
+      assert(seen.isEmpty, seen)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The one-loader property cannot erode: parquet is read only here. */
+  test("no read.parquet outside engine/Tables") {
+    val offenders = SourceGuard.offenders(Seq(
+      "read.parquet(" -> Some("graft/engine/Tables.scala")))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+}

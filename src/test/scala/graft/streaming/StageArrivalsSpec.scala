@@ -45,6 +45,14 @@ class StageArrivalsSpec extends SparkSpec {
     assert(staged.exists(n => e.getMessage.contains(s"$in/b0_$n")), e.getMessage)
   }
 
+  test("a NULL batch key fails staging, naming the directory it landed in") {
+    val in = Files.createTempDirectory("arrivals_").resolve("in").toString
+    val withNull = spark.range(6).selectExpr("id",
+      "CASE WHEN id = 5 THEN NULL ELSE CAST(id % 2 AS INT) END AS _b")
+    val e = intercept[IOException](StreamingQueries.stageArrivals(withNull, in))
+    assert(e.getMessage.contains("_b=__HIVE_DEFAULT_PARTITION__"), e.getMessage)
+  }
+
   test("an input path that is a file fails staging") {
     val in = Files.createTempFile("arrivals_", ".file").toString
     val e = intercept[IOException](StreamingQueries.stageArrivals(batches, in))
