@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 import graft.engine.GraftSession
+import graft.streaming.Run
 
 /** The one session and the one guarded runner behind every harness main
   * (Bench, Verify, Scratch, PlanDump, PlanSweep, FixtureGen) — the
@@ -41,10 +42,13 @@ object Harness {
       .foreach(_.unpersist(blocking = false))
     // drop staged bucketed tables so every run of q155/q161 pays the
     // staging write: stageBucketed's tableExists guard would otherwise
-    // make whichever run comes second structurally cheaper
-    spark.catalog.listTables().collect()
-      .map(_.name).filter(_.startsWith("graft_bkt_"))
-      .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    // make whichever run comes second structurally cheaper. Drop the
+    // views of streams' memory sinks too: each holds its query's final
+    // result rows on the driver
+    spark.catalog.listTables().collect().map(_.name).foreach { t =>
+      if (t.startsWith("graft_bkt_")) spark.sql(s"DROP TABLE IF EXISTS $t")
+      else if (t.startsWith(Run.ViewPrefix)) spark.catalog.dropTempView(t)
+    }
   }
 
   /** What one guarded run did: wall seconds, the body's error (or the

@@ -34,8 +34,9 @@ object GraftSession {
     * is dead are swept on next session build (a kill -9 would otherwise
     * leak tmpfs pages until reboot). Local-mode only — on a cluster
     * spark.local.dir is the resource manager's concern. */
-  /** Memoized per-process scratch root (also hosts streaming checkpoint
-    * dirs via StreamingQueries) — one sweep + mkdir per JVM. */
+  /** Memoized per-process scratch root (also hosts every stream's
+    * checkpoint, sink and source-staging dirs, via `streaming.Run.tmp`) —
+    * one sweep + mkdir per JVM. */
   private[graft] lazy val scratchRoot: String = localScratchDir()
 
   private def localScratchDir(): String = {

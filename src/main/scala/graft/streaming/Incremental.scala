@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
 import graft.engine.Tables
@@ -350,7 +350,7 @@ object IncrementalAgg {
   }
 
   /** The shared fold harness behind [[IncrementalAgg]] and
-    * [[IncrementalQuantile]]: stream newly-arrived files
+    * [[IncrementalQuantile]]: stream newly-arrived files through [[Run]]
     * (Trigger.AvailableNow — the checkpoint is the seen-set), fold each
     * micro-batch into the versioned state table, flip the pointer.
     *
@@ -374,29 +374,22 @@ object IncrementalAgg {
       "retainVersions >= 2: the previous version is the documented rollback")
     Files.createDirectories(Paths.get(stateDir))
     val stream = spark.readStream.schema(schema).parquet(inputDir)
-    val q = stream.writeStream
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val version = s"v$batchId"
-        val alreadyFolded = Files.exists(pointer) &&
-          Files.readString(pointer).trim == version
-        if (!alreadyFolded) {
-          val p = partial(batch)
-          val merged = state() match {
-            case Some(prev) => merge(prev, p)
-            case None => p
-          }
-          merged.write.mode("overwrite")
-            .parquet(Paths.get(stateDir, version).toString)
-          flipPointer(pointer, version)
-          pruneVersions(stateDir, pointer, retainVersions)
+    Run.foreachBatch(stream, OutputMode.Append(), checkpointDir) { (batch, batchId) =>
+      val version = s"v$batchId"
+      val alreadyFolded = Files.exists(pointer) &&
+        Files.readString(pointer).trim == version
+      if (!alreadyFolded) {
+        val p = partial(batch)
+        val merged = state() match {
+          case Some(prev) => merge(prev, p)
+          case None => p
         }
-        ()
+        merged.write.mode("overwrite")
+          .parquet(Paths.get(stateDir, version).toString)
+        flipPointer(pointer, version)
+        pruneVersions(stateDir, pointer, retainVersions)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Keep-last-N retention, run ONLY after a successful pointer flip:

@@ -1,16 +1,16 @@
 package graft.streaming
 
-import java.nio.file.Files
-import java.util.UUID
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues, Trigger, TTLConfig, ValueState}
+  StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 import graft.engine.Tables
 import graft.operators.QueryDef
+import graft.streaming.Run.tmp
 
 /** Structured Streaming surface (SURVEY.md §2 Table B streaming rows,
   * §7 M4).
@@ -25,8 +25,8 @@ import graft.operators.QueryDef
   * watermarks with a defined late-data contract, and arbitrary keyed
   * state.
   *
-  * Every query here executes a real streaming job with
-  * Trigger.AvailableNow (the batch-style catch-up trigger), lands the
+  * Every query here executes a real streaming job through [[Run]]
+  * (Trigger.AvailableNow, the batch-style catch-up trigger), lands the
   * sink, and returns the result as a static frame so the driver's DuckDB
   * oracle can hash-compare it.
   *
@@ -110,17 +110,6 @@ private[streaming] class SessionCloseProcessor
 
 object StreamingQueries {
 
-  // checkpoint/staging dirs live under the per-pid scratch root
-  // (tmpfs-preferred): on this box /tmp is ext4 mounted with inline
-  // discard, where the hundreds of tiny checkpoint files a stream
-  // writes (and the harness deletes) each pay a synchronous TRIM. The
-  // root is swept by the next session once this JVM dies, so tmpfs
-  // pages cannot accumulate across runs.
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(
-      java.nio.file.Paths.get(graft.engine.GraftSession.scratchRoot),
-      prefix).toString
-
   /** Stage N sequential arrival batches with ONE corpus pass (guide
     * §2.4 — the per-batch `filter(...).write` pattern this replaces
     * re-scanned the input once per arrival): rows are written once,
@@ -195,7 +184,7 @@ object StreamingQueries {
     * original mtimes, so later-appended sentinel files still sort
     * after every staged part in the file source's processing order. */
   private def stageParquet(path: String, d: java.nio.file.Path): Unit = {
-    val src = java.nio.file.Paths.get(path)
+    val src = Paths.get(path)
     val parts: Seq[java.nio.file.Path] =
       if (Files.isDirectory(src)) {
         import scala.jdk.CollectionConverters._
@@ -214,7 +203,7 @@ object StreamingQueries {
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
     val srcDir = staged.getOrElseUpdate(path, {
-      val d = Files.createTempDirectory("events_src_")
+      val d = Paths.get(tmp("events_src_"))
       stageParquet(path, d)
       d.toString
     })
@@ -246,7 +235,7 @@ object StreamingQueries {
   private def eventsStreamWithFlush(s: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
     val srcDir = stagedFlush.getOrElseUpdate(path, {
-      val d = Files.createTempDirectory("events_srcflush_")
+      val d = Paths.get(tmp("events_srcflush_"))
       // the flush contract is ONE data micro-batch then the sentinel
       // batches: watermark-sensitive consumers (stream-stream OUTER
       // joins, event timers) rely on no data arriving after a
@@ -254,7 +243,7 @@ object StreamingQueries {
       // fixture (generated sfN) must therefore stage as a SINGLE
       // coalesced file — linking its 32 parts made rows "late" behind
       // the sentinel batches at sf1 and the outer joins dropped them.
-      val src = java.nio.file.Paths.get(path)
+      val src = Paths.get(path)
       if (Files.isDirectory(src))
         Tables.parquet(s, path).coalesce(1)
           .write.mode("append").parquet(d.toString)
@@ -307,43 +296,6 @@ object StreamingQueries {
     graft.engine.Tables.normalizeEventTime(raw)
   }
 
-  /** Streaming state partition sizing. The session default
-    * (shuffle.partitions = cores, the batch posture) also fixes the
-    * number of state-store instances per stateful operator — each one
-    * paying per-micro-batch open/commit/snapshot I/O against the
-    * checkpoint. State partition count should track STATE SIZE, not
-    * core count: at fixture scale 8 partitions hold the state easily
-    * and cut the fixed per-batch store overhead 4x; at corpus scale
-    * raise it (it is pinned into the checkpoint at first start — a
-    * restarted stream keeps its original state partitioning, so size it
-    * for the target state up front). Conf is restored after the stream
-    * finishes; batch queries in the same session keep the session
-    * default. */
-  private def withStatePartitions[A](s: SparkSession, n: Int = 8)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.get(key)
-    s.conf.set(key, n.toString)
-    try body finally s.conf.set(key, prev)
-  }
-
-  /** Run an aggregation stream to a complete-mode memory sink and return
-    * the final table. State-sized partitioning per [[withStatePartitions]]. */
-  private def runComplete(s: SparkSession, df: DataFrame): DataFrame =
-    withStatePartitions(s) { runCompleteRaw(s, df) }
-
-  private def runCompleteRaw(s: SparkSession, df: DataFrame): DataFrame = {
-    val name = "mem_" + UUID.randomUUID().toString.replace("-", "")
-    val q = df.writeStream
-      .outputMode(OutputMode.Complete())
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", tmp("ckpt_"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.table(name)
-  }
-
   val defs: Seq[QueryDef] = Seq(
 
     // ----- incremental ingest: the reference's hold_state ----------------
@@ -358,22 +310,13 @@ object StreamingQueries {
         import s.implicits._
         val ckpt = tmp("ckpt_")
         val out = tmp("sink_")
-        def runOnce(): Unit = {
-          val q = eventsStream(s, dir)
-            .filter($"event_type" === "purchase")
-            .select($"event_id", $"user_id", $"ts", round($"value", 4).as("value"))
-            .writeStream
-            .outputMode(OutputMode.Append())
-            .format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+        def runOnce(): DataFrame = Run.parquet(eventsStream(s, dir)
+          .filter($"event_type" === "purchase")
+          .select($"event_id", $"user_id", $"ts", round($"value", 4).as("value")),
+          out, ckpt)
         runOnce()
         runOnce() // second run: checkpoint says all files seen -> no-op
-        Tables.parquet(s, out).orderBy($"event_id")
+          .orderBy($"event_id")
       },
       Some("""
         SELECT event_id, user_id, ts, round(value, 4) AS value
@@ -925,7 +868,7 @@ object StreamingQueries {
         val agg = eventsStream(s, dir)
           .groupBy(window($"ts", "1 day"), $"event_type")
           .agg(count(lit(1)).as("n"), round(sum($"value"), 4).as("total"))
-        runComplete(s, agg)
+        Run.complete(agg)
           .select($"window.start".as("w_start"), $"window.end".as("w_end"),
             $"event_type", $"n", $"total")
           .orderBy($"w_start", $"event_type")
@@ -946,7 +889,7 @@ object StreamingQueries {
         val agg = eventsStream(s, dir)
           .groupBy(window($"ts", "2 days", "1 day"))
           .agg(count(lit(1)).as("n"))
-        runComplete(s, agg)
+        Run.complete(agg)
           .select($"window.start".as("w_start"), $"window.end".as("w_end"), $"n")
           .orderBy($"w_start")
       },
@@ -968,24 +911,15 @@ object StreamingQueries {
     // /root/reference/mapper.py:110-114).
     QueryDef(
       "q58_stream_watermark_append",
-      (s, dir) => withStatePartitions(s) {
+      (s, dir) => {
         import s.implicits._
-        val out = tmp("sink_")
-        val q = eventsStream(s, dir)
+        Run.parquet(eventsStream(s, dir)
           .withWatermark("ts", "1 day")
           .groupBy(window($"ts", "1 day"), $"event_type")
           .agg(count(lit(1)).as("n"))
           .select($"window.start".as("w_start"), $"window.end".as("w_end"),
-            $"event_type", $"n")
-          .writeStream
-          .outputMode(OutputMode.Append())
-          .format("parquet")
-          .option("path", out)
-          .option("checkpointLocation", tmp("ckpt_"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        Tables.parquet(s, out).orderBy($"w_start", $"event_type")
+            $"event_type", $"n"))
+          .orderBy($"w_start", $"event_type")
       },
       Some("""
         WITH w AS (
@@ -1007,7 +941,7 @@ object StreamingQueries {
         val agg = eventsStream(s, dir)
           .groupBy(session_window($"ts", "30 minutes"), $"user_id")
           .agg(count(lit(1)).as("n_events"))
-        runComplete(s, agg)
+        Run.complete(agg)
           .select($"user_id", $"session_window.start".as("s_start"),
             $"session_window.end".as("s_end"), $"n_events")
           .orderBy($"user_id", $"s_start")
@@ -1042,7 +976,7 @@ object StreamingQueries {
     // sink + final groupBy makes the result batching-insensitive.
     QueryDef(
       "q60_stream_stateful_counter",
-      (s, dir) => withStatePartitions(s) {
+      (s, dir) => {
         import s.implicits._
         val out = tmp("sink_")
         val typed = eventsStream(s, dir)
@@ -1059,16 +993,10 @@ object StreamingQueries {
               state.update((n, mx))
               Iterator.single((user, n, mx))
           }
-        val q = updated.toDF("user_id", "n_events", "max_value")
-          .writeStream
-          .outputMode(OutputMode.Update())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(out)
-          }
-          .option("checkpointLocation", tmp("ckpt_"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        Run.foreachBatch(updated.toDF("user_id", "n_events", "max_value"),
+            OutputMode.Update()) { (batch, _) =>
+          batch.write.mode("append").parquet(out)
+        }
         Tables.parquet(s, out)
           .groupBy($"user_id")
           .agg(max($"n_events").as("n_events"),
@@ -1091,37 +1019,18 @@ object StreamingQueries {
     // order-independent, so the result is batching-insensitive.
     QueryDef(
       "q109_stream_transform_with_state",
-      (s, dir) => withStatePartitions(s) {
+      (s, dir) => {
         import s.implicits._
         val out = tmp("sink_")
-        val prevProvider = s.conf.getOption(
-          "spark.sql.streaming.stateStore.providerClass")
-        s.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        try {
-          val typed = eventsStream(s, dir)
-            .select($"user_id", $"value").as[(Long, Double)]
-          val updated = typed
-            .groupByKey(_._1)
-            .transformWithState(new RunningStatsProcessor,
-              TimeMode.None(), OutputMode.Update())
-          val q = updated.toDF("user_id", "n_events", "min_value", "max_value")
-            .writeStream
-            .outputMode(OutputMode.Update())
-            .foreachBatch { (batch: DataFrame, _: Long) =>
-              batch.write.mode("append").parquet(out)
-            }
-            .option("checkpointLocation", tmp("ckpt_"))
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        } finally {
-          prevProvider match {
-            case Some(p) =>
-              s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-            case None =>
-              s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-          }
+        val typed = eventsStream(s, dir)
+          .select($"user_id", $"value").as[(Long, Double)]
+        val updated = typed
+          .groupByKey(_._1)
+          .transformWithState(new RunningStatsProcessor,
+            TimeMode.None(), OutputMode.Update())
+        Run.foreachBatch(updated.toDF("user_id", "n_events", "min_value", "max_value"),
+            OutputMode.Update(), rocksDb = true) { (batch, _) =>
+          batch.write.mode("append").parquet(out)
         }
         Tables.parquet(s, out)
           .groupBy($"user_id")
@@ -1149,22 +1058,13 @@ object StreamingQueries {
     // evicted at the watermark.
     QueryDef(
       "q79_stream_dedup",
-      (s, dir) => withStatePartitions(s) {
+      (s, dir) => {
         import s.implicits._
-        val out = tmp("sink_")
-        val q = eventsStream(s, dir)
+        Run.parquet(eventsStream(s, dir)
           .withWatermark("ts", "10 days")
           .dropDuplicates("user_id", "event_type")
-          .select($"user_id", $"event_type")
-          .writeStream
-          .outputMode(OutputMode.Append())
-          .format("parquet")
-          .option("path", out)
-          .option("checkpointLocation", tmp("ckpt_"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        Tables.parquet(s, out).orderBy($"user_id", $"event_type")
+          .select($"user_id", $"event_type"))
+          .orderBy($"user_id", $"event_type")
       },
       Some("""
         SELECT DISTINCT user_id, event_type
@@ -1183,22 +1083,13 @@ object StreamingQueries {
     // DISTINCT and the oracle can gate it.
     QueryDef(
       "q163_stream_dedup_within_watermark",
-      (s, dir) => withStatePartitions(s) {
+      (s, dir) => {
         import s.implicits._
-        val out = tmp("sink_")
-        val q = eventsStream(s, dir)
+        Run.parquet(eventsStream(s, dir)
           .withWatermark("ts", "10 days")
           .dropDuplicatesWithinWatermark("user_id", "event_type")
-          .select($"user_id", $"event_type")
-          .writeStream
-          .outputMode(OutputMode.Append())
-          .format("parquet")
-          .option("path", out)
-          .option("checkpointLocation", tmp("ckpt_"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        Tables.parquet(s, out).orderBy($"user_id", $"event_type")
+          .select($"user_id", $"event_type"))
+          .orderBy($"user_id", $"event_type")
       },
       Some("""
         SELECT DISTINCT user_id, event_type
@@ -1215,29 +1106,17 @@ object StreamingQueries {
     // keys and GC pressure stays flat as state grows. Provider choice is
     // pure config — the plan, the results, and the oracle are identical
     // to the default provider (StreamingRocksDbSpec pins both: rocksdb
-    // metrics present, results equal). Conf is restored after the run so
-    // sibling queries keep the default provider.
+    // metrics present, results equal).
     QueryDef(
       "q168_stream_rocksdb_state",
       (s, dir) => {
         import s.implicits._
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider")
-        try {
-          val agg = eventsStream(s, dir)
-            .groupBy(window($"ts", "1 day"), $"user_id")
-            .agg(count(lit(1)).as("n"), round(sum($"value"), 4).as("total"))
-          runComplete(s, agg)
-            .select($"window.start".as("w_start"), $"user_id", $"n", $"total")
-            .orderBy($"w_start", $"user_id")
-        } finally {
-          prev match {
-            case Some(v) => s.conf.set(key, v)
-            case None => s.conf.unset(key)
-          }
-        }
+        val agg = eventsStream(s, dir)
+          .groupBy(window($"ts", "1 day"), $"user_id")
+          .agg(count(lit(1)).as("n"), round(sum($"value"), 4).as("total"))
+        Run.complete(agg, rocksDb = true)
+          .select($"window.start".as("w_start"), $"user_id", $"n", $"total")
+          .orderBy($"w_start", $"user_id")
       },
       Some("""
         SELECT CAST(date_trunc('day', ts) AS TIMESTAMP) AS w_start,
@@ -1254,9 +1133,8 @@ object StreamingQueries {
     // any join, let alone a state-bounded streaming one.
     QueryDef(
       "q85_stream_stream_join",
-      (s, dir) => withStatePartitions(s) {
+      (s, dir) => {
         import s.implicits._
-        val out = tmp("sink_")
         val ev = eventsStream(s, dir)
         val purchases = ev.filter($"event_type" === "purchase")
           .select($"event_id".as("p_id"), $"user_id", $"ts".as("p_ts"))
@@ -1265,21 +1143,13 @@ object StreamingQueries {
           .select($"event_id".as("c_id"), $"user_id".as("c_user"),
             $"ts".as("c_ts"))
           .withWatermark("c_ts", "1 hour")
-        val q = purchases
+        Run.parquet(purchases
           .join(clicks,
             $"user_id" === $"c_user" &&
               $"c_ts" >= $"p_ts" - expr("INTERVAL 1 HOUR") &&
               $"c_ts" <= $"p_ts")
-          .select($"p_id", $"user_id", $"c_id", $"c_ts")
-          .writeStream
-          .outputMode(OutputMode.Append())
-          .format("parquet")
-          .option("path", out)
-          .option("checkpointLocation", tmp("ckpt_"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        Tables.parquet(s, out).orderBy($"p_id", $"c_id")
+          .select($"p_id", $"user_id", $"c_id", $"c_ts"))
+          .orderBy($"p_id", $"c_id")
       },
       Some("""
         SELECT p.event_id AS p_id, p.user_id, c.event_id AS c_id, c.ts AS c_ts
@@ -1301,9 +1171,8 @@ object StreamingQueries {
     // fixture, so the oracle is the plain batch LEFT JOIN.
     QueryDef(
       "q194_stream_outer_join",
-      (s, dir) => withStatePartitions(s) {
+      (s, dir) => {
         import s.implicits._
-        val out = tmp("sink_")
         val ev = eventsStreamWithFlush(s, dir)
         val purchases = ev
           .filter($"event_type".isin("purchase", "flush"))
@@ -1314,7 +1183,7 @@ object StreamingQueries {
           .select($"event_id".as("c_id"), $"user_id".as("c_user"),
             $"ts".as("c_ts"))
           .withWatermark("c_ts", "1 hour")
-        val q = purchases
+        Run.parquet(purchases
           .join(clicks,
             $"user_id" === $"c_user" &&
               $"c_ts" >= $"p_ts" - expr("INTERVAL 1 HOUR") &&
@@ -1325,16 +1194,7 @@ object StreamingQueries {
           // flush rows from it and pinning the watermark at the last
           // real purchase (observed: the stream's final hour never
           // evicted). Sentinels are dropped in the sink read-back.
-          .select($"p_id", $"user_id", $"c_id", $"c_ts")
-          .writeStream
-          .outputMode(OutputMode.Append())
-          .format("parquet")
-          .option("path", out)
-          .option("checkpointLocation", tmp("ckpt_"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        Tables.parquet(s, out)
+          .select($"p_id", $"user_id", $"c_id", $"c_ts"))
           .filter($"p_id" >= 0L) // the sentinels' own rows
           .orderBy($"p_id", $"c_id")
       },
@@ -1364,9 +1224,8 @@ object StreamingQueries {
     // the sides, not WHERE, or outer rows would be eaten).
     QueryDef(
       "q215_stream_full_outer_join",
-      (s, dir) => withStatePartitions(s) {
+      (s, dir) => {
         import s.implicits._
-        val out = tmp("sink_")
         val ev = eventsStreamWithFlush(s, dir)
         val purchases = ev
           .filter($"event_type".isin("purchase", "flush"))
@@ -1378,23 +1237,14 @@ object StreamingQueries {
           .select($"event_id".as("c_id"), $"user_id".as("c_user"),
             $"ts".as("c_ts"))
           .withWatermark("c_ts", "1 hour")
-        val q = purchases
+        Run.parquet(purchases
           .join(clicks,
             $"p_user" === $"c_user" &&
               $"c_ts" >= $"p_ts" - expr("INTERVAL 1 HOUR") &&
               $"c_ts" <= $"p_ts",
             "full_outer")
           // no sentinel filter in-plan (q194's watermark-pinning lesson)
-          .select($"p_id", $"p_user", $"c_id", $"c_user", $"c_ts")
-          .writeStream
-          .outputMode(OutputMode.Append())
-          .format("parquet")
-          .option("path", out)
-          .option("checkpointLocation", tmp("ckpt_"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        Tables.parquet(s, out)
+          .select($"p_id", $"p_user", $"c_id", $"c_user", $"c_ts"))
           .filter(($"p_id".isNull || $"p_id" >= 0L) &&
             ($"c_id".isNull || $"c_id" >= 0L)) // sentinels' own rows
           .orderBy($"p_id", $"c_id")
@@ -1419,9 +1269,8 @@ object StreamingQueries {
     // side.
     QueryDef(
       "q216_stream_right_outer_join",
-      (s, dir) => withStatePartitions(s) {
+      (s, dir) => {
         import s.implicits._
-        val out = tmp("sink_")
         val ev = eventsStreamWithFlush(s, dir)
         val purchases = ev
           .filter($"event_type".isin("purchase", "flush"))
@@ -1433,22 +1282,13 @@ object StreamingQueries {
           .select($"event_id".as("c_id"), $"user_id".as("c_user"),
             $"ts".as("c_ts"))
           .withWatermark("c_ts", "1 hour")
-        val q = purchases
+        Run.parquet(purchases
           .join(clicks,
             $"p_user" === $"c_user" &&
               $"c_ts" >= $"p_ts" - expr("INTERVAL 1 HOUR") &&
               $"c_ts" <= $"p_ts",
             "right_outer")
-          .select($"p_id", $"p_user", $"c_id", $"c_user", $"c_ts")
-          .writeStream
-          .outputMode(OutputMode.Append())
-          .format("parquet")
-          .option("path", out)
-          .option("checkpointLocation", tmp("ckpt_"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        Tables.parquet(s, out)
+          .select($"p_id", $"p_user", $"c_id", $"c_user", $"c_ts"))
           .filter($"c_id" >= 0L &&
             ($"p_id".isNull || $"p_id" >= 0L)) // sentinels' own rows
           .orderBy($"c_id", $"p_id")
@@ -1481,7 +1321,7 @@ object StreamingQueries {
           .join(customers, $"user_id" === $"c_custkey")
           .groupBy($"c_mktsegment")
           .agg(count(lit(1)).as("n"), round(sum($"value"), 4).as("total"))
-        runComplete(s, agg).orderBy($"c_mktsegment")
+        Run.complete(agg).orderBy($"c_mktsegment")
       },
       Some("""
         SELECT c_mktsegment, count(*) AS n, round(sum(value), 4) AS total
@@ -1504,21 +1344,12 @@ object StreamingQueries {
         import s.implicits._
         val ckpt = tmp("ckpt_")
         val out = tmp("sink_")
-        def runOnce(): Unit = {
-          val q = eventsStream(s, dir)
+        def runOnce(): Unit = Run.foreachBatch(eventsStream(s, dir)
             .filter($"event_type" === "signup")
-            .select($"event_id", $"user_id", $"ts")
-            .writeStream
-            .outputMode(OutputMode.Append())
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              // overwrite per batch id = replays rewrite, never append-dup
-              batch.write.mode("overwrite").parquet(s"$out/batch=$batchId")
-              ()
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+            .select($"event_id", $"user_id", $"ts"),
+            OutputMode.Append(), ckpt) { (batch, batchId) =>
+          // overwrite per batch id = replays rewrite, never append-dup
+          batch.write.mode("overwrite").parquet(s"$out/batch=$batchId")
         }
         runOnce()
         runOnce() // replay: all files seen -> no new batches, sink intact
@@ -1539,36 +1370,20 @@ object StreamingQueries {
     // the batch per-user summary — which is precisely the oracle.
     QueryDef(
       "q214_stream_event_timers",
-      (s, dir) => withStatePartitions(s) {
+      (s, dir) => {
         import s.implicits._
         val out = tmp("sink_")
+        val typed = eventsStreamWithFlush(s, dir)
+          .withWatermark("ts", "0 seconds")
+          .select($"user_id", unix_micros($"ts").as("us"))
+          .as[(Long, Long)]
+        val closed = typed.groupByKey(_._1)
+          .transformWithState(new SessionCloseProcessor,
+            TimeMode.EventTime(), OutputMode.Append())
         // timers live in a second column family — RocksDB provider only
-        val key = "spark.sql.streaming.stateStore.providerClass"
-        val prev = s.conf.getOption(key)
-        s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider")
-        try {
-          val typed = eventsStreamWithFlush(s, dir)
-            .withWatermark("ts", "0 seconds")
-            .select($"user_id", unix_micros($"ts").as("us"))
-            .as[(Long, Long)]
-          val closed = typed.groupByKey(_._1)
-            .transformWithState(new SessionCloseProcessor,
-              TimeMode.EventTime(), OutputMode.Append())
-          val q = closed.toDF("user_id", "n_events", "closed_us")
-            .writeStream
-            .outputMode(OutputMode.Append())
-            .foreachBatch { (batch: DataFrame, _: Long) =>
-              batch.write.mode("append").parquet(out)
-              ()
-            }
-            .option("checkpointLocation", tmp("ckpt_"))
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        } finally prev match {
-          case Some(p) => s.conf.set(key, p)
-          case None => s.conf.unset(key)
+        Run.foreachBatch(closed.toDF("user_id", "n_events", "closed_us"),
+            OutputMode.Append(), rocksDb = true) { (batch, _) =>
+          batch.write.mode("append").parquet(out)
         }
         Tables.parquet(s, out)
           .select($"user_id", $"n_events",
@@ -1597,22 +1412,13 @@ object StreamingQueries {
       (s, dir) => {
         import s.implicits._
         val out = tmp("upd_")
-        withStatePartitions(s) {
-          val q = eventsStreamSplit(s, dir)
+        Run.foreachBatch(eventsStreamSplit(s, dir)
             .groupBy($"event_type")
             .agg(count(lit(1)).as("n"),
-              sum(round($"value" * 100).cast("long")).as("cents"))
-            .writeStream
-            .outputMode(OutputMode.Update())
-            .foreachBatch { (batch: DataFrame, batchId: Long) =>
-              batch.withColumn("_b", lit(batchId))
-                .write.mode("append").parquet(out)
-              ()
-            }
-            .option("checkpointLocation", tmp("ckpt_"))
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+              sum(round($"value" * 100).cast("long")).as("cents")),
+            OutputMode.Update()) { (batch, batchId) =>
+          batch.withColumn("_b", lit(batchId))
+            .write.mode("append").parquet(out)
         }
         Tables.parquet(s, out)
           .groupBy($"event_type")
@@ -1677,20 +1483,13 @@ object StreamingQueries {
           val expectedBatches = staged
             .groupBy(pmod($"event_id", lit(4))).count().count()
           val expectedRows = staged.count()
-          val q = eventsStreamSplit(s, dir)
+          Run.noop(eventsStreamSplit(s, dir)
             .observe("feed_metrics",
               count(lit(1)).as("n_rows"),
               count(when($"event_type" === "purchase", 1)).as("n_purchase"),
               coalesce(sum(round($"value" * 100).cast("long")), lit(0L))
                 .as("cents"))
-            .select($"event_id") // sink payload irrelevant; metrics are the product
-            .writeStream
-            .outputMode(OutputMode.Append())
-            .format("noop")
-            .option("checkpointLocation", tmp("ckpt_"))
-            .trigger(Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+            .select($"event_id")) // sink payload irrelevant; metrics are the product
           // progress events post asynchronously off the listener bus —
           // drain BEFORE removing the listener (a removed listener never
           // receives its queued events, which would silently drop the
@@ -1725,12 +1524,12 @@ object StreamingQueries {
     import s.implicits._
     val path = s"$dir/events.parquet"
     stagedSplit.getOrElseUpdate(path, {
-      val d = Files.createTempDirectory("events_split_")
+      val d = tmp("events_split_")
       val base = Tables.normalizeEventTime(Tables.parquet(s, path))
       for (i <- 0 until 4)
         base.filter(pmod($"event_id", lit(4)) === i)
-          .coalesce(1).write.mode("append").parquet(d.toString)
-      d.toString
+          .coalesce(1).write.mode("append").parquet(d)
+      d
     })
   }
 

@@ -4,10 +4,12 @@ import java.util.concurrent.TimeoutException
 
 import org.apache.spark.storage.StorageLevel
 
+import graft.streaming.Run
+
 /** The one guarded runner every harness main shares: its watchdog, its
-  * error reporting, its between-query reset, and a guard that keeps
-  * session setup, job groups and function registration from growing back
-  * outside their one home. */
+  * error reporting, its between-query reset, and guards that keep
+  * session setup, job groups, function registration and stream starts
+  * from growing back outside their one home. */
 class HarnessSpec extends SparkSpec {
 
   test("a body that outlives its timeout is cancelled; the next run still runs") {
@@ -43,13 +45,17 @@ class HarnessSpec extends SparkSpec {
     rdd.count()
     val table = "graft_bkt_harness_spec"
     spark.range(10).write.mode("overwrite").saveAsTable(table)
+    val view = Run.ViewPrefix + "harness_spec"
+    spark.range(3).createOrReplaceTempView(view)
     assert(df.storageLevel != StorageLevel.NONE)
     assert(spark.sparkContext.getPersistentRDDs.contains(rdd.id))
     assert(spark.catalog.tableExists(table))
+    assert(spark.catalog.tableExists(view))
     Harness.reset(spark)
     assert(df.storageLevel == StorageLevel.NONE)
     assert(!spark.sparkContext.getPersistentRDDs.contains(rdd.id))
     assert(!spark.catalog.tableExists(table))
+    assert(!spark.catalog.tableExists(view))
   }
 
   /** Each duplicated piece has one home: sessions are built only in
@@ -61,6 +67,17 @@ class HarnessSpec extends SparkSpec {
       "setJobGroup(" -> Some("graft/Harness.scala"),
       "cancelJobGroup(" -> Some("graft/Harness.scala"),
       "SparkSession.builder()" -> Some("graft/engine/GraftSession.scala")))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  /** Streams start only in streaming/Run.scala, which owns the
+    * checkpoint, the trigger, the state partitions and the provider. */
+  test("no stream start, trigger or state-store provider outside streaming/Run") {
+    val home = Some("graft/streaming/Run.scala")
+    val offenders = SourceGuard.offenders(Seq(
+      "writeStream" -> home,
+      "Trigger.AvailableNow" -> home,
+      "stateStore.providerClass" -> home))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }
