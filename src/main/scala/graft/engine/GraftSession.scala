@@ -34,9 +34,9 @@ object GraftSession {
     * is dead are swept on next session build (a kill -9 would otherwise
     * leak tmpfs pages until reboot). Local-mode only — on a cluster
     * spark.local.dir is the resource manager's concern. */
-  /** Memoized per-process scratch root (also hosts every stream's
-    * checkpoint, sink and source-staging dirs, via `streaming.Run.tmp`) —
-    * one sweep + mkdir per JVM. */
+  /** Memoized per-process scratch root (also hosts every temporary
+    * directory the engine makes, via [[TempDir]]) — one sweep + mkdir
+    * per JVM. */
   private[graft] lazy val scratchRoot: String = localScratchDir()
 
   private def localScratchDir(): String = {
@@ -52,13 +52,7 @@ object GraftSession {
           .flatMap(p => scala.jdk.OptionConverters.RichOptional(
             ProcessHandle.of(p)).toScala)
           .exists(_.isAlive)
-        if (!alive) {
-          def rm(x: java.io.File): Unit = {
-            Option(x.listFiles()).getOrElse(Array.empty).foreach(rm)
-            x.delete(); ()
-          }
-          rm(f)
-        }
+        if (!alive) TempDir.delete(f)
       }
     val dir = new java.io.File(base, s"graft_local_$pid")
     dir.mkdirs()

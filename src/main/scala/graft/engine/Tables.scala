@@ -73,6 +73,13 @@ object Tables {
       case None => spark.read.parquet(paths: _*)
     }
 
+  /** Parquet files written under different schemas, read as one frame
+    * with the union of their schemas (`mergeSchema`: columns a file lacks
+    * read as NULL). Spark merges every file's footer in a job, so this
+    * is for the schema-evolution path only. */
+  def parquetMerged(spark: SparkSession, paths: String*): DataFrame =
+    spark.read.option("mergeSchema", "true").parquet(paths: _*)
+
   /** The schema `read.parquet(paths)` would infer, from the footer that
     * Spark's `ParquetUtils.inferSchema` picks: `_common_metadata`, then
     * `_metadata`, then the first data file by full path string, over the

@@ -4,7 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Tables, TempDir}
 
 /** ORC column reader — from the public ORC v1 specification
   * (orc.apache.org/specification), no orc-core classes. Completes the
@@ -514,17 +514,13 @@ object Orc {
       "q443_orc_column_decode",
       (s, dir) => {
         import s.implicits._
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_orc_q443").toString
+        val tmp = TempDir("graft_orc_q443")
         Tables.load(s, dir, "documents")
           .select($"doc_id",
             concat(lit("o"), ($"doc_id" % 60).cast("string")).as("name"))
           .repartition(4)
           .write.mode("overwrite").option("compression", "zlib").orc(tmp)
-        s.read.format("binaryFile")
-          .load(tmp + "/part-*.orc")
-          .select($"content")
-          .as[Array[Byte]]
+        TempDir.drainParts(tmp, ".orc").toDS()
           .map { bytes =>
             val res = for {
               meta <- parseTail(bytes)

@@ -4,7 +4,7 @@ import java.io.RandomAccessFile
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Tables, TempDir}
 
 /** Parquet footer walk — REAL Thrift compact-protocol parsing of
   * FileMetaData, the metadata a lakehouse engine reads before it
@@ -260,8 +260,7 @@ object ParquetFooter {
       "q346_parquet_footer_audit",
       (s, dir) => {
         import s.implicits._
-        val tmp = java.nio.file.Files.createTempDirectory("graft_pq_audit")
-          .toString
+        val tmp = TempDir("graft_pq_audit")
         Tables.load(s, dir, "documents")
           .orderBy($"doc_id")
           .coalesce(1)
@@ -271,10 +270,7 @@ object ParquetFooter {
           .filter(f => f.getName.endsWith(".parquet")).head
         val meta = readFooter(part.getAbsolutePath).flatMap(parseFooter)
         // fixture hygiene: the audit file is consumed; drop the dir
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(tmp))
+        TempDir.delete(new java.io.File(tmp))
         val rows = meta match {
           case Some(m) => Seq((m.version, m.numRows,
             m.leafColumns.sorted.mkString(","), m.rowsViaGroups,

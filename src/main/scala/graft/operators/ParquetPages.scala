@@ -4,7 +4,7 @@ import java.io.ByteArrayOutputStream
 
 import org.apache.spark.sql.functions._
 
-import graft.engine.Tables
+import graft.engine.{Tables, TempDir}
 import ParquetFooter.{struct => thriftStruct, _}
 
 import graft.operators.Bytes.i32le
@@ -948,23 +948,21 @@ object ParquetPages {
     // with high-cardinality fallback, page CRCs); THIS reader decodes
     // the raw bytes back and the aggregates must reproduce what the
     // oracle computes from the logical table. Decode is distributed:
-    // each task reads whole files via binaryFile — the forensic path
-    // a data-skipping/audit pass uses when it can't trust a reader.
+    // each task decodes whole files' bytes — the forensic path a
+    // data-skipping/audit pass uses when it can't trust a reader. The
+    // few part files are read back into the plan and the staging
+    // directory is deleted before the query runs.
     QueryDef(
       "q441_parquet_page_decode",
       (s, dir) => {
         import s.implicits._
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_pq_q441").toString
+        val tmp = TempDir("graft_pq_q441")
         Tables.load(s, dir, "documents")
           .select($"doc_id",
             concat(lit("n"), ($"doc_id" % 100).cast("string")).as("name"))
           .repartition(4)
           .write.mode("overwrite").parquet(tmp)
-        val decoded = s.read.format("binaryFile")
-          .load(tmp + "/part-*.parquet")
-          .select($"content")
-          .as[Array[Byte]]
+        val decoded = TempDir.drainParts(tmp, ".parquet").toDS()
           .map { bytes =>
             val res = for {
               footer <- footerBytes(bytes)
@@ -1018,8 +1016,7 @@ object ParquetPages {
       "q447_parquet_v2_page_decode",
       (s, dir) => {
         import s.implicits._
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_pq_q447").toString
+        val tmp = TempDir("graft_pq_q447")
         Tables.load(s, dir, "documents")
           .select($"doc_id",
             concat(lit("v2-"), ($"doc_id" % 100).cast("string"),
@@ -1027,10 +1024,7 @@ object ParquetPages {
           .repartition(4)
           .write.mode("overwrite")
           .option("parquet.writer.version", "v2").parquet(tmp)
-        s.read.format("binaryFile")
-          .load(tmp + "/part-*.parquet")
-          .select($"content")
-          .as[Array[Byte]]
+        TempDir.drainParts(tmp, ".parquet").toDS()
           .map { bytes =>
             val res = for {
               footer <- footerBytes(bytes)
@@ -1077,13 +1071,12 @@ object ParquetPages {
     // elements), and the Dremel rep/def-level assembly must
     // reconstruct every row — the ArrayType shape LLM-corpus parquet
     // (token ids, shard manifests) is full of. Decode is distributed
-    // over whole files via binaryFile, as in q441/q447.
+    // over whole files' bytes, as in q441/q447.
     QueryDef(
       "q448_parquet_list_decode",
       (s, dir) => {
         import s.implicits._
-        val tmp = java.nio.file.Files
-          .createTempDirectory("graft_pq_q448").toString
+        val tmp = TempDir("graft_pq_q448")
         Tables.load(s, dir, "documents")
           .select($"doc_id",
             when($"doc_id" % 11 === 0, lit(null).cast("array<bigint>"))
@@ -1093,10 +1086,7 @@ object ParquetPages {
                 x => when(x % 4 =!= 0, x))).as("tokens"))
           .repartition(4)
           .write.mode("overwrite").parquet(tmp)
-        s.read.format("binaryFile")
-          .load(tmp + "/part-*.parquet")
-          .select($"content")
-          .as[Array[Byte]]
+        TempDir.drainParts(tmp, ".parquet").toDS()
           .map { bytes =>
             val res = for {
               footer <- footerBytes(bytes)

@@ -272,7 +272,7 @@ object SourceCoverage {
         docs.filter($"doc_id" % 2 === 1)
           .select($"doc_id", $"n_chars", $"lang")
           .write.mode("overwrite").parquet(s"$staged/gen=1")
-        s.read.option("mergeSchema", "true").parquet(staged)
+        Tables.parquetMerged(s, staged)
           .groupBy(coalesce($"lang", lit("_pre_schema")).as("lang"))
           .agg(count(lit(1)).as("n_docs"), sum($"n_chars").as("sum_chars"))
           .orderBy($"lang")

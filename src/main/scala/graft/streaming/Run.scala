@@ -1,12 +1,11 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
 import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 
-import graft.engine.{GraftSession, Tables}
+import graft.engine.{Tables, TempDir}
 
 /** The one place a graft stream starts. Every stream runs under one
   * posture:
@@ -45,18 +44,10 @@ object Run {
     * sink holds on the driver. */
   val ViewPrefix = "graft_stream_"
 
-  /** A fresh directory under the per-process scratch root
-    * (tmpfs-preferred): on an ext4 /tmp mounted with inline discard the
-    * hundreds of tiny checkpoint files a stream writes each pay a
-    * synchronous TRIM when deleted. The root is swept by the next session
-    * once this JVM dies, so nothing staged here outlives it for long. */
-  def tmp(prefix: String): String =
-    Files.createTempDirectory(Paths.get(GraftSession.scratchRoot), prefix).toString
-
   /** Runs `df` into the parquet directory `out` (append mode, the file
     * sink's only mode) and reads the directory back. */
-  def parquet(df: DataFrame, out: String = tmp("sink_"),
-      checkpoint: String = tmp("ckpt_")): DataFrame = {
+  def parquet(df: DataFrame, out: String = TempDir("sink_"),
+      checkpoint: String = TempDir("ckpt_")): DataFrame = {
     start(df, checkpoint, rocksDb = false)(_.format("parquet").option("path", out))
     Tables.parquet(df.sparkSession, out)
   }
@@ -65,21 +56,21 @@ object Run {
     * returns the final table. */
   def complete(df: DataFrame, rocksDb: Boolean = false): DataFrame = {
     val view = ViewPrefix + UUID.randomUUID().toString.replace("-", "")
-    start(df, tmp("ckpt_"), rocksDb)(
+    start(df, TempDir("ckpt_"), rocksDb)(
       _.outputMode(OutputMode.Complete()).format("memory").queryName(view))
     df.sparkSession.table(view)
   }
 
   /** Hands each micro-batch and its checkpoint-stable batch id to `body`. */
   def foreachBatch(df: DataFrame, mode: OutputMode,
-      checkpoint: String = tmp("ckpt_"), rocksDb: Boolean = false)(
+      checkpoint: String = TempDir("ckpt_"), rocksDb: Boolean = false)(
       body: (DataFrame, Long) => Unit): Unit =
     start(df, checkpoint, rocksDb)(_.outputMode(mode).foreachBatch(body))
 
   /** Runs every batch and discards the rows: for a stream whose product
     * is a side effect, such as its observed metrics. */
   def noop(df: DataFrame): Unit =
-    start(df, tmp("ckpt_"), rocksDb = false)(_.format("noop"))
+    start(df, TempDir("ckpt_"), rocksDb = false)(_.format("noop"))
 
   private def start(df: DataFrame, checkpoint: String, rocksDb: Boolean)(
       sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {

@@ -8,9 +8,8 @@ import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
-import graft.engine.Tables
+import graft.engine.{Tables, TempDir}
 import graft.operators.QueryDef
-import graft.streaming.Run.tmp
 
 /** Structured Streaming surface (SURVEY.md §2 Table B streaming rows,
   * §7 M4).
@@ -126,7 +125,7 @@ object StreamingQueries {
     * which throws an `IOException` naming the path when a move fails. */
   private[streaming] def stageArrivals(withBatchCol: DataFrame,
       inputDir: String): Int => Unit = {
-    val staging = tmp("arrstage_")
+    val staging = TempDir("arrstage_")
     withBatchCol.write.mode("overwrite").partitionBy("_b").parquet(staging)
     val s = withBatchCol.sparkSession
     val payloadSchema = org.apache.spark.sql.types.StructType(
@@ -203,7 +202,7 @@ object StreamingQueries {
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
     val srcDir = staged.getOrElseUpdate(path, {
-      val d = Paths.get(tmp("events_src_"))
+      val d = Paths.get(TempDir("events_src_"))
       stageParquet(path, d)
       d.toString
     })
@@ -235,7 +234,7 @@ object StreamingQueries {
   private def eventsStreamWithFlush(s: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
     val srcDir = stagedFlush.getOrElseUpdate(path, {
-      val d = Paths.get(tmp("events_srcflush_"))
+      val d = Paths.get(TempDir("events_srcflush_"))
       // the flush contract is ONE data micro-batch then the sentinel
       // batches: watermark-sensitive consumers (stream-stream OUTER
       // joins, event timers) rely on no data arriving after a
@@ -308,8 +307,8 @@ object StreamingQueries {
       "q55_stream_incremental_ingest",
       (s, dir) => {
         import s.implicits._
-        val ckpt = tmp("ckpt_")
-        val out = tmp("sink_")
+        val ckpt = TempDir("ckpt_")
+        val out = TempDir("sink_")
         def runOnce(): DataFrame = Run.parquet(eventsStream(s, dir)
           .filter($"event_type" === "purchase")
           .select($"event_id", $"user_id", $"ts", round($"value", 4).as("value")),
@@ -338,7 +337,7 @@ object StreamingQueries {
       "q245_state_version_drift",
       (s, dir) => {
         import s.implicits._
-        val (input, ckpt, state) = (tmp("vdin_"), tmp("vdck_"), tmp("vdst_"))
+        val (input, ckpt, state) = (TempDir("vdin_"), TempDir("vdck_"), TempDir("vdst_"))
         val o = graft.engine.Tables.load(s, dir, "orders")
           .select($"o_orderpriority".as("pri"),
             $"o_totalprice".as("v"), year($"o_orderdate").as("yr"))
@@ -405,7 +404,7 @@ object StreamingQueries {
       "q329_state_drift_series",
       (s, dir) => {
         import s.implicits._
-        val (input, ckpt, state) = (tmp("vsin_"), tmp("vsck_"), tmp("vsst_"))
+        val (input, ckpt, state) = (TempDir("vsin_"), TempDir("vsck_"), TempDir("vsst_"))
         val o = graft.engine.Tables.load(s, dir, "orders")
           .select($"o_orderpriority".as("pri"),
             $"o_totalprice".as("v"), year($"o_orderdate").as("yr"))
@@ -481,7 +480,7 @@ object StreamingQueries {
       "q233_stream_incremental_quantile",
       (s, dir) => {
         import s.implicits._
-        val (input, ckpt, state) = (tmp("qin_"), tmp("qck_"), tmp("qst_"))
+        val (input, ckpt, state) = (TempDir("qin_"), TempDir("qck_"), TempDir("qst_"))
         val o = graft.engine.Tables.load(s, dir, "orders")
           .select($"o_custkey", $"o_totalprice".as("v"),
             year($"o_orderdate").as("yr"))
@@ -538,7 +537,7 @@ object StreamingQueries {
       "q270_stream_incremental_bottomk",
       (s, dir) => {
         import s.implicits._
-        val (input, ckpt, state) = (tmp("bkin_"), tmp("bkck_"), tmp("bkst_"))
+        val (input, ckpt, state) = (TempDir("bkin_"), TempDir("bkck_"), TempDir("bkst_"))
         val o = graft.engine.Tables.load(s, dir, "orders")
           .select($"o_orderpriority".as("pri"), $"o_custkey",
             year($"o_orderdate").as("yr"))
@@ -606,7 +605,7 @@ object StreamingQueries {
       "q276_incremental_skipping_manifest",
       (s, dir) => {
         import s.implicits._
-        val (input, ckpt, state) = (tmp("mfin_"), tmp("mfck_"), tmp("mfst_"))
+        val (input, ckpt, state) = (TempDir("mfin_"), TempDir("mfck_"), TempDir("mfst_"))
         val o = graft.engine.Tables.load(s, dir, "orders")
           .select($"o_orderkey", $"o_orderpriority", $"o_totalprice")
         val inc = new graft.streaming.IncrementalManifest(
@@ -658,7 +657,7 @@ object StreamingQueries {
       "q278_manifest_time_travel",
       (s, dir) => {
         import s.implicits._
-        val (input, ckpt, state) = (tmp("ttin_"), tmp("ttck_"), tmp("ttst_"))
+        val (input, ckpt, state) = (TempDir("ttin_"), TempDir("ttck_"), TempDir("ttst_"))
         val o = graft.engine.Tables.load(s, dir, "orders")
           .select($"o_orderkey", $"o_totalprice")
         val inc = new graft.streaming.IncrementalManifest(
@@ -738,7 +737,7 @@ object StreamingQueries {
       "q300_snapshot_diff_feed",
       (s, dir) => {
         import s.implicits._
-        val (input, ckpt, state) = (tmp("sdin_"), tmp("sdck_"), tmp("sdst_"))
+        val (input, ckpt, state) = (TempDir("sdin_"), TempDir("sdck_"), TempDir("sdst_"))
         val o = graft.engine.Tables.load(s, dir, "orders")
           .select($"o_orderkey", $"o_totalprice")
         val inc = new graft.streaming.IncrementalManifest(
@@ -814,7 +813,7 @@ object StreamingQueries {
       "q309_incremental_schema_census",
       (s, dir) => {
         import s.implicits._
-        val (input, ckpt, state) = (tmp("jcin_"), tmp("jcck_"), tmp("jcst_"))
+        val (input, ckpt, state) = (TempDir("jcin_"), TempDir("jcck_"), TempDir("jcst_"))
         val docs = graft.engine.Tables.load(s, dir, "documents")
           .select($"doc_id").as[Long]
         val legacy = docs.filter(_ % 3 != 2)
@@ -978,7 +977,7 @@ object StreamingQueries {
       "q60_stream_stateful_counter",
       (s, dir) => {
         import s.implicits._
-        val out = tmp("sink_")
+        val out = TempDir("sink_")
         val typed = eventsStream(s, dir)
           .select($"user_id", $"value").as[(Long, Double)]
         val updated = typed
@@ -1021,7 +1020,7 @@ object StreamingQueries {
       "q109_stream_transform_with_state",
       (s, dir) => {
         import s.implicits._
-        val out = tmp("sink_")
+        val out = TempDir("sink_")
         val typed = eventsStream(s, dir)
           .select($"user_id", $"value").as[(Long, Double)]
         val updated = typed
@@ -1342,8 +1341,8 @@ object StreamingQueries {
       "q134_stream_foreachbatch_sink",
       (s, dir) => {
         import s.implicits._
-        val ckpt = tmp("ckpt_")
-        val out = tmp("sink_")
+        val ckpt = TempDir("ckpt_")
+        val out = TempDir("sink_")
         def runOnce(): Unit = Run.foreachBatch(eventsStream(s, dir)
             .filter($"event_type" === "signup")
             .select($"event_id", $"user_id", $"ts"),
@@ -1372,7 +1371,7 @@ object StreamingQueries {
       "q214_stream_event_timers",
       (s, dir) => {
         import s.implicits._
-        val out = tmp("sink_")
+        val out = TempDir("sink_")
         val typed = eventsStreamWithFlush(s, dir)
           .withWatermark("ts", "0 seconds")
           .select($"user_id", unix_micros($"ts").as("us"))
@@ -1411,7 +1410,7 @@ object StreamingQueries {
       "q213_stream_update_mode",
       (s, dir) => {
         import s.implicits._
-        val out = tmp("upd_")
+        val out = TempDir("upd_")
         Run.foreachBatch(eventsStreamSplit(s, dir)
             .groupBy($"event_type")
             .agg(count(lit(1)).as("n"),
@@ -1524,7 +1523,7 @@ object StreamingQueries {
     import s.implicits._
     val path = s"$dir/events.parquet"
     stagedSplit.getOrElseUpdate(path, {
-      val d = tmp("events_split_")
+      val d = TempDir("events_split_")
       val base = Tables.normalizeEventTime(Tables.parquet(s, path))
       for (i <- 0 until 4)
         base.filter(pmod($"event_id", lit(4)) === i)

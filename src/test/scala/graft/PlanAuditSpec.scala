@@ -66,6 +66,25 @@ class PlanAuditSpec extends SparkSpec {
       "orderBy+limit should plan as distributed top-k")
   }
 
+  test("q25: the top-k sort gets no single-partition exchange below it") {
+    val p = plan("q25_topk_orders")
+    assert(p.contains("TakeOrderedAndProject"), p)
+    assert(!p.contains("Exchange SinglePartition"), p)
+  }
+
+  test("q426: a small decoder sort runs in one partition, with no sampling job") {
+    val p = graft.plans.PlanInspector.executed(
+      SparkEntry.queries("q426_git_pack_inventory")(spark, sf)).toLowerCase
+    assert(!p.contains("rangepartitioning"), p)
+    assert(p.contains("exchange singlepartition"), p)
+  }
+
+  test("q249: a sort above a typed mapPartitions keeps its range partitioning") {
+    val p = plan("q249_gzip_decode").toLowerCase
+    assert(p.contains("rangepartitioning"), p)
+    assert(!p.contains("singlepartition"), p)
+  }
+
   test("q61: native cosine expression appears in the plan and supports codegen") {
     val p = plan("q61_knn_native_expr")
     assert(p.contains("cosine_sim"), "native expression missing from plan")

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,9 +14,30 @@ import graft.engine.GraftSession
   * runs suites sequentially in the forked test JVM). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  private val tempDirs = ArrayBuffer.empty[Path]
+
+  /** A fresh directory in java.io.tmpdir, deleted with everything in it
+    * once the suite has run. */
+  def tempDir(prefix: String): String = synchronized {
+    val d = Files.createTempDirectory(prefix)
+    tempDirs += d
+    d.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try synchronized(tempDirs.foreach(SparkSpec.deleteTree))
+    finally super.afterAll()
 }
 
 object SparkSpec {
+  private def deleteTree(p: Path): Unit = {
+    val walk = Files.walk(p)
+    try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach { x => Files.deleteIfExists(x); () }
+    finally walk.close()
+  }
+
   lazy val session: SparkSession = {
     // the local codegen settings every GraftSession.builder session gets
     val s = GraftSession.localCodegen(SparkSession.builder())

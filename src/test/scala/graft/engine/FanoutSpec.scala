@@ -8,8 +8,7 @@ import graft.SparkSpec
 class FanoutSpec extends SparkSpec {
 
   private def tmpParquet(rows: Int): String = {
-    val d = java.nio.file.Files
-      .createTempDirectory("fanout_spec_").toString
+    val d = tempDir("fanout_spec_")
     val s = spark
     import s.implicits._
     // coalesce(1): one file, one row group — the under-parallel shape

@@ -1,7 +1,6 @@
 package graft.engine
 
 import java.io.File
-import java.nio.file.Files
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
@@ -14,9 +13,6 @@ class TablesLoaderSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
-
   test("the footer schema equals the inferred schema") {
     val tables = new File(sf).listFiles().map(_.getPath)
       .filter(_.endsWith(".parquet")).sorted.toSeq
@@ -27,7 +23,7 @@ class TablesLoaderSpec extends SparkSpec {
 
     // the `_b=` layout arrival staging writes: partition columns are
     // still discovered from the directory names
-    val staged = s"${tmp("loader_part_")}/staged"
+    val staged = s"${tempDir("loader_part_")}/staged"
     spark.range(12).selectExpr("id", "CAST(id AS STRING) AS s",
       "CAST(id % 3 AS INT) AS _b").write.partitionBy("_b").parquet(staged)
     val partitioned = spark.read.parquet(staged).schema
@@ -36,7 +32,7 @@ class TablesLoaderSpec extends SparkSpec {
 
     // several paths: Spark reads the first data file by full path, here
     // under `a`, whose schema lacks `b`'s extra column
-    val root = tmp("loader_multi_")
+    val root = tempDir("loader_multi_")
     spark.range(5).selectExpr("id").write.parquet(s"$root/a")
     spark.range(5).selectExpr("id", "id * 2 AS extra").write.parquet(s"$root/b")
     Seq(Seq(s"$root/a", s"$root/b"), Seq(s"$root/b", s"$root/a")).foreach { ps =>
@@ -45,7 +41,7 @@ class TablesLoaderSpec extends SparkSpec {
   }
 
   test("a path with no footer fails with Spark's own error") {
-    val missing = s"${tmp("loader_missing_")}/none.parquet"
+    val missing = s"${tempDir("loader_missing_")}/none.parquet"
     val ours = intercept[Exception](Tables.parquet(spark, missing))
     val spark0 = intercept[Exception](spark.read.parquet(missing))
     assert(ours.getClass == spark0.getClass && ours.getMessage == spark0.getMessage)
@@ -75,10 +71,25 @@ class TablesLoaderSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
   }
 
-  /** The one-loader property cannot erode: parquet is read only here. */
+  test("the merged read unions the generations' schemas") {
+    val s = spark
+    import s.implicits._
+    val staged = tempDir("loader_merge_")
+    Seq((1L, 10L)).toDF("id", "n").write.parquet(s"$staged/gen=0")
+    Seq((2L, 20L, "en")).toDF("id", "n", "lang").write.parquet(s"$staged/gen=1")
+    val df = Tables.parquetMerged(spark, staged)
+    assert(df.columns.toSeq == Seq("id", "n", "lang", "gen"))
+    assert(df.orderBy($"id").as[(Long, Long, Option[String], Int)].collect().toSeq ==
+      Seq((1L, 10L, None, 0), (2L, 20L, Some("en"), 1)))
+  }
+
+  /** The one-loader property cannot erode: parquet is read only here,
+    * the schema-merging read included. */
   test("no read.parquet outside engine/Tables") {
+    val home = Some("graft/engine/Tables.scala")
     val offenders = SourceGuard.offenders(Seq(
-      "read.parquet(" -> Some("graft/engine/Tables.scala")))
+      "read.parquet(" -> home,
+      "mergeSchema" -> home))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -12,7 +12,7 @@ class OrcSpec extends SparkSpec {
 
   private def writeOrc(df: org.apache.spark.sql.DataFrame, codec: String,
       opts: Map[String, String] = Map.empty): Array[Byte] = {
-    val dir = Files.createTempDirectory("orcspec").toString
+    val dir = tempDir("orcspec")
     val w = df.coalesce(1).write.mode("overwrite")
       .option("compression", codec)
     opts.foreach { case (k, v) => w.option(k, v) }

@@ -8,7 +8,7 @@ class ParquetFooterSpec extends SparkSpec {
 
   private def writeOne(df: org.apache.spark.sql.DataFrame,
       codec: String): String = {
-    val tmp = java.nio.file.Files.createTempDirectory("pqfooter").toString
+    val tmp = tempDir("pqfooter")
     df.coalesce(1).write.mode("overwrite")
       .option("compression", codec).parquet(tmp)
     new java.io.File(tmp).listFiles()
@@ -57,9 +57,8 @@ class ParquetFooterSpec extends SparkSpec {
     // truncated footer throws inside -> None
     assert(ParquetFooter.parseFooter(footer.take(footer.length / 2)).isEmpty)
     // non-parquet file tail
-    val f = java.io.File.createTempFile("notpq", ".parquet")
+    val f = new java.io.File(tempDir("notpq"), "notpq.parquet")
     java.nio.file.Files.write(f.toPath, "just some text".getBytes)
     assert(ParquetFooter.readFooter(f.getAbsolutePath).isEmpty)
-    f.delete()
   }
 }

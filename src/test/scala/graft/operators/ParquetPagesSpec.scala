@@ -13,7 +13,7 @@ class ParquetPagesSpec extends SparkSpec {
 
   private def writeAndRead(df: org.apache.spark.sql.DataFrame,
       codec: String): Array[Array[Byte]] = {
-    val dir = Files.createTempDirectory("pqpages").toString
+    val dir = tempDir("pqpages")
     df.coalesce(1).write.mode("overwrite")
       .option("compression", codec).parquet(dir)
     new java.io.File(dir).listFiles()
@@ -79,7 +79,7 @@ class ParquetPagesSpec extends SparkSpec {
 
   test("multi-row-group files concatenate chunk decodes in order") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("pqrg").toString
+    val dir = tempDir("pqrg")
     val df = (0L until 200000L).map(i => (i, s"g${i % 5}")).toDF("id", "s")
     df.coalesce(1).write.mode("overwrite")
       .option("parquet.block.size", (256 * 1024).toString)
@@ -103,7 +103,7 @@ class ParquetPagesSpec extends SparkSpec {
       else Some(s"pfx-common-${i % 997}-u$i")))
     val df = rows.toDF("id", "s")
     Seq("snappy", "gzip", "zstd", "none").foreach { codec =>
-      val dir = Files.createTempDirectory("pqv2").toString
+      val dir = tempDir("pqv2")
       df.coalesce(1).write.mode("overwrite")
         .option("compression", codec)
         .option("parquet.writer.version", "v2")
@@ -224,7 +224,7 @@ class ParquetPagesSpec extends SparkSpec {
     // v2 writer: DataPageV2 with level bytes outside the codec region
     val lrows = (0L until 600L).map(i => (i, (0L to i % 6).map(_ + i)))
     val ldf = lrows.toDF("id", "xs")
-    val dir = java.nio.file.Files.createTempDirectory("pqlistv2").toString
+    val dir = tempDir("pqlistv2")
     ldf.coalesce(1).write.mode("overwrite")
       .option("parquet.writer.version", "v2")
       .option("compression", "snappy").parquet(dir)

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -14,15 +12,13 @@ import graft.operators.Maintenance
 class IncrementalBottomKSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
-
   test("incremental folds equal the one-shot sketch over all arrivals; " +
       "empty update is a no-op") {
-    val input = tmp("bk_in_")
+    val input = tempDir("bk_in_")
     val inc = new IncrementalBottomK(
       spark, input,
       StructType(Seq(StructField("k", LongType), StructField("v", LongType))),
-      tmp("bk_ck_"), tmp("bk_st_"),
+      tempDir("bk_ck_"), tempDir("bk_st_"),
       keyCol = "k", valueCol = "v", k = 8)
     val b1 = (0L until 200L).map(i => (i % 3, i * 7 % 500))
     val b2 = (0L until 150L).map(i => (i % 3, i * 11 % 500))

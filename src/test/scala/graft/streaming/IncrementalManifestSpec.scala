@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -14,15 +12,13 @@ import graft.operators.DataSkipping
 class IncrementalManifestSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
-
   test("folded manifest equals one-shot per-file stats; the range scan " +
       "opens only intersecting files and stays exact") {
-    val input = tmp("mf_in_")
+    val input = tempDir("mf_in_")
     val inc = new IncrementalManifest(
       spark, input,
       StructType(Seq(StructField("k", LongType), StructField("p", LongType))),
-      tmp("mf_ck_"), tmp("mf_st_"), statsCol = "k")
+      tempDir("mf_ck_"), tempDir("mf_st_"), statsCol = "k")
     val batches = Seq(0L until 100L, 100L until 250L, 250L until 400L)
     batches.foreach { r =>
       r.map(i => (i, i * 3)).toDF("k", "p")

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
@@ -15,14 +13,12 @@ import graft.operators.Maintenance
 class IncrementalQuantileSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(p: String) = Files.createTempDirectory(p).toString
-
   private def mk(): (IncrementalQuantile, String) = {
-    val input = tmp("iq_in_")
+    val input = tempDir("iq_in_")
     val inc = new IncrementalQuantile(
       spark, input,
       StructType(Seq(StructField("k", LongType), StructField("v", DoubleType))),
-      tmp("iq_ck_"), tmp("iq_st_"),
+      tempDir("iq_ck_"), tempDir("iq_st_"),
       keyCol = "k", valueCol = "v", lo = 0.0, hi = 100.0, bins = 20)
     (inc, input)
   }
@@ -53,12 +49,12 @@ class IncrementalQuantileSpec extends SparkSpec {
   test("keep-last-N retention: old versions vanish after each flip, " +
       "the pointer target and the rollback version survive") {
     import java.nio.file.{Files => F, Paths}
-    val input = tmp("iq_in_")
-    val stateDir = tmp("iq_st_")
+    val input = tempDir("iq_in_")
+    val stateDir = tempDir("iq_st_")
     val inc = new IncrementalQuantile(
       spark, input,
       StructType(Seq(StructField("k", LongType), StructField("v", DoubleType))),
-      tmp("iq_ck_"), stateDir,
+      tempDir("iq_ck_"), stateDir,
       keyCol = "k", valueCol = "v", lo = 0.0, hi = 100.0, bins = 20,
       retainVersions = 2)
     def versions(): Set[String] = {
@@ -103,12 +99,12 @@ class IncrementalQuantileSpec extends SparkSpec {
   test("previousState is the version one flip behind the pointer " +
       "(None before two versions; respects a manual rollback)") {
     import java.nio.file.{Files => F, Paths}
-    val input = tmp("iq_in_")
-    val stateDir = tmp("iq_st_")
+    val input = tempDir("iq_in_")
+    val stateDir = tempDir("iq_st_")
     val inc = new IncrementalQuantile(
       spark, input,
       StructType(Seq(StructField("k", LongType), StructField("v", DoubleType))),
-      tmp("iq_ck_"), stateDir,
+      tempDir("iq_ck_"), stateDir,
       keyCol = "k", valueCol = "v", lo = 0.0, hi = 100.0, bins = 20)
     assert(inc.previousState().isEmpty)
     Seq((1L, 10.0)).toDF("k", "v").write.mode("append").parquet(input)
@@ -136,12 +132,12 @@ class IncrementalQuantileSpec extends SparkSpec {
       "replayed fold overwrites the same version and the result is " +
       "exactly-once") {
     import java.nio.file.{Files => F, Paths}
-    val input = tmp("iq_in_")
-    val stateDir = tmp("iq_st_")
+    val input = tempDir("iq_in_")
+    val stateDir = tempDir("iq_st_")
     val mkInc = () => new IncrementalQuantile(
       spark, input,
       StructType(Seq(StructField("k", LongType), StructField("v", DoubleType))),
-      tmp("iq_ck_"), stateDir,
+      tempDir("iq_ck_"), stateDir,
       keyCol = "k", valueCol = "v", lo = 0.0, hi = 100.0, bins = 20)
     // simulate the crash window: v0 was WRITTEN by a run that died
     // before flipping the pointer (and before the checkpoint commit —

@@ -20,7 +20,7 @@ class StageArrivalsSpec extends SparkSpec {
       .filter(_.endsWith(".parquet")).sorted
 
   test("each delivery moves its batch's files into the input directory") {
-    val in = Files.createTempDirectory("arrivals_").resolve("in").toString
+    val in = new File(tempDir("arrivals_"), "in").getPath
     val deliver = StreamingQueries.stageArrivals(batches, in)
     deliver(0)
     assert(parquetFiles(in).nonEmpty && parquetFiles(in).forall(_.startsWith("b0_")))
@@ -33,7 +33,7 @@ class StageArrivalsSpec extends SparkSpec {
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.hdfsrename.impl", classOf[HdfsRenameFs].getName)
     conf.setBoolean("fs.hdfsrename.impl.disable.cache", true)
-    val in = Files.createTempDirectory("arrivals_").resolve("in").toString
+    val in = new File(tempDir("arrivals_"), "in").getPath
     val deliver = StreamingQueries.stageArrivals(batches, s"hdfsrename:$in")
     // the staging directory this call just wrote
     val staging = new File(graft.engine.GraftSession.scratchRoot).listFiles()
@@ -46,7 +46,7 @@ class StageArrivalsSpec extends SparkSpec {
   }
 
   test("a NULL batch key fails staging, naming the directory it landed in") {
-    val in = Files.createTempDirectory("arrivals_").resolve("in").toString
+    val in = new File(tempDir("arrivals_"), "in").getPath
     val withNull = spark.range(6).selectExpr("id",
       "CASE WHEN id = 5 THEN NULL ELSE CAST(id % 2 AS INT) END AS _b")
     val e = intercept[IOException](StreamingQueries.stageArrivals(withNull, in))
@@ -54,7 +54,7 @@ class StageArrivalsSpec extends SparkSpec {
   }
 
   test("an input path that is a file fails staging") {
-    val in = Files.createTempFile("arrivals_", ".file").toString
+    val in = Files.createFile(new File(tempDir("arrivals_"), "in").toPath).toString
     val e = intercept[IOException](StreamingQueries.stageArrivals(batches, in))
     assert(e.getMessage.contains(in), e.getMessage)
   }

@@ -33,7 +33,7 @@ class StreamingRocksDbSpec extends SparkSpec {
 
   private def source(): DataFrame = {
     import spark.implicits._
-    val src = Run.tmp("rocks_src_")
+    val src = graft.engine.TempDir("rocks_src_")
     (1L to 100L).map(i => (i % 7, i)).toDF("k", "v")
       .coalesce(1).write.mode("overwrite").parquet(src)
     spark.readStream.schema(spark.read.parquet(src).schema).parquet(src)
