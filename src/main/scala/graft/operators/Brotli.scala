@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.io.ByteArrayOutputStream
+import graft.operators.Bytes.{LsbBitReader, LsbBitWriter, PrefixCode}
 
 /** Brotli decompression, from the public spec (RFC 7932). Promoted
   * from the WOFF2 deferral the moment a conformant referee landed
@@ -180,138 +180,63 @@ object Brotli {
     "malformed brotli", null, false, false)
   private def bad(): Nothing = throw new Malformed
 
-  /** LSB-first bit reader over a slice. */
-  private final class Reader(b: Array[Byte], from: Int, until: Int) {
-    private var byteAt = from
-    private var bits = 0L
-    private var nBits = 0
-    def read(n: Int): Int = { // n <= 24
-      while (nBits < n) {
-        if (byteAt >= until) bad()
-        bits |= (b(byteAt) & 0xffL) << nBits
-        byteAt += 1; nBits += 8
-      }
-      val v = (bits & ((1L << n) - 1)).toInt
-      bits >>>= n; nBits -= n
-      v
-    }
-    def read0(n: Int): Int = if (n == 0) 0 else read(n)
-    /** Skip to the next byte boundary; pad bits must be zero. */
-    def align(): Unit = {
-      val pad = nBits % 8
-      if (pad != 0 && read(pad) != 0) bad()
-    }
-    /** Raw bytes (byte-aligned). */
-    def copyBytes(out: Array[Byte], at: Int, n: Int): Unit = {
-      var i = 0
-      while (i < n) {
-        if (nBits >= 8) {
-          out(at + i) = (bits & 0xff).toByte; bits >>>= 8; nBits -= 8
-        } else {
-          if (byteAt >= until) bad()
-          out(at + i) = b(byteAt); byteAt += 1
-        }
-        i += 1
-      }
-    }
-    def skipBytes(n: Int): Unit = {
-      var left = n
-      while (left > 0 && nBits >= 8) { bits >>>= 8; nBits -= 8; left -= 1 }
-      if (byteAt + left > until) bad()
-      byteAt += left
-    }
-    /** After align(): true iff the slice is fully consumed. */
-    def exhausted: Boolean = nBits == 0 && byteAt >= until
-  }
+  /** The prefix code over `lens` (max length 15, RFC 3.2); the
+    * reading-time space checks have already rejected a bad one. */
+  private def code(lens: Array[Int]): PrefixCode =
+    PrefixCode.fromLengths(lens, 15).getOrElse(bad())
 
-  /** Canonical prefix code. `single >= 0` is the 0-bit one-symbol
-    * form. Max code length 15 (RFC 3.2). */
-  private final class Code(lens: Array[Int], val single: Int) {
-    private val count = new Array[Int](16)
-    private val firstCode = new Array[Int](16)
-    private val offset = new Array[Int](16)
-    private var sorted: Array[Int] = null
-    if (single < 0) {
-      var i = 0
-      while (i < lens.length) { if (lens(i) > 0) count(lens(i)) += 1; i += 1 }
-      var sum = 0
-      var l = 1
-      var code = 0
-      while (l <= 15) {
-        offset(l) = sum; sum += count(l)
-        code = (code + count(l - 1)) << 1
-        firstCode(l) = code
-        l += 1
-      }
-      sorted = new Array[Int](sum)
-      val o2 = offset.clone()
-      i = 0
-      while (i < lens.length) {
-        if (lens(i) > 0) { sorted(o2(lens(i))) = i; o2(lens(i)) += 1 }
-        i += 1
-      }
-    }
-    def next(r: Reader): Int = {
-      if (single >= 0) return single
-      var code = 0
-      var l = 0
-      while (true) {
-        code = (code << 1) | r.read(1)
-        l += 1
-        if (l > 15) bad()
-        if (code - firstCode(l) < count(l)) // complete code: terminates
-          return sorted(offset(l) + code - firstCode(l))
-      }
-      -1 // unreachable
-    }
+  /** The next symbol of `c`. */
+  private def next(c: PrefixCode, r: LsbBitReader): Int = {
+    val s = c.decode(r)
+    if (s < 0) bad()
+    s
   }
 
   private def log2ceil(n: Int): Int = // bits to hold n-1
     32 - Integer.numberOfLeadingZeros(n - 1)
 
   /** Fixed prefix code over code-length-code lengths (RFC 3.5). */
-  private def readClLen(r: Reader): Int = r.read(2) match {
+  private def readClLen(r: LsbBitReader): Int = r.bits(2) match {
     case 0 => 0
     case 1 => 4
     case 2 => 3
-    case _ => if (r.read(1) == 0) 2 else if (r.read(1) == 0) 1 else 5
+    case _ => if (r.bits(1) == 0) 2 else if (r.bits(1) == 0) 1 else 5
   }
 
   /** Read one prefix code over `alphabet` symbols (RFC 3.4/3.5). */
-  private def readCode(r: Reader, alphabet: Int): Code = {
-    val form = r.read(2)
+  private def readCode(r: LsbBitReader, alphabet: Int): PrefixCode = {
+    val form = r.bits(2)
     if (form == 1) { // simple
-      val nSym = r.read(2) + 1
+      val nSym = r.bits(2) + 1
       val aBits = log2ceil(alphabet)
       val syms = new Array[Int](nSym)
       var i = 0
       while (i < nSym) {
-        val s = r.read(aBits)
+        val s = r.bits(aBits)
         if (s >= alphabet) bad()
         var j = 0
         while (j < i) { if (syms(j) == s) bad(); j += 1 }
         syms(i) = s
         i += 1
       }
-      if (nSym == 1) return new Code(null, syms(0))
       val lens = new Array[Int](alphabet)
       nSym match {
+        case 1 => lens(syms(0)) = 1 // a lone symbol: zero bits
         case 2 => lens(syms(0)) = 1; lens(syms(1)) = 1
         case 3 =>
           lens(syms(0)) = 1; lens(syms(1)) = 2; lens(syms(2)) = 2
         case _ =>
-          if (r.read(1) == 0) syms.foreach(lens(_) = 2)
+          if (r.bits(1) == 0) syms.foreach(lens(_) = 2)
           else {
             lens(syms(0)) = 1; lens(syms(1)) = 2
             lens(syms(2)) = 3; lens(syms(3)) = 3
           }
       }
-      new Code(lens, -1)
+      code(lens)
     } else { // complex, form = HSKIP
       val clLens = new Array[Int](18)
       var space = 0
       var nNonzero = 0
-      var lastNonzeroSym = -1
       var i = form // HSKIP
       while (i < 18 && space < 32) {
         val l = readClLen(r)
@@ -319,15 +244,12 @@ object Brotli {
         if (l != 0) {
           space += 32 >> l
           nNonzero += 1
-          lastNonzeroSym = CLCodeOrder(i)
         }
         i += 1
       }
       if (nNonzero == 0 || space > 32) bad()
       if (nNonzero > 1 && space != 32) bad()
-      val clCode =
-        if (nNonzero == 1) new Code(null, lastNonzeroSym)
-        else new Code(clLens, -1)
+      val clCode = code(clLens) // one nonzero length: zero bits
       // symbol code lengths under the CL code, with repeat codes
       val lens = new Array[Int](alphabet)
       var bigSpace = 0L
@@ -336,7 +258,7 @@ object Brotli {
       var repeat = 0
       var repeatLen = -1 // the length being repeated; -1 = no run
       while (at < alphabet && bigSpace < 32768L) {
-        val sym = clCode.next(r)
+        val sym = next(clCode, r)
         if (sym < 16) {
           lens(at) = sym
           at += 1
@@ -351,7 +273,7 @@ object Brotli {
           if (repeatLen != newLen) { repeat = 0; repeatLen = newLen }
           val oldRepeat = repeat
           if (repeat > 0) repeat = (repeat - 2) << extraBits
-          repeat += r.read(extraBits) + 3
+          repeat += r.bits(extraBits) + 3
           val delta = repeat - oldRepeat
           if (at + delta > alphabet) bad()
           var k = 0
@@ -360,30 +282,30 @@ object Brotli {
         }
       }
       if (bigSpace != 32768L) bad()
-      new Code(lens, -1)
+      code(lens)
     }
   }
 
   /** RFC 9.2's variable-length count (NBLTYPES / NTREES), minus 1. */
-  private def varLenUint8(r: Reader): Int =
-    if (r.read(1) == 0) 0
+  private def varLenUint8(r: LsbBitReader): Int =
+    if (r.bits(1) == 0) 0
     else {
-      val n = r.read(3)
-      if (n == 0) 1 else r.read(n) + (1 << n)
+      val n = r.bits(3)
+      if (n == 0) 1 else r.bits(n) + (1 << n)
     }
 
   /** Context map (RFC 7.3): RLE-of-zeros + inverse move-to-front. */
-  private def readContextMap(r: Reader, size: Int, nTrees: Int)
+  private def readContextMap(r: LsbBitReader, size: Int, nTrees: Int)
       : Array[Byte] = {
     val map = new Array[Byte](size)
-    val rleMax = if (r.read(1) == 1) r.read(4) + 1 else 0
+    val rleMax = if (r.bits(1) == 1) r.bits(4) + 1 else 0
     val code = readCode(r, nTrees + rleMax)
     var i = 0
     while (i < size) {
-      val sym = code.next(r)
+      val sym = next(code, r)
       if (sym == 0) { map(i) = 0; i += 1 }
       else if (sym <= rleMax) {
-        var reps = (1 << sym) + r.read(sym)
+        var reps = (1 << sym) + r.bits(sym)
         if (i + reps > size) bad()
         while (reps > 0) { map(i) = 0; i += 1; reps -= 1 }
       } else {
@@ -391,7 +313,7 @@ object Brotli {
         i += 1
       }
     }
-    if (r.read(1) == 1) { // inverse MTF
+    if (r.bits(1) == 1) { // inverse MTF
       val mtf = new Array[Byte](256)
       var k = 0
       while (k < 256) { mtf(k) = k.toByte; k += 1 }
@@ -465,15 +387,15 @@ object Brotli {
     try {
       if (b == null || from < 0 || until > b.length || from >= until)
         return None
-      val r = new Reader(b, from, until)
+      val r = new LsbBitReader(b, from, until)
       // WBITS (RFC 9.1)
       val wbits =
-        if (r.read(1) == 0) 16
+        if (r.bits(1) == 0) 16
         else {
-          val n = r.read(3)
+          val n = r.bits(3)
           if (n != 0) 17 + n
           else {
-            val m = r.read(3)
+            val m = r.bits(3)
             if (m == 1) bad() // reserved (large-window)
             else if (m != 0) 8 + m
             else 17
@@ -494,27 +416,27 @@ object Brotli {
       var ringIdx = 0
       var last = false
       while (!last) {
-        last = r.read(1) == 1
-        if (last && r.read(1) == 1) {
+        last = r.bits(1) == 1
+        if (last && r.bits(1) == 1) {
           // ISLASTEMPTY
         } else {
-          val nibCode = r.read(2)
+          val nibCode = r.bits(2)
           if (nibCode == 3) {
             // metadata block (RFC 9.2): never last, zero reserved bit
             if (last) bad()
-            if (r.read(1) != 0) bad()
-            val skipBytes = r.read(2)
+            if (r.bits(1) != 0) bad()
+            val skipBytes = r.bits(2)
             var skipLen = 0
             var i = 0
             var top = 0
             while (i < skipBytes) {
-              top = r.read(8)
+              top = r.bits(8)
               skipLen |= top << (8 * i)
               i += 1
             }
             if (skipBytes > 0 && top == 0) bad()
             if (skipBytes > 0) skipLen += 1
-            r.align()
+            if (r.alignByte() != 0) bad()
             r.skipBytes(skipLen)
           } else {
             val mNibbles = 4 + nibCode
@@ -522,15 +444,15 @@ object Brotli {
             var i = 0
             var topNib = 0
             while (i < mNibbles) {
-              topNib = r.read(4)
+              topNib = r.bits(4)
               mlen |= topNib << (4 * i)
               i += 1
             }
             if (mNibbles > 4 && topNib == 0) bad()
             mlen += 1
-            val uncompressed = !last && r.read(1) == 1
+            val uncompressed = !last && r.bits(1) == 1
             if (uncompressed) {
-              r.align()
+              if (r.alignByte() != 0) bad()
               ensure(mlen)
               r.copyBytes(out, pos, mlen)
               pos += mlen
@@ -540,16 +462,16 @@ object Brotli {
           }
         }
       }
-      r.align()
+      if (r.alignByte() != 0) bad()
       if (!r.exhausted) bad() // trailing garbage
       // ---- one compressed meta-block ----
-      def decodeCompressedBlock(r: Reader, mlen: Int): Unit = {
+      def decodeCompressedBlock(r: LsbBitReader, mlen: Int): Unit = {
         val nBlTypes = new Array[Int](3)
         val bType = new Array[Int](3)
         val bTypePrev = new Array[Int](3)
         val bLen = new Array[Long](3)
-        val bTypeCodes = new Array[Code](3)
-        val bLenCodes = new Array[Code](3)
+        val bTypeCodes = new Array[PrefixCode](3)
+        val bLenCodes = new Array[PrefixCode](3)
         var cat = 0
         while (cat < 3) {
           nBlTypes(cat) = varLenUint8(r) + 1
@@ -558,13 +480,13 @@ object Brotli {
           if (nBlTypes(cat) >= 2) {
             bTypeCodes(cat) = readCode(r, nBlTypes(cat) + 2)
             bLenCodes(cat) = readCode(r, 26)
-            val s = bLenCodes(cat).next(r)
-            bLen(cat) = BlockLenBase(s) + r.read0(BlockLenExtra(s))
+            val s = next(bLenCodes(cat), r)
+            bLen(cat) = BlockLenBase(s) + r.bits(BlockLenExtra(s))
           } else bLen(cat) = Long.MaxValue
           cat += 1
         }
         def switchBlock(c: Int): Unit = {
-          val sym = bTypeCodes(c).next(r)
+          val sym = next(bTypeCodes(c), r)
           val nt = sym match {
             case 0 => bTypePrev(c)
             case 1 => (bType(c) + 1) % nBlTypes(c)
@@ -572,15 +494,15 @@ object Brotli {
           }
           bTypePrev(c) = bType(c)
           bType(c) = nt
-          val s = bLenCodes(c).next(r)
-          bLen(c) = BlockLenBase(s) + r.read0(BlockLenExtra(s))
+          val s = next(bLenCodes(c), r)
+          bLen(c) = BlockLenBase(s) + r.bits(BlockLenExtra(s))
         }
-        val nPostfix = r.read(2)
-        val nDirect = r.read(4) << nPostfix
+        val nPostfix = r.bits(2)
+        val nDirect = r.bits(4) << nPostfix
         val postfixMask = (1 << nPostfix) - 1
         val cModes = new Array[Int](nBlTypes(0))
         var i = 0
-        while (i < nBlTypes(0)) { cModes(i) = r.read(2); i += 1 }
+        while (i < nBlTypes(0)) { cModes(i) = r.bits(2); i += 1 }
         val nTreesL = varLenUint8(r) + 1
         val cMapL =
           if (nTreesL >= 2) readContextMap(r, 64 * nBlTypes(0), nTreesL)
@@ -597,14 +519,14 @@ object Brotli {
         while (remaining > 0) {
           if (bLen(1) == 0) switchBlock(1)
           bLen(1) -= 1
-          val cmd = insCodes(bType(1)).next(r)
+          val cmd = next(insCodes(bType(1)), r)
           val rangeHi = cmd >> 6
           val implicitDist0 = rangeHi < 2
           val ri = if (implicitDist0) rangeHi else rangeHi - 2
           val insCode = InsertRangeLut(ri) + ((cmd >> 3) & 7)
           val copyCode = CopyRangeLut(ri) + (cmd & 7)
-          val insLen = InsBase(insCode) + r.read0(InsExtra(insCode))
-          val copyLen = CopyBase(copyCode) + r.read0(CopyExtra(copyCode))
+          val insLen = InsBase(insCode) + r.bits(InsExtra(insCode))
+          val copyLen = CopyBase(copyCode) + r.bits(CopyExtra(copyCode))
           // literals
           var k = 0
           while (k < insLen) {
@@ -616,7 +538,7 @@ object Brotli {
             val mode = cModes(bType(0)) << 9
             val ctx = (CtxLut(mode + p1) | CtxLut(mode + 256 + p2)) & 0xff
             val tree = cMapL(bType(0) * 64 + ctx) & 0xff
-            val lit = litCodes(tree).next(r)
+            val lit = next(litCodes(tree), r)
             ensure(1)
             out(pos) = lit.toByte
             pos += 1
@@ -634,7 +556,7 @@ object Brotli {
               bLen(2) -= 1
               val dctx = math.min(copyLen - 2, 3)
               val tree = cMapD(bType(2) * 4 + dctx) & 0xff
-              distCode = distCodes(tree).next(r)
+              distCode = next(distCodes(tree), r)
               if (distCode < 16) {
                 if (distCode < 4) dist = ring((ringIdx - 1 - distCode) & 3)
                 else {
@@ -653,7 +575,7 @@ object Brotli {
                 val hcode = x >> nPostfix
                 val lcode = x & postfixMask
                 val nBits = 1 + (hcode >> 1)
-                val extra = r.read0(nBits)
+                val extra = r.bits(nBits)
                 val offset = ((2 + (hcode & 1)) << nBits) - 4
                 dist = ((offset + extra) << nPostfix) + lcode + nDirect + 1
                 if (dist <= 0) bad()
@@ -702,46 +624,26 @@ object Brotli {
   // fixture encoders (conformant streams, reference-validated)
   // ------------------------------------------------------------------
 
-  private final class Writer {
-    private val out = new ByteArrayOutputStream(256)
-    private var bits = 0L
-    private var nBits = 0
-    def put(v: Int, n: Int): Unit = {
-      bits |= (v.toLong & ((1L << n) - 1)) << nBits
-      nBits += n
-      while (nBits >= 8) {
-        out.write((bits & 0xff).toInt)
-        bits >>>= 8; nBits -= 8
-      }
-    }
-    def putByteAligned(b: Array[Byte]): Unit = {
-      require(nBits == 0, "not aligned")
-      out.write(b, 0, b.length)
-    }
-    def align(): Unit = if (nBits > 0) put(0, 8 - nBits)
-    def result(): Array[Byte] = { align(); out.toByteArray }
-  }
-
   /** Uncompressed ("stored") meta-blocks + the empty last block —
     * the minimal conformant stream shape. */
   def encodeStored(data: Array[Byte]): Array[Byte] = {
-    val w = new Writer
-    w.put(0, 1) // WBITS = 16
+    val w = new LsbBitWriter
+    w.bits(0, 1) // WBITS = 16
     var at = 0
     while (at < data.length) {
       val n = math.min(data.length - at, 1 << 24)
-      w.put(0, 1) // ISLAST = 0
+      w.bits(0, 1) // ISLAST = 0
       val nibbles = if (n <= (1 << 16)) 4 else if (n <= (1 << 20)) 5 else 6
-      w.put(nibbles - 4, 2)
-      w.put(n - 1, 4 * nibbles)
-      w.put(1, 1) // ISUNCOMPRESSED
-      w.align()
-      w.putByteAligned(java.util.Arrays.copyOfRange(data, at, at + n))
+      w.bits(nibbles - 4, 2)
+      w.bits(n - 1, 4 * nibbles)
+      w.bits(1, 1) // ISUNCOMPRESSED
+      w.alignByte()
+      w.bytes(java.util.Arrays.copyOfRange(data, at, at + n))
       at += n
     }
-    w.put(1, 1) // ISLAST
-    w.put(1, 1) // ISLASTEMPTY
-    w.result()
+    w.bits(1, 1) // ISLAST
+    w.bits(1, 1) // ISLASTEMPTY
+    w.toBytes
   }
 
   /** One compressed meta-block carrying `data` as literals under a
@@ -753,42 +655,42 @@ object Brotli {
     val n = data.length
     if (n == 0) return encodeStored(data)
     require(n <= (1 << 24), s"single-block fixture cap: $n")
-    val w = new Writer
-    w.put(0, 1) // WBITS = 16
-    w.put(1, 1) // ISLAST
-    w.put(0, 1) // not empty
+    val w = new LsbBitWriter
+    w.bits(0, 1) // WBITS = 16
+    w.bits(1, 1) // ISLAST
+    w.bits(0, 1) // not empty
     val nibbles = if (n <= (1 << 16)) 4 else if (n <= (1 << 20)) 5 else 6
-    w.put(nibbles - 4, 2)
-    w.put(n - 1, 4 * nibbles)
+    w.bits(nibbles - 4, 2)
+    w.bits(n - 1, 4 * nibbles)
     // NBLTYPES L/I/D = 1
-    w.put(0, 1); w.put(0, 1); w.put(0, 1)
-    w.put(0, 2) // NPOSTFIX
-    w.put(0, 4) // NDIRECT
-    w.put(0, 2) // context mode LSB6 for the single literal block type
-    w.put(0, 1) // NTREESL = 1
-    w.put(0, 1) // NTREESD = 1
+    w.bits(0, 1); w.bits(0, 1); w.bits(0, 1)
+    w.bits(0, 2) // NPOSTFIX
+    w.bits(0, 4) // NDIRECT
+    w.bits(0, 2) // context mode LSB6 for the single literal block type
+    w.bits(0, 1) // NTREESL = 1
+    w.bits(0, 1) // NTREESD = 1
     // literal code: complex form, HSKIP=0; CL lengths over the order
     // [1,2,3,4,0,5,17,6,16,7,8]: zeros, then len1 for 16, zero for 7,
     // len1 for 8 (space = 32, reader stops) — fixed-code bits: value 0
     // = "00", value 1 = "0111" read LSB-first as 1,1,1,0
-    w.put(0, 2) // HSKIP
+    w.bits(0, 2) // HSKIP
     var i = 0
-    while (i < 8) { w.put(0, 2); i += 1 } // syms 1,2,3,4,0,5,17,6 -> 0
-    w.put(7, 3); w.put(0, 1) // symbol 16 -> len 1
-    w.put(0, 2) // symbol 7 -> 0
-    w.put(7, 3); w.put(0, 1) // symbol 8 -> len 1
+    while (i < 8) { w.bits(0, 2); i += 1 } // syms 1,2,3,4,0,5,17,6 -> 0
+    w.bits(7, 3); w.bits(0, 1) // symbol 16 -> len 1
+    w.bits(0, 2) // symbol 7 -> 0
+    w.bits(7, 3); w.bits(0, 1) // symbol 8 -> len 1
     // CL code now: {8 -> 0, 16 -> 1}, one bit each. Emit 256 lengths
     // of 8: explicit '8', then 36 x [16(+3 reps=6), 8] pairs, then a
     // final 16 with 3 reps: 1 + 36*7 + 3 = 256, no adjacent 16s (the
     // repeat-accumulation rule never kicks in).
-    w.put(0, 1) // symbol 8
+    w.bits(0, 1) // symbol 8
     i = 0
     while (i < 36) {
-      w.put(1, 1); w.put(3, 2) // 16, extra 3 -> 6 reps
-      w.put(0, 1) // 8
+      w.bits(1, 1); w.bits(3, 2) // 16, extra 3 -> 6 reps
+      w.bits(0, 1) // 8
       i += 1
     }
-    w.put(1, 1); w.put(0, 2) // 16, extra 0 -> 3 reps
+    w.bits(1, 1); w.bits(0, 2) // 16, extra 0 -> 3 reps
     // insert-and-copy code: simple 1-symbol; the symbol encodes an
     // insert length covering n with a zero-extra copy code (ignored:
     // the insert completes the meta-block, so copy and distance are
@@ -799,21 +701,19 @@ object Brotli {
     while (n - InsBase(insCode) >= (1L << InsExtra(insCode))) insCode += 1
     val ri = if (insCode < 8) 0 else if (insCode < 16) 2 else 5
     val cmd = ((ri + 2) << 6) | ((insCode - InsertRangeLut(ri)) << 3)
-    w.put(1, 2) // simple form
-    w.put(0, 2) // NSYM = 1
-    w.put(cmd, 10) // alphabet 704 -> 10 bits
+    w.bits(1, 2) // simple form
+    w.bits(0, 2) // NSYM = 1
+    w.bits(cmd, 10) // alphabet 704 -> 10 bits
     // distance code: simple 1-symbol, symbol 0, alphabet 64 -> 6 bits
-    w.put(1, 2); w.put(0, 2); w.put(0, 6)
+    w.bits(1, 2); w.bits(0, 2); w.bits(0, 6)
     // body: command symbol (0 bits), insert extra, literals (codes ==
     // symbol values, 8 bits, MSB of the code first)
-    w.put(n - InsBase(insCode), InsExtra(insCode))
+    w.bits(n - InsBase(insCode), InsExtra(insCode))
     i = 0
     while (i < n) {
-      val b = data(i) & 0xff
-      var bit = 7
-      while (bit >= 0) { w.put((b >> bit) & 1, 1); bit -= 1 }
+      w.writeCode(data(i) & 0xff, 8)
       i += 1
     }
-    w.result()
+    w.toBytes
   }
 }

@@ -5,7 +5,7 @@ import java.io.ByteArrayOutputStream
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
-import graft.operators.Bytes.BitReader
+import graft.operators.Bytes.{BitReader, BitWriter, PrefixCode}
 
 /** bzip2 CODEC — pure JVM, from the public format description (the
   * format has no official spec; the de-facto references are bzlib's
@@ -32,8 +32,8 @@ import graft.operators.Bytes.BitReader
   * mold, except bzip2 HAS no stored mode so this is a complete if
   * unoptimized compressor): RLE1 → rotation-sorted BWT → MTF + RLE2
   * → real frequency-built length-limited Huffman (two identical
-  * groups, the format minimum) → canonical codes in (length, symbol)
-  * order. Its streams are accepted by the reference implementations.
+  * groups, the format minimum; [[Bytes.PrefixCode]]) → canonical codes
+  * in (length, symbol) order. Its streams are accepted by the reference implementations.
   *
   * Referee posture: three independent references in-container —
   * Hadoop's pure-Java CBZip2InputStream/CBZip2OutputStream (on the
@@ -72,29 +72,6 @@ object Bzip2 {
     def update(b: Int): Unit =
       v = (v << 8) ^ crcTable(((v >>> 24) ^ (b & 0xff)) & 0xff)
     def result: Int = ~v
-  }
-
-  // ---- MSB-first bit IO (the reader is Bytes.BitReader) ---------------
-
-  private final class BitWriter(out: ByteArrayOutputStream) {
-    private var acc = 0
-    private var nAcc = 0
-    def write(v: Int, n: Int): Unit = {
-      var k = n - 1
-      while (k >= 0) {
-        acc = (acc << 1) | ((v >>> k) & 1)
-        nAcc += 1
-        if (nAcc == 8) { out.write(acc); acc = 0; nAcc = 0 }
-        k -= 1
-      }
-    }
-    def writeLong(v: Long, n: Int): Unit = {
-      write((v >>> 32).toInt, math.max(0, n - 32))
-      write((v & 0xffffffffL).toInt, math.min(32, n))
-    }
-    def flush(): Unit = {
-      if (nAcc > 0) { out.write(acc << (8 - nAcc)); acc = 0; nAcc = 0 }
-    }
   }
 
   private val BlockMagic = 0x314159265359L
@@ -174,54 +151,9 @@ object Bzip2 {
       }
       g += 1
     }
-    // decode tables (bzlib hsCreateDecodeTables layout)
-    val limit = Array.ofDim[Int](nGroups, 24)
-    val base = Array.ofDim[Int](nGroups, 24)
-    val perm = Array.ofDim[Int](nGroups, alpha)
-    val minLens = new Array[Int](nGroups)
-    g = 0
-    while (g < nGroups) {
-      var minLen = 32
-      var maxLen = 0
-      var s = 0
-      while (s < alpha) {
-        if (lens(g)(s) < minLen) minLen = lens(g)(s)
-        if (lens(g)(s) > maxLen) maxLen = lens(g)(s)
-        s += 1
-      }
-      minLens(g) = minLen
-      var pp = 0
-      var l = minLen
-      while (l <= maxLen) {
-        s = 0
-        while (s < alpha) {
-          if (lens(g)(s) == l) { perm(g)(pp) = s; pp += 1 }
-          s += 1
-        }
-        l += 1
-      }
-      val cnt = new Array[Int](24)
-      s = 0
-      while (s < alpha) { cnt(lens(g)(s) + 1) += 1; s += 1 }
-      var k = 1
-      while (k < 24) { cnt(k) += cnt(k - 1); k += 1 }
-      var vec = 0
-      l = minLen
-      while (l <= maxLen) {
-        vec += cnt(l + 1) - cnt(l)
-        limit(g)(l) = vec - 1
-        vec <<= 1
-        l += 1
-      }
-      l = minLen + 1
-      while (l <= maxLen) {
-        base(g)(l) = ((limit(g)(l - 1) + 1) << 1) - cnt(l)
-        l += 1
-      }
-      // copy counts into base for minLen
-      base(g)(minLen) = cnt(minLen)
-      g += 1
-    }
+    // canonical codes, lengths 1..20; bzip2 does not require them
+    // complete, and never builds a one-symbol code (alpha >= 3)
+    val codes = lens.map(l => PrefixCode.fromLengths(l, 20).getOrElse(fail()))
     // MTF + RLE2 decode into the BWT string
     val blockLimit = blockSize100k * 100000 + 10
     val ll = new Array[Byte](blockLimit)
@@ -236,17 +168,9 @@ object Bzip2 {
         groupPos = 50
       }
       groupPos -= 1
-      val gg = selectors(groupNo)
-      var zn = minLens(gg)
-      var zvec = r.bits(zn)
-      while (zvec > limit(gg)(zn)) {
-        zn += 1
-        if (zn > 20) fail()
-        zvec = (zvec << 1) | r.bit()
-      }
-      val idx = zvec - base(gg)(zn)
-      if (idx < 0 || idx >= alpha) fail()
-      perm(gg)(idx)
+      val sym = codes(selectors(groupNo)).decode(r)
+      if (sym < 0) fail()
+      sym
     }
     val eob = alpha - 1
     var sym = nextSym()
@@ -401,58 +325,12 @@ object Bzip2 {
     out.toByteArray
   }
 
-  /** Frequency-built Huffman lengths, depth-capped at 20 by flattening
-    * (fixture-scale inputs never hit the cap in practice). */
-  private def huffLengths(freq: Array[Int]): Array[Int] = {
-    val n = freq.length
-    case class Node(w: Long, depth: Int, syms: List[Int])
-    def build(ws: Array[Long]): Array[Int] = {
-      val pq = scala.collection.mutable.PriorityQueue.empty[Node](
-        Ordering.by[Node, (Long, Int)](nd => (nd.w, nd.depth)).reverse)
-      var i = 0
-      while (i < n) { pq.enqueue(Node(ws(i), 0, List(i))); i += 1 }
-      val lens = new Array[Int](n)
-      if (n == 1) { lens(0) = 1; return lens }
-      while (pq.size > 1) {
-        val a = pq.dequeue()
-        val b = pq.dequeue()
-        val d = math.max(a.depth, b.depth) + 1
-        val merged = Node(a.w + b.w, d, a.syms ++ b.syms)
-        (a.syms ++ b.syms).foreach(s => lens(s) += 1)
-        pq.enqueue(merged)
-      }
-      lens
-    }
-    var lens = build(freq.map(f => math.max(1L, f.toLong)))
-    if (lens.max > 20) lens = build(Array.fill(n)(1L))
-    lens
-  }
-
-  /** Canonical codes in (length, symbol-index) order — the assignment
-    * the decode tables expect. */
-  private def assignCodes(lens: Array[Int]): Array[Int] = {
-    val codes = new Array[Int](lens.length)
-    var vec = 0
-    var l = lens.min
-    while (l <= lens.max) {
-      var s = 0
-      while (s < lens.length) {
-        if (lens(s) == l) { codes(s) = vec; vec += 1 }
-        s += 1
-      }
-      vec <<= 1
-      l += 1
-    }
-    codes
-  }
-
   /** Complete single-block-at-a-time bzip2 compressor. */
   def bzip2Compress(data: Array[Byte], level: Int = 9): Array[Byte] = {
     require(level >= 1 && level <= 9)
-    val out = new ByteArrayOutputStream(data.length / 2 + 64)
-    val w = new BitWriter(out)
-    w.write('B', 8); w.write('Z', 8); w.write('h', 8)
-    w.write('0' + level, 8)
+    val w = new BitWriter
+    w.bits('B', 8); w.bits('Z', 8); w.bits('h', 8)
+    w.bits('0' + level, 8)
     val rawLimit = level * 100000 - 20
     var combined = 0
     var off = 0
@@ -473,10 +351,9 @@ object Bzip2 {
       combined = ((combined << 1) | (combined >>> 31)) ^ crc.result
       off += take
     }
-    w.writeLong(EosMagic, 48)
-    w.write(combined, 32)
-    w.flush()
-    out.toByteArray
+    w.bits(EosMagic, 48)
+    w.bits(combined, 32)
+    w.toBytes
   }
 
   /** Encode one block from its RLE1-packed form. */
@@ -546,17 +423,17 @@ object Bzip2 {
     // two identical Huffman groups (the format minimum)
     val freq = new Array[Int](alpha)
     syms.foreach(sym => freq(sym) += 1)
-    val lens = huffLengths(freq)
-    val codes = assignCodes(lens)
+    val lens = PrefixCode.huffmanLengths(freq.map(math.max(1, _)), 20)
+    val codes = PrefixCode.codes(lens)
     val nSelectors = (syms.length + 49) / 50
     // block header
-    w.writeLong(BlockMagic, 48)
+    w.bits(BlockMagic, 48)
     val crc = new Crc
     i = rawOff
     while (i < rawOff + rawLen) { crc.update(raw(i)); i += 1 }
-    w.write(crc.result, 32)
-    w.write(0, 1) // not randomized
-    w.write(origPtr, 24)
+    w.bits(crc.result, 32)
+    w.bits(0, 1) // not randomized
+    w.bits(origPtr, 24)
     var big = 0
     i = 0
     while (i < 16) {
@@ -566,7 +443,7 @@ object Bzip2 {
       if (any) big |= 0x8000 >>> i
       i += 1
     }
-    w.write(big, 16)
+    w.bits(big, 16)
     i = 0
     while (i < 16) {
       if ((big & (0x8000 >>> i)) != 0) {
@@ -576,31 +453,31 @@ object Bzip2 {
           if (used(i * 16 + j)) small |= 0x8000 >>> j
           j += 1
         }
-        w.write(small, 16)
+        w.bits(small, 16)
       }
       i += 1
     }
-    w.write(2, 3) // nGroups = 2
-    w.write(nSelectors, 15)
+    w.bits(2, 3) // nGroups = 2
+    w.bits(nSelectors, 15)
     // selectors: all group 0 -> MTF position 0 every time
     i = 0
-    while (i < nSelectors) { w.write(0, 1); i += 1 }
+    while (i < nSelectors) { w.bits(0, 1); i += 1 }
     // two identical tables, delta-encoded
     var g = 0
     while (g < 2) {
       var cur = lens(0)
-      w.write(cur, 5)
+      w.bits(cur, 5)
       var s = 0
       while (s < alpha) {
-        while (cur < lens(s)) { w.write(2, 2) /* 10 */; cur += 1 }
-        while (cur > lens(s)) { w.write(3, 2) /* 11 */; cur -= 1 }
-        w.write(0, 1)
+        while (cur < lens(s)) { w.bits(2, 2) /* 10 */; cur += 1 }
+        while (cur > lens(s)) { w.bits(3, 2) /* 11 */; cur -= 1 }
+        w.bits(0, 1)
         s += 1
       }
       g += 1
     }
     // symbol stream
-    syms.foreach(sym => w.write(codes(sym), lens(sym)))
+    syms.foreach(sym => w.bits(codes(sym), lens(sym)))
   }
 
   // ------------------------------------------------------------------

@@ -4,7 +4,7 @@ import java.io.ByteArrayOutputStream
 import java.security.MessageDigest
 
 import graft.engine.Tables
-import graft.operators.Bytes.BitReader
+import graft.operators.Bytes.{BitReader, BitWriter}
 
 /** FLAC subset codec — REAL lossless audio decode, pure JVM.
   *
@@ -35,26 +35,10 @@ object Flac {
   // bit I/O (MSB-first, the FLAC convention)
   // ------------------------------------------------------------------
 
-  private final class BitWriter {
-    private val out = new ByteArrayOutputStream(256)
-    private var cur = 0
-    private var nbits = 0
-    def writeBits(v: Long, n: Int): Unit = {
-      var i = n - 1
-      while (i >= 0) {
-        cur = (cur << 1) | ((v >>> i) & 1L).toInt
-        nbits += 1
-        if (nbits == 8) { out.write(cur); cur = 0; nbits = 0 }
-        i -= 1
-      }
-    }
-    def writeUnary(q: Int): Unit = { // q zero bits then a one bit
-      var i = 0
-      while (i < q) { writeBits(0, 1); i += 1 }
-      writeBits(1, 1)
-    }
-    def alignByte(): Unit = if (nbits > 0) writeBits(0, 8 - nbits)
-    def toBytes: Array[Byte] = { alignByte(); out.toByteArray }
+  private def writeUnary(w: BitWriter, q: Int): Unit = { // q zeros, a one
+    var i = 0
+    while (i < q) { w.bits(0, 1); i += 1 }
+    w.bits(1, 1)
   }
 
   private def readUnary(r: BitReader): Int = {
@@ -105,13 +89,13 @@ object Flac {
   }
 
   private def writeUtf8Number(w: BitWriter, n: Long): Unit = {
-    if (n < 0x80) w.writeBits(n, 8)
+    if (n < 0x80) w.bits(n, 8)
     else if (n < 0x800) {
-      w.writeBits(0xc0L | (n >> 6), 8); w.writeBits(0x80L | (n & 0x3f), 8)
+      w.bits(0xc0L | (n >> 6), 8); w.bits(0x80L | (n & 0x3f), 8)
     } else if (n < 0x10000) {
-      w.writeBits(0xe0L | (n >> 12), 8)
-      w.writeBits(0x80L | ((n >> 6) & 0x3f), 8)
-      w.writeBits(0x80L | (n & 0x3f), 8)
+      w.bits(0xe0L | (n >> 12), 8)
+      w.bits(0x80L | ((n >> 6) & 0x3f), 8)
+      w.bits(0x80L | (n & 0x3f), 8)
     } else throw new IllegalArgumentException(s"frame number $n too large")
   }
 
@@ -169,19 +153,19 @@ object Flac {
     var p = 0
     while (p < 14 && (mean >> p) > 0) p += 1
     val maxZz = if (zz.isEmpty) 0L else zz.max
-    sub.writeBits(0, 2) // residual method: 4-bit rice
-    sub.writeBits(0, 4) // partition order 0: one partition
+    sub.bits(0, 2) // residual method: 4-bit rice
+    sub.bits(0, 4) // partition order 0: one partition
     if ((maxZz >> p) > (1 << 10)) {
       val width = res.map { v =>
         65 - java.lang.Long.numberOfLeadingZeros(if (v >= 0) v else ~v)
       }.max.min(31)
-      sub.writeBits(0xf, 4); sub.writeBits(width, 5)
-      res.foreach(v => sub.writeBits(v & ((1L << width) - 1), width))
+      sub.bits(0xf, 4); sub.bits(width, 5)
+      res.foreach(v => sub.bits(v & ((1L << width) - 1), width))
     } else {
-      sub.writeBits(p, 4)
+      sub.bits(p, 4)
       zz.foreach { u =>
-        sub.writeUnary((u >> p).toInt)
-        if (p > 0) sub.writeBits(u & ((1L << p) - 1), p)
+        writeUnary(sub, (u >> p).toInt)
+        if (p > 0) sub.bits(u & ((1L << p) - 1), p)
       }
     }
   }
@@ -203,12 +187,12 @@ object Flac {
   private def writeSubframeLpc(sub: BitWriter, block: Array[Int], bps: Int,
       coefs: Array[Int], shift: Int, prec: Int): Unit = {
     val ord = coefs.length
-    sub.writeBits(0, 1); sub.writeBits(32 | (ord - 1), 6); sub.writeBits(0, 1)
+    sub.bits(0, 1); sub.bits(32 | (ord - 1), 6); sub.bits(0, 1)
     var i = 0
-    while (i < ord) { sub.writeBits(mask(block(i), bps), bps); i += 1 }
-    sub.writeBits(prec - 1, 4)
-    sub.writeBits(shift, 5)
-    coefs.foreach(c => sub.writeBits(mask(c, prec), prec))
+    while (i < ord) { sub.bits(mask(block(i), bps), bps); i += 1 }
+    sub.bits(prec - 1, 4)
+    sub.bits(shift, 5)
+    coefs.foreach(c => sub.bits(mask(c, prec), prec))
     val res = Array.tabulate(block.length - ord)(j =>
       block(ord + j).toLong - lpcPredict(block, ord + j, coefs, shift))
     writeResiduals(sub, res)
@@ -217,9 +201,9 @@ object Flac {
   /** Write one FIXED subframe (order capped by warmup availability). */
   private def writeSubframeFixed(sub: BitWriter, block: Array[Int], bps: Int,
       k: Int): Unit = {
-    sub.writeBits(0, 1); sub.writeBits(8 | k, 6); sub.writeBits(0, 1)
+    sub.bits(0, 1); sub.bits(8 | k, 6); sub.bits(0, 1)
     var i = 0
-    while (i < k) { sub.writeBits(mask(block(i), bps), bps); i += 1 }
+    while (i < k) { sub.bits(mask(block(i), bps), bps); i += 1 }
     writeResiduals(sub,
       Array.tabulate(block.length - k)(j => fixedResidual(block, k + j, k)))
   }
@@ -239,15 +223,15 @@ object Flac {
     out.write("fLaC".getBytes("US-ASCII"), 0, 4)
     // STREAMINFO, last-metadata-block flag set
     val si = new BitWriter
-    si.writeBits(blockSize, 16); si.writeBits(blockSize, 16)
-    si.writeBits(0, 24); si.writeBits(0, 24) // frame sizes unknown
-    si.writeBits(sampleRate, 20)
-    si.writeBits(0, 3) // channels - 1 = 0 (mono)
-    si.writeBits(15, 5) // bits per sample - 1 = 15
-    si.writeBits(samples.length.toLong, 36)
+    si.bits(blockSize, 16); si.bits(blockSize, 16)
+    si.bits(0, 24); si.bits(0, 24) // frame sizes unknown
+    si.bits(sampleRate, 20)
+    si.bits(0, 3) // channels - 1 = 0 (mono)
+    si.bits(15, 5) // bits per sample - 1 = 15
+    si.bits(samples.length.toLong, 36)
     val md = MessageDigest.getInstance("MD5")
     samples.foreach { s => md.update(s.toByte); md.update((s >> 8).toByte) }
-    md.digest().foreach(b => si.writeBits(b & 0xffL, 8))
+    md.digest().foreach(b => si.bits(b & 0xffL, 8))
     val siBytes = si.toBytes
     out.write(0x80) // last block + type 0
     out.write(0); out.write(0); out.write(siBytes.length) // 24-bit length
@@ -259,14 +243,14 @@ object Flac {
       val n = math.min(blockSize, samples.length - off)
       val frame = new BitWriter
       // header: sync(14) 111111111111 10, reserved 0, blocking 0 (fixed)
-      frame.writeBits(0xfff8L >> 0, 16) // 0xFF 0xF8
-      frame.writeBits(0x7, 4) // blocksize: 16-bit at end of header
-      frame.writeBits(0x0, 4) // sample rate: from STREAMINFO
-      frame.writeBits(0x0, 4) // channels: mono
-      frame.writeBits(0x4, 3) // sample size: 16-bit
-      frame.writeBits(0, 1) // reserved
+      frame.bits(0xfff8L >> 0, 16) // 0xFF 0xF8
+      frame.bits(0x7, 4) // blocksize: 16-bit at end of header
+      frame.bits(0x0, 4) // sample rate: from STREAMINFO
+      frame.bits(0x0, 4) // channels: mono
+      frame.bits(0x4, 3) // sample size: 16-bit
+      frame.bits(0, 1) // reserved
       writeUtf8Number(frame, frameIdx)
-      frame.writeBits(n - 1, 16)
+      frame.bits(n - 1, 16)
       val headerBytes = frame.toBytes // byte-aligned by construction
       val withCrc8 = headerBytes :+ crc8(headerBytes, 0, headerBytes.length).toByte
 
@@ -275,11 +259,11 @@ object Flac {
       val block = java.util.Arrays.copyOfRange(samples, off, off + n)
       val allEqual = block.forall(_ == block(0))
       if (allEqual) {
-        sub.writeBits(0, 1); sub.writeBits(0, 6); sub.writeBits(0, 1)
-        sub.writeBits(block(0) & 0xffffL, 16)
+        sub.bits(0, 1); sub.bits(0, 6); sub.bits(0, 1)
+        sub.bits(block(0) & 0xffffL, 16)
       } else if (frameIdx % 7 == 3) { // VERBATIM
-        sub.writeBits(0, 1); sub.writeBits(1, 6); sub.writeBits(0, 1)
-        block.foreach(s => sub.writeBits(s & 0xffffL, 16))
+        sub.bits(0, 1); sub.bits(1, 6); sub.bits(0, 1)
+        block.foreach(s => sub.bits(s & 0xffffL, 16))
       } else { // FIXED order
         val k = math.min((frameIdx % 5).toInt, n - 1)
         writeSubframeFixed(sub, block, 16, k)
@@ -313,12 +297,12 @@ object Flac {
     val out = new ByteArrayOutputStream(total * 2 + 256)
     out.write("fLaC".getBytes("US-ASCII"), 0, 4)
     val si = new BitWriter
-    si.writeBits(blockSize, 16); si.writeBits(blockSize, 16)
-    si.writeBits(0, 24); si.writeBits(0, 24)
-    si.writeBits(sampleRate, 20)
-    si.writeBits(1, 3) // channels - 1 = 1 (stereo)
-    si.writeBits(15, 5)
-    si.writeBits(total.toLong, 36)
+    si.bits(blockSize, 16); si.bits(blockSize, 16)
+    si.bits(0, 24); si.bits(0, 24)
+    si.bits(sampleRate, 20)
+    si.bits(1, 3) // channels - 1 = 1 (stereo)
+    si.bits(15, 5)
+    si.bits(total.toLong, 36)
     val md = MessageDigest.getInstance("MD5")
     var t = 0
     while (t < total) { // interleaved L R, little-endian 16-bit
@@ -326,7 +310,7 @@ object Flac {
       md.update(right(t).toByte); md.update((right(t) >> 8).toByte)
       t += 1
     }
-    md.digest().foreach(b => si.writeBits(b & 0xffL, 8))
+    md.digest().foreach(b => si.bits(b & 0xffL, 8))
     val siBytes = si.toBytes
     out.write(0x80)
     out.write(0); out.write(0); out.write(siBytes.length)
@@ -344,14 +328,14 @@ object Flac {
         case _ => 0xa // mid/side
       }
       val frame = new BitWriter
-      frame.writeBits(0xfff8L, 16)
-      frame.writeBits(0x7, 4) // blocksize: 16-bit at end of header
-      frame.writeBits(0x0, 4)
-      frame.writeBits(chanBits, 4)
-      frame.writeBits(0x4, 3) // 16-bit
-      frame.writeBits(0, 1)
+      frame.bits(0xfff8L, 16)
+      frame.bits(0x7, 4) // blocksize: 16-bit at end of header
+      frame.bits(0x0, 4)
+      frame.bits(chanBits, 4)
+      frame.bits(0x4, 3) // 16-bit
+      frame.bits(0, 1)
       writeUtf8Number(frame, frameIdx)
-      frame.writeBits(n - 1, 16)
+      frame.bits(n - 1, 16)
       val headerBytes = frame.toBytes
       val withCrc8 = headerBytes :+
         crc8(headerBytes, 0, headerBytes.length).toByte

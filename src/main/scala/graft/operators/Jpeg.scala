@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.engine.Tables
-import graft.operators.Bytes.u16be
+import graft.operators.Bytes.{BitSource, PrefixCode, u16be}
 
 /** JPEG decode — DQT quantization tables, DHT canonical Huffman
   * tables, SOF0 (baseline sequential) AND SOF2 (progressive) frames,
@@ -44,39 +44,13 @@ object Jpeg {
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63)
 
-  /** Canonical Huffman table: decode by walking code lengths 1..16
-    * with the per-length first-code/base-index arrays (T.81 F.2.2.3). */
-  private final class Huff(bits: Array[Int], vals: Array[Int]) {
-    // minCode(l), maxCode(l) (inclusive; -1 = none), valPtr(l)
-    val minCode = new Array[Int](17)
-    val maxCode = new Array[Int](17)
-    val valPtr = new Array[Int](17)
-    locally {
-      var code = 0
-      var k = 0
-      var l = 1
-      while (l <= 16) {
-        if (bits(l) == 0) { minCode(l) = 0; maxCode(l) = -1 }
-        else {
-          valPtr(l) = k
-          minCode(l) = code
-          code += bits(l); k += bits(l)
-          maxCode(l) = code - 1
-        }
-        code <<= 1
-        l += 1
-      }
-    }
-    def value(code: Int, len: Int): Int = vals(valPtr(len) + code - minCode(len))
-  }
-
   /** Entropy-coded-segment reader: refills honor 0xFF00 stuffing; a
     * real marker STOPS the reader (zero-pad from there on, position
     * remembered) instead of consuming it — progressive scans end at
     * the next DHT/SOS/EOI, which the caller then parses. Kept apart
-    * from [[Bytes.BitReader]]: byte stuffing and marker stops are JPEG's
-    * own. */
-  private final class BitReader(b: Array[Byte], var pos: Int) {
+    * from [[Bytes.BitReader]] because byte stuffing and marker stops
+    * are JPEG's own; its Huffman codes decode through [[PrefixCode]]. */
+  private final class ScanBits(b: Array[Byte], var pos: Int) extends BitSource {
     private var cur = 0
     private var nbits = 0
     var hitMarker = false
@@ -108,15 +82,10 @@ object Jpeg {
       while (i < n) { v = (v << 1) | bit(); i += 1 }
       v
     }
-    def decode(h: Huff): Int = {
-      var code = bit()
-      var l = 1
-      while (l <= 16) {
-        if (h.maxCode(l) >= 0 && code <= h.maxCode(l)) return h.value(code, l)
-        code = (code << 1) | bit()
-        l += 1
-      }
-      throw new IllegalStateException("bad huffman code")
+    def decode(h: PrefixCode): Int = {
+      val v = h.decode(this)
+      if (v < 0) throw new IllegalStateException("bad huffman code")
+      v
     }
     /** Byte-align and consume an RSTn marker (scan data is 1-padded to
       * a byte boundary before each restart). */
@@ -207,7 +176,7 @@ object Jpeg {
         (bytes(1) & 0xff) != 0xd8) return None
       var off = 2
       val qt = new Array[Array[Int]](4)
-      val dcT = new Array[Huff](4); val acT = new Array[Huff](4)
+      val dcT = new Array[PrefixCode](4); val acT = new Array[PrefixCode](4)
       var w = -1; var h = -1
       var comps: Array[Comp] = null
       var hmax = 1; var vmax = 1
@@ -256,7 +225,8 @@ object Jpeg {
                 }
                 if (p + 17 + total > off + 2 + len) return None
                 val vals = Array.tabulate(total)(i => bytes(p + 17 + i) & 0xff)
-                val tbl = new Huff(bits, vals)
+                val tbl = PrefixCode.fromCounts(bits, vals, 16)
+                  .getOrElse(return None) // over-subscribed
                 if (tc == 0) dcT(th) = tbl else acT(th) = tbl
                 p += 17 + total
               }
@@ -391,10 +361,10 @@ object Jpeg {
     * and reset at restart markers (T.81 G.1.2). */
   private def decodeScan(bytes: Array[Byte], pos: Int,
       scanComps: Array[Comp], qt: Array[Array[Int]],
-      dcT: Array[Huff], acT: Array[Huff],
+      dcT: Array[PrefixCode], acT: Array[PrefixCode],
       ss: Int, se: Int, ah: Int, al: Int, progressive: Boolean,
       restartInterval: Int, mcusX: Int, mcusY: Int): Int = {
-    val r = new BitReader(bytes, pos)
+    val r = new ScanBits(bytes, pos)
     scanComps.foreach(_.pred = 0)
     var eobrun = 0
 

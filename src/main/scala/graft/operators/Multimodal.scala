@@ -860,14 +860,12 @@ object Multimodal {
                 fcomment = if (id % 3 == 0) Some(s"c$id") else None),
               "application/gzip")
           }
-        media.mapPartitions { it =>
-          it.map { r =>
-            val meta = Compression.decodeGzipHeader(r.media)
-            val data = Compression.gunzip(r.media)
-            (r.doc_id, meta.map(_.mtime), meta.flatMap(_.fname),
-              meta.flatMap(_.fcomment),
-              data.map(_.length.toLong), data.isDefined)
-          }
+        media.map { r =>
+          val meta = Compression.decodeGzipHeader(r.media)
+          val data = Compression.gunzip(r.media)
+          (r.doc_id, meta.map(_.mtime), meta.flatMap(_.fname),
+            meta.flatMap(_.fcomment),
+            data.map(_.length.toLong), data.isDefined)
         }.toDF("doc_id", "mtime", "fname", "fcomment",
             "n_uncompressed", "crc_ok")
           .orderBy($"doc_id")
@@ -986,27 +984,24 @@ object Multimodal {
         Tables.load(s, dir, "documents")
           .select($"doc_id", $"text")
           .fanout.as[(Long, String)]
-          .mapPartitions { it =>
-            val md = MessageDigest.getInstance("MD5")
-            it.map { case (id, text) =>
-              val tb = text.getBytes("UTF-8")
-              val (frame, src) =
-                if (id % 5 == 0)
-                  (ZstdCodec.zstdCompressStored(tb), "stored")
-                else {
-                  val lvl = (id % 4) match {
-                    case 0 => 1; case 1 => 3; case 2 => 9; case _ => 19
-                  }
-                  (zstdJni(tb, lvl), s"jni-$lvl")
+          .map { case (id, text) =>
+            val tb = text.getBytes("UTF-8")
+            val (frame, src) =
+              if (id % 5 == 0)
+                (ZstdCodec.zstdCompressStored(tb), "stored")
+              else {
+                val lvl = (id % 4) match {
+                  case 0 => 1; case 1 => 3; case 2 => 9; case _ => 19
                 }
-              ZstdCodec.zstdDecompress(frame) match {
-                case Some(out) =>
-                  md.reset()
-                  val hex = md.digest(out).map("%02x".format(_)).mkString
-                  (id, out.length.toLong, hex,
-                    java.util.Arrays.equals(out, tb), src)
-                case None => (id, -1L, "", false, src)
+                (zstdJni(tb, lvl), s"jni-$lvl")
               }
+            ZstdCodec.zstdDecompress(frame) match {
+              case Some(out) =>
+                val hex = MessageDigest.getInstance("MD5").digest(out)
+                  .map("%02x".format(_)).mkString
+                (id, out.length.toLong, hex,
+                  java.util.Arrays.equals(out, tb), src)
+              case None => (id, -1L, "", false, src)
             }
           }
           .toDF("doc_id", "n_out", "md5", "roundtrip_ok", "src")

@@ -158,23 +158,6 @@ object Orc {
     Fbs(i)
   }
 
-  private final class BitIn(b: Array[Byte], var pos: Int) {
-    private var bit = 0
-    def read(w: Int): Long = {
-      var v = 0L
-      var k = 0
-      while (k < w) {
-        if (pos >= b.length) throw new MatchError("bits")
-        v = (v << 1) | ((b(pos) >>> (7 - bit)) & 1)
-        bit += 1
-        if (bit == 8) { bit = 0; pos += 1 }
-        k += 1
-      }
-      v
-    }
-    def align(): Int = { if (bit != 0) { bit = 0; pos += 1 }; pos }
-  }
-
   /** Decode exactly `n` RLEv2 values. */
   private def rlev2(b: Array[Byte], signed: Boolean,
       n: Int): Option[Array[Long]] =
@@ -203,15 +186,16 @@ object Orc {
             val w = Fbs((h >>> 1) & 0x1f)
             val len = (((h & 1) << 8) | (b(i + 1) & 0xff)) + 1
             if (k + len > n) return None
-            val bits = new BitIn(b, i + 2)
+            val bits = new Bytes.BitReader(b, i + 2)
             var c = 0
             while (c < len) {
-              val u = bits.read(w)
+              val u = bits.bitsLong(w)
               out(k) = if (signed) zz(u) else u
               k += 1
               c += 1
             }
-            i = bits.align()
+            bits.alignByte()
+            i = bits.bytePos
           case 3 => // DELTA
             if (i + 1 >= b.length) return None
             val wCode = (h >>> 1) & 0x1f
@@ -233,18 +217,19 @@ object Orc {
               i = p
             } else {
               val w = Fbs(wCode)
-              val bits = new BitIn(b, p)
+              val bits = new Bytes.BitReader(b, p)
               var cur = base + deltaBase
               var c = 2
               val sign = if (deltaBase < 0) -1L else 1L
               while (c < len) {
-                val d = bits.read(w)
+                val d = bits.bitsLong(w)
                 cur += sign * d
                 out(k) = cur
                 k += 1
                 c += 1
               }
-              i = bits.align()
+              bits.alignByte()
+              i = bits.bytePos
             }
           case _ => // PATCHED_BASE (signed streams only in practice)
             if (i + 3 >= b.length) return None
@@ -264,16 +249,17 @@ object Orc {
             val signBit = 1L << (bw * 8 - 1)
             val base =
               if ((baseU & signBit) != 0) -(baseU & (signBit - 1)) else baseU
-            val bits = new BitIn(b, i + 4 + bw)
+            val bits = new Bytes.BitReader(b, i + 4 + bw)
             val data = new Array[Long](len)
             var c = 0
-            while (c < len) { data(c) = bits.read(w); c += 1 }
-            bits.align()
+            while (c < len) { data(c) = bits.bitsLong(w); c += 1 }
+            bits.alignByte()
             val pew = closestFbs(pw + pgw)
             val patches = new Array[Long](pll)
             c = 0
-            while (c < pll) { patches(c) = bits.read(pew); c += 1 }
-            i = bits.align()
+            while (c < pll) { patches(c) = bits.bitsLong(pew); c += 1 }
+            bits.alignByte()
+            i = bits.bytePos
             // gaps are cumulative from position 0; a (255, 0) entry
             // only extends the gap past the 8-bit field
             var pos = 0
@@ -293,7 +279,9 @@ object Orc {
         }
       }
       Some(out)
-    } catch { case _: MatchError => None }
+    } catch {
+      case _: MatchError | _: ArrayIndexOutOfBoundsException => None
+    }
 
   // ---- file walk --------------------------------------------------------
 

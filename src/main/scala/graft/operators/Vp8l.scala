@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.operators.Bytes.{le32, u32le}
+import graft.operators.Bytes.{LsbBitReader, LsbBitWriter, PrefixCode, le32, u32le}
 
 /** Pure-JVM WebP-lossless (VP8L) codec — RFC 9649 §3 ("Specification
   * for WebP Lossless Bitstream"), no image libraries, no native deps.
@@ -40,158 +40,48 @@ object Vp8l {
   final case class Vp8lImage(width: Int, height: Int, argb: Array[Int])
 
   // ------------------------------------------------------------------
-  // bit IO — LSB-first within bytes (RFC 9649 §3.2)
-  // ------------------------------------------------------------------
-
-  // LSB-first, so not the MSB-first [[Bytes.BitReader]]
-  private final class BitReader(b: Array[Byte], start: Int, end: Int) {
-    private var bytePos = start
-    private var bitPos = 0
-    def bits(n: Int): Int = {
-      var v = 0
-      var got = 0
-      while (got < n) {
-        if (bytePos >= end) throw new IllegalStateException("bit overrun")
-        val avail = 8 - bitPos
-        val take = math.min(avail, n - got)
-        val chunk = ((b(bytePos) & 0xff) >> bitPos) & ((1 << take) - 1)
-        v |= chunk << got
-        got += take
-        bitPos += take
-        if (bitPos == 8) { bitPos = 0; bytePos += 1 }
-      }
-      v
-    }
-    def bit(): Int = bits(1)
-  }
-
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var cur = 0
-    private var nBits = 0
-    def write(v: Int, n: Int): Unit = {
-      var i = 0
-      while (i < n) {
-        cur |= ((v >> i) & 1) << nBits
-        nBits += 1
-        if (nBits == 8) { out.write(cur); cur = 0; nBits = 0 }
-        i += 1
-      }
-    }
-    /** Emit a canonical prefix code MSB-first (the read direction). */
-    def writeCode(code: Int, len: Int): Unit = {
-      var i = len - 1
-      while (i >= 0) { write((code >> i) & 1, 1); i -= 1 }
-    }
-    def toBytes: Array[Byte] = {
-      if (nBits > 0) { out.write(cur); cur = 0; nBits = 0 }
-      out.toByteArray
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // canonical prefix codes
+  // canonical prefix codes (LSB-first bit stream, RFC 9649 §3.2)
   // ------------------------------------------------------------------
 
   private val MaxCodeLength = 15
 
-  /** Bit-by-bit canonical decoder over per-length symbol ranges.
-    * Shorter codes sort first; ties by symbol index — the DEFLATE
-    * canonical order, transmitted MSB-first. A code with exactly one
-    * used symbol is degenerate: it consumes ZERO bits and returns the
-    * symbol unconditionally (the reference decoder's table builder
-    * special-cases one-symbol codes with bit length 0 — encoders do
-    * emit them, e.g. an unused distance alphabet in one meta group). */
-  private final class PrefixCode(lengths: Array[Int]) {
-    private val counts = new Array[Int](MaxCodeLength + 1)
-    private var used = 0
-    private var lone = -1
-    lengths.foreach { l =>
-      if (l < 0 || l > MaxCodeLength)
-        throw new IllegalStateException("bad code length")
-      if (l > 0) { counts(l) += 1; used += 1 }
-    }
-    if (used == 0) throw new IllegalStateException("empty prefix code")
-    if (used == 1) lone = lengths.indexWhere(_ > 0)
-    else {
-      // completeness (Kraft == 1): required for >=2-symbol codes
-      var space = 1 << MaxCodeLength
-      var l = 1
-      while (l <= MaxCodeLength) {
-        space -= counts(l) << (MaxCodeLength - l)
-        if (space < 0) throw new IllegalStateException("over-subscribed code")
-        l += 1
-      }
-      if (space != 0) throw new IllegalStateException("incomplete code")
-    }
-    private val sorted: Array[Int] = {
-      val s = new Array[Int](used)
-      val next = new Array[Int](MaxCodeLength + 1)
-      var acc = 0
-      var l = 1
-      while (l <= MaxCodeLength) { next(l) = acc; acc += counts(l); l += 1 }
-      var i = 0
-      while (i < lengths.length) {
-        if (lengths(i) > 0) { s(next(lengths(i))) = i; next(lengths(i)) += 1 }
-        i += 1
-      }
-      s
-    }
-    def read(r: BitReader): Int = {
-      if (lone >= 0) return lone
-      var code = 0
-      var first = 0
-      var index = 0
-      var l = 1
-      while (l <= MaxCodeLength) {
-        code = (code << 1) | r.bit()
-        val c = counts(l)
-        if (code - first < c) return sorted(index + code - first)
-        index += c
-        first = (first + c) << 1
-        l += 1
-      }
-      throw new IllegalStateException("invalid prefix code word")
-    }
-  }
+  /** The code over `lengths`. A code of two or more symbols must be
+    * complete; one used symbol reads zero bits, as libwebp's table
+    * builder does. */
+  private def prefixCode(lengths: Array[Int]): PrefixCode =
+    PrefixCode.fromLengths(lengths, MaxCodeLength).filter(_.complete)
+      .getOrElse(throw new IllegalStateException("bad prefix code"))
 
-  /** A "simple" prefix code (RFC 9649 §3.5.1): one symbol → zero bits,
-    * two symbols → 1 bit. Both symbols get code length 1 and go
-    * through CANONICAL assignment, so bit 0 decodes to the numerically
-    * smaller symbol regardless of transmission order. */
-  private final class SimpleCode(s0: Int, s1: Int) {
-    private val lo = if (s1 < 0 || s0 <= s1) s0 else s1
-    private val hi = if (s1 < 0) -1 else if (s0 <= s1) s1 else s0
-    def read(r: BitReader): Int =
-      if (hi < 0) lo else if (r.bit() == 0) lo else hi
-  }
-
-  /** Either representation behind one read() surface. */
-  private final class Code(simple: SimpleCode, normal: PrefixCode) {
-    def read(r: BitReader): Int =
-      if (simple != null) simple.read(r) else normal.read(r)
+  private def read(c: PrefixCode, r: LsbBitReader): Int = {
+    val s = c.decode(r)
+    if (s < 0) throw new IllegalStateException("invalid prefix code word")
+    s
   }
 
   /** The 19-symbol code-length-code transmission order (§3.5.2). */
   private val CodeLengthOrder =
     Array(17, 18, 0, 1, 2, 3, 4, 5, 16, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15)
 
-  private def readCode(r: BitReader, alphabetSize: Int): Code = {
+  private def readCode(r: LsbBitReader, alphabetSize: Int): PrefixCode = {
     if (r.bit() == 1) {
       // simple code
       val numSymbols = r.bit() + 1
       val is8 = r.bit() == 1
       val s0 = r.bits(if (is8) 8 else 1)
-      val s1 = if (numSymbols == 2) r.bits(8) else -1
+      val s1 = if (numSymbols == 2) r.bits(8) else s0
       if (s0 >= alphabetSize || s1 >= alphabetSize)
         throw new IllegalStateException("simple-code symbol out of range")
-      new Code(new SimpleCode(s0, s1), null)
+      // both get length 1, so bit 0 is the smaller symbol; one symbol
+      // (or the same one twice) reads zero bits
+      val lengths = new Array[Int](alphabetSize)
+      lengths(s0) = 1; lengths(s1) = 1
+      prefixCode(lengths)
     } else {
       val numCl = 4 + r.bits(4)
       val clLengths = new Array[Int](19)
       var i = 0
       while (i < numCl) { clLengths(CodeLengthOrder(i)) = r.bits(3); i += 1 }
-      val clCode = new PrefixCode(clLengths)
+      val clCode = prefixCode(clLengths)
       val lengths = new Array[Int](alphabetSize)
       var maxSymbol =
         if (r.bit() == 1) {
@@ -202,7 +92,7 @@ object Vp8l {
       var prevLen = 8
       while (symbol < alphabetSize && maxSymbol > 0) {
         maxSymbol -= 1
-        val cl = clCode.read(r)
+        val cl = read(clCode, r)
         if (cl < 16) {
           lengths(symbol) = cl
           symbol += 1
@@ -220,7 +110,7 @@ object Vp8l {
           while (repeat > 0) { lengths(symbol) = v; symbol += 1; repeat -= 1 }
         }
       }
-      new Code(null, new PrefixCode(lengths))
+      prefixCode(lengths)
     }
   }
 
@@ -228,7 +118,7 @@ object Vp8l {
   // LZ77 value coding (§3.6.2)
   // ------------------------------------------------------------------
 
-  private def lz77Value(prefixCode: Int, r: BitReader): Int =
+  private def lz77Value(prefixCode: Int, r: LsbBitReader): Int =
     if (prefixCode < 4) prefixCode + 1
     else {
       val extraBits = (prefixCode - 2) >> 1
@@ -278,12 +168,12 @@ object Vp8l {
 
   /** One 5-code prefix group: green+length+cache, red, blue, alpha,
     * distance. */
-  private final class Group(val green: Code, val red: Code,
-      val blue: Code, val alpha: Code, val dist: Code)
+  private final class Group(val green: PrefixCode, val red: PrefixCode,
+      val blue: PrefixCode, val alpha: PrefixCode, val dist: PrefixCode)
 
   /** Decode one entropy-coded image (the main image at level 0, or a
     * transform/entropy/palette sub-image). Returns ARGB pixels. */
-  private def decodeImageStream(r: BitReader, w: Int, h: Int,
+  private def decodeImageStream(r: LsbBitReader, w: Int, h: Int,
       level0: Boolean): Array[Int] = {
     // color cache (any stream may carry one)
     val cacheBits = if (r.bit() == 1) {
@@ -326,18 +216,18 @@ object Vp8l {
           val mp = metaImage((y >> metaBits) * metaW + (x >> metaBits))
           groups((mp >> 8) & 0xffff)
         }
-      val s = g.green.read(r)
+      val s = read(g.green, r)
       if (s < 256) {
-        val red = g.red.read(r)
-        val blue = g.blue.read(r)
-        val alpha = g.alpha.read(r)
+        val red = read(g.red, r)
+        val blue = read(g.blue, r)
+        val alpha = read(g.alpha, r)
         val argb = (alpha << 24) | (red << 16) | (s << 8) | blue
         px(pos) = argb
         cacheInsert(argb)
         pos += 1
       } else if (s < 256 + 24) {
         val length = lz77Value(s - 256, r)
-        val distCode = lz77Value(g.dist.read(r), r)
+        val distCode = lz77Value(read(g.dist, r), r)
         val dist = planeCodeToDistance(w, distCode)
         if (dist > pos || length > total - pos)
           throw new IllegalStateException("backward reference out of range")
@@ -552,7 +442,7 @@ object Vp8l {
       : Option[Vp8lImage] =
     try {
       if (until - from < 5 || (b(from) & 0xff) != 0x2f) return None
-      val r = new BitReader(b, from + 1, until)
+      val r = new LsbBitReader(b, from + 1, until)
       val w = r.bits(14) + 1
       val h = r.bits(14) + 1
       r.bit() // alpha-is-used hint
@@ -645,109 +535,33 @@ object Vp8l {
   // encoder (fixtures): literal-only, single group, real prefix codes
   // ------------------------------------------------------------------
 
-  /** Canonical Huffman code lengths for `freq` (length-limited to 15).
-    * Zero-frequency symbols get length 0. If the depth limit is hit,
-    * frequencies are halved (floor 1) and the tree rebuilt — a
-    * monotone flattening that always converges. */
-  private def huffmanLengths(freq: Array[Int]): Array[Int] = {
-    val n = freq.length
-    val used = (0 until n).count(freq(_) > 0)
-    val lengths = new Array[Int](n)
-    if (used == 0) return lengths
-    if (used == 1) { lengths(freq.indexWhere(_ > 0)) = 1; return lengths }
-    var f = freq.clone()
-    var done = false
-    while (!done) {
-      java.util.Arrays.fill(lengths, 0)
-      // parent-pointer Huffman: leaves first, internal nodes appended
-      val parent = scala.collection.mutable.ArrayBuffer.empty[Int]
-      val leafSym = scala.collection.mutable.ArrayBuffer.empty[Int]
-      val heap = scala.collection.mutable.PriorityQueue.empty[(Long, Int)](
-        Ordering.Tuple2[Long, Int].reverse) // min-heap, ties by node id
-      var i = 0
-      while (i < n) {
-        if (f(i) > 0) {
-          heap.enqueue((f(i).toLong, parent.length))
-          parent += -1
-          leafSym += i
-        }
-        i += 1
-      }
-      val nLeaves = parent.length
-      while (heap.size > 1) {
-        val (w1, a) = heap.dequeue()
-        val (w2, c) = heap.dequeue()
-        val id = parent.length
-        parent += -1
-        parent(a) = id
-        parent(c) = id
-        heap.enqueue((w1 + w2, id))
-      }
-      var overflow = false
-      var leaf = 0
-      while (leaf < nLeaves) {
-        var d = 0
-        var cur = leaf
-        while (parent(cur) >= 0) { d += 1; cur = parent(cur) }
-        lengths(leafSym(leaf)) = d
-        if (d > MaxCodeLength) overflow = true
-        leaf += 1
-      }
-      if (!overflow) done = true
-      else f = f.map(v => if (v > 0) (v >> 1) + 1 else 0)
-    }
-    lengths
-  }
-
-  /** Canonical codes (MSB-first values) from lengths — DEFLATE
-    * assignment: by length, then symbol index. */
-  private def canonicalCodes(lengths: Array[Int]): Array[Int] = {
-    val codes = new Array[Int](lengths.length)
-    val counts = new Array[Int](MaxCodeLength + 1)
-    lengths.foreach(l => if (l > 0) counts(l) += 1)
-    val next = new Array[Int](MaxCodeLength + 1)
-    var code = 0
-    var l = 1
-    while (l <= MaxCodeLength) {
-      code = (code + counts(l - 1)) << 1
-      next(l) = code
-      l += 1
-    }
-    var i = 0
-    while (i < lengths.length) {
-      if (lengths(i) > 0) { codes(i) = next(lengths(i)); next(lengths(i)) += 1 }
-      i += 1
-    }
-    codes
-  }
-
   /** Emitted prefix-code writer state: lengths+codes, or the 1–2
     * symbol simple form. */
   private final class WCode(val lengths: Array[Int], val codes: Array[Int],
       val simple: Array[Int]) {
-    def writeSymbol(w: BitWriter, s: Int): Unit =
+    def writeSymbol(w: LsbBitWriter, s: Int): Unit =
       if (simple != null) {
-        if (simple.length == 2) w.write(if (s == simple(0)) 0 else 1, 1)
+        if (simple.length == 2) w.bits(if (s == simple(0)) 0 else 1, 1)
         // single symbol: zero bits
       } else w.writeCode(codes(s), lengths(s))
   }
 
-  private def writeCodeHeader(w: BitWriter, freq: Array[Int]): WCode = {
+  private def writeCodeHeader(w: LsbBitWriter, freq: Array[Int]): WCode = {
     val usedSyms = freq.indices.filter(freq(_) > 0)
     if (usedSyms.length <= 2 && usedSyms.forall(_ < 256)) {
       // simple code
-      w.write(1, 1)                                   // is_simple
-      w.write(usedSyms.length - 1, 1)                 // num_symbols - 1
+      w.bits(1, 1)                                   // is_simple
+      w.bits(usedSyms.length - 1, 1)                 // num_symbols - 1
       val s0 = usedSyms.head
       val is8 = if (s0 > 1) 1 else 0
-      w.write(is8, 1)
-      w.write(s0, if (is8 == 1) 8 else 1)
-      if (usedSyms.length == 2) w.write(usedSyms(1), 8)
+      w.bits(is8, 1)
+      w.bits(s0, if (is8 == 1) 8 else 1)
+      if (usedSyms.length == 2) w.bits(usedSyms(1), 8)
       new WCode(null, null, usedSyms.toArray)
     } else {
-      val lengths = huffmanLengths(freq)
-      val codes = canonicalCodes(lengths)
-      w.write(0, 1) // normal code
+      val lengths = PrefixCode.huffmanLengths(freq, MaxCodeLength)
+      val codes = PrefixCode.codes(lengths)
+      w.bits(0, 1) // normal code
       // code-length code over the lengths actually emitted (literal,
       // no repeat codes — fixture streams are small)
       val clFreq = new Array[Int](19)
@@ -757,12 +571,12 @@ object Vp8l {
         val s = clFreq.indexWhere(_ > 0)
         clFreq(if (s == 0) 1 else s - 1) = 1
       }
-      val clLengths = huffmanLengths(clFreq)
-      val clCodes = canonicalCodes(clLengths)
-      w.write(15, 4) // num_code_lengths = 4 + 15 = 19 (all, zeros incl.)
+      val clLengths = PrefixCode.huffmanLengths(clFreq, MaxCodeLength)
+      val clCodes = PrefixCode.codes(clLengths)
+      w.bits(15, 4) // num_code_lengths = 4 + 15 = 19 (all, zeros incl.)
       var i = 0
-      while (i < 19) { w.write(clLengths(CodeLengthOrder(i)), 3); i += 1 }
-      w.write(0, 1) // no max_symbol shortcut: all lengths emitted
+      while (i < 19) { w.bits(clLengths(CodeLengthOrder(i)), 3); i += 1 }
+      w.bits(0, 1) // no max_symbol shortcut: all lengths emitted
       lengths.foreach(l => w.writeCode(clCodes(l), clLengths(l)))
       new WCode(lengths, codes, null)
     }
@@ -777,16 +591,16 @@ object Vp8l {
     require(width >= 1 && width <= 16384 && height >= 1 && height <= 16384,
       s"dims out of VP8L range: ${width}x$height")
     require(argb.length == width * height, "pixel count mismatch")
-    val w = new BitWriter
-    w.write(0x2f, 8)
-    w.write(width - 1, 14)
-    w.write(height - 1, 14)
+    val w = new LsbBitWriter
+    w.bits(0x2f, 8)
+    w.bits(width - 1, 14)
+    w.bits(height - 1, 14)
     val alphaUsed = argb.exists(p => (p >>> 24) != 0xff)
-    w.write(if (alphaUsed) 1 else 0, 1)
-    w.write(0, 3) // version
-    w.write(0, 1) // no transforms
-    w.write(0, 1) // no color cache
-    w.write(0, 1) // no meta prefix codes
+    w.bits(if (alphaUsed) 1 else 0, 1)
+    w.bits(0, 3) // version
+    w.bits(0, 1) // no transforms
+    w.bits(0, 1) // no color cache
+    w.bits(0, 1) // no meta prefix codes
     val greenF = new Array[Int](256 + 24)
     val redF = new Array[Int](256)
     val blueF = new Array[Int](256)

@@ -98,6 +98,8 @@ object ZstdCodec {
   private final class Corrupt extends RuntimeException("corrupt zstd")
   private def fail(): Nothing = throw new Corrupt
 
+  /** Kept apart from the [[Bytes]] readers: it reads backward from a
+    * sentinel and peeks zero-padded past its start. */
   private final class BackBits(b: Array[Byte], from: Int, until: Int) {
     /** unread data bits (sentinel excluded); reads may drive it below
       * zero (zero-padded), which only the caller's end-check rejects */
@@ -123,6 +125,8 @@ object ZstdCodec {
     def readInt(n: Int): Int = read(n).toInt
   }
 
+  /** Kept apart from [[Bytes.LsbBitReader]]: it peeks zero-padded past
+    * its end, which the FSE table reader relies on. */
   private final class FwdBits(b: Array[Byte], from: Int, until: Int) {
     var pos = 0 // bit cursor from `from`
     private def bitAt(p: Int): Int = {
@@ -284,6 +288,9 @@ object ZstdCodec {
   // Huffman (RFC 8878 §4.2): weight readers + canonical decode table.
   // ------------------------------------------------------------------
 
+  /** Kept apart from [[Bytes.PrefixCode]]: RFC 8878 §4.2.1 gives the
+    * longest codes the smallest values and decodes by table over a
+    * backward stream, so sharing would make the kernel branch on it. */
   private[operators] final case class HufTable(sym: Array[Int],
       nb: Array[Int], maxBits: Int)
 

@@ -14,7 +14,7 @@ class IntegrationSpec extends SparkSpec {
 
   test("text dir -> MapReduce token count -> kv JSON-lines roundtrip") {
     import spark.implicits._
-    val base = Files.createTempDirectory("e2e_")
+    val base = tempPath("e2e_")
     val in = base.resolve("in")
     Files.createDirectories(in)
     Files.writeString(in.resolve("part-0.txt"), "a b a\nc b\n")
@@ -45,7 +45,7 @@ class IntegrationSpec extends SparkSpec {
 
   test("downsampled file list feeds the same pipeline (reference testing story)") {
     import spark.implicits._
-    val base = Files.createTempDirectory("e2e_ds_")
+    val base = tempPath("e2e_ds_")
     val paths = (0 until 10).map { i =>
       val p = base.resolve(s"f$i.txt")
       Files.writeString(p, s"tok$i\n")

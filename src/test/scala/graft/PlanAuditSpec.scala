@@ -79,10 +79,14 @@ class PlanAuditSpec extends SparkSpec {
     assert(p.contains("exchange singlepartition"), p)
   }
 
-  test("q249: a sort above a typed mapPartitions keeps its range partitioning") {
-    val p = plan("q249_gzip_decode").toLowerCase
-    assert(p.contains("rangepartitioning"), p)
-    assert(!p.contains("singlepartition"), p)
+  test("q249 and q325: their decoder sorts run in one partition, with no " +
+      "sampling job") {
+    Seq("q249_gzip_decode", "q325_zstd_decode").foreach { q =>
+      val p = graft.plans.PlanInspector.executed(
+        SparkEntry.queries(q)(spark, sf)).toLowerCase
+      assert(!p.contains("rangepartitioning"), s"$q: $p")
+      assert(p.contains("exchange singlepartition"), s"$q: $p")
+    }
   }
 
   test("q61: native cosine expression appears in the plan and supports codegen") {
@@ -340,7 +344,7 @@ class PlanAuditSpec extends SparkSpec {
   test("partitioned parquet: filters prune partitions at plan time") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("part_").toString + "/events"
+    val dir = tempPath("part_").toString + "/events"
     graft.engine.Tables.load(spark, sf, "events")
       .write.partitionBy("event_type").parquet(dir)
     val df = spark.read.parquet(dir)
@@ -360,7 +364,7 @@ class PlanAuditSpec extends SparkSpec {
 
   test("bucketed co-located join eliminates both shuffles") {
     import org.apache.spark.sql.functions._
-    val wh = java.nio.file.Files.createTempDirectory("wh_").toString
+    val wh = tempPath("wh_").toString
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       import spark.implicits._

@@ -4,15 +4,16 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-/** A guard over the main sources: each needle may appear in code only in
-  * its one home file, so a folded duplicate cannot grow back. */
+/** A guard over the sources: each needle may appear in code only in its
+  * one home file, so a folded duplicate cannot grow back. */
 object SourceGuard {
 
   /** `file:line: text` of every code line (comment lines and trailing
-    * `//` comments skipped) under src/main/scala that holds a needle
-    * outside its home; a home of `None` allows it nowhere. */
-  def offenders(rules: Seq[(String, Option[String])]): List[String] = {
-    val root = Paths.get("src/main/scala")
+    * `//` comments skipped) under `tree` that holds a needle outside its
+    * home; a home of `None` allows it nowhere. */
+  def offenders(rules: Seq[(String, Option[String])],
+      tree: String = "src/main/scala"): List[String] = {
+    val root = Paths.get(tree)
     assert(Files.isDirectory(root), s"run from the repository root: $root")
     def code(line: String): String = {
       val t = line.trim

@@ -5,38 +5,52 @@ import java.nio.file.{Files, Path}
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
+import org.scalatest.{BeforeAndAfterAll, Suite}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.GraftSession
 
-/** Shared local SparkSession for specs (one JVM-wide session; ScalaTest
-  * runs suites sequentially in the forked test JVM). */
-trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSpec.session
-
+/** Temporary files for a suite, without a session: each in a fresh
+  * directory in java.io.tmpdir, deleted with everything in it once the
+  * suite has run. The one place the test tree makes temporary files
+  * (`TempDirSpec` guards it). */
+trait TempDirs extends BeforeAndAfterAll { this: Suite =>
   private val tempDirs = ArrayBuffer.empty[Path]
 
-  /** A fresh directory in java.io.tmpdir, deleted with everything in it
-    * once the suite has run. */
-  def tempDir(prefix: String): String = synchronized {
+  /** A fresh, empty directory. */
+  def tempPath(prefix: String): Path = synchronized {
     val d = Files.createTempDirectory(prefix)
     tempDirs += d
-    d.toString
+    d
   }
 
+  def tempDir(prefix: String): String = tempPath(prefix).toString
+
+  /** A fresh, empty file `prefix + suffix` in a fresh directory. */
+  def tempFile(prefix: String, suffix: String): Path =
+    Files.createFile(tempPath(prefix).resolve(prefix + suffix))
+
   override protected def afterAll(): Unit =
-    try synchronized(tempDirs.foreach(SparkSpec.deleteTree))
+    try synchronized(tempDirs.foreach(TempDirs.deleteTree))
     finally super.afterAll()
 }
 
-object SparkSpec {
-  private def deleteTree(p: Path): Unit = {
+object TempDirs {
+  def deleteTree(p: Path): Unit = if (Files.exists(p)) {
     val walk = Files.walk(p)
     try walk.sorted(java.util.Comparator.reverseOrder[Path]())
       .forEach { x => Files.deleteIfExists(x); () }
     finally walk.close()
   }
+}
+
+/** Shared local SparkSession for specs (one JVM-wide session; ScalaTest
+  * runs suites sequentially in the forked test JVM). */
+trait SparkSpec extends AnyFunSuite with TempDirs {
+  lazy val spark: SparkSession = SparkSpec.session
+}
+
+object SparkSpec {
 
   lazy val session: SparkSession = {
     // the local codegen settings every GraftSession.builder session gets

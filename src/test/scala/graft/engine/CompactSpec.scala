@@ -1,14 +1,12 @@
 package graft.engine
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 class CompactSpec extends SparkSpec {
 
   test("compact collapses many small files into few, preserving rows exactly") {
     import spark.implicits._
-    val base = Files.createTempDirectory("compact_")
+    val base = tempPath("compact_")
     val in = s"$base/in"
     val out = s"$base/out"
     // 64 tiny files — the post-streaming-ingest pathology
@@ -28,7 +26,7 @@ class CompactSpec extends SparkSpec {
 
   test("compact refuses in-place and nested targets before touching data") {
     import spark.implicits._
-    val base = Files.createTempDirectory("compact3_")
+    val base = tempPath("compact3_")
     val in = s"$base/in"
     Seq((1L, "a")).toDF("id", "v").write.parquet(in)
     intercept[IllegalArgumentException] {
@@ -43,7 +41,7 @@ class CompactSpec extends SparkSpec {
 
   test("compact splits output near the byte target") {
     import spark.implicits._
-    val base = Files.createTempDirectory("compact2_")
+    val base = tempPath("compact2_")
     val in = s"$base/in"
     (1 to 20000).map(i => (i.toLong, "x" * 50)).toDF("id", "v")
       .coalesce(1).write.parquet(in)

@@ -1,7 +1,5 @@
 package graft.engine
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 
@@ -25,7 +23,7 @@ class EventsSchemaSpec extends SparkSpec {
   private val micros = Seq(1700000000000000L, 1700000123456789L, 999999999999L)
 
   private def loadFrom(writeTo: java.io.File => Unit): Seq[Long] = {
-    val dir = Files.createTempDirectory("events_schema_").toFile
+    val dir = tempPath("events_schema_").toFile
     writeTo(dir)
     val df = Tables.load(spark, dir.getAbsolutePath, "events")
     assert(df.schema("ts").dataType == TimestampType,
@@ -64,7 +62,7 @@ class EventsSchemaSpec extends SparkSpec {
 
   test("NTZ read really exercises the cast branch (session infers NTZ)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("events_schema_ntz_").toFile
+    val dir = tempPath("events_schema_ntz_").toFile
     micros.toDF("us")
       .select(timestamp_micros(col("us")).cast(TimestampNTZType).as("ts"))
       .write.mode("overwrite").parquet(s"$dir/events.parquet")

@@ -67,6 +67,18 @@ class SmallSortSpec extends SparkSpec {
     assert(df.count() == 55L)
   }
 
+  test("a sort above a typed mapPartitions of a small input is not rewritten") {
+    import spark.implicits._
+    // mapPartitions may emit any number of rows per input row, so the
+    // input's size estimate bounds nothing
+    val df = spark.range(0, 1000).as[Long]
+      .mapPartitions(it => it.map(x => (x * 7919) % 1000))
+      .toDF("k").orderBy($"k")
+    assert(repartitions(df) == 0)
+    assert(lower(df).contains("rangepartitioning"))
+    assert(df.collect().map(_.getLong(0)).toSeq == (0L until 1000L))
+  }
+
   test("a sort above a materialized small stage is rewritten at runtime") {
     import spark.implicits._
     // an RDD-backed frame has no size estimate (Long.MaxValue): only the

@@ -7,7 +7,8 @@ import graft.SourceGuard
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The engine's temporary directories live under the per-process
-  * scratch root, and nothing else in the engine makes one. */
+  * scratch root, and nothing else in the engine makes one; the test
+  * specs make theirs only through [[graft.TempDirs]]. */
 class TempDirSpec extends AnyFunSuite {
 
   test("a temp dir is made under the scratch root") {
@@ -33,6 +34,14 @@ class TempDirSpec extends AnyFunSuite {
   test("no createTempDirectory outside engine/TempDir") {
     val offenders = SourceGuard.offenders(Seq(
       "createTempDirectory(" -> Some("graft/engine/TempDir.scala")))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("test specs make temporary files only through graft.TempDirs") {
+    // the needles are split so that this line does not hold them
+    val calls = Seq("Directory(", "File(").map(".createTemp" + _)
+    val offenders = SourceGuard.offenders(
+      calls.map(_ -> Some("graft/SparkSpec.scala")), tree = "src/test/scala")
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

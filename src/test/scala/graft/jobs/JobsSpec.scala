@@ -59,7 +59,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("transfer job copies and deletes via the Hadoop FileSystem API") {
-    val dir = Files.createTempDirectory("xfer_")
+    val dir = tempPath("xfer_")
     val src = dir.resolve("a.txt")
     Files.writeString(src, "payload")
     val dst = dir.resolve("b.txt")
@@ -74,7 +74,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("journal restore: resubmitted finished jobs skip unless forced; names escape") {
-    val f = Files.createTempFile("jobs_", ".data").toString
+    val f = tempFile("jobs_", ".data").toString
     var n = 0
     val tricky = "job \"quoted\"\twith\ncontrol chars"
     locally {
@@ -98,7 +98,7 @@ class JobsSpec extends SparkSpec {
   }
 
   test("state journal persists queue metadata; runtimes are tracked") {
-    val f = Files.createTempFile("jobs_", ".data").toString
+    val f = tempFile("jobs_", ".data").toString
     val q = new JobQueue(Some(f))
     q.submit(SparkJob("a", _ => (), priority = 3, groupName = Some("g")))
     q.runAll(spark)
@@ -136,7 +136,7 @@ class JobsSpec extends SparkSpec {
     // column-compare exclusion would miss it on retry and the batch
     // would collide with its own index — exclusion is by path, so the
     // replay must be a no-op even for a non-canonical numeric name
-    val root = Files.createTempDirectory("neardup_num_").toString
+    val root = tempPath("neardup_num_").toString
     val in = s"$root/in"
     Seq((1L, (1 to 40).map(i => s"tok$i").mkString(" ")))
       .toDF("doc_id", "text").write.parquet(in)
@@ -156,7 +156,7 @@ class JobsSpec extends SparkSpec {
 
   test("incremental near-dup runs as scheduled batch jobs over a persisted index") {
     import spark.implicits._
-    val root = Files.createTempDirectory("neardup_job_").toString
+    val root = tempPath("neardup_job_").toString
     val (indexDir, outDir) = (s"$root/index", s"$root/out")
     def writeBatch(name: String, rows: (Long, String)*): String = {
       val dir = s"$root/in_$name"
@@ -201,7 +201,7 @@ class JobsSpec extends SparkSpec {
     // seeded by a crashed half-run, a different threshold, or another
     // pipeline sharing the index CAN collide. seq-scoped history makes
     // the replay read exactly the state the batch originally saw.
-    val root = Files.createTempDirectory("neardup_seq_").toString
+    val root = tempPath("neardup_seq_").toString
     val (indexDir, outDir) = (s"$root/index", s"$root/out")
     val base = (1 to 40).map(i => s"tok$i").mkString(" ")
     val in = s"$root/in_b1"

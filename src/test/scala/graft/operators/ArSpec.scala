@@ -6,6 +6,8 @@ import scala.sys.process._
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
+
 import Ar._
 
 /** ar/.deb conformance, refereed by `/usr/bin/ar` and
@@ -13,7 +15,7 @@ import Ar._
   * identical member lists and bytes; archives built here list and
   * extract identically through the system tools, and our emitted
   * .deb satisfies dpkg-deb --info/--contents. */
-class ArSpec extends AnyFunSuite {
+class ArSpec extends AnyFunSuite with TempDirs {
 
   private def sh(cwd: Path, cmd: String*): String = {
     val out = new StringBuilder
@@ -43,7 +45,7 @@ class ArSpec extends AnyFunSuite {
   test("system ar reads our archives and we read system ar's") {
     val bin = new java.io.File("/usr/bin/ar")
     assume(bin.canExecute, "ar not in container")
-    val dir = Files.createTempDirectory("arref")
+    val dir = tempPath("arref")
     // ours -> system
     val ours = encodeAr(Seq(("m1.txt", "alpha\n".getBytes),
       ("m2.bin", Array.tabulate(64)(_.toByte))))
@@ -70,7 +72,7 @@ class ArSpec extends AnyFunSuite {
       ".deb satisfies dpkg-deb --info/--contents") {
     val bin = new java.io.File("/usr/bin/dpkg-deb")
     assume(bin.canExecute, "dpkg-deb not in container")
-    val dir = Files.createTempDirectory("debref")
+    val dir = tempPath("debref")
     // real dpkg-built package
     val root = dir.resolve("pkgroot")
     Files.createDirectories(root.resolve("DEBIAN"))

@@ -118,7 +118,7 @@ class ArchiveSpec extends SparkSpec {
   }
 
   test("tar referee: GNU tar reads our archives (pax + plain names)") {
-    val tmp = Files.createTempFile("graft_arch", ".tar")
+    val tmp = tempFile("graft_arch", ".tar")
     try {
       val long = "p/" * 70 + "longname.txt"
       Files.write(tmp, encodeTar(Seq(
@@ -131,8 +131,8 @@ class ArchiveSpec extends SparkSpec {
   }
 
   test("tar referee: we read GNU-tar-produced archives (incl. long name)") {
-    val dir = Files.createTempDirectory("graft_tarsrc")
-    val tarF = Files.createTempFile("graft_gnu", ".tar")
+    val dir = tempPath("graft_tarsrc")
+    val tarF = tempFile("graft_gnu", ".tar")
     try {
       val longRel = "sub/" + "y" * 140 + ".dat"
       Files.createDirectories(dir.resolve("sub"))
@@ -284,7 +284,7 @@ class ArchiveSpec extends SparkSpec {
 
   test("zip64: JDK ZipFile referees the emitter's layout") {
     val blob = Archive.encodeZip64(zip64Entries)
-    val f = java.io.File.createTempFile("graft-zip64", ".zip")
+    val f = tempFile("graft-zip64", ".zip").toFile
     try {
       java.nio.file.Files.write(f.toPath, blob)
       val zf = new java.util.zip.ZipFile(f)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import java.io.{ByteArrayOutputStream, File}
+import java.io.ByteArrayOutputStream
 
 import scala.jdk.CollectionConverters._
 
@@ -11,13 +11,15 @@ import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader,
   GenericDatumWriter, GenericRecord}
 
+import graft.TempDirs
+
 import AvroRecords._
 
 /** Avro record conformance, refereed by the Apache Avro reference
   * implementation on the Spark classpath: its files (null, deflate,
   * snappy codecs; nulls; arrays; multi-block) decode value-exactly
   * here, and this file's emitter output reads back through it. */
-class AvroRecordsSpec extends AnyFunSuite {
+class AvroRecordsSpec extends AnyFunSuite with TempDirs {
 
   private val schemaJson = FixtureSchema
   private val schema = new Schema.Parser().parse(schemaJson)
@@ -83,7 +85,7 @@ class AvroRecordsSpec extends AnyFunSuite {
       // our own reader round-trips
       assert(records(file).get._2.length == 120, codec)
       // the reference reads it
-      val tmp = File.createTempFile("avrec", ".avro")
+      val tmp = tempFile("avrec", ".avro").toFile
       java.nio.file.Files.write(tmp.toPath, file)
       val rd = new DataFileReader[GenericRecord](tmp,
         new GenericDatumReader[GenericRecord]())

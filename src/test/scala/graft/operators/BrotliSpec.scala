@@ -3,6 +3,8 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
+import graft.TempDirs
+
 import Brotli._
 
 /** Brotli conformance, refereed by the reference implementation
@@ -17,7 +19,7 @@ import Brotli._
   *    cleanly otherwise — the committed vectors keep the decode
   *    direction pinned either way).
   */
-class BrotliSpec extends AnyFunSuite {
+class BrotliSpec extends AnyFunSuite with TempDirs {
 
   private def checkProp(p: Prop, n: Int = 60): Unit = {
     val res = SCTest.check(
@@ -72,7 +74,7 @@ class BrotliSpec extends AnyFunSuite {
     val python = new java.io.File("/root/miniconda/bin/python3")
     assume(python.isFile, "reference brotli not present in container")
     def refereeDecodes(blob: Array[Byte], want: Array[Byte]): Boolean = {
-      val dir = java.nio.file.Files.createTempDirectory("graft_br")
+      val dir = tempPath("graft_br")
       val in = dir.resolve("in.br")
       val out = dir.resolve("out.raw")
       java.nio.file.Files.write(in, blob)

@@ -114,25 +114,168 @@ class BytesSpec extends AnyFunSuite {
     intercept[ArrayIndexOutOfBoundsException](r.bit())
   }
 
+  private val PC = Bytes.PrefixCode
+
+  /** Bits in the given order, packed MSB-first. */
+  private def msb(bits: String): Array[Byte] =
+    bits.padTo((bits.length + 7) / 8 * 8, '0').grouped(8)
+      .map(g => Integer.parseInt(g, 2).toByte).toArray
+
+  test("prefix code: over-subscribed codes and lengths out of range are " +
+      "rejected") {
+    assert(PC.fromLengths(Array(1, 1, 1), 15).isEmpty)
+    assert(PC.fromLengths(Array(1, 2, 2, 2), 15).isEmpty)
+    assert(PC.fromLengths(Array(16, 1), 15).isEmpty)
+    assert(PC.fromLengths(Array(21, 1), 20).isEmpty)
+    assert(PC.fromLengths(Array(-1, 1), 15).isEmpty)
+    assert(PC.fromLengths(Array(20, 1), 20).isDefined)
+    val bits = new Array[Int](17); bits(1) = 3
+    assert(PC.fromCounts(bits, Array(0, 1, 2), 16).isEmpty)
+    assert(PC.fromCounts(bits, Array(0, 1), 16).isEmpty) // count != symbols
+  }
+
+  test("prefix code: an incomplete code is built, says so, and a bit " +
+      "string outside it ends within maxLen bits") {
+    val c = PC.fromLengths(Array(1, 2), 15).get
+    assert(!c.complete)
+    assert(PC.fromLengths(Array(1, 2, 2), 15).get.complete)
+    assert(!PC.fromLengths(Array(0, 0), 15).get.complete) // empty
+    val r = new Bytes.BitReader(msb("0" + "10" + "1" * 16))
+    assert(c.decode(r) == 0 && c.decode(r) == 1)
+    assert(c.decode(r) == -1 && r.pos == 3 + 15)
+  }
+
+  test("prefix code: a lone symbol reads zero bits") {
+    val c = PC.fromLengths(Array(0, 0, 5, 0), 15).get
+    assert(c.complete)
+    val r = new Bytes.LsbBitReader(Array[Byte](0x5a), 0, 1)
+    assert(c.decode(r) == 2 && c.decode(r) == 2)
+    assert(r.bits(8) == 0x5a)
+    // in the count-per-length form a lone symbol keeps its length
+    val bits = new Array[Int](17); bits(1) = 1
+    val j = PC.fromCounts(bits, Array(9), 16).get
+    val m = new Bytes.BitReader(msb("01" + "1" * 15))
+    assert(j.decode(m) == 9 && j.decode(m) == -1)
+  }
+
+  test("prefix code: the count-per-length constructor decodes T.81 " +
+      "Table K.3 (luminance DC)") {
+    val counts = Array(0, 0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0)
+    val k3 = Seq("00", "010", "011", "100", "101", "110", "1110", "11110",
+      "111110", "1111110", "11111110", "111111110")
+    val c = PC.fromCounts(counts, Array.tabulate(12)(identity), 16).get
+    assert(!c.complete) // T.81 leaves the all-ones code unused
+    val order = Seq(11, 0, 5, 6, 1, 10, 2, 9, 3, 8, 4, 7)
+    val r = new Bytes.BitReader(msb(order.map(k3).mkString))
+    assert(order.map(_ => c.decode(r)) == order)
+    val lengths = k3.map(_.length).toArray
+    assert(PC.codes(lengths).toSeq ==
+      k3.map(Integer.parseInt(_, 2)))
+  }
+
+  test("Huffman lengths never exceed maxLen, form a complete code, and " +
+      "round-trip through the LSB-first writer and reader") {
+    val gen = for {
+      maxLen <- Gen.choose(2, 20)
+      n <- Gen.choose(1, math.min(300, 1 << maxLen))
+      skew <- Gen.oneOf(true, false)
+      freq <- Gen.listOfN(n, Gen.frequency(1 -> Gen.const(0),
+        4 -> Gen.choose(1, 1 << 20)))
+    } yield (maxLen, if (skew) freq.zipWithIndex.map { case (f, i) =>
+      if (f == 0) 0 else 1 + (f >>> math.min(20, i)) } else freq)
+    checkProp(Prop.forAll(gen) { case (maxLen, freq) =>
+      val f = freq.toArray
+      val lens = PC.huffmanLengths(f, maxLen)
+      val used = f.indices.filter(f(_) > 0)
+      val code = PC.fromLengths(lens, maxLen)
+      lens.forall(_ <= maxLen) && f.indices.forall(i => (lens(i) > 0) == (f(i) > 0)) &&
+        (used.isEmpty || code.exists(_.complete)) && (used.size < 2 || {
+          val codes = PC.codes(lens)
+          val w = new Bytes.LsbBitWriter
+          used.foreach(s => w.writeCode(codes(s), lens(s)))
+          val b = w.toBytes
+          val r = new Bytes.LsbBitReader(b, 0, b.length)
+          used.forall(s => code.get.decode(r) == s)
+        })
+    }, 200)
+    // Fibonacci frequencies force the halving pass
+    val fib = Array.iterate((1, 1), 30) { case (a, b) => (b, a + b) }.map(_._1)
+    assert(PC.huffmanLengths(fib, 29).max == 29)
+    val lens = PC.huffmanLengths(fib, 15)
+    assert(lens.max <= 15 && PC.fromLengths(lens, 15).exists(_.complete))
+  }
+
+  test("LSB-first and MSB-first writers round-trip through their readers") {
+    val fields = Gen.listOf(Gen.choose(0, 32).flatMap(n =>
+      Gen.choose(0L, (1L << n) - 1).map(v => (v, n))))
+    checkProp(Prop.forAll(fields) { fs =>
+      val lw = new Bytes.LsbBitWriter
+      val mw = new Bytes.BitWriter
+      fs.foreach { case (v, n) => lw.bits(v.toInt, n); mw.bits(v, n) }
+      val lb = lw.toBytes
+      val mb = mw.toBytes
+      val lr = new Bytes.LsbBitReader(lb, 0, lb.length)
+      val mr = new Bytes.BitReader(mb)
+      val total = fs.map(_._2).sum
+      lb.length == (total + 7) / 8 && mb.length == lb.length &&
+        fs.forall { case (v, n) =>
+          (lr.bits(n) & 0xffffffffL) == v && mr.bitsLong(n) == v }
+    })
+    val w = new Bytes.LsbBitWriter
+    w.bits(1, 3); w.alignByte(); w.bytes(Array[Byte](7, 8)); w.bits(0x1ff, 9)
+    val b = w.toBytes
+    assert(b.toSeq == Seq[Byte](1, 7, 8, -1, 1))
+    val r = new Bytes.LsbBitReader(Array[Byte](0, 5) ++ b, 2, 7)
+    assert(r.bits(2) == 1 && r.alignByte() == 0)
+    val out = new Array[Byte](2)
+    r.copyBytes(out, 0, 2)
+    assert(out.toSeq == Seq[Byte](7, 8) && !r.exhausted)
+    r.skipBytes(2)
+    assert(r.exhausted)
+    intercept[ArrayIndexOutOfBoundsException](r.bit())
+    intercept[ArrayIndexOutOfBoundsException](r.skipBytes(1))
+  }
+
+  /** `file:line: text` of every line under src/main/scala outside
+    * operators/Bytes.scala that `offends`. */
+  private def outsideBytes(offends: String => Boolean): List[String] = {
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val walk = Files.walk(root)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .filterNot(_.endsWith(Paths.get("graft/operators/Bytes.scala")))
+      .flatMap { (f: Path) =>
+        Files.readAllLines(f).asScala.zipWithIndex.collect {
+          case (line, i) if offends(line) => s"$f:${i + 1}: $line"
+        }
+      }.toList
+    finally walk.close()
+  }
+
   /** Copies cannot grow back: the main sources inflate and define
     * fixed-width readers and writers only in operators/Bytes.scala. */
   test("no Inflater or fixed-width endian helper outside operators/Bytes") {
-    val root = Paths.get("src/main/scala")
-    assert(Files.isDirectory(root), s"run from the repository root: $root")
     val helper = ("""^\s*(private(\[\w+\])? )?def (""" +
       """[ui](16|24|32|64)(le|be)?|(le|be|w)(16|24|32|64)|""" +
       """(put|read|write)(U|I)?(Le|Be)?(16|24|32|64)(le|be)?)\(""").r
-    val walk = Files.walk(root)
-    val offenders =
-      try walk.iterator().asScala.filter(_.toString.endsWith(".scala"))
-        .filterNot(_.endsWith(Paths.get("graft/operators/Bytes.scala")))
-        .flatMap { (f: Path) =>
-          Files.readAllLines(f).asScala.zipWithIndex.collect {
-            case (line, i) if line.contains("Inflater(") ||
-                helper.findFirstIn(line).isDefined => s"$f:${i + 1}: $line"
-          }
-        }.toList
-      finally walk.close()
+    val offenders = outsideBytes(line => line.contains("Inflater(") ||
+      helper.findFirstIn(line).isDefined)
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  /** Bit readers and writers, prefix-code classes and Huffman length
+    * builders live only in operators/Bytes.scala. Allowed by name:
+    * JPEG's entropy-segment reader (byte stuffing and marker stops)
+    * and zstd's backward and forward bit streams and Huffman table
+    * (RFC 8878 reads backward and gives long codes small values). */
+  test("no bit IO class, prefix-code class or Huffman builder outside " +
+      "operators/Bytes") {
+    val offending = ("""\b(class|trait)\s+(\w*Bit\w*|\w*Huf\w*|""" +
+      """\w*PrefixCode|SimpleCode|Code)\b|""" +
+      """(?i)\bdef\s+\w*(huf\w*len|canonical\w*codes|assigncodes)""").r
+    val allowed = Set("ScanBits", "FwdBits", "BackBits", "HufTable")
+    val offenders = outsideBytes(line => offending.findAllMatchIn(line)
+      .exists(m => m.group(2) == null || !allowed(m.group(2))))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 }

@@ -7,6 +7,8 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import org.apache.hadoop.io.compress.bzip2.{CBZip2InputStream, CBZip2OutputStream}
 
+import graft.TempDirs
+
 import Bzip2._
 
 /** bzip2 conformance, refereed three ways: Hadoop's pure-Java CBZip2
@@ -15,7 +17,7 @@ import Bzip2._
   * `bzip2` CLI (libbz2), and our own property round-trips. Both
   * directions everywhere: reference encodings through this decoder,
   * this encoder's streams through the references. */
-class Bzip2Spec extends AnyFunSuite {
+class Bzip2Spec extends AnyFunSuite with TempDirs {
 
   private def checkProp(p: Prop, n: Int = 30): Unit = {
     val res = SCTest.check(
@@ -97,7 +99,7 @@ class Bzip2Spec extends AnyFunSuite {
       "output survives bzip2 -d") {
     val bin = new java.io.File("/root/miniconda/bin/bzip2")
     assume(bin.canExecute, "bzip2 CLI not in container")
-    val dir = java.nio.file.Files.createTempDirectory("bz2ref")
+    val dir = tempPath("bz2ref")
     def run(args: String*): Int = {
       val pb = new ProcessBuilder((bin.getAbsolutePath +: args): _*)
       pb.inheritIO(); pb.start().waitFor()

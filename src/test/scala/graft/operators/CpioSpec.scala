@@ -4,12 +4,14 @@ import java.nio.file.{Files, Path}
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
+
 import Cpio._
 
 /** cpio conformance: own encode↔decode round-trips for all three
   * forms (newc, newc+CRC, odc), refereed BOTH directions against
   * libarchive's bsdcpio when present, plus hostile-input sweeps. */
-class CpioSpec extends AnyFunSuite {
+class CpioSpec extends AnyFunSuite with TempDirs {
 
   private val bsdcpio = new java.io.File("/root/miniconda/bin/bsdcpio")
 
@@ -45,7 +47,7 @@ class CpioSpec extends AnyFunSuite {
   test("bsdcpio referee: archives it builds decode here (newc + odc " +
       "+ crc); archives built here list and extract through it") {
     assume(bsdcpio.canExecute, "bsdcpio not in container")
-    val dir = Files.createTempDirectory("cpioref")
+    val dir = tempPath("cpioref")
     def run(cwd: Path, in: Option[Path], out: Option[Path],
         args: String*): Int = {
       val pb = new ProcessBuilder((bsdcpio.getAbsolutePath +: args): _*)

@@ -190,7 +190,7 @@ class DataSkippingSpec extends SparkSpec {
   }
   test("writeClusteredCached reuses an identical layout and rewrites " +
       "on any receipt mismatch") {
-    val out = java.nio.file.Files.createTempDirectory("graft_skip_cache")
+    val out = tempPath("graft_skip_cache")
       .toFile.getAbsolutePath + "/layout"
     val data = spark.range(2000).select($"id".as("k"),
       ($"id" * 3).as("v"))

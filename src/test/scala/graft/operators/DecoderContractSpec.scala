@@ -8,8 +8,9 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 
 import graft.SparkSpec
 
-/** The hostile-input contract of every decoder whose code inflates or
-  * reads fixed-width integers through [[Bytes]]: on ANY input it returns
+/** The hostile-input contract of every decoder that inflates, reads
+  * fixed-width integers or decodes prefix codes through [[Bytes]], and
+  * of the other stream codecs: on ANY input it returns
   * (`None` or a value) without throwing, within 2 s of wall clock and
   * 256 MiB allocated on the calling thread.
   *
@@ -25,11 +26,24 @@ class DecoderContractSpec extends SparkSpec {
   private val text = ("graft decoder contract " * 40).getBytes("UTF-8")
 
   private def orcFile: Array[Byte] = {
-    val dir = Files.createTempDirectory("contract_orc").toString
+    val dir = tempDir("contract_orc")
     spark.range(200).selectExpr("id", "id % 7 AS m").coalesce(1)
       .write.mode("overwrite").option("compression", "zlib").orc(dir)
     new java.io.File(dir).listFiles().filter(_.getName.endsWith(".orc"))
       .map(f => Files.readAllBytes(f.toPath)).head
+  }
+
+  private def resource(path: String): Array[Byte] = {
+    val in = getClass.getResourceAsStream(path)
+    assert(in != null, s"missing test resource $path")
+    try in.readAllBytes() finally in.close()
+  }
+
+  /** ~2 KB of letters from a 16-symbol alphabet with no repeats to
+    * match: zstd codes its literals with Huffman. */
+  private val letters: Array[Byte] = {
+    val rnd = new scala.util.Random(7)
+    Array.fill(2048)(('a' + rnd.nextInt(16)).toByte)
   }
 
   private def unzipAll(b: Array[Byte]): Option[Vector[Option[Array[Byte]]]] =
@@ -52,7 +66,37 @@ class DecoderContractSpec extends SparkSpec {
         AvroRecords.AArr(Vector.tabulate(i % 3)(j => AvroRecords.AStr(s"g$j"))))
     }
     val orc = orcFile
+    val tone = Array.tabulate(4000)(i => (3000 * math.sin(i / 9.0)).toInt)
+    val jpegImg = Jpeg.colorFixture(11L)
     Seq(
+      ("Brotli.decompress encodeFixed", Brotli.encodeFixed(text),
+        (b: Array[Byte]) => Brotli.decompress(b, 1 << 20)),
+      ("Brotli.decompress libbrotli q5", resource("/brotli/text_q5.br"),
+        (b: Array[Byte]) => Brotli.decompress(b, 1 << 20)),
+      ("Bzip2.bunzip2", Bzip2.bzip2Compress(text),
+        (b: Array[Byte]) => Bzip2.bunzip2(b)),
+      ("Jpeg.decodeJpeg baseline 4:2:0", Jpeg.encodeImageIO(jpegImg, 2, 2,
+        progressive = false), Jpeg.decodeJpeg _),
+      ("Jpeg.decodeJpeg progressive", Jpeg.encodeImageIO(jpegImg, 1, 1,
+        progressive = true), Jpeg.decodeJpeg _),
+      ("Vp8l.decodeWebpLossless own", Vp8l.encodeWebpLossless(16, 9,
+        Array.tabulate(144)(i => 0xff000000 | (i * 0x010307))),
+        Vp8l.decodeWebpLossless _),
+      ("Vp8l.decodeWebpLossless libwebp", resource("/webp/photo_64x48.webp"),
+        Vp8l.decodeWebpLossless _),
+      ("ZstdCodec.zstdDecompress stored", ZstdCodec.zstdCompressStored(text),
+        (b: Array[Byte]) => ZstdCodec.zstdDecompress(b)),
+      ("ZstdCodec.zstdDecompress zstd-jni", zstdHuffmanFrame,
+        (b: Array[Byte]) => ZstdCodec.zstdDecompress(b)),
+      ("XzCodec.xzDecompress", XzCodec.encodeXz(text),
+        (b: Array[Byte]) => XzCodec.xzDecompress(b)),
+      ("Lz4Codec.lz4Decompress", Lz4Codec.encodeLz4Literal(text),
+        (b: Array[Byte]) => Lz4Codec.lz4Decompress(b)),
+      ("SnappyCodec.decompressFramed", SnappyCodec.compressFramed(text),
+        (b: Array[Byte]) => SnappyCodec.decompressFramed(b, 1 << 20)),
+      ("SnappyCodec.decompressRaw", SnappyCodec.compressRawLiteral(text),
+        (b: Array[Byte]) => SnappyCodec.decompressRaw(b, 1 << 20)),
+      ("Flac.decodeFlac", Flac.encodeFlac(tone, 1024, 44100), Flac.decodeFlac _),
       ("Pdf.extractText", pdf, Pdf.extractText _),
       ("Pdf.decodePdf", pdf, Pdf.decodePdf _),
       ("Pdf.extractText xref stream", xrefPdf, Pdf.extractText _),
@@ -98,6 +142,21 @@ class DecoderContractSpec extends SparkSpec {
         (b: Array[Byte]) => AvroRecords.records(b)),
       ("Orc", orc, (b: Array[Byte]) =>
         Orc.parseTail(b).map(m => Orc.readColumn(b, m, "m"))))
+  }
+
+  /** A zstd-jni frame whose first block codes its literals with
+    * Huffman (literals block type 2, RFC 8878 §3.1.1.3.1). */
+  private lazy val zstdHuffmanFrame: Array[Byte] = {
+    val f = Multimodal.zstdJni(letters, 3)
+    val fhd = f(4) & 0xff
+    val single = (fhd >> 5) & 1
+    val fcs = fhd >> 6 match {
+      case 0 => single; case k => 1 << k
+    }
+    val block = 4 + 1 + (1 - single) + Array(0, 1, 2, 4)(fhd & 3) + fcs
+    assert(((f(block) >> 1) & 3) == 2, "first block is not compressed")
+    assert((f(block + 3) & 3) == 2, "literals are not Huffman-coded")
+    f
   }
 
   test("every valid blob decodes to a value") {

@@ -477,7 +477,7 @@ class DedupSpec extends SparkSpec {
 
   test("class staging leaves a readable directory for an empty class") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("classes_")
+    val dir = tempPath("classes_")
       .resolve("in").toString
     val rows = Seq((0L, "a"), (3L, "b"), (1L, "c")).toDF("doc_id", "text")
     Dedup.stageClasses(rows.withColumn("k", $"doc_id" % 3), dir, 3)

@@ -7,6 +7,8 @@ import scala.sys.process._
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
+
 import GitPack._
 
 /** Git packfile conformance, refereed by `/usr/bin/git`: packs built
@@ -14,7 +16,7 @@ import GitPack._
   * (sha, type, size) census `git cat-file --batch-check` reports, and
   * this file's emitted pack+idx pairs must pass `git verify-pack` and
   * `git index-pack`. */
-class GitPackSpec extends AnyFunSuite {
+class GitPackSpec extends AnyFunSuite with TempDirs {
 
   private val git = new java.io.File("/usr/bin/git")
 
@@ -33,7 +35,7 @@ class GitPackSpec extends AnyFunSuite {
   /** Build a real repo with delta-friendly history; return its
     * (pack bytes, idx bytes, repo path). */
   private def realRepoPack(): (Array[Byte], Array[Byte], Path) = {
-    val dir = Files.createTempDirectory("gitref")
+    val dir = tempPath("gitref")
     sh(dir, "git", "init", "-q", ".")
     val big = ("line of stable content %04d\n" * 1)
     val base = (0 until 400).map(i => f"line of stable content $i%04d")
@@ -81,7 +83,7 @@ class GitPackSpec extends AnyFunSuite {
     assume(git.canExecute, "git not in container")
     val pack = fixturePack(42L, "the quick brown fox " * 30)
     val idx = encodeIdx(pack).get
-    val dir = Files.createTempDirectory("gitmine")
+    val dir = tempPath("gitmine")
     Files.write(dir.resolve("m.pack"), pack)
     Files.write(dir.resolve("m.idx"), idx)
     sh(dir, "git", "verify-pack", "-v", dir.resolve("m.idx").toString)
@@ -175,7 +177,7 @@ class GitPackSpec extends AnyFunSuite {
   test("loose objects: git-written files decode to matching sha/type/" +
       "content; our loose files are readable by git cat-file") {
     assume(git.canExecute, "git not in container")
-    val dir = Files.createTempDirectory("gitloose")
+    val dir = tempPath("gitloose")
     sh(dir, "git", "init", "-q", ".")
     val payload = "loose content\nwith lines\n"
     Files.write(dir.resolve("f.txt"), payload.getBytes("UTF-8"))
@@ -232,7 +234,7 @@ class GitPackSpec extends AnyFunSuite {
   test("bundles: git bundle create output parses here; git clones OUR " +
       "hand-built bundle and reads the commit chain") {
     assume(git.canExecute, "git not in container")
-    val dir = Files.createTempDirectory("gitbundle")
+    val dir = tempPath("gitbundle")
     // real bundle -> our parser
     val repo = dir.resolve("src")
     Files.createDirectories(repo)

@@ -58,8 +58,7 @@ class IntervalJoinSpec extends SparkSpec {
       (2L, 1, 50.0, ts("1995-01-04")),
       (3L, 1, 10.0, ts("1995-01-04"))) // filtered: quantity < 50
       .toDF("l_orderkey", "l_linenumber", "l_quantity", "l_shipdate")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_q183_dup").toString
+    val dir = tempPath("graft_q183_dup").toString
     rows.write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
     val out = graft.SparkEntry.queries("q183_interval_overlap_join")(
       spark, dir).collect()

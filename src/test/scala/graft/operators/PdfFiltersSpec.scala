@@ -7,6 +7,8 @@ import scala.sys.process._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
+import graft.TempDirs
+
 import PdfFilters._
 
 /** PDF filter conformance. ASCII85 is refereed against CPython's
@@ -14,7 +16,7 @@ import PdfFilters._
   * binascii, FlateDecode against zlib — both directions each.
   * RunLength carries the TIFF-PackBits hand vectors plus property
   * round-trips; LZW referees live in LzwSpec. */
-class PdfFiltersSpec extends AnyFunSuite {
+class PdfFiltersSpec extends AnyFunSuite with TempDirs {
 
   private val py = {
     val mc = new java.io.File("/root/miniconda/bin/python3")
@@ -53,7 +55,7 @@ class PdfFiltersSpec extends AnyFunSuite {
 
   test("python referee: a85 and hex both directions, zlib for flate") {
     assume(py.canExecute, "python3 not in container")
-    val dir = Files.createTempDirectory("pdff")
+    val dir = tempPath("pdff")
     val data = payload(3, 5000, 7L) ++ payload(1, 37, 1L) ++
       payload(0, 333, 2L)
     Files.write(dir.resolve("raw"), data)

@@ -40,8 +40,7 @@ class SketchSpec extends SparkSpec {
     // the workflow the pattern promises at 100 TB: sketch each partition
     // once, PERSIST the binary sketch column, answer cross-cuts later
     // from the stored sketches alone — no re-scan of the base data
-    val dir = java.nio.file.Files
-      .createTempDirectory("sketches_").toString + "/sk"
+    val dir = tempPath("sketches_").toString + "/sk"
     val df = spark.range(50000).selectExpr("id % 2000 AS v", "id % 5 AS g")
     df.groupBy(col("g")).agg(expr("hll_sketch_agg(v, 14)").as("sk"))
       .write.parquet(dir)
@@ -134,8 +133,7 @@ class SketchSpec extends SparkSpec {
       "out-of-domain values to edge bins") {
     import spark.implicits._
     val (lo, hi, bins) = (0.0, 100.0, 10)
-    val dir = java.nio.file.Files
-      .createTempDirectory("qstate_").toString + "/st"
+    val dir = tempPath("qstate_").toString + "/st"
     val df = Seq((1L, -50.0), (1L, 5.0), (1L, 95.0), (1L, 250.0))
       .toDF("k", "v")
     Maintenance.quantileState(df, col("k"), col("v"), lo, hi, bins)

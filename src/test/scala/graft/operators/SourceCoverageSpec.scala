@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import graft.SparkSpec
 
 class SourceCoverageSpec extends SparkSpec {
@@ -13,7 +11,7 @@ class SourceCoverageSpec extends SparkSpec {
     val docs = Seq(
       (1L, "hello\tworld and\nmore"),
       (2L, "plain text here")).toDF("doc_id", "text")
-    val staged = Files.createTempDirectory("graft_rawtext_").toString
+    val staged = tempPath("graft_rawtext_").toString
     val r = SourceCoverage.rawTextTokenCounts(spark, docs, staged)
       .collect().map(x => (x.getLong(0), x.getLong(1))).toMap
     assert(r == Map(1L -> 4L, 2L -> 3L))
@@ -23,7 +21,7 @@ class SourceCoverageSpec extends SparkSpec {
     import spark.implicits._
     System.setProperty("derby.stream.error.file",
       s"${sys.props("java.io.tmpdir")}/graft_derby.log")
-    val db = Files.createTempDirectory("graft_jdbc_").resolve("db")
+    val db = tempPath("graft_jdbc_").resolve("db")
     val url = s"jdbc:derby:$db;create=true"
     val props = new java.util.Properties
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")

@@ -8,6 +8,8 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.tukaani.xz.{DeltaOptions, FilterOptions, LZMA2Options, XZ,
   XZInputStream, XZOutputStream}
 
+import graft.TempDirs
+
 import XzCodec._
 
 /** XZ/LZMA2 conformance, refereed by xz-java (`org.tukaani.xz`, the
@@ -17,7 +19,7 @@ import XzCodec._
   * literal-LZMA containers are accepted by the reference the other
   * direction. A third referee, the in-container `xz` CLI, cross-checks
   * both directions when present. */
-class XzCodecSpec extends AnyFunSuite {
+class XzCodecSpec extends AnyFunSuite with TempDirs {
 
   private def checkProp(p: Prop, n: Int = 40): Unit = {
     val res = SCTest.check(
@@ -143,7 +145,7 @@ class XzCodecSpec extends AnyFunSuite {
     val bin = new java.io.File("/root/miniconda/bin/xz")
     assume(bin.canExecute, "xz CLI not in container")
     val data = payload(1, 60000, 42L)
-    val dir = java.nio.file.Files.createTempDirectory("xzref")
+    val dir = tempPath("xzref")
     val raw = dir.resolve("a")
     java.nio.file.Files.write(raw, data)
     def run(args: String*): Int = {
@@ -254,7 +256,7 @@ class XzCodecSpec extends AnyFunSuite {
     // CLI cross-check
     val bin = new java.io.File("/root/miniconda/bin/xz")
     if (bin.canExecute) {
-      val dir = java.nio.file.Files.createTempDirectory("lzmaref")
+      val dir = tempPath("lzmaref")
       val raw = dir.resolve("a")
       java.nio.file.Files.write(raw, data)
       def run(args: String*): Int = {

@@ -1,7 +1,5 @@
 package graft.operators
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -33,7 +31,7 @@ class ZOrderSpec extends SparkSpec {
     // a 128x128 uniform grid of (x, y) points, written two ways
     val pts = spark.range(128 * 128)
       .select((col("id") % 128).as("x"), (col("id") / 128).cast("long").as("y"))
-    val base = Files.createTempDirectory("zorder_")
+    val base = tempPath("zorder_")
     def fileSpans(path: String): (Double, Double) = {
       val perFile = spark.read.parquet(path)
         .groupBy(input_file_name())

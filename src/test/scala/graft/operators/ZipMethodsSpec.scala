@@ -6,11 +6,13 @@ import scala.sys.process._
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs
+
 /** Modern zip compression methods (12 = bzip2, 14 = LZMA), refereed
   * by CPython's zipfile (libbz2 + liblzma under the hood): its
   * archives decode here entry-exactly, and our emitted archives
   * extract there byte-exactly. */
-class ZipMethodsSpec extends AnyFunSuite {
+class ZipMethodsSpec extends AnyFunSuite with TempDirs {
 
   private val py = {
     val mc = new java.io.File("/root/miniconda/bin/python3")
@@ -28,7 +30,7 @@ class ZipMethodsSpec extends AnyFunSuite {
   test("python-built ZIP_BZIP2 and ZIP_LZMA archives decode here " +
       "entry-exactly") {
     assume(py.canExecute, "python3 not in container")
-    val dir = Files.createTempDirectory("zipm")
+    val dir = tempPath("zipm")
     val script =
       """import zipfile, sys
         |z = zipfile.ZipFile(sys.argv[1], 'w')
@@ -54,7 +56,7 @@ class ZipMethodsSpec extends AnyFunSuite {
   test("our method-12/14 archives extract byte-exactly through " +
       "python zipfile") {
     assume(py.canExecute, "python3 not in container")
-    val dir = Files.createTempDirectory("zipm2")
+    val dir = tempPath("zipm2")
     val payload = ("emitted payload " * 300).getBytes("US-ASCII")
     val zip = Archive.encodeZipMethods(Seq(
       ("store.txt", payload, 0),

@@ -8,7 +8,7 @@ class JsonLinesSpec extends SparkSpec {
 
   test("write/read roundtrip with gzip compression and file roll") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("jsonl_").toString + "/out"
+    val dir = tempPath("jsonl_").toString + "/out"
     val df = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("id", "v")
     JsonLines.write(df.repartition(1), dir, maxRecordsPerFile = 30,
       compress = true)
@@ -22,8 +22,8 @@ class JsonLinesSpec extends SparkSpec {
 
   test("multi-dir read is an implicit UNION ALL") {
     import spark.implicits._
-    val d1 = Files.createTempDirectory("jsonl_a").toString + "/a"
-    val d2 = Files.createTempDirectory("jsonl_b").toString + "/b"
+    val d1 = tempPath("jsonl_a").toString + "/a"
+    val d2 = tempPath("jsonl_b").toString + "/b"
     JsonLines.write(Seq((1L, "x")).toDF("id", "v"), d1)
     JsonLines.write(Seq((2L, "y")).toDF("id", "v"), d2)
     assert(JsonLines.read(spark, Seq(d1, d2)).count() == 2)
@@ -31,7 +31,7 @@ class JsonLinesSpec extends SparkSpec {
 
   test("corrupt lines are quarantined, clean rows keep flowing") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("jsonl_c")
+    val dir = tempPath("jsonl_c")
     Files.writeString(dir.resolve("part-0.json"),
       """{"id": 1, "v": "ok"}
         |this is not json {{{
@@ -45,7 +45,7 @@ class JsonLinesSpec extends SparkSpec {
 
   test("kv format: [key, value] arrays roundtrip") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("jsonl_kv").toString + "/kv"
+    val dir = tempPath("jsonl_kv").toString + "/kv"
     val pairs = Seq(("tok", "3"), ("other", "{\"n\": 7}"))
       .toDF("key", "value_json")
     JsonLines.writeKv(pairs, dir)

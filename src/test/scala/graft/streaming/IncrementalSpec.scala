@@ -9,7 +9,7 @@ class IncrementalSpec extends SparkSpec {
 
   test("incremental agg: two updates equal one batch aggregate (f(A+B)=f(A)+f(B))") {
     import spark.implicits._
-    val base = Files.createTempDirectory("inc_")
+    val base = tempPath("inc_")
     val input = base.resolve("in").toString
     new java.io.File(input).mkdirs()
 
@@ -37,7 +37,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("state pointer flip is an atomic rename: replaces existing, no temp left") {
-    val dir = Files.createTempDirectory("ptr_")
+    val dir = tempPath("ptr_")
     val pointer = dir.resolve("_LATEST")
     IncrementalAgg.flipPointer(pointer, "v0")
     assert(Files.readString(pointer) == "v0")

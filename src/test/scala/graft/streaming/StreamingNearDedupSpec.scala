@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
@@ -28,7 +26,7 @@ class StreamingNearDedupSpec extends SparkSpec {
 
     // two arriving files -> two deterministic micro-batches
     // (maxFilesPerTrigger=1; modification times force the order)
-    val srcDir = Files.createTempDirectory("neardup_src_")
+    val srcDir = tempPath("neardup_src_")
     val batch1 = Seq((1L, base)).toDF("doc_id", "text")
     val batch2 = Seq((11L, base), (12L, nearDup), (13L, fresh))
       .toDF("doc_id", "text")
@@ -36,9 +34,9 @@ class StreamingNearDedupSpec extends SparkSpec {
     Thread.sleep(1100) // distinct mtime seconds -> stable file order
     batch2.coalesce(1).write.parquet(srcDir.resolve("b2").toString)
 
-    val outDir = Files.createTempDirectory("neardup_out_").toString
-    val idxDir = Files.createTempDirectory("neardup_idx_").toString
-    val ckpt = Files.createTempDirectory("neardup_ckpt_").toString
+    val outDir = tempPath("neardup_out_").toString
+    val idxDir = tempPath("neardup_idx_").toString
+    val ckpt = tempPath("neardup_ckpt_").toString
     val schema = batch1.schema
 
     def runStream(): Unit = {
