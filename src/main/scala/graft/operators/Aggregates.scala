@@ -16,9 +16,6 @@ import graft.engine.Tables
   * at all (SURVEY §2 Table B marks them absent).
   */
 object Aggregates {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ----- distinct ------------------------------------------------------
@@ -26,7 +23,7 @@ object Aggregates {
       "q14_distinct_segments",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "customer")
+        Tables.load(s, dir, "customer")
           .select($"c_mktsegment", $"c_nationkey")
           .distinct()
           .orderBy($"c_mktsegment", $"c_nationkey")
@@ -44,7 +41,7 @@ object Aggregates {
       "q15_dedup_first_order_per_customer",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "orders")
+        Tables.load(s, dir, "orders")
           .groupBy($"o_custkey")
           .agg(min(struct($"o_orderdate", $"o_orderkey")).as("first"))
           .select($"o_custkey", $"first.o_orderkey".as("first_orderkey"),
@@ -70,7 +67,7 @@ object Aggregates {
       "q16_approx_count_distinct",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "lineitem")
+        Tables.load(s, dir, "lineitem")
           .groupBy($"l_returnflag")
           .agg(
             approx_count_distinct($"l_partkey", 0.02).as("_approx"),
@@ -95,7 +92,7 @@ object Aggregates {
       "q17_rollup_flag_status",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "lineitem")
+        Tables.load(s, dir, "lineitem")
           .rollup($"l_returnflag", $"l_linestatus")
           .agg(
             round(sum($"l_quantity"), 4).as("sum_qty"),
@@ -114,7 +111,7 @@ object Aggregates {
       "q18_cube_status_priority",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "orders")
+        Tables.load(s, dir, "orders")
           .cube($"o_orderstatus", $"o_orderpriority")
           .agg(
             // money sums as integer cents (the sf1 lesson — see q01):
@@ -142,7 +139,7 @@ object Aggregates {
       "q19_grouping_sets",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "orders")
+        Tables.load(s, dir, "orders")
           .groupingSets(
             Seq(Seq($"o_orderstatus"), Seq($"o_orderpriority")),
             $"o_orderstatus", $"o_orderpriority")
@@ -163,9 +160,9 @@ object Aggregates {
       "q20_union_all",
       (s, dir) => {
         import s.implicits._
-        val hi = t(s, dir, "orders").filter($"o_totalprice" > 450000.0)
+        val hi = Tables.load(s, dir, "orders").filter($"o_totalprice" > 450000.0)
           .select($"o_orderkey", lit("high").as("bucket"))
-        val lo = t(s, dir, "orders").filter($"o_totalprice" < 10000.0)
+        val lo = Tables.load(s, dir, "orders").filter($"o_totalprice" < 10000.0)
           .select($"o_orderkey", lit("low").as("bucket"))
         hi.unionByName(lo).orderBy($"o_orderkey", $"bucket")
       },
@@ -180,8 +177,8 @@ object Aggregates {
       "q21_intersect_nations",
       (s, dir) => {
         import s.implicits._
-        val cn = t(s, dir, "customer").select($"c_nationkey".as("nationkey"))
-        val sn = t(s, dir, "supplier").select($"s_nationkey".as("nationkey"))
+        val cn = Tables.load(s, dir, "customer").select($"c_nationkey".as("nationkey"))
+        val sn = Tables.load(s, dir, "supplier").select($"s_nationkey".as("nationkey"))
         cn.intersect(sn).orderBy($"nationkey")
       },
       Some("""
@@ -195,8 +192,8 @@ object Aggregates {
       "q22_except_nations",
       (s, dir) => {
         import s.implicits._
-        val cn = t(s, dir, "customer").select($"c_nationkey".as("nationkey"))
-        val sn = t(s, dir, "supplier").select($"s_nationkey".as("nationkey"))
+        val cn = Tables.load(s, dir, "customer").select($"c_nationkey".as("nationkey"))
+        val sn = Tables.load(s, dir, "supplier").select($"s_nationkey".as("nationkey"))
         cn.except(sn).orderBy($"nationkey")
       },
       Some("""
@@ -210,7 +207,7 @@ object Aggregates {
       "q23_having_active_customers",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "orders")
+        Tables.load(s, dir, "orders")
           .groupBy($"o_custkey")
           .agg(count(lit(1)).as("n_orders"),
             round(sum($"o_totalprice"), 4).as("lifetime"))
@@ -230,7 +227,7 @@ object Aggregates {
       "q24_stats_by_segment",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "customer")
+        Tables.load(s, dir, "customer")
           .groupBy($"c_mktsegment")
           .agg(
             countDistinct($"c_nationkey").as("n_nations"),
@@ -270,7 +267,7 @@ object Aggregates {
       "q164_hll_sketch_merge",
       (s, dir) => {
         import s.implicits._
-        val li = t(s, dir, "lineitem")
+        val li = Tables.load(s, dir, "lineitem")
         // stage 1: one sketch per group — at scale these few-KB rows are
         // what persists, not the 100 TB of base rows behind them
         val perGroup = li.groupBy($"l_returnflag")
@@ -312,7 +309,7 @@ object Aggregates {
       "q236_sketch_intersection",
       (s, dir) => {
         import s.implicits._
-        val e = t(s, dir, "events")
+        val e = Tables.load(s, dir, "events")
           .filter($"event_type".isin("click", "purchase"))
           .select($"event_type", $"user_id")
         val perSeg = e.groupBy($"event_type")
@@ -368,7 +365,7 @@ object Aggregates {
       (s, dir) => {
         import s.implicits._
         val eps = 0.05
-        val toks = t(s, dir, "documents")
+        val toks = Tables.load(s, dir, "documents")
           .select($"source", explode(split($"text", " ")).as("tok"))
           .filter($"tok" =!= "")
         val perSrc = toks.groupBy($"source")
@@ -404,7 +401,7 @@ object Aggregates {
       "q180_regression_stats",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "lineitem").groupBy($"l_returnflag")
+        Tables.load(s, dir, "lineitem").groupBy($"l_returnflag")
           .agg(count(lit(1)).as("n"),
             round(corr($"l_extendedprice", $"l_quantity"), 4).as("r"),
             round(covar_samp($"l_extendedprice", $"l_quantity"), 4).as("cov_s"),

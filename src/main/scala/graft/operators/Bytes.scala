@@ -65,6 +65,14 @@ object Bytes {
     } finally inf.end()
   }
 
+  /** CRC-32 (ISO-HDLC, the zip/gzip/PNG/XZ/git-idx polynomial) of
+    * `b(off until off + len)`. */
+  def crc32(b: Array[Byte], off: Int, len: Int): Long = {
+    val c = new java.util.zip.CRC32
+    c.update(b, off, len)
+    c.getValue
+  }
+
   // ---- fixed-width readers -------------------------------------------
 
   def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff

@@ -181,10 +181,30 @@ object DataSkipping {
     }
   }
 
-  /** File-path range scan against an INCREMENTALLY-maintained manifest
-    * ([[graft.streaming.IncrementalManifest]]): rows are (f, n_rows,
-    * mn, mx) with `f` a concrete file path; intersecting files are
-    * opened directly. Same metadata-plane collect contract. */
+  /** The partial of an incrementally-maintained per-FILE manifest
+    * ([[graft.streaming.Incremental]] with [[mergeFileManifest]]): one
+    * (f, n_rows, mn, mx) row per file of `batch`, each newly-arrived
+    * file scanned exactly once for its stats. Ingest appends files,
+    * the index pass stats ONLY the new ones, and every range query
+    * thereafter prunes against the manifest without re-scanning
+    * history ([[skippingFileRangeScan]]). */
+  def fileManifest(batch: DataFrame, statsCol: String): DataFrame =
+    batch.withColumn("f", input_file_name())
+      .groupBy(col("f"))
+      .agg(count(lit(1)).as("n_rows"),
+        min(col(statsCol)).as("mn"), max(col(statsCol)).as("mx"))
+
+  /** Fold per-file manifests: a file lives in exactly one arrival
+    * batch, so this plain keyed re-aggregate never double-counts. */
+  def mergeFileManifest(prev: DataFrame, delta: DataFrame): DataFrame =
+    prev.unionByName(delta)
+      .groupBy(col("f"))
+      .agg(sum(col("n_rows")).as("n_rows"),
+        min(col("mn")).as("mn"), max(col("mx")).as("mx"))
+
+  /** File-path range scan against a [[fileManifest]]: rows are (f,
+    * n_rows, mn, mx) with `f` a concrete file path; intersecting files
+    * are opened directly. Same metadata-plane collect contract. */
   def skippingFileRangeScan(spark: SparkSession, manifest: DataFrame,
       statsCol: String, lo: Long, hi: Long,
       emptyLike: => DataFrame,
@@ -208,7 +228,7 @@ object DataSkipping {
   }
 
   /** Snapshot diff between two retained manifest versions
-    * ([[graft.streaming.IncrementalManifest.stateAt]]): which files
+    * ([[graft.streaming.Incremental.stateAt]]): which files
     * were added/removed, and a frame reading ONLY the added files —
     * incremental consumption of an append-only table (the change-feed
     * read Delta/Iceberg expose, re-derived from manifests alone; no

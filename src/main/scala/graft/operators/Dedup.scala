@@ -53,9 +53,6 @@ import graft.engine.{Materialize, Tables}
   * round labels) is freed before return.
   */
 object Dedup {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   /** First 15 hex digits of md5 as a non-negative long (60 bits) —
     * identical in DuckDB as CAST(concat('0x', substring(md5(x),1,15)) AS
     * BIGINT). The shared cross-engine hash primitive. */
@@ -1137,7 +1134,7 @@ object Dedup {
 
     QueryDef(
       "q41_dedup_exact",
-      (s, dir) => exact(t(s, dir, "documents")).orderBy(col("keep_doc_id")),
+      (s, dir) => exact(Tables.load(s, dir, "documents")).orderBy(col("keep_doc_id")),
       Some("""
         SELECT md5(text) AS digest, min(doc_id) AS keep_doc_id,
                count(*) AS n_copies
@@ -1147,7 +1144,7 @@ object Dedup {
 
     QueryDef(
       "q42_dedup_ngram_jaccard",
-      (s, dir) => jaccardPairs(t(s, dir, "documents"), 0.8)
+      (s, dir) => jaccardPairs(Tables.load(s, dir, "documents"), 0.8)
         .orderBy(col("id1"), col("id2")),
       Some("""
         WITH sh AS (
@@ -1172,7 +1169,7 @@ object Dedup {
 
     QueryDef(
       "q43_dedup_minhash_lsh",
-      (s, dir) => minhashLshPairs(t(s, dir, "documents"), 0.8)
+      (s, dir) => minhashLshPairs(Tables.load(s, dir, "documents"), 0.8)
         .orderBy(col("id1"), col("id2")),
       Some(minhashOracle("""
         SELECT id1, id2, jaccard FROM j
@@ -1181,7 +1178,7 @@ object Dedup {
 
     QueryDef(
       "q44_dedup_simhash",
-      (s, dir) => simhash(t(s, dir, "documents")).orderBy(col("doc_id")),
+      (s, dir) => simhash(Tables.load(s, dir, "documents")).orderBy(col("doc_id")),
       Some("""
         WITH tok AS (
           SELECT doc_id,
@@ -1207,7 +1204,7 @@ object Dedup {
 
     QueryDef(
       "q140_simhash_pairs",
-      (s, dir) => simhashPairs(t(s, dir, "documents"), maxHamming = 3)
+      (s, dir) => simhashPairs(Tables.load(s, dir, "documents"), maxHamming = 3)
         .orderBy(col("id1"), col("id2")),
       Some("""
         WITH tok AS (
@@ -1247,7 +1244,7 @@ object Dedup {
     // per-band popcount distance
     QueryDef(
       "q151_simhash64_pairs",
-      (s, dir) => simhash64Pairs(t(s, dir, "documents"), maxHamming = 3)
+      (s, dir) => simhash64Pairs(Tables.load(s, dir, "documents"), maxHamming = 3)
         .orderBy(col("id1"), col("id2")),
       Some("""
         WITH tok AS (
@@ -1287,7 +1284,7 @@ object Dedup {
 
     QueryDef(
       "q45_dedup_embedding_cosine",
-      (s, dir) => embeddingNearDupPairs(t(s, dir, "embeddings"), 0.45)
+      (s, dir) => embeddingNearDupPairs(Tables.load(s, dir, "embeddings"), 0.45)
         .orderBy(col("id1"), col("id2")),
       Some("""
         WITH e AS (
@@ -1312,7 +1309,7 @@ object Dedup {
     // result compares exactly
     QueryDef(
       "q86_dedup_embedding_lsh",
-      (s, dir) => embeddingNearDupLshPairs(t(s, dir, "embeddings"), 0.45)
+      (s, dir) => embeddingNearDupLshPairs(Tables.load(s, dir, "embeddings"), 0.45)
         .orderBy(col("id1"), col("id2")),
       // replays the 64-plane signature as 8 bands x 8 bits; the plane
       // matrix is a 4096-row CTE (md5 computed once per (m, i), not per
@@ -1368,7 +1365,7 @@ object Dedup {
     // SQL — only the candidate-generation plan differs
     QueryDef(
       "q101_jaccard_prefix_filter",
-      (s, dir) => jaccardPrefixPairs(t(s, dir, "documents"), 0.8)
+      (s, dir) => jaccardPrefixPairs(Tables.load(s, dir, "documents"), 0.8)
         .orderBy(col("id1"), col("id2")),
       Some("""
         WITH sh AS (
@@ -1398,7 +1395,7 @@ object Dedup {
       "q100_dedup_components",
       (s, dir) => {
         import s.implicits._
-        val pairs = minhashLshPairs(t(s, dir, "documents"), 0.8)
+        val pairs = minhashLshPairs(Tables.load(s, dir, "documents"), 0.8)
           .select($"id1", $"id2")
         connectedComponents(pairs)
           .withColumn("cluster_size",
@@ -1426,11 +1423,11 @@ object Dedup {
       "q202_golden_record",
       (s, dir) => {
         import s.implicits._
-        val pairs = minhashLshPairs(t(s, dir, "documents"), 0.8)
+        val pairs = minhashLshPairs(Tables.load(s, dir, "documents"), 0.8)
           .select($"id1", $"id2")
         val comp = connectedComponents(pairs)
         val members = comp
-          .join(t(s, dir, "documents"), $"id" === col("doc_id"))
+          .join(Tables.load(s, dir, "documents"), $"id" === col("doc_id"))
           .select($"comp", $"doc_id", $"source", $"lang", $"n_chars")
         goldenRecords(members).orderBy($"component")
       },
@@ -1478,7 +1475,7 @@ object Dedup {
       "q165_cluster_aware_split",
       (s, dir) => {
         import s.implicits._
-        val docs = t(s, dir, "documents")
+        val docs = Tables.load(s, dir, "documents")
         val pairs = minhashLshPairs(docs, 0.8).select($"id1", $"id2")
         val comp = connectedComponents(pairs)
           .select($"id".as("doc_id"), $"comp")
@@ -1518,7 +1515,7 @@ object Dedup {
     // directional containment (quote/subset detection) over documents
     QueryDef(
       "q130_semantic_dedup",
-      (s, dir) => semanticDedup(t(s, dir, "embeddings"),
+      (s, dir) => semanticDedup(Tables.load(s, dir, "embeddings"),
         col("vec_id") % 29 === 3, 0.45).orderBy(col("vec_id")),
       Some("""
         WITH e AS (
@@ -1564,7 +1561,7 @@ object Dedup {
     // the variant that also BOUNDS any single shingle's contribution.
     QueryDef(
       "q114_containment_pairs",
-      (s, dir) => containmentPrefixPairs(t(s, dir, "documents"), 0.8)
+      (s, dir) => containmentPrefixPairs(Tables.load(s, dir, "documents"), 0.8)
         .orderBy(col("src"), col("dst")),
       Some("""
         WITH sh AS (
@@ -1597,7 +1594,7 @@ object Dedup {
     // contribution is bounded at cap² regardless of corpus size.
     QueryDef(
       "q221_containment_df_cut",
-      (s, dir) => containmentPairs(t(s, dir, "documents"), 0.8,
+      (s, dir) => containmentPairs(Tables.load(s, dir, "documents"), 0.8,
         maxShingleFreq = Some(40))
         .orderBy(col("src"), col("dst")),
       Some("""
@@ -1630,7 +1627,7 @@ object Dedup {
     // boilerplate shingle mining (df histogram head)
     QueryDef(
       "q115_boilerplate_ngrams",
-      (s, dir) => boilerplateShingles(t(s, dir, "documents"),
+      (s, dir) => boilerplateShingles(Tables.load(s, dir, "documents"),
         minDf = 5, topK = 20),
       Some("""
         WITH sh AS (
@@ -1656,7 +1653,7 @@ object Dedup {
     // (unit-cost insert/delete/substitute), so distances compare exactly
     QueryDef(
       "q108_fuzzy_match_blocked",
-      (s, dir) => fuzzyMatchBlocked(t(s, dir, "customer"),
+      (s, dir) => fuzzyMatchBlocked(Tables.load(s, dir, "customer"),
         Seq("c_nationkey", "c_mktsegment"), "c_custkey", "c_name",
         maxDistance = 2)
         .orderBy(col("id1"), col("id2")),
@@ -1680,7 +1677,7 @@ object Dedup {
       "q152_incremental_neardup",
       (s, dir) => {
         import s.implicits._
-        val docs = t(s, dir, "documents")
+        val docs = Tables.load(s, dir, "documents")
         incrementalNearDedup(
           docs.filter($"doc_id" % 2 === 1),
           minhashBandIndex(docs.filter($"doc_id" % 2 === 0)),
@@ -1706,7 +1703,7 @@ object Dedup {
 
     QueryDef(
       "q75_dedup_corpus",
-      (s, dir) => dropNearDuplicates(t(s, dir, "documents"), 0.8)
+      (s, dir) => dropNearDuplicates(Tables.load(s, dir, "documents"), 0.8)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .orderBy(col("doc_id")),
       Some(minhashOracle("""
@@ -1719,7 +1716,7 @@ object Dedup {
     // >= 2 docs, keep the unique remainder of every document
     QueryDef(
       "q156_span_dedup",
-      (s, dir) => spanDedup(t(s, dir, "documents"), 8)
+      (s, dir) => spanDedup(Tables.load(s, dir, "documents"), 8)
         .orderBy(col("doc_id")),
       Some("""
         WITH t AS (SELECT doc_id, string_split(text, ' ') AS ts FROM documents),
@@ -1756,7 +1753,7 @@ object Dedup {
       "q162_incremental_job_pipeline",
       (s, dir) => {
         import s.implicits._
-        val docs = t(s, dir, "documents")
+        val docs = Tables.load(s, dir, "documents")
         // fixed per-fixture root, cleared on entry: repeated in-session
         // invocations (Verify + Bench first pass + a stall retry) reuse
         // one footprint instead of leaking a fresh tmpfs copy each time

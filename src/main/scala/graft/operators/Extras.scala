@@ -12,9 +12,6 @@ import graft.functions.WeightedAverage
   * TF-IDF.
   */
 object Extras {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ----- KNN via the native codegen'd cosine Expression ----------------
@@ -26,7 +23,7 @@ object Extras {
       "q61_knn_native_expr",
       (s, dir) => {
         import s.implicits._
-        val e = t(s, dir, "embeddings").select($"vec_id", $"embedding")
+        val e = Tables.load(s, dir, "embeddings").select($"vec_id", $"embedding")
         val queries = e.filter($"vec_id" < 5).toDF("qid", "qv")
         val cands = e.filter($"vec_id" >= 5).toDF("cid", "cv")
         val w = Window.partitionBy($"qid").orderBy($"cosine".desc, $"cid")
@@ -65,7 +62,7 @@ object Extras {
       "q62_aggregator_weighted_avg",
       (s, dir) => {
         import s.implicits._
-        val li = t(s, dir, "lineitem")
+        val li = Tables.load(s, dir, "lineitem")
           .select($"l_returnflag", $"l_extendedprice", $"l_quantity")
           .as[(String, Double, Double)]
         li.groupByKey(_._1)
@@ -92,7 +89,7 @@ object Extras {
       "q63_sample_hash",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "orders")
+        Tables.load(s, dir, "orders")
           .filter(
             conv(substring(md5($"o_orderkey".cast("string")), 1, 15), 16, 10)
               .cast("long") % 100 < 10)
@@ -120,7 +117,7 @@ object Extras {
       "q64_sample_seeded",
       (s, dir) => {
         import s.implicits._
-        val o = t(s, dir, "orders")
+        val o = Tables.load(s, dir, "orders")
         def sampled() = o
           .sample(withReplacement = false, fraction = 0.1, seed = 42L)
           .select($"o_orderkey")
@@ -157,7 +154,7 @@ object Extras {
         val rate = when($"o_orderpriority" === "1-URGENT", lit(30))
           .when($"o_orderpriority" === "2-HIGH", lit(20))
           .otherwise(lit(5))
-        t(s, dir, "orders")
+        Tables.load(s, dir, "orders")
           .filter(bucket < rate)
           .select($"o_orderkey", $"o_orderpriority",
             round($"o_totalprice", 4).as("price"))
@@ -185,7 +182,7 @@ object Extras {
         val bucket =
           conv(substring(md5($"doc_id".cast("string")), 1, 15), 16, 10)
             .cast("long") % 100
-        t(s, dir, "documents")
+        Tables.load(s, dir, "documents")
           .select($"doc_id", $"lang",
             when(bucket < 80, "train")
               .when(bucket < 90, "val")
@@ -216,7 +213,7 @@ object Extras {
       "q65_pivot_status",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "orders")
+        Tables.load(s, dir, "orders")
           .groupBy($"o_orderpriority")
           // money cells in integer CENTS (MoneyGuard discipline): a
           // Double sum over ~100k rows per pivot cell is partition-
@@ -248,7 +245,7 @@ object Extras {
       "q66_scalar_subquery",
       (s, dir) => {
         import s.implicits._
-        val o = t(s, dir, "orders")
+        val o = Tables.load(s, dir, "orders")
         val avgPrice = o.agg(avg($"o_totalprice").as("global_avg"))
         o.join(broadcast(avgPrice))
           .filter($"o_totalprice" > $"global_avg" * 1.5)
@@ -268,7 +265,7 @@ object Extras {
       "q67_tfidf_top_term",
       (s, dir) => {
         import s.implicits._
-        val docs = t(s, dir, "documents")
+        val docs = Tables.load(s, dir, "documents")
         val nDocs = docs.select(countDistinct($"doc_id").as("n_docs"))
         val tokens = docs
           .select($"doc_id", explode(split($"text", " ")).as("token"))
@@ -316,9 +313,9 @@ object Extras {
       "q68_set_ops_all",
       (s, dir) => {
         import s.implicits._
-        val hi = t(s, dir, "orders").filter($"o_totalprice" > 200000.0)
+        val hi = Tables.load(s, dir, "orders").filter($"o_totalprice" > 200000.0)
           .select($"o_custkey")
-        val recent = t(s, dir, "orders")
+        val recent = Tables.load(s, dir, "orders")
           .filter($"o_orderdate" >= lit("1998-01-01").cast("timestamp"))
           .select($"o_custkey")
         hi.intersectAll(recent)
@@ -375,7 +372,7 @@ object Extras {
       "q70_correlated_subquery",
       (s, dir) => {
         import s.implicits._
-        val o = t(s, dir, "orders")
+        val o = Tables.load(s, dir, "orders")
         val custAvg = o.groupBy($"o_custkey".as("ck"))
           .agg(avg($"o_totalprice").as("cust_avg"))
         // the average itself is not emitted: a float mean rounded to 4dp
@@ -399,7 +396,7 @@ object Extras {
       "q71_unpivot",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "lineitem")
+        Tables.load(s, dir, "lineitem")
           .groupBy($"l_returnflag")
           .agg(
             round(sum($"l_quantity"), 4).as("qty"),
@@ -433,13 +430,13 @@ object Extras {
       "q72_nation_trade_volume",
       (s, dir) => {
         import s.implicits._
-        val li = t(s, dir, "lineitem")
-        val o = t(s, dir, "orders")
-        val c = t(s, dir, "customer")
-        val sup = t(s, dir, "supplier")
-        val n1 = t(s, dir, "nation").select(
+        val li = Tables.load(s, dir, "lineitem")
+        val o = Tables.load(s, dir, "orders")
+        val c = Tables.load(s, dir, "customer")
+        val sup = Tables.load(s, dir, "supplier")
+        val n1 = Tables.load(s, dir, "nation").select(
           $"n_nationkey".as("s_nk"), $"n_name".as("supp_nation"))
-        val n2 = t(s, dir, "nation").select(
+        val n2 = Tables.load(s, dir, "nation").select(
           $"n_nationkey".as("c_nk"), $"n_name".as("cust_nation"))
         // supplier/customer are SF-scaled — broadcast hints only on the
         // two fixed-size nation lookups
@@ -479,7 +476,7 @@ object Extras {
       "q73_percentiles",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "customer")
+        Tables.load(s, dir, "customer")
           .groupBy($"c_mktsegment")
           .agg(
             round(expr("percentile(c_acctbal, 0.5)"), 4).as("p50"),
@@ -503,8 +500,8 @@ object Extras {
       "q74_salted_join",
       (s, dir) => {
         import s.implicits._
-        val o = t(s, dir, "orders")
-        val c = t(s, dir, "customer")
+        val o = Tables.load(s, dir, "orders")
+        val c = Tables.load(s, dir, "customer")
           .select($"c_custkey", $"c_mktsegment")
         SkewJoin.saltedInnerJoin(o, c, "o_custkey", "c_custkey", salt = 4)
           .groupBy($"c_mktsegment")
@@ -535,7 +532,7 @@ object Extras {
       "q119_numeric_histogram",
       (s, dir) => {
         import s.implicits._
-        val o = t(s, dir, "orders").select($"o_totalprice".as("v"))
+        val o = Tables.load(s, dir, "orders").select($"o_totalprice".as("v"))
         val stats = o.agg(min($"v").as("lo"), max($"v").as("hi"))
         o.crossJoin(broadcast(stats))
           .withColumn("bin",
@@ -583,7 +580,7 @@ object Extras {
         val q = $"l_quantity".cast("decimal(9,0)")
         val p = round($"l_extendedprice" * 100).cast("decimal(12,0)")
         val d = (c: Column) => c.cast("double")
-        t(s, dir, "lineitem")
+        Tables.load(s, dir, "lineitem")
           .select($"l_returnflag", q.as("q"), p.as("p"))
           .groupBy($"l_returnflag")
           .agg(count(lit(1)).as("n"),
@@ -632,7 +629,7 @@ object Extras {
       "q149_approx_percentile",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "events")
+        Tables.load(s, dir, "events")
           .groupBy($"event_type")
           .agg(
             expr("approx_percentile(value, 0.5, 1000)").as("_a50"),
@@ -671,7 +668,7 @@ object Extras {
       "q148_equidepth_histogram",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "orders")
+        Tables.load(s, dir, "orders")
           .select($"o_totalprice".as("v"), $"o_orderkey")
           .withColumn("bucket",
             ntile(10).over(Window.orderBy($"v", $"o_orderkey")).cast("int"))
@@ -710,7 +707,7 @@ object Extras {
         val wt = Window.partitionBy($"event_type")
           .orderBy($"ts".asc_nulls_last, $"event_id")
         val d = (c: Column) => c.cast("double")
-        t(s, dir, "events")
+        Tables.load(s, dir, "events")
           .select($"event_type", $"event_id", $"ts", $"value")
           .withColumn("rx", row_number().over(wv).cast("decimal(12,0)"))
           .withColumn("ry", row_number().over(wt).cast("decimal(12,0)"))
@@ -765,7 +762,7 @@ object Extras {
       "q118_ewma_per_user",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "events")
+        Tables.load(s, dir, "events")
           .groupBy($"user_id")
           .agg(sort_array(collect_list(
             struct($"ts", $"event_id", $"value"))).as("evs"))
@@ -792,7 +789,7 @@ object Extras {
     QueryDef(
       "q106_skew_profile",
       (s, dir) => SkewJoin.keySkewProfile(
-        t(s, dir, "lineitem"), "l_suppkey", topK = 20),
+        Tables.load(s, dir, "lineitem"), "l_suppkey", topK = 20),
       Some("""
         WITH c AS (SELECT l_suppkey AS key, CAST(count(*) AS BIGINT) AS cnt
                    FROM lineitem GROUP BY 1),

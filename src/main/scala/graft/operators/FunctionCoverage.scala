@@ -11,9 +11,6 @@ import graft.engine.Tables
   * direct DuckDB spelling so the oracle is exact.
   */
 object FunctionCoverage {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ----- array construction / reshaping --------------------------------
@@ -21,7 +18,7 @@ object FunctionCoverage {
       "q76_array_ops",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "documents")
+        Tables.load(s, dir, "documents")
           .filter($"doc_id" < 50)
           .withColumn("tk", filter(split($"text", " "), x => length(x) > 0))
           .select(
@@ -58,7 +55,7 @@ object FunctionCoverage {
       "q77_datetime_extended",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "events")
+        Tables.load(s, dir, "events")
           .filter($"event_id" < 300)
           .select(
             $"event_id",
@@ -91,7 +88,7 @@ object FunctionCoverage {
       "q78_string_extended",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "part")
+        Tables.load(s, dir, "part")
           .filter($"p_partkey" < 500)
           .select(
             $"p_partkey",
@@ -135,7 +132,7 @@ object FunctionCoverage {
       "q159_variant_json",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "events")
+        Tables.load(s, dir, "events")
           .withColumn("v", parse_json($"props"))
           .withColumn("k", variant_get($"v", "$.k", "long"))
           .filter($"k".isNotNull)
@@ -176,7 +173,7 @@ object FunctionCoverage {
       "q160_collated_group",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "documents")
+        Tables.load(s, dir, "documents")
           .filter($"source".rlike("^[\\x00-\\x7F]*$"))
           .withColumn("src_mixed",
             when($"doc_id" % 2 === 0, upper($"source")).otherwise($"source"))

@@ -5,7 +5,7 @@ import java.io.ByteArrayOutputStream
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
-import graft.operators.Bytes.u32be
+import graft.operators.Bytes.{crc32, u32be}
 
 /** Git packfile + pack-index DECODER — pure JVM, from the public
   * format documentation (git's Documentation/gitformat-pack.txt).
@@ -56,12 +56,6 @@ object GitPack {
 
   private def objectSha(otype: String, content: Array[Byte]): String =
     sha1Hex(s"$otype ${content.length}".getBytes("US-ASCII") :+ 0.toByte, content)
-
-  private def crc32(b: Array[Byte], off: Int, len: Int): Long = {
-    val c = new java.util.zip.CRC32
-    c.update(b, off, len)
-    c.getValue
-  }
 
   /** Inflate one zlib stream starting at `off`; the declared
     * uncompressed length must match exactly. Returns (data, consumed

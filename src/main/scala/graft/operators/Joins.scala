@@ -22,9 +22,6 @@ import graft.engine.Tables
   * executor OOM instead of a graceful shuffle.
   */
 object Joins {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ----- inner equi-join chain + agg: revenue per nation -------------
@@ -37,10 +34,10 @@ object Joins {
       "q03_join_revenue_by_nation",
       (s, dir) => {
         import s.implicits._
-        val li = t(s, dir, "lineitem")
-        val o = t(s, dir, "orders")
-        val c = t(s, dir, "customer")
-        val n = t(s, dir, "nation")
+        val li = Tables.load(s, dir, "lineitem")
+        val o = Tables.load(s, dir, "orders")
+        val c = Tables.load(s, dir, "customer")
+        val n = Tables.load(s, dir, "nation")
         li.join(o, $"l_orderkey" === $"o_orderkey")
           .join(c, $"o_custkey" === $"c_custkey")
           .join(broadcast(n), $"c_nationkey" === $"n_nationkey")
@@ -66,8 +63,8 @@ object Joins {
       "q04_left_join_order_items",
       (s, dir) => {
         import s.implicits._
-        val o = t(s, dir, "orders")
-        val li = t(s, dir, "lineitem").filter($"l_quantity" >= 45.0)
+        val o = Tables.load(s, dir, "orders")
+        val li = Tables.load(s, dir, "lineitem").filter($"l_quantity" >= 45.0)
         o.join(li, $"o_orderkey" === $"l_orderkey", "left")
           .groupBy($"o_orderkey")
           .agg(
@@ -90,8 +87,8 @@ object Joins {
       "q05_semi_join_big_spenders",
       (s, dir) => {
         import s.implicits._
-        val c = t(s, dir, "customer")
-        val o = t(s, dir, "orders").filter($"o_totalprice" > 400000.0)
+        val c = Tables.load(s, dir, "customer")
+        val o = Tables.load(s, dir, "orders").filter($"o_totalprice" > 400000.0)
         c.join(o, $"c_custkey" === $"o_custkey", "left_semi")
           .select($"c_custkey", $"c_name", $"c_mktsegment")
           .orderBy($"c_custkey")
@@ -108,8 +105,8 @@ object Joins {
       "q06_anti_join_no_big_order",
       (s, dir) => {
         import s.implicits._
-        val c = t(s, dir, "customer")
-        val o = t(s, dir, "orders").filter($"o_totalprice" > 400000.0)
+        val c = Tables.load(s, dir, "customer")
+        val o = Tables.load(s, dir, "orders").filter($"o_totalprice" > 400000.0)
         c.join(o, $"c_custkey" === $"o_custkey", "left_anti")
           .select($"c_custkey", $"c_acctbal")
           .orderBy($"c_custkey")
@@ -126,9 +123,9 @@ object Joins {
       "q07_full_outer_nation_counts",
       (s, dir) => {
         import s.implicits._
-        val cust = t(s, dir, "customer")
+        val cust = Tables.load(s, dir, "customer")
           .groupBy($"c_nationkey".as("nationkey")).agg(count(lit(1)).as("n_customers"))
-        val supp = t(s, dir, "supplier")
+        val supp = Tables.load(s, dir, "supplier")
           .groupBy($"s_nationkey".as("nationkey")).agg(count(lit(1)).as("n_suppliers"))
         cust.join(supp, Seq("nationkey"), "full_outer")
           .select(
@@ -153,8 +150,8 @@ object Joins {
       "q08_cross_join_region_nation",
       (s, dir) => {
         import s.implicits._
-        val r = t(s, dir, "region").select($"r_name")
-        val n = t(s, dir, "nation").select($"n_name")
+        val r = Tables.load(s, dir, "region").select($"r_name")
+        val n = Tables.load(s, dir, "nation").select($"n_name")
         r.crossJoin(n)
           .select($"r_name", $"n_name")
           .orderBy($"r_name", $"n_name")
@@ -174,8 +171,8 @@ object Joins {
       "q09_broadcast_join_brand_revenue",
       (s, dir) => {
         import s.implicits._
-        val li = t(s, dir, "lineitem")
-        val p = t(s, dir, "part")
+        val li = Tables.load(s, dir, "lineitem")
+        val p = Tables.load(s, dir, "part")
         li.join(p, $"l_partkey" === $"p_partkey")
           .groupBy($"p_brand")
           .agg(
@@ -200,7 +197,7 @@ object Joins {
         import s.implicits._
         val bands = Seq((1.0, 10.0, "low"), (11.0, 25.0, "mid"), (26.0, 50.0, "high"))
           .toDF("lo", "hi", "band")
-        t(s, dir, "lineitem")
+        Tables.load(s, dir, "lineitem")
           .join(broadcast(bands), $"l_quantity" >= $"lo" && $"l_quantity" <= $"hi")
           .groupBy($"band")
           .agg(
@@ -234,7 +231,7 @@ object Joins {
       "q11_asof_join_last_click",
       (s, dir) => {
         import s.implicits._
-        val ev = t(s, dir, "events")
+        val ev = Tables.load(s, dir, "events")
         val purchases = ev.filter($"event_type" === "purchase")
           .select($"user_id", $"ts", $"event_id", lit(null).cast("timestamp").as("c_ts"),
             lit(1).as("is_p"))
@@ -270,7 +267,7 @@ object Joins {
       (s, dir) => {
         import s.implicits._
         val tolUs = 2L * 86400000000L // 2 days
-        val ev = t(s, dir, "events")
+        val ev = Tables.load(s, dir, "events")
         val purchases = ev.filter($"event_type" === "purchase")
           .select($"user_id", $"ts", $"event_id",
             lit(null).cast("timestamp").as("c_ts"), lit(1).as("is_p"))
@@ -302,10 +299,10 @@ object Joins {
       "q12_top_unshipped_orders",
       (s, dir) => {
         import s.implicits._
-        val c = t(s, dir, "customer").filter($"c_mktsegment" === "BUILDING")
-        val o = t(s, dir, "orders")
+        val c = Tables.load(s, dir, "customer").filter($"c_mktsegment" === "BUILDING")
+        val o = Tables.load(s, dir, "orders")
           .filter($"o_orderdate" < lit("1999-01-01").cast("timestamp"))
-        val li = t(s, dir, "lineitem")
+        val li = Tables.load(s, dir, "lineitem")
           .filter($"l_shipdate" > lit("1999-01-01").cast("timestamp"))
         // customer is SF-scaled (even segment-filtered it grows with SF)
         // — no forced broadcast, AQE decides
@@ -334,14 +331,14 @@ object Joins {
       "q13_local_supplier_volume",
       (s, dir) => {
         import s.implicits._
-        val li = t(s, dir, "lineitem")
-        val o = t(s, dir, "orders")
+        val li = Tables.load(s, dir, "lineitem")
+        val o = Tables.load(s, dir, "orders")
           .filter($"o_orderdate" >= lit("1996-01-01").cast("timestamp") &&
             $"o_orderdate" < lit("1999-01-01").cast("timestamp"))
-        val c = t(s, dir, "customer")
-        val sup = t(s, dir, "supplier")
-        val n = t(s, dir, "nation")
-        val r = t(s, dir, "region").filter($"r_name" === "ASIA")
+        val c = Tables.load(s, dir, "customer")
+        val sup = Tables.load(s, dir, "supplier")
+        val n = Tables.load(s, dir, "nation")
+        val r = Tables.load(s, dir, "region").filter($"r_name" === "ASIA")
         // customer/supplier are SF-scaled — no forced broadcast on them
         li.join(o, $"l_orderkey" === $"o_orderkey")
           .join(c, $"o_custkey" === $"c_custkey")
@@ -393,10 +390,10 @@ object Joins {
         val prev = confs.map { case (k, _) => k -> s.conf.getOption(k) }
         confs.foreach { case (k, v) => s.conf.set(k, v) }
         try {
-          val o = t(s, dir, "orders")
+          val o = Tables.load(s, dir, "orders")
             .filter($"o_orderpriority" === "1-URGENT")
             .select($"o_orderkey", $"o_orderpriority")
-          t(s, dir, "lineitem")
+          Tables.load(s, dir, "lineitem")
             .select($"l_orderkey", $"l_returnflag", $"l_quantity")
             .join(o, $"l_orderkey" === $"o_orderkey")
             .groupBy($"l_returnflag")
@@ -498,7 +495,7 @@ object Joins {
     * is unique under the fixture's duplicate keys (see q183 notes). */
   private def shipmentWindows(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    t(s, dir, "lineitem")
+    Tables.load(s, dir, "lineitem")
       .filter($"l_quantity" >= 50)
       .select(($"l_orderkey" * 10 + $"l_linenumber").as("k"),
         expr("CAST(datediff(to_date(l_shipdate), date'1970-01-01') AS BIGINT)")

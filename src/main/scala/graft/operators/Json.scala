@@ -174,11 +174,35 @@ object Json {
         count(lit(1)).as("n_values"))
   }
 
+  /** Fold two censuses by keyed sum — the merge of an incrementally
+    * maintained census ([[graft.streaming.Incremental]] with
+    * [[schemaProfile]] as the partial): docs live in exactly one
+    * arrival batch, so the fold never double-counts, and the state
+    * stays schema-sized at any corpus size. */
+  def mergeCensus(prev: DataFrame, delta: DataFrame): DataFrame =
+    prev.unionByName(delta)
+      .groupBy(col("path"), col("type"))
+      .agg(sum(col("n_docs")).as("n_docs"),
+        sum(col("n_values")).as("n_values"))
+
+  /** Drift between two versions of a cumulative census (an
+    * append-only corpus: counts never shrink). A (path, type) is `new`
+    * (absent before), `stale` (count stopped growing — the field
+    * stopped arriving: a rename or drop on the producer side), or
+    * `growing` (healthy). A type shift surfaces as a stale+new pair
+    * on one path. */
+  def censusDrift(older: DataFrame, newer: DataFrame): DataFrame =
+    censusOuter(older, newer)
+      .withColumn("status",
+        when(col("n_docs_a") === 0, "new")
+          .when(col("n_docs_b") === col("n_docs_a"), "stale")
+          .otherwise("growing"))
+
   /** Full outer of two censuses on (path, type) with zero-filled doc
-    * counts — the one scaffold under [[schemaDrift]] and the
-    * incremental maintainer's version drift, so a fix to the join or
-    * null handling cannot miss one of them. */
-  private[graft] def censusOuter(profileA: DataFrame,
+    * counts — the one scaffold under [[schemaDrift]] and
+    * [[censusDrift]], so a fix to the join or null handling cannot
+    * miss one of them. */
+  private def censusOuter(profileA: DataFrame,
       profileB: DataFrame): DataFrame = {
     val a = profileA.select(col("path"), col("type"),
       col("n_docs").as("n_docs_a"))

@@ -228,6 +228,18 @@ object Maintenance {
         round(sum((col("pr") - col("pc")) * log(col("pr") / col("pc"))), 4)
           .as("psi"))
 
+  /** The drift SERIES over retained state versions, oldest first (q245
+    * generalized past its consecutive pair): every adjacent pair
+    * (v_i, v_{i+1}) yields a per-key [[psiDrift]], tagged with its fold
+    * index — "which arrival batch moved each key's distribution, and
+    * by how much", computed entirely from on-disk histograms (no
+    * period re-read). None before two versions exist. */
+  def driftSeries(states: Seq[DataFrame]): Option[DataFrame] =
+    if (states.size < 2) None
+    else Some(states.zip(states.tail).zipWithIndex.map { case ((a, b), i) =>
+      psiDrift(a, b).withColumn("fold", lit(i + 1).cast("long"))
+    }.reduce(_.unionByName(_)))
+
   /** Shared drift scaffolding ([[psiDrift]] / [[hellingerJsFromStates]]
     * / [[psiFromHeavyHitters]]): full-outer the two states' cells on
     * (k, idCol), zero-fill both sides (and the oob counters when the
@@ -660,9 +672,6 @@ object Maintenance {
   // fixture-bound oracle queries
   // ------------------------------------------------------------------
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   /** Equi-depth range-partition bounds from a single-key quantile
     * STATE ([[quantileState]]) — the sketch-driven range partitioner
     * that makes a 100 TB global sort / sorted write possible: one
@@ -765,9 +774,9 @@ object Maintenance {
       (s, dir) => {
         import s.implicits._
         val cut = lit("1997-07-01").cast("timestamp")
-        val o = t(s, dir, "orders")
+        val o = Tables.load(s, dir, "orders")
           .select($"o_orderkey".as("okey"), $"o_orderdate")
-        val l = t(s, dir, "lineitem")
+        val l = Tables.load(s, dir, "lineitem")
           .select($"l_orderkey".as("okey"), $"l_linenumber", $"l_shipdate")
         joinDelta(
           o.filter($"o_orderdate" < cut), o.filter($"o_orderdate" >= cut),
@@ -799,7 +808,7 @@ object Maintenance {
       "q182_incremental_agg_state",
       (s, dir) => {
         import s.implicits._
-        val o = t(s, dir, "orders").select($"o_custkey",
+        val o = Tables.load(s, dir, "orders").select($"o_custkey",
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"),
           year($"o_orderdate").as("yr"))
         val b1 = aggState(o.filter($"yr" <= 1994), $"o_custkey", $"cents")
@@ -834,7 +843,7 @@ object Maintenance {
       "q189_incremental_distinct_state",
       (s, dir) => {
         import s.implicits._
-        val o = t(s, dir, "orders").select($"o_custkey",
+        val o = Tables.load(s, dir, "orders").select($"o_custkey",
           $"o_orderpriority".as("pri"), year($"o_orderdate").as("yr"))
         def sk(df: org.apache.spark.sql.DataFrame) =
           df.groupBy($"o_custkey")
@@ -870,7 +879,7 @@ object Maintenance {
         import s.implicits._
         val (lo, hi, bins) = (0.0, 500000.0, 500)
         val wid = (hi - lo) / bins
-        val o = t(s, dir, "orders").select($"o_custkey",
+        val o = Tables.load(s, dir, "orders").select($"o_custkey",
           $"o_totalprice".as("v"), year($"o_orderdate").as("yr"))
         def st(df: org.apache.spark.sql.DataFrame) =
           quantileState(df, $"o_custkey", $"v", lo, hi, bins)
@@ -932,7 +941,7 @@ object Maintenance {
         import s.implicits._
         val (lo, hi, bins) = (0.0, 1000.0, 200)
         val st = weightedQuantileState(
-          t(s, dir, "documents"),
+          Tables.load(s, dir, "documents"),
           $"lang", $"n_chars".cast("double"),
           size(expr("filter(split(text, ' '), x -> x != '')")).cast("long"),
           lo, hi, bins)
@@ -981,7 +990,7 @@ object Maintenance {
       (s, dir) => {
         import s.implicits._
         val (lo, hi, bins) = (0.0, 500000.0, 500)
-        val o = t(s, dir, "orders").select($"o_orderpriority".as("pri"),
+        val o = Tables.load(s, dir, "orders").select($"o_orderpriority".as("pri"),
           $"o_totalprice".as("v"), year($"o_orderdate").as("yr"))
         def st(df: org.apache.spark.sql.DataFrame) =
           quantileState(df, $"pri", $"v", lo, hi, bins)
@@ -1031,7 +1040,7 @@ object Maintenance {
       (s, dir) => {
         import s.implicits._
         val (lo, hi, bins) = (0.0, 500000.0, 500)
-        val o = t(s, dir, "orders").select($"o_orderpriority".as("pri"),
+        val o = Tables.load(s, dir, "orders").select($"o_orderpriority".as("pri"),
           $"o_totalprice".as("v"), year($"o_orderdate").as("yr"))
         def st(df: org.apache.spark.sql.DataFrame) =
           quantileState(df, $"pri", $"v", lo, hi, bins)
@@ -1084,7 +1093,7 @@ object Maintenance {
         import s.implicits._
         val (lo, hi, bins) = (0.0, 100000.0, 100)
         val wid = (hi - lo) / bins
-        val o = t(s, dir, "orders").select($"o_custkey",
+        val o = Tables.load(s, dir, "orders").select($"o_custkey",
           $"o_totalprice".as("v"), year($"o_orderdate").as("yr"))
         def st(df: org.apache.spark.sql.DataFrame) =
           quantileState(df, $"o_custkey", $"v", lo, hi, bins)
@@ -1129,7 +1138,7 @@ object Maintenance {
       "q187_retractable_agg_state",
       (s, dir) => {
         import s.implicits._
-        val o = t(s, dir, "orders").select($"o_custkey",
+        val o = Tables.load(s, dir, "orders").select($"o_custkey",
           expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"),
           year($"o_orderdate").as("yr"))
         def st(df: org.apache.spark.sql.DataFrame, sg: Int) =
@@ -1167,7 +1176,7 @@ object Maintenance {
       (s, dir) => {
         import s.implicits._
         val kk = 32
-        val li = t(s, dir, "lineitem").select($"l_returnflag".as("rf"),
+        val li = Tables.load(s, dir, "lineitem").select($"l_returnflag".as("rf"),
           $"l_suppkey", year($"l_shipdate").as("yr"))
         def st(df: org.apache.spark.sql.DataFrame) =
           bottomKState(df, $"rf", $"l_suppkey", kk)
@@ -1223,7 +1232,7 @@ object Maintenance {
       (s, dir) => {
         import s.implicits._
         val m = 8
-        val li = t(s, dir, "lineitem").select($"l_returnflag".as("rf"),
+        val li = Tables.load(s, dir, "lineitem").select($"l_returnflag".as("rf"),
           $"l_suppkey", year($"l_shipdate").as("yr"))
         def st(df: org.apache.spark.sql.DataFrame) =
           heavyHitterState(df, $"rf", $"l_suppkey", m)
@@ -1300,7 +1309,7 @@ object Maintenance {
       "q277_quantile_auto_domain",
       (s, dir) => {
         import s.implicits._
-        val o = t(s, dir, "orders").select($"o_custkey",
+        val o = Tables.load(s, dir, "orders").select($"o_custkey",
           $"o_totalprice".as("v"))
         val (st, lo, hi) =
           quantileStateAutoDomain(o, $"o_custkey", $"v", bins = 500)
@@ -1351,7 +1360,7 @@ object Maintenance {
       (s, dir) => {
         import s.implicits._
         val kk = 48
-        val li = t(s, dir, "lineitem").select($"l_returnflag".as("rf"),
+        val li = Tables.load(s, dir, "lineitem").select($"l_returnflag".as("rf"),
           $"l_suppkey", year($"l_shipdate").as("yr"))
         def st(df: org.apache.spark.sql.DataFrame) =
           bottomKState(df, $"rf", $"l_suppkey", kk)
@@ -1431,7 +1440,7 @@ object Maintenance {
       (s, dir) => {
         import s.implicits._
         val m = 8
-        val li = t(s, dir, "lineitem").select($"l_returnflag".as("rf"),
+        val li = Tables.load(s, dir, "lineitem").select($"l_returnflag".as("rf"),
           $"l_suppkey", year($"l_shipdate").as("yr"))
         def st(df: org.apache.spark.sql.DataFrame) =
           heavyHitterState(df, $"rf", $"l_suppkey", m)
@@ -1501,7 +1510,7 @@ object Maintenance {
       (s, dir) => {
         import s.implicits._
         val (lo, hi, bins) = (0.0, 500000.0, 500)
-        val o = t(s, dir, "orders").select($"o_orderpriority".as("pri"),
+        val o = Tables.load(s, dir, "orders").select($"o_orderpriority".as("pri"),
           $"o_totalprice".as("v"), year($"o_orderdate").as("yr"))
         def st(df: org.apache.spark.sql.DataFrame) =
           quantileState(df, $"pri", $"v", lo, hi, bins)

@@ -183,9 +183,6 @@ object Quality {
     shards.select(col("shard"), col("hash"), col("n_docs")).unionAll(root)
   }
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // dedup-quality evaluation: planted truth clusters of 3 consecutive
@@ -201,7 +198,7 @@ object Quality {
       "q314_dedup_pair_eval",
       (s, dir) => {
         import s.implicits._
-        val planted = t(s, dir, "documents")
+        val planted = Tables.load(s, dir, "documents")
           .select($"doc_id", $"text")
           .as[(Long, String)]
           .groupByKey { case (id, _) => id / 6 }
@@ -262,7 +259,7 @@ object Quality {
       "q316_dataset_fingerprint",
       (s, dir) => {
         import s.implicits._
-        Quality.datasetFingerprint(t(s, dir, "documents"),
+        Quality.datasetFingerprint(Tables.load(s, dir, "documents"),
           "doc_id", "text", shardSpan = 100L)
           .orderBy($"shard")
       },
@@ -291,8 +288,8 @@ object Quality {
       "q186_quality_rules",
       (s, dir) => {
         import s.implicits._
-        val o = t(s, dir, "orders")
-        val c = t(s, dir, "customer")
+        val o = Tables.load(s, dir, "orders")
+        val c = Tables.load(s, dir, "customer")
         val rowRules = checkRules(o, Seq(
           "orderdate_not_null" -> $"o_orderdate".isNull,
           "priority_domain" -> !$"o_orderpriority".isin(
@@ -345,7 +342,7 @@ object Quality {
       "q285_k_anonymity",
       (s, dir) => {
         import s.implicits._
-        val prepared = t(s, dir, "customer")
+        val prepared = Tables.load(s, dir, "customer")
           .select($"c_custkey",
             $"c_nationkey".as("nation"),
             floor($"c_acctbal" / 2000.0).cast("int").as("band"))
@@ -375,7 +372,7 @@ object Quality {
     // an Observation riding the keep-filter's one scan
     QueryDef(
       "q204_observe_metrics",
-      (s, dir) => observedCuration(t(s, dir, "documents"),
+      (s, dir) => observedCuration(Tables.load(s, dir, "documents"),
         minChars = 200L, keepLangs = Seq("en", "de", "fr", "es")),
       Some("""
         SELECT count(*) AS n_rows,

@@ -21,9 +21,6 @@ import graft.engine.Tables
   * Spark plan and the oracle SQL.
   */
 object Relational {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ----- aggregation: the TPC-H Q1 pricing summary (SURVEY §7 M1b) ---
@@ -50,7 +47,7 @@ object Relational {
         val rows = graft.engine.MoneyGuard.tableRows(Some(s), dir, "lineitem")
         val money = (c: org.apache.spark.sql.Column, unit: Long) =>
           graft.engine.MoneyGuard.moneySum(c, unit, rows, 200000.0)
-        t(s, dir, "lineitem")
+        Tables.load(s, dir, "lineitem")
           .filter($"l_shipdate" <= lit("2000-12-01").cast("timestamp"))
           .groupBy($"l_returnflag", $"l_linestatus")
           .agg(
@@ -103,7 +100,7 @@ object Relational {
         import s.implicits._
         val d6 = (c: org.apache.spark.sql.Column) =>
           c.cast("decimal(38,6)")
-        t(s, dir, "lineitem")
+        Tables.load(s, dir, "lineitem")
           .filter($"l_shipdate" <= lit("2000-12-01").cast("timestamp"))
           .groupBy($"l_returnflag", $"l_linestatus")
           .agg(
@@ -138,7 +135,7 @@ object Relational {
       "q02_filter_project",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "orders")
+        Tables.load(s, dir, "orders")
           .filter(
             $"o_orderstatus".isin("O", "F") &&
             $"o_totalprice" > 100000.0 &&

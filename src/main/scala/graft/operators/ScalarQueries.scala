@@ -13,9 +13,6 @@ import graft.engine.Tables
   * UDFs anywhere, so everything stays inside WholeStageCodegen.
   */
 object ScalarQueries {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ----- string functions ------------------------------------------------
@@ -23,7 +20,7 @@ object ScalarQueries {
       "q33_string_functions",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "part")
+        Tables.load(s, dir, "part")
           .select(
             $"p_partkey",
             upper($"p_name").as("uname"),
@@ -60,7 +57,7 @@ object ScalarQueries {
       "q34_math_functions",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "customer")
+        Tables.load(s, dir, "customer")
           .select(
             $"c_custkey",
             round(abs($"c_acctbal"), 4).as("abs_bal"),
@@ -97,7 +94,7 @@ object ScalarQueries {
       "q35_date_functions",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "orders")
+        Tables.load(s, dir, "orders")
           .filter($"o_orderkey" < 2000)
           .select(
             $"o_orderkey",
@@ -135,7 +132,7 @@ object ScalarQueries {
       "q36_case_null_handling",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "customer")
+        Tables.load(s, dir, "customer")
           .select(
             $"c_custkey",
             when($"c_acctbal" < 0, "overdrawn")
@@ -164,7 +161,7 @@ object ScalarQueries {
       "q37_json_extraction",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "events")
+        Tables.load(s, dir, "events")
           .withColumn("k", get_json_object($"props", "$.k").cast("int"))
           .groupBy($"event_type")
           .agg(
@@ -191,7 +188,7 @@ object ScalarQueries {
       "q38_array_higher_order",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "embeddings")
+        Tables.load(s, dir, "embeddings")
           .filter($"vec_id" < 100)
           .select(
             $"vec_id",
@@ -225,7 +222,7 @@ object ScalarQueries {
       "q39_explode_tokens_positional",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "documents")
+        Tables.load(s, dir, "documents")
           .filter($"doc_id" < 20)
           .select($"doc_id", posexplode(split($"text", " ")))
           .toDF("doc_id", "pos", "token")
@@ -250,7 +247,7 @@ object ScalarQueries {
       "q40_map_functions",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "events")
+        Tables.load(s, dir, "events")
           .filter($"event_id" < 500)
           .withColumn("m", map(lit("type"), $"event_type",
             lit("uid"), $"user_id".cast("string")))

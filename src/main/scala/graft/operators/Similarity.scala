@@ -33,9 +33,6 @@ import graft.engine.{Materialize, Tables}
   * hot path.
   */
 object Similarity {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   private val Planes = 8
 
   // ------------------------------------------------------------------
@@ -533,7 +530,7 @@ object Similarity {
         // holds the shortlist/corpus ratio at 2.5% beyond; the count is
         // one metadata-plane scalar per run, and re-rank cost stays
         // shortlist-bounded per probe.
-        val e = t(s, dir, "embeddings")
+        val e = Tables.load(s, dir, "embeddings")
         val shortlist = math.max(50L, e.count() / 40L).toInt
         pqProbeRecalls(e,
           m = 4, k = 16, iters = 3, nProbes = 5, topK = 10,
@@ -549,7 +546,7 @@ object Similarity {
     // the int8 vector (raw arrays would break the driver's pandas sort).
     QueryDef(
       "q105_embedding_quantize",
-      (s, dir) => quantizeInt8(t(s, dir, "embeddings"))
+      (s, dir) => quantizeInt8(Tables.load(s, dir, "embeddings"))
         .orderBy(col("vec_id")),
       Some("""
         WITH e AS (
@@ -580,7 +577,7 @@ object Similarity {
     // ----- brute-force cosine top-k (exact baseline) ---------------------
     QueryDef(
       "q46_knn_bruteforce",
-      (s, dir) => bruteForceTopK(t(s, dir, "embeddings"),
+      (s, dir) => bruteForceTopK(Tables.load(s, dir, "embeddings"),
         col("vec_id") < 5, 3).orderBy(col("qid"), col("rk")),
       Some("""
         WITH e AS (
@@ -609,7 +606,7 @@ object Similarity {
     // exactly.
     QueryDef(
       "q47_knn_lsh",
-      (s, dir) => lshTopK(t(s, dir, "embeddings"), col("vec_id") < 5, 3)
+      (s, dir) => lshTopK(Tables.load(s, dir, "embeddings"), col("vec_id") < 5, 3)
         .orderBy(col("qid"), col("rk")),
       Some("""
         WITH e AS (
@@ -650,7 +647,7 @@ object Similarity {
     // their own Voronoi cell.
     QueryDef(
       "q90_knn_ivf",
-      (s, dir) => ivfTopK(t(s, dir, "embeddings"),
+      (s, dir) => ivfTopK(Tables.load(s, dir, "embeddings"),
         col("vec_id") % 29 === 3, col("vec_id") < 5, 3)
         .orderBy(col("qid"), col("rk")),
       Some("""
@@ -699,7 +696,7 @@ object Similarity {
     // the oracle replays the identical probe-set expansion.
     QueryDef(
       "q98_knn_lsh_multiprobe",
-      (s, dir) => lshTopKMultiProbe(t(s, dir, "embeddings"),
+      (s, dir) => lshTopKMultiProbe(Tables.load(s, dir, "embeddings"),
         col("vec_id") < 5, 3).orderBy(col("qid"), col("rk")),
       Some("""
         WITH e AS (
@@ -746,7 +743,7 @@ object Similarity {
     // oracle still passes.
     QueryDef(
       "q153_ann_recall",
-      (s, dir) => annRecallAtK(t(s, dir, "embeddings"), col("vec_id") < 5, 3)
+      (s, dir) => annRecallAtK(Tables.load(s, dir, "embeddings"), col("vec_id") < 5, 3)
         .orderBy(col("qid")),
       Some("""
         WITH e AS (
@@ -805,7 +802,7 @@ object Similarity {
     // on the exact 1e-6 integer grid — bit-identical across engines
     QueryDef(
       "q158_kmeans_clusters",
-      (s, dir) => kmeansClusters(t(s, dir, "embeddings"), 4, 2)
+      (s, dir) => kmeansClusters(Tables.load(s, dir, "embeddings"), 4, 2)
         .orderBy(col("vec_id")),
       Some("""
         WITH e AS (
@@ -860,7 +857,7 @@ object Similarity {
     // component rows
     QueryDef(
       "q226_power_iteration_pc",
-      (s, dir) => topPrincipalComponent(t(s, dir, "embeddings"), iters = 3)
+      (s, dir) => topPrincipalComponent(Tables.load(s, dir, "embeddings"), iters = 3)
         .orderBy(col("i")),
       Some(s"""
         WITH comp AS (
@@ -891,7 +888,7 @@ object Similarity {
     // sort. Ties broken by vec_id for cross-engine determinism.
     QueryDef(
       "q228_pca_outliers",
-      (s, dir) => pcaOutliers(t(s, dir, "embeddings"), iters = 3, topN = 20),
+      (s, dir) => pcaOutliers(Tables.load(s, dir, "embeddings"), iters = 3, topN = 20),
       Some(s"""
         WITH comp AS (
           SELECT vec_id,
@@ -930,7 +927,7 @@ object Similarity {
         // fanned out: the inline() explodes each vector to d(d+1)/2 pair
         // rows and the covariance partial-agg runs in the same stage —
         // serialized by an under-parallel scan without this
-        t(s, dir, "embeddings").fanout
+        Tables.load(s, dir, "embeddings").fanout
           .select(expr(
             """inline(flatten(transform(sequence(1, size(embedding)),
                  i -> transform(sequence(i, size(embedding)),

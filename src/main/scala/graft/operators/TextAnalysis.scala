@@ -18,9 +18,6 @@ import graft.engine.{Materialize, Tables}
   * aggregations.
   */
 object TextAnalysis {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   /** Non-empty whitespace tokens. */
   private def toks(c: Column): Column =
     filter(split(c, " "), x => length(x) > 0)
@@ -1346,7 +1343,7 @@ object TextAnalysis {
         import s.implicits._
         val emailRe = "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]{2,}"
         val phoneRe = "\\d{3}-\\d{3}-\\d{4}"
-        t(s, dir, "documents")
+        Tables.load(s, dir, "documents")
           .select($"doc_id",
             concat($"text", lit(" contact user"), $"doc_id",
               lit("@example.com or call 555-867-"),
@@ -1397,7 +1394,7 @@ object TextAnalysis {
         val grams = concat(tokens,
           filter(zip_with(tokens, slice(tokens, 2, 1 << 30),
             (a, b) => concat(a, lit("_"), b)), x => x.isNotNull))
-        t(s, dir, "documents")
+        Tables.load(s, dir, "documents")
           .select($"doc_id", explode(grams).as("f"))
           .withColumn("b", pmod(h60($"f"), lit(d)))
           // deterministic pseudo-weights in [-1000, 1000]: md5 of the
@@ -1444,7 +1441,7 @@ object TextAnalysis {
     // deterministic top-N: n desc then pair; 'pair' is unique per group
     QueryDef(
       "q175_bpe_pair_stats",
-      (s, dir) => bpePairStats(t(s, dir, "documents"), topN = 50),
+      (s, dir) => bpePairStats(Tables.load(s, dir, "documents"), topN = 50),
       Some("""
         WITH toks AS (
           SELECT unnest(string_split_regex(lower(text), '[^a-z]+')) AS w
@@ -1463,7 +1460,7 @@ object TextAnalysis {
     // generated 10-stage unrolled replay (bpeMergesOracle).
     QueryDef(
       "q218_bpe_merge_loop",
-      (s, dir) => bpeMerges(t(s, dir, "documents"), nMerges = 10),
+      (s, dir) => bpeMerges(Tables.load(s, dir, "documents"), nMerges = 10),
       Some(bpeMergesOracle(10))),
 
     // train-then-encode: derive the merge table on the corpus (the
@@ -1473,7 +1470,7 @@ object TextAnalysis {
     QueryDef(
       "q230_bpe_encode",
       (s, dir) => {
-        val docs = t(s, dir, "documents")
+        val docs = Tables.load(s, dir, "documents")
         val merges = bpeMerges(docs, nMerges = 8)
           .orderBy(col("step")).collect()
           .map(r => (r.getString(1), r.getString(2))).toSeq
@@ -1496,7 +1493,7 @@ object TextAnalysis {
       "q240_html_main_text",
       (s, dir) => {
         import s.implicits._
-        val pages = t(s, dir, "documents")
+        val pages = Tables.load(s, dir, "documents")
           .select($"doc_id", $"text")
           .fanout.as[(Long, String)]
           .map { case (id, text) =>
@@ -1550,7 +1547,7 @@ object TextAnalysis {
       "q242_outlink_host_graph",
       (s, dir) => {
         import s.implicits._
-        val pages = t(s, dir, "documents")
+        val pages = Tables.load(s, dir, "documents")
           .select($"doc_id")
           .fanout.as[Long]
           .map { id =>
@@ -1597,7 +1594,7 @@ object TextAnalysis {
       "q243_crawl_host_pagerank",
       (s, dir) => {
         import s.implicits._
-        val pages = t(s, dir, "documents")
+        val pages = Tables.load(s, dir, "documents")
           .select($"doc_id")
           .fanout.as[Long]
           .map { id =>
@@ -1659,7 +1656,7 @@ object TextAnalysis {
       "q247_url_normalize_dedup",
       (s, dir) => {
         import s.implicits._
-        val urls = t(s, dir, "documents")
+        val urls = Tables.load(s, dir, "documents")
           .select($"doc_id")
           .fanout.as[Long]
           .flatMap { id =>
@@ -1711,7 +1708,7 @@ object TextAnalysis {
             else "")
           (s"host$h.example", base)
         }.toDF("host", "robots_txt")
-        val urls = t(s, dir, "documents")
+        val urls = Tables.load(s, dir, "documents")
           .select($"doc_id")
           .fanout.as[Long]
           .map { id =>
@@ -1759,7 +1756,7 @@ object TextAnalysis {
       "q256_html_table_extract",
       (s, dir) => {
         import s.implicits._
-        val pages = t(s, dir, "documents")
+        val pages = Tables.load(s, dir, "documents")
           .select($"doc_id")
           .fanout.as[Long]
           .map { id =>
@@ -1812,7 +1809,7 @@ object TextAnalysis {
       "q257_html_page_metadata",
       (s, dir) => {
         import s.implicits._
-        val pages = t(s, dir, "documents")
+        val pages = Tables.load(s, dir, "documents")
           .select($"doc_id")
           .fanout.as[Long]
           .map { id =>
@@ -1848,7 +1845,7 @@ object TextAnalysis {
 
     QueryDef(
       "q176_inverted_index",
-      (s, dir) => invertedIndex(t(s, dir, "documents"), topN = 100),
+      (s, dir) => invertedIndex(Tables.load(s, dir, "documents"), topN = 100),
       Some("""
         WITH t AS (
           SELECT doc_id, unnest(string_split(text, ' ')) AS term
@@ -1872,7 +1869,7 @@ object TextAnalysis {
     // mismatch.
     QueryDef(
       "q267_wordpiece_encode",
-      (s, dir) => wordPieceEncode(t(s, dir, "documents"), WordPieceVocab)
+      (s, dir) => wordPieceEncode(Tables.load(s, dir, "documents"), WordPieceVocab)
         .orderBy(col("doc_id")),
       Some(wordPieceOracle(WordPieceVocab))),
 
@@ -1888,7 +1885,7 @@ object TextAnalysis {
     // hash mismatch.
     QueryDef(
       "q328_unigram_lm_encode",
-      (s, dir) => unigramEncode(t(s, dir, "documents"))
+      (s, dir) => unigramEncode(Tables.load(s, dir, "documents"))
         .orderBy(col("doc_id")),
       Some(unigramOracle())),
 
@@ -1901,7 +1898,7 @@ object TextAnalysis {
       "q268_sentence_segmentation",
       (s, dir) => {
         import s.implicits._
-        val prose = t(s, dir, "documents")
+        val prose = Tables.load(s, dir, "documents")
           .select($"doc_id", $"text")
           .fanout.as[(Long, String)]
           .map { case (id, text) =>
@@ -1956,7 +1953,7 @@ object TextAnalysis {
       (s, dir) => {
         import s.implicits._
         val W = 8
-        val pages = t(s, dir, "documents")
+        val pages = Tables.load(s, dir, "documents")
           .select($"doc_id",
             concat(lit("h"), ($"doc_id" % 7).cast("string")).as("host"),
             toks($"text").as("ws"))
@@ -2035,7 +2032,7 @@ object TextAnalysis {
       "q286_unicode_canonical_dedup",
       (s, dir) => {
         import s.implicits._
-        val raw = t(s, dir, "documents")
+        val raw = Tables.load(s, dir, "documents")
           .select($"doc_id", ($"doc_id" % 4).as("m"),
             expr("doc_id div 4").cast("string").as("b"))
           .select($"doc_id",
@@ -2093,7 +2090,7 @@ object TextAnalysis {
       "q289_char_entropy",
       (s, dir) => {
         import s.implicits._
-        charEntropy(t(s, dir, "documents")).orderBy($"doc_id")
+        charEntropy(Tables.load(s, dir, "documents")).orderBy($"doc_id")
       },
       Some("""
         WITH pos AS (
@@ -2125,7 +2122,7 @@ object TextAnalysis {
       "q288_pay_level_domain",
       (s, dir) => {
         import s.implicits._
-        val hosts = t(s, dir, "documents")
+        val hosts = Tables.load(s, dir, "documents")
           .select($"doc_id",
             expr("doc_id div 6").cast("string").as("i"),
             ($"doc_id" % 6).as("m"))
@@ -2188,7 +2185,7 @@ object TextAnalysis {
       "q269_sitemap_parse",
       (s, dir) => {
         import s.implicits._
-        val rows = t(s, dir, "documents")
+        val rows = Tables.load(s, dir, "documents")
           .select($"doc_id")
           .as[Long]
           .groupByKey(_ % 11)
@@ -2236,7 +2233,7 @@ object TextAnalysis {
       "q275_crawl_frontier_gate",
       (s, dir) => {
         import s.implicits._
-        val urls = t(s, dir, "documents")
+        val urls = Tables.load(s, dir, "documents")
           .select($"doc_id")
           .as[Long]
           .groupByKey(_ % 11)

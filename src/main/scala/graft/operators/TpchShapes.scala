@@ -19,9 +19,6 @@ import graft.engine.Tables
   * plan shapes (what the optimizer must do) are unchanged.
   */
 object TpchShapes {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ----- Q10 shape: top returners in a quarter -------------------------
@@ -29,12 +26,12 @@ object TpchShapes {
       "q80_returned_item_customers",
       (s, dir) => {
         import s.implicits._
-        val li = t(s, dir, "lineitem").filter($"l_returnflag" === "R")
-        val o = t(s, dir, "orders")
+        val li = Tables.load(s, dir, "lineitem").filter($"l_returnflag" === "R")
+        val o = Tables.load(s, dir, "orders")
           .filter($"o_orderdate" >= lit("1997-01-01").cast("timestamp") &&
             $"o_orderdate" < lit("1997-07-01").cast("timestamp"))
-        val c = t(s, dir, "customer")
-        val n = t(s, dir, "nation")
+        val c = Tables.load(s, dir, "customer")
+        val n = Tables.load(s, dir, "nation")
         // broadcast hint only on fixed-size nation; customer is SF-scaled
         // (a forced broadcast is an executor OOM at SF 100k) — its join
         // strategy is AQE's call
@@ -66,11 +63,11 @@ object TpchShapes {
       "q81_promo_revenue_share",
       (s, dir) => {
         import s.implicits._
-        val li = t(s, dir, "lineitem")
+        val li = Tables.load(s, dir, "lineitem")
           .filter($"l_shipdate" >= lit("1997-01-01").cast("timestamp") &&
             $"l_shipdate" < lit("1998-01-01").cast("timestamp"))
         // part is SF-scaled — no forced broadcast, AQE decides
-        val p = t(s, dir, "part")
+        val p = Tables.load(s, dir, "part")
         li.join(p, $"l_partkey" === $"p_partkey")
           .agg(
             round(
@@ -97,12 +94,12 @@ object TpchShapes {
       "q82_large_volume_orders",
       (s, dir) => {
         import s.implicits._
-        val li = t(s, dir, "lineitem")
+        val li = Tables.load(s, dir, "lineitem")
         val big = li.groupBy($"l_orderkey".as("big_ok"))
           .agg(round(sum($"l_quantity"), 4).as("total_qty"))
           .filter($"total_qty" > 300.0)
-        val o = t(s, dir, "orders")
-        val c = t(s, dir, "customer")
+        val o = Tables.load(s, dir, "orders")
+        val c = Tables.load(s, dir, "customer")
         // customer is SF-scaled — no forced broadcast, AQE decides
         o.join(big, $"o_orderkey" === $"big_ok")
           .join(c, $"o_custkey" === $"c_custkey")
@@ -128,9 +125,9 @@ object TpchShapes {
       "q83_bracketed_revenue",
       (s, dir) => {
         import s.implicits._
-        val li = t(s, dir, "lineitem")
+        val li = Tables.load(s, dir, "lineitem")
         // part is SF-scaled — no forced broadcast, AQE decides
-        val p = t(s, dir, "part")
+        val p = Tables.load(s, dir, "part")
         li.join(p, $"l_partkey" === $"p_partkey")
           .filter(
             ($"p_brand" === "Brand#12" && $"p_size".between(1, 15) &&
@@ -160,8 +157,8 @@ object TpchShapes {
       "q84_dormant_rich_customers",
       (s, dir) => {
         import s.implicits._
-        val c = t(s, dir, "customer")
-        val o = t(s, dir, "orders")
+        val c = Tables.load(s, dir, "customer")
+        val o = Tables.load(s, dir, "orders")
         val avgBal = c.filter($"c_acctbal" > 0.0)
           .agg(avg($"c_acctbal").as("avg_bal"))
         c.join(broadcast(avgBal))
@@ -191,10 +188,10 @@ object TpchShapes {
       "q91_priority_late_ship",
       (s, dir) => {
         import s.implicits._
-        val o = t(s, dir, "orders")
+        val o = Tables.load(s, dir, "orders")
           .filter($"o_orderdate" >= lit("1997-01-01").cast("timestamp") &&
             $"o_orderdate" < lit("1997-10-01").cast("timestamp"))
-        val li = t(s, dir, "lineitem").select($"l_orderkey", $"l_shipdate")
+        val li = Tables.load(s, dir, "lineitem").select($"l_orderkey", $"l_shipdate")
         o.join(li,
           $"o_orderkey" === $"l_orderkey" &&
             $"l_shipdate" > $"o_orderdate" + expr("INTERVAL 60 DAYS"),
@@ -221,7 +218,7 @@ object TpchShapes {
       "q92_forecast_revenue",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "lineitem")
+        Tables.load(s, dir, "lineitem")
           .filter($"l_shipdate" >= lit("1997-01-01").cast("timestamp") &&
             $"l_shipdate" < lit("1998-01-01").cast("timestamp") &&
             $"l_discount".between(0.03, 0.07) && $"l_quantity" < 24.0)
@@ -243,10 +240,10 @@ object TpchShapes {
       (s, dir) => {
         import s.implicits._
         val hi = Seq("1-URGENT", "2-HIGH")
-        t(s, dir, "lineitem")
+        Tables.load(s, dir, "lineitem")
           .filter($"l_shipdate" >= lit("1997-01-01").cast("timestamp") &&
             $"l_shipdate" < lit("1998-01-01").cast("timestamp"))
-          .join(t(s, dir, "orders"), $"l_orderkey" === $"o_orderkey")
+          .join(Tables.load(s, dir, "orders"), $"l_orderkey" === $"o_orderkey")
           .groupBy($"l_linestatus")
           .agg(
             sum(when($"o_orderpriority".isin(hi: _*), 1L).otherwise(0L))
@@ -273,11 +270,11 @@ object TpchShapes {
       "q94_supplier_part_counts",
       (s, dir) => {
         import s.implicits._
-        val excluded = t(s, dir, "supplier")
+        val excluded = Tables.load(s, dir, "supplier")
           .filter($"s_acctbal" < 0.0).select($"s_suppkey")
-        val p = t(s, dir, "part")
+        val p = Tables.load(s, dir, "part")
           .filter($"p_brand" =!= "Brand#45" && $"p_size".isin(1, 4, 7))
-        t(s, dir, "lineitem")
+        Tables.load(s, dir, "lineitem")
           .select($"l_partkey", $"l_suppkey").distinct()
           .join(p, $"l_partkey" === $"p_partkey")
           .join(excluded, $"l_suppkey" === $"s_suppkey", "left_anti")
@@ -306,9 +303,9 @@ object TpchShapes {
       "q95_small_qty_revenue",
       (s, dir) => {
         import s.implicits._
-        val p = t(s, dir, "part").filter($"p_brand" === "Brand#23")
+        val p = Tables.load(s, dir, "part").filter($"p_brand" === "Brand#23")
           .select($"p_partkey")
-        val sel = t(s, dir, "lineitem")
+        val sel = Tables.load(s, dir, "lineitem")
           .join(p, $"l_partkey" === $"p_partkey")
           .select($"l_partkey", $"l_quantity", $"l_extendedprice")
         val th = sel.groupBy($"l_partkey".as("ap"))
@@ -342,7 +339,7 @@ object TpchShapes {
         // per-order aggregate (n_all > 1, n_r == 1) instead of theta
         // semi/anti joins: two narrow shuffles on l_orderkey replace
         // three lineitem passes + two non-equi sort-merge joins
-        val pairs = t(s, dir, "lineitem")
+        val pairs = Tables.load(s, dir, "lineitem")
           .select($"l_orderkey", $"l_suppkey", $"l_returnflag")
         val stats = pairs.groupBy($"l_orderkey").agg(
           countDistinct($"l_suppkey").as("n_all"),
@@ -351,7 +348,7 @@ object TpchShapes {
           .select($"l_orderkey", $"l_suppkey").distinct()
         r.join(stats, "l_orderkey")
           .filter($"n_all" > 1 && $"n_r" === 1)
-          .join(t(s, dir, "supplier"),
+          .join(Tables.load(s, dir, "supplier"),
             $"l_suppkey" === $"s_suppkey")
           .groupBy($"s_name")
           .agg(count(lit(1)).as("numwait"))
@@ -388,16 +385,16 @@ object TpchShapes {
       "q141_market_share",
       (s, dir) => {
         import s.implicits._
-        val li = t(s, dir, "lineitem")
-        val o = t(s, dir, "orders")
+        val li = Tables.load(s, dir, "lineitem")
+        val o = Tables.load(s, dir, "orders")
           .filter($"o_orderdate" >= lit("1996-01-01").cast("timestamp") &&
             $"o_orderdate" < lit("1998-01-01").cast("timestamp"))
-        val p = t(s, dir, "part").filter($"p_type" === "ECONOMY")
-        val sup = t(s, dir, "supplier")
-        val sn = t(s, dir, "nation").toDF("sn_key", "supp_nation", "sn_rk")
-        val c = t(s, dir, "customer")
-        val cn = t(s, dir, "nation").toDF("cn_key", "cn_name", "cn_rk")
-        val r = t(s, dir, "region").filter($"r_name" === "ASIA")
+        val p = Tables.load(s, dir, "part").filter($"p_type" === "ECONOMY")
+        val sup = Tables.load(s, dir, "supplier")
+        val sn = Tables.load(s, dir, "nation").toDF("sn_key", "supp_nation", "sn_rk")
+        val c = Tables.load(s, dir, "customer")
+        val cn = Tables.load(s, dir, "nation").toDF("cn_key", "cn_name", "cn_rk")
+        val r = Tables.load(s, dir, "region").filter($"r_name" === "ASIA")
         li.join(o, $"l_orderkey" === $"o_orderkey")
           .join(p, $"l_partkey" === $"p_partkey")
           .join(sup, $"l_suppkey" === $"s_suppkey")
@@ -450,11 +447,11 @@ object TpchShapes {
       "q142_nation_profit",
       (s, dir) => {
         import s.implicits._
-        val li = t(s, dir, "lineitem")
-        val o = t(s, dir, "orders")
-        val p = t(s, dir, "part").filter($"p_name".like("%widget%"))
-        val sup = t(s, dir, "supplier")
-        val n = t(s, dir, "nation")
+        val li = Tables.load(s, dir, "lineitem")
+        val o = Tables.load(s, dir, "orders")
+        val p = Tables.load(s, dir, "part").filter($"p_name".like("%widget%"))
+        val sup = Tables.load(s, dir, "supplier")
+        val n = Tables.load(s, dir, "nation")
         li.join(o, $"l_orderkey" === $"o_orderkey")
           .join(p, $"l_partkey" === $"p_partkey")
           .join(sup, $"l_suppkey" === $"s_suppkey")
@@ -489,11 +486,11 @@ object TpchShapes {
       "q143_cheapest_supplier",
       (s, dir) => {
         import s.implicits._
-        val li = t(s, dir, "lineitem")
-        val sup = t(s, dir, "supplier")
-        val n = t(s, dir, "nation")
-        val r = t(s, dir, "region").filter($"r_name" === "EUROPE")
-        val p = t(s, dir, "part").filter($"p_size" === 10)
+        val li = Tables.load(s, dir, "lineitem")
+        val sup = Tables.load(s, dir, "supplier")
+        val n = Tables.load(s, dir, "nation")
+        val r = Tables.load(s, dir, "region").filter($"r_name" === "EUROPE")
+        val p = Tables.load(s, dir, "part").filter($"p_size" === 10)
         val pairs = li
           .join(sup, $"l_suppkey" === $"s_suppkey")
           .join(broadcast(n), $"s_nationkey" === $"n_nationkey")
@@ -542,8 +539,8 @@ object TpchShapes {
       "q144_important_parts",
       (s, dir) => {
         import s.implicits._
-        val v = t(s, dir, "lineitem")
-          .join(t(s, dir, "supplier"), $"l_suppkey" === $"s_suppkey")
+        val v = Tables.load(s, dir, "lineitem")
+          .join(Tables.load(s, dir, "supplier"), $"l_suppkey" === $"s_suppkey")
           .filter($"s_nationkey" === 5)
           .select($"l_partkey",
             (expr("CAST(round(l_extendedprice*100) AS BIGINT)") *
@@ -572,8 +569,8 @@ object TpchShapes {
       "q145_order_count_distribution",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "customer")
-          .join(t(s, dir, "orders"), $"c_custkey" === $"o_custkey", "left")
+        Tables.load(s, dir, "customer")
+          .join(Tables.load(s, dir, "orders"), $"c_custkey" === $"o_custkey", "left")
           .groupBy($"c_custkey")
           .agg(count($"o_orderkey").as("c_count"))
           .groupBy($"c_count")
@@ -596,7 +593,7 @@ object TpchShapes {
       "q146_top_supplier",
       (s, dir) => {
         import s.implicits._
-        val rev = t(s, dir, "lineitem")
+        val rev = Tables.load(s, dir, "lineitem")
           .filter($"l_shipdate" >= lit("1996-01-01").cast("timestamp") &&
             $"l_shipdate" < lit("1996-04-01").cast("timestamp"))
           .select($"l_suppkey",
@@ -607,7 +604,7 @@ object TpchShapes {
         val mx = rev.agg(max($"revenue_cents").as("mx"))
         rev.crossJoin(broadcast(mx))
           .filter($"revenue_cents" === $"mx")
-          .join(t(s, dir, "supplier"), $"l_suppkey" === $"s_suppkey")
+          .join(Tables.load(s, dir, "supplier"), $"l_suppkey" === $"s_suppkey")
           .select($"s_suppkey", $"s_name", $"revenue_cents")
           .orderBy($"s_suppkey")
       },
@@ -633,15 +630,15 @@ object TpchShapes {
       "q147_excess_suppliers",
       (s, dir) => {
         import s.implicits._
-        val pq = t(s, dir, "lineitem")
-          .join(t(s, dir, "part").filter($"p_name".like("cold%")),
+        val pq = Tables.load(s, dir, "lineitem")
+          .join(Tables.load(s, dir, "part").filter($"p_name".like("cold%")),
             $"l_partkey" === $"p_partkey")
           .groupBy($"l_partkey", $"l_suppkey")
           .agg(sum($"l_quantity").cast("long").as("sq"))
         val tot = pq.groupBy($"l_partkey").agg(sum($"sq").as("tq"))
         pq.join(tot, "l_partkey")
           .filter($"sq" * 8 > $"tq")
-          .join(t(s, dir, "supplier"), $"l_suppkey" === $"s_suppkey")
+          .join(Tables.load(s, dir, "supplier"), $"l_suppkey" === $"s_suppkey")
           .select($"s_name").distinct()
           .orderBy($"s_name")
       },

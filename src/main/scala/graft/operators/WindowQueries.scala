@@ -31,9 +31,6 @@ import graft.engine.Tables
   * lets the sfN CORRECTNESS gate include the window family (round 12).
   */
 object WindowQueries {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   val defs: Seq[QueryDef] = Seq(
 
     // ----- global top-k (distributed TakeOrdered) ------------------------
@@ -41,7 +38,7 @@ object WindowQueries {
       "q25_topk_orders",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "orders")
+        Tables.load(s, dir, "orders")
           .select($"o_orderkey", $"o_custkey", round($"o_totalprice", 4).as("price"))
           .orderBy($"price".desc, $"o_orderkey")
           .limit(10)
@@ -57,8 +54,8 @@ object WindowQueries {
       "q26_top3_orders_per_segment",
       (s, dir) => {
         import s.implicits._
-        val o = t(s, dir, "orders")
-        val c = t(s, dir, "customer")
+        val o = Tables.load(s, dir, "orders")
+        val c = Tables.load(s, dir, "customer")
         val w = Window.partitionBy($"c_mktsegment")
           .orderBy($"o_totalprice".desc, $"o_orderkey")
         // customer is SF-scaled — no forced broadcast, AQE decides
@@ -86,7 +83,7 @@ object WindowQueries {
         import s.implicits._
         val w = Window.partitionBy($"c_mktsegment")
           .orderBy($"c_acctbal".desc, $"c_custkey")
-        t(s, dir, "customer")
+        Tables.load(s, dir, "customer")
           .select(
             $"c_mktsegment", $"c_custkey",
             rank().over(w).as("rnk"),
@@ -116,7 +113,7 @@ object WindowQueries {
           .orderBy($"l_shipdate", $"l_orderkey", $"l_linenumber",
             $"l_extendedprice", $"l_partkey")
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        t(s, dir, "lineitem")
+        Tables.load(s, dir, "lineitem")
           .filter($"l_shipdate" >= lit("2001-01-01").cast("timestamp"))
           .select($"l_suppkey", $"l_orderkey", $"l_linenumber",
             round(sum($"l_quantity").over(w), 4).as("running_qty"))
@@ -139,7 +136,7 @@ object WindowQueries {
       (s, dir) => {
         import s.implicits._
         val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-        t(s, dir, "events")
+        Tables.load(s, dir, "events")
           .filter($"user_id" < 20)
           .select(
             $"user_id", $"event_id",
@@ -163,7 +160,7 @@ object WindowQueries {
       "q30_trailing_30d_spend",
       (s, dir) => {
         import s.implicits._
-        val withDay = t(s, dir, "orders")
+        val withDay = Tables.load(s, dir, "orders")
           .filter($"o_custkey" < 100)
           .withColumn("day_nr",
             datediff($"o_orderdate", lit("1995-01-01").cast("date")))
@@ -193,7 +190,7 @@ object WindowQueries {
           .orderBy($"l_shipdate", $"l_orderkey", $"l_linenumber",
             $"l_extendedprice", $"l_partkey")
           .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-        t(s, dir, "lineitem")
+        Tables.load(s, dir, "lineitem")
           .filter($"l_shipdate" >= lit("2001-06-01").cast("timestamp"))
           .select($"l_suppkey", $"l_orderkey", $"l_linenumber",
             first($"l_orderkey").over(w).as("first_ok"),
@@ -219,7 +216,7 @@ object WindowQueries {
       "q32_global_sort_suppliers",
       (s, dir) => {
         import s.implicits._
-        t(s, dir, "supplier")
+        Tables.load(s, dir, "supplier")
           .select($"s_suppkey", $"s_name", round($"s_acctbal", 4).as("bal"))
           .orderBy($"bal".desc, $"s_suppkey")
           .withColumn("pos",
@@ -244,7 +241,7 @@ object WindowQueries {
         import s.implicits._
         val w = Window.partitionBy($"c_mktsegment")
           .orderBy($"c_acctbal", $"c_custkey")
-        t(s, dir, "customer")
+        Tables.load(s, dir, "customer")
           .select($"c_custkey", $"c_mktsegment",
             round($"c_acctbal", 4).as("bal"),
             ntile(4).over(w).as("quartile"),

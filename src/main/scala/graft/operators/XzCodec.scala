@@ -5,7 +5,7 @@ import java.io.ByteArrayOutputStream
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
-import graft.operators.Bytes.{i64le, le32, u16be, u32le}
+import graft.operators.Bytes.{crc32, i64le, le32, u16be, u32le}
 
 /** XZ container + LZMA2/LZMA DECODER — pure JVM, from spec.
   *
@@ -84,12 +84,6 @@ object XzCodec {
       i += 1
     }
     ~c
-  }
-
-  private def crc32(b: Array[Byte], off: Int, len: Int): Long = {
-    val c = new java.util.zip.CRC32
-    c.update(b, off, len)
-    c.getValue
   }
 
   // ------------------------------------------------------------------

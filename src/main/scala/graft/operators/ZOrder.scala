@@ -26,9 +26,6 @@ import graft.engine.Tables
   * expressions.
   */
 object ZOrder {
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables.load(s, dir, name)
-
   /** Morton interleave of two pre-scaled `bits`-bit non-negative ints:
     * x occupies even bit positions, y odd. Pure codegen'd bit ops. */
   def mortonZ(xs: Column, ys: Column, bits: Int = 8): Column = {
@@ -67,7 +64,7 @@ object ZOrder {
         // 86400000000: date conversion floors for pre-1970 timestamps in
         // both engines, where integer DIV would truncate toward zero in
         // Spark and floor in DuckDB (ADVICE r5 parity trap)
-        val ev = t(s, dir, "events").select($"user_id".as("x"),
+        val ev = Tables.load(s, dir, "events").select($"user_id".as("x"),
           expr("datediff(to_date(ts), date'1970-01-01')").cast("long").as("y"))
         val mm = ev.agg(min($"x").as("xlo"), max($"x").as("xhi"),
           min($"y").as("ylo"), max($"y").as("yhi"))

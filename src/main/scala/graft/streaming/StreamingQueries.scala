@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Encoder, Encoders}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
   StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
+import org.apache.spark.sql.types.StructType
 
 import graft.engine.{Tables, TempDir}
-import graft.operators.QueryDef
+import graft.operators.{DataSkipping, Json, Maintenance, QueryDef}
 
 /** Structured Streaming surface (SURVEY.md §2 Table B streaming rows,
   * §7 M4).
@@ -122,14 +123,14 @@ object StreamingQueries {
     * each file carries exactly the payload columns); names gain a
     * `b<k>_` prefix because one staging task writes an identically
     * named part file into every `_b=` directory. Returns deliver(k),
-    * which throws an `IOException` naming the path when a move fails. */
+    * which throws an `IOException` naming the path when a move fails,
+    * and the payload schema (every column but `_b`) the arrivals carry. */
   private[streaming] def stageArrivals(withBatchCol: DataFrame,
-      inputDir: String): Int => Unit = {
+      inputDir: String): (Int => Unit, StructType) = {
     val staging = TempDir("arrstage_")
     withBatchCol.write.mode("overwrite").partitionBy("_b").parquet(staging)
     val s = withBatchCol.sparkSession
-    val payloadSchema = org.apache.spark.sql.types.StructType(
-      withBatchCol.schema.filterNot(_.name == "_b"))
+    val payloadSchema = StructType(withBatchCol.schema.filterNot(_.name == "_b"))
     val dst = new org.apache.hadoop.fs.Path(inputDir)
     val fs = dst.getFileSystem(s.sparkContext.hadoopConfiguration)
     // every row must land in an `_b=<int>` batch: a NULL `_b` is written
@@ -139,7 +140,7 @@ object StreamingQueries {
       .foreach(st => throw new java.io.IOException(
         s"arrival staging: ${st.getPath} is not an _b=<int> batch"))
     if (!fs.mkdirs(dst)) throw new java.io.IOException(s"cannot create $dst")
-    (k: Int) => {
+    val deliver = (k: Int) => {
       val src = new org.apache.hadoop.fs.Path(staging, s"_b=$k")
       val parts =
         if (!fs.exists(src)) Seq.empty
@@ -162,6 +163,7 @@ object StreamingQueries {
             org.apache.spark.sql.Row](), payloadSchema)
           .repartition(1).write.mode("append").parquet(inputDir)
     }
+    (deliver, payloadSchema)
   }
 
   /** Streaming view of the events table (schema taken from the batch
@@ -341,22 +343,17 @@ object StreamingQueries {
         val o = graft.engine.Tables.load(s, dir, "orders")
           .select($"o_orderpriority".as("pri"),
             $"o_totalprice".as("v"), year($"o_orderdate").as("yr"))
-        val inc = new graft.streaming.IncrementalQuantile(
-          s, input, org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("pri",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("v",
-              org.apache.spark.sql.types.DoubleType))),
-          ckpt, state, keyCol = "pri", valueCol = "v",
-          lo = 0.0, hi = 500000.0, bins = 500)
         // one staging scan, three rename-deliveries (same batch split
         // the per-batch filter+write pattern produced — see stageArrivals)
-        val deliver = stageArrivals(o.select($"pri", $"v",
+        val (deliver, schema) = stageArrivals(o.select($"pri", $"v",
           when($"yr" <= 1994, 0).when($"yr" <= 1996, 1).otherwise(2)
             .as("_b")), input)
+        val inc = new Incremental(s, input, schema, ckpt, state,
+          Maintenance.quantileState(_, $"pri", $"v", 0.0, 500000.0, 500),
+          Maintenance.mergeQuantileState)
         def arrive(k: Int): Unit = { deliver(k); inc.update() }
         arrive(0); arrive(1); arrive(2)
-        inc.driftSincePreviousVersion().get
+        Maintenance.psiDrift(inc.previousState().get, inc.state().get)
           .select($"k".as("o_orderpriority"), $"n_ref", $"n_cur", $"psi")
           .orderBy($"o_orderpriority")
       },
@@ -408,22 +405,17 @@ object StreamingQueries {
         val o = graft.engine.Tables.load(s, dir, "orders")
           .select($"o_orderpriority".as("pri"),
             $"o_totalprice".as("v"), year($"o_orderdate").as("yr"))
-        val inc = new graft.streaming.IncrementalQuantile(
-          s, input, org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("pri",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("v",
-              org.apache.spark.sql.types.DoubleType))),
-          ckpt, state, keyCol = "pri", valueCol = "v",
-          lo = 0.0, hi = 500000.0, bins = 500, retainVersions = 4)
         // one staging scan, four rename-deliveries (same year split the
         // per-batch filter+write pattern produced — see stageArrivals)
-        val deliver = stageArrivals(o.select($"pri", $"v",
+        val (deliver, schema) = stageArrivals(o.select($"pri", $"v",
           when($"yr" <= 1994, 0).when($"yr" === 1995, 1)
             .when($"yr" === 1996, 2).otherwise(3).as("_b")), input)
+        val inc = new Incremental(s, input, schema, ckpt, state,
+          Maintenance.quantileState(_, $"pri", $"v", 0.0, 500000.0, 500),
+          Maintenance.mergeQuantileState, retainVersions = 4)
         def arrive(k: Int): Unit = { deliver(k); inc.update() }
         arrive(0); arrive(1); arrive(2); arrive(3)
-        inc.driftSeries().get
+        Maintenance.driftSeries(inc.versions().map(inc.stateAt)).get
           .select($"k".as("o_orderpriority"), $"fold",
             $"n_ref", $"n_cur", $"psi")
           .orderBy($"o_orderpriority", $"fold")
@@ -484,22 +476,17 @@ object StreamingQueries {
         val o = graft.engine.Tables.load(s, dir, "orders")
           .select($"o_custkey", $"o_totalprice".as("v"),
             year($"o_orderdate").as("yr"))
-        val inc = new graft.streaming.IncrementalQuantile(
-          s, input, org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("o_custkey",
-              o.schema("o_custkey").dataType),
-            org.apache.spark.sql.types.StructField("v",
-              org.apache.spark.sql.types.DoubleType))),
-          ckpt, state, keyCol = "o_custkey", valueCol = "v",
-          lo = 0.0, hi = 500000.0, bins = 500)
         // one staging scan, three rename-deliveries (same batch split
         // the per-batch filter+write pattern produced — see stageArrivals)
-        val deliver = stageArrivals(o.select($"o_custkey", $"v",
+        val (deliver, schema) = stageArrivals(o.select($"o_custkey", $"v",
           when($"yr" <= 1994, 0).when($"yr" <= 1996, 1).otherwise(2)
             .as("_b")), input)
+        val inc = new Incremental(s, input, schema, ckpt, state,
+          Maintenance.quantileState(_, $"o_custkey", $"v", 0.0, 500000.0, 500),
+          Maintenance.mergeQuantileState)
         def arrive(k: Int): Unit = { deliver(k); inc.update() }
         arrive(0); arrive(1); arrive(2)
-        inc.quantile(0.5).get
+        Maintenance.quantileFromState(inc.state().get, 0.5, lo = 0.0, wid = 1000.0)
           .select($"k".as("o_custkey"), $"n".as("n_orders"),
             round($"q", 4).as("est_p50"))
           .orderBy($"o_custkey")
@@ -541,22 +528,18 @@ object StreamingQueries {
         val o = graft.engine.Tables.load(s, dir, "orders")
           .select($"o_orderpriority".as("pri"), $"o_custkey",
             year($"o_orderdate").as("yr"))
-        val inc = new graft.streaming.IncrementalBottomK(
-          s, input, org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("pri",
-              o.schema("pri").dataType),
-            org.apache.spark.sql.types.StructField("o_custkey",
-              o.schema("o_custkey").dataType))),
-          ckpt, state, keyCol = "pri", valueCol = "o_custkey", k = 32)
         // one staging scan, three rename-deliveries (same batch split
         // the per-batch filter+write pattern produced — see stageArrivals)
-        val deliver = stageArrivals(o.select($"pri", $"o_custkey",
+        val (deliver, schema) = stageArrivals(o.select($"pri", $"o_custkey",
           when($"yr" <= 1994, 0).when($"yr" <= 1996, 1).otherwise(2)
             .as("_b")), input)
+        val inc = new Incremental(s, input, schema, ckpt, state,
+          Maintenance.bottomKState(_, $"pri", $"o_custkey", 32),
+          Maintenance.mergeBottomK(_, _, 32))
         def arrive(k: Int): Unit = { deliver(k); inc.update() }
         arrive(0); arrive(1); arrive(2)
         val st = inc.state().get
-        val est = inc.distinctEstimate().get
+        val est = Maintenance.distinctFromBottomK(st, 32)
         val w = org.apache.spark.sql.expressions.Window
           .partitionBy($"k").orderBy($"h", $"v")
         st.withColumn("rank", row_number().over(w))
@@ -608,15 +591,9 @@ object StreamingQueries {
         val (input, ckpt, state) = (TempDir("mfin_"), TempDir("mfck_"), TempDir("mfst_"))
         val o = graft.engine.Tables.load(s, dir, "orders")
           .select($"o_orderkey", $"o_orderpriority", $"o_totalprice")
-        val inc = new graft.streaming.IncrementalManifest(
-          s, input, org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("o_orderkey",
-              o.schema("o_orderkey").dataType),
-            org.apache.spark.sql.types.StructField("o_orderpriority",
-              o.schema("o_orderpriority").dataType),
-            org.apache.spark.sql.types.StructField("o_totalprice",
-              o.schema("o_totalprice").dataType))),
-          ckpt, state, statsCol = "o_orderkey")
+        val inc = new Incremental(s, input, o.schema, ckpt, state,
+          DataSkipping.fileManifest(_, "o_orderkey"),
+          DataSkipping.mergeFileManifest)
         def arrive(batch: org.apache.spark.sql.DataFrame): Unit = {
           batch.repartition(1).write.mode("append").parquet(input)
           inc.update()
@@ -624,9 +601,8 @@ object StreamingQueries {
         arrive(o.filter($"o_orderkey" < 5000))
         arrive(o.filter($"o_orderkey" >= 5000 && $"o_orderkey" < 10000))
         arrive(o.filter($"o_orderkey" >= 10000))
-        val (rows, nSel, nTot) = graft.operators.DataSkipping
-          .skippingFileRangeScan(s, inc.state().get, "o_orderkey",
-            6000L, 9000L, emptyLike = o)
+        val (rows, nSel, nTot) = DataSkipping.skippingFileRangeScan(s,
+          inc.state().get, "o_orderkey", 6000L, 9000L, emptyLike = o)
         rows.groupBy($"o_orderpriority")
           .agg(count(lit(1)).as("n_orders"),
             round(sum($"o_totalprice"), 4).as("total_price"))
@@ -660,13 +636,9 @@ object StreamingQueries {
         val (input, ckpt, state) = (TempDir("ttin_"), TempDir("ttck_"), TempDir("ttst_"))
         val o = graft.engine.Tables.load(s, dir, "orders")
           .select($"o_orderkey", $"o_totalprice")
-        val inc = new graft.streaming.IncrementalManifest(
-          s, input, org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("o_orderkey",
-              o.schema("o_orderkey").dataType),
-            org.apache.spark.sql.types.StructField("o_totalprice",
-              o.schema("o_totalprice").dataType))),
-          ckpt, state, statsCol = "o_orderkey", retainVersions = 3)
+        val inc = new Incremental(s, input, o.schema, ckpt, state,
+          DataSkipping.fileManifest(_, "o_orderkey"),
+          DataSkipping.mergeFileManifest, retainVersions = 3)
         def arrive(batch: org.apache.spark.sql.DataFrame): Unit = {
           batch.repartition(1).write.mode("append").parquet(input)
           inc.update()
@@ -689,9 +661,8 @@ object StreamingQueries {
         arrive(o.filter($"o_orderkey" > b2))
         val vs = inc.versions()
         def at(v: String, label: String) = {
-          val (rows, nSel, nTot) = graft.operators.DataSkipping
-            .skippingFileRangeScan(s, inc.stateAt(v), "o_orderkey",
-              0L, 1000000000L, emptyLike = o)
+          val (rows, nSel, nTot) = DataSkipping.skippingFileRangeScan(s,
+            inc.stateAt(v), "o_orderkey", 0L, 1000000000L, emptyLike = o)
           // exact-cents money: a whole-table double sum accumulates
           // order-dependent error past the 4dp round at sf1 row counts
           rows.agg(count(lit(1)).as("n_orders"),
@@ -740,13 +711,9 @@ object StreamingQueries {
         val (input, ckpt, state) = (TempDir("sdin_"), TempDir("sdck_"), TempDir("sdst_"))
         val o = graft.engine.Tables.load(s, dir, "orders")
           .select($"o_orderkey", $"o_totalprice")
-        val inc = new graft.streaming.IncrementalManifest(
-          s, input, org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("o_orderkey",
-              o.schema("o_orderkey").dataType),
-            org.apache.spark.sql.types.StructField("o_totalprice",
-              o.schema("o_totalprice").dataType))),
-          ckpt, state, statsCol = "o_orderkey", retainVersions = 3)
+        val inc = new Incremental(s, input, o.schema, ckpt, state,
+          DataSkipping.fileManifest(_, "o_orderkey"),
+          DataSkipping.mergeFileManifest, retainVersions = 3)
         def arrive(batch: org.apache.spark.sql.DataFrame): Unit = {
           batch.repartition(1).write.mode("append").parquet(input)
           inc.update()
@@ -764,9 +731,8 @@ object StreamingQueries {
         arrive(o.filter($"o_orderkey" > b2))
         val vs = inc.versions()
         def diffRow(from: String, to: String, label: String) = {
-          val (nAdd, nRem, rows) = graft.operators.DataSkipping
-            .snapshotDiff(s, inc.stateAt(from), inc.stateAt(to),
-              emptyLike = o)
+          val (nAdd, nRem, rows) = DataSkipping.snapshotDiff(s,
+            inc.stateAt(from), inc.stateAt(to), emptyLike = o)
           rows.agg(count(lit(1)).as("n_rows_added"),
             sum(expr("CAST(round(o_totalprice * 100) AS BIGINT)"))
               .as("added_cents"))
@@ -822,13 +788,9 @@ object StreamingQueries {
         val v2 = docs.filter(_ % 3 == 2)
           .map(id => (id, s"""{"id":$id,"v2":"x","meta":{"score":"2.5"}}"""))
           .toDF("doc_id", "json")
-        val inc = new graft.streaming.IncrementalJsonCensus(
-          s, input, org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("doc_id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("json",
-              org.apache.spark.sql.types.StringType))),
-          ckpt, state, retainVersions = 3)
+        val inc = new Incremental(s, input, legacy.schema, ckpt, state,
+          Json.schemaProfile(_, "doc_id", "json"), Json.mergeCensus,
+          retainVersions = 3)
         def arrive(batch: org.apache.spark.sql.DataFrame): Unit = {
           batch.repartition(1).write.mode("append").parquet(input)
           inc.update()
@@ -837,7 +799,7 @@ object StreamingQueries {
         arrive(legacy.filter($"doc_id" % 3 === 1))
         arrive(v2)
         val vs = inc.versions()
-        inc.driftBetween(vs(1), vs(2))
+        Json.censusDrift(inc.stateAt(vs(1)), inc.stateAt(vs(2)))
           .orderBy($"path", $"type")
       },
       Some("""

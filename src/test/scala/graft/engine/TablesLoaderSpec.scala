@@ -92,4 +92,12 @@ class TablesLoaderSpec extends SparkSpec {
       "mergeSchema" -> home))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  /** Queries call `Tables.load` directly: a per-module one-line copy of
+    * the loader is allowed nowhere. */
+  test("no private copy of the table loader") {
+    val offenders = SourceGuard.offenders(Seq(
+      "def t(s: SparkSession, dir: String, name: String)" -> None))
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }

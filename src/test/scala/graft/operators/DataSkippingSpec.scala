@@ -44,6 +44,32 @@ class DataSkippingSpec extends SparkSpec {
     assert(rows.columns.contains("k"))
   }
 
+  test("a file manifest's range scan opens only intersecting files and " +
+      "stays exact") {
+    val input = tempDir("file_manifest_")
+    Seq(0L until 100L, 100L until 250L, 250L until 400L).foreach { r =>
+      r.map(i => (i, i * 3)).toDF("k", "p")
+        .repartition(1).write.mode("append").parquet(input)
+    }
+    val all = spark.read.parquet(input)
+    val manifest = fileManifest(all, "k")
+    // range inside the second file only
+    val (rows, nSel, nTot) = skippingFileRangeScan(
+      spark, manifest, "k", 120L, 200L, emptyLike = all)
+    assert(nTot === 3L && nSel === 1L)
+    val expected = all.filter($"k".between(120, 200))
+    assert(rows.exceptAll(expected).isEmpty &&
+      expected.exceptAll(rows).isEmpty)
+    // a range spanning two files opens exactly those two
+    val (_, n2, _) = skippingFileRangeScan(
+      spark, manifest, "k", 90L, 240L, emptyLike = all)
+    assert(n2 === 2L)
+    // outside every file: zero files, typed empty
+    val (empty, n0, _) = skippingFileRangeScan(
+      spark, manifest, "k", 5000L, 6000L, emptyLike = all)
+    assert(n0 === 0L && empty.count() === 0L)
+  }
+
   test("membership point lookup is exact (false positives filtered) and " +
       "scans fewer groups than the layout holds") {
     val out = tmp("member")

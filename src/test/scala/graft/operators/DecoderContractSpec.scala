@@ -9,8 +9,9 @@ import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.SparkSpec
 
 /** The hostile-input contract of every decoder that inflates, reads
-  * fixed-width integers or decodes prefix codes through [[Bytes]], and
-  * of the other stream codecs: on ANY input it returns
+  * fixed-width integers or decodes prefix codes through [[Bytes]], of
+  * the other stream codecs and of the media header sniffs: on ANY
+  * input it returns
   * (`None` or a value) without throwing, within 2 s of wall clock and
   * 256 MiB allocated on the calling thread.
   *
@@ -50,7 +51,9 @@ class DecoderContractSpec extends SparkSpec {
     Archive.zipEntries(b).map(_.map(e => Archive.unzipEntry(b, e)))
 
   /** (name, valid blob, decode). */
-  private lazy val decoders: Seq[(String, Array[Byte], Array[Byte] => Any)] = {
+  private type Case = (String, Array[Byte], Array[Byte] => Any)
+
+  private lazy val decoders: Seq[Case] = {
     val pages = Seq(Seq("hello world", "second line"), Seq("page two"))
     val pdf = Pdf.encodeTextPdf("1.7", pages, flate = true)
     val xrefPdf = Pdf.encodeXrefPdf("1.7", pages, encrypted = false,
@@ -159,8 +162,70 @@ class DecoderContractSpec extends SparkSpec {
     f
   }
 
-  test("every valid blob decodes to a value") {
-    decoders.foreach { case (name, blob, decode) =>
+  /** (name, valid header, sniff): the image, TIFF/EXIF, audio and
+    * video header parsers, which walk declared chunk, box, IFD and
+    * page lengths and offsets. */
+  private lazy val sniffs: Seq[Case] = {
+    val note = "contract note".getBytes("UTF-8")
+    val tags = Seq("ARTIST" -> "Someone", "TITLE" -> "A Song")
+    val flac = AudioHeaders.encodeFlac(44100, 2, 16, 12345L,
+      AudioHeaders.vorbisCommentBody("v", tags))
+    val opus = AudioHeaders.encodeOggOpus(2, 312, 48000, 2, 960L,
+      AudioHeaders.opusTagsPacket("v", tags))
+    val vorbis = AudioHeaders.encodeOggVorbis(2, 44100, 2, 1024L,
+      AudioHeaders.vorbisCommentPacket("v", tags))
+    val thumb = ImageHeaders.encodeJpeg(16, 16, 8, Array.emptyByteArray)
+    Seq(
+      ("ImageHeaders.decode png", ImageHeaders.encodePng(640, 480, 8, note),
+        ImageHeaders.decode _),
+      ("ImageHeaders.decode jpeg", ImageHeaders.encodeJpeg(640, 480, 8, note),
+        ImageHeaders.decode _),
+      ("ImageHeaders.decode webp vp8", ImageHeaders.encodeWebp("vp8", 320,
+        240, note), ImageHeaders.decode _),
+      ("ImageHeaders.decode webp vp8l", ImageHeaders.encodeWebp("vp8l", 320,
+        240, note), ImageHeaders.decode _),
+      ("ImageHeaders.decode webp vp8x", ImageHeaders.encodeWebp("vp8x", 320,
+        240, note), ImageHeaders.decode _),
+      ("ImageHeaders.decodeWebpMeta", ImageHeaders.encodeWebpExif(640, 360, 6,
+        "CamQ", bigEndian = true, exifPrefix = true,
+        xmp = "<x:xmpmeta>hi</x:xmpmeta>"), ImageHeaders.decodeWebpMeta _),
+      ("TiffHeaders.decodeTiff little-endian", TiffHeaders.encodeTiff(64, 32,
+        8, 3, bigEndian = false, note), TiffHeaders.decodeTiff _),
+      ("TiffHeaders.decodeTiff big-endian", TiffHeaders.encodeTiff(64, 32,
+        16, 1, bigEndian = true, note), TiffHeaders.decodeTiff _),
+      ("TiffHeaders.decodeJpegExif", TiffHeaders.encodeJpegExif(640, 480, 6,
+        "TestCam", bigEndian = true, note), TiffHeaders.decodeJpegExif _),
+      ("TiffHeaders.decodeJpegExifFull dated", TiffHeaders.encodeJpegExifDated(
+        320, 240, 3, "CamT", bigEndian = false, "2020:01:02 03:04:05", "123"),
+        TiffHeaders.decodeJpegExifFull _),
+      ("TiffHeaders.decodeJpegExifFull gps", TiffHeaders.encodeJpegExifGps(
+        640, 480, 1, "CamX", bigEndian = true, 'N', 52L, 22L, 3061L, 100L,
+        'W', 4L, 53L, 1234L, 100L, thumb), TiffHeaders.decodeJpegExifFull _),
+      ("AudioHeaders.decodeWav", AudioHeaders.encodeWav(2, 44100, 16, 1000L,
+        note), AudioHeaders.decodeWav _),
+      ("AudioHeaders.decodeMp3", AudioHeaders.encodeMp3(128, 44100, 4, 2,
+        note), AudioHeaders.decodeMp3 _),
+      ("AudioHeaders.decodeFlac", flac, AudioHeaders.decodeFlac _),
+      ("AudioHeaders.decodeOgg opus", opus, AudioHeaders.decodeOgg _),
+      ("AudioHeaders.decodeOgg vorbis", vorbis, AudioHeaders.decodeOgg _),
+      ("AudioHeaders.decodeAudioTags flac", flac, AudioHeaders.decodeAudioTags _),
+      ("AudioHeaders.decodeAudioTags opus", opus, AudioHeaders.decodeAudioTags _),
+      ("AudioHeaders.decodeAudioTags vorbis", vorbis,
+        AudioHeaders.decodeAudioTags _),
+      ("VideoHeaders.decodeMp4", VideoHeaders.encodeMp4("isom", 600, 5000L,
+        64, 48, 2, note), VideoHeaders.decodeMp4 _),
+      ("VideoHeaders.decodeMp4Tags", VideoHeaders.encodeMp4Tagged("mp42",
+        1000, 90000L, 640, 360, 2, note, "Title", "Artist", "Album", "2020",
+        3, 12), VideoHeaders.decodeMp4Tags _),
+      ("VideoHeaders.decodeAvif", VideoHeaders.encodeAvif("avif", 640, 480, 8,
+        note), VideoHeaders.decodeAvif _),
+      ("VideoHeaders.decodeAvifItems", VideoHeaders.encodeAvifItems("avif",
+        800, 600, 160, 90, 3, widePitm = false, wideAssoc = false),
+        VideoHeaders.decodeAvifItems _))
+  }
+
+  private def decodesValid(cases: Seq[Case]) =
+    cases.foreach { case (name, blob, decode) =>
       val got = withinBudget(name)(decode(blob))
       assert(got match {
         case None | Some(None) => false
@@ -168,15 +233,29 @@ class DecoderContractSpec extends SparkSpec {
         case _ => true
       }, s"$name: valid blob did not decode")
     }
-  }
 
-  test("truncated, bit-flipped and length-overwritten blobs stay in budget") {
-    decoders.foreach { case (name, blob, decode) =>
+  private def staysInBudget(cases: Seq[Case]) =
+    cases.foreach { case (name, blob, decode) =>
       val res = SCTest.check(SCTest.Parameters.default
         .withMinSuccessfulTests(40).withInitialSeed(name.hashCode.toLong),
         Prop.forAll(mutant(blob)) { b => withinBudget(name)(decode(b)); true })
       assert(res.passed, s"$name: ${res.status}")
     }
+
+  test("every valid blob decodes to a value") {
+    decodesValid(decoders)
+  }
+
+  test("truncated, bit-flipped and length-overwritten blobs stay in budget") {
+    staysInBudget(decoders)
+  }
+
+  test("every valid media header sniffs to a value") {
+    decodesValid(sniffs)
+  }
+
+  test("truncated, bit-flipped and length-overwritten headers stay in budget") {
+    staysInBudget(sniffs)
   }
 
   test("a PDF stream asking for a preset dictionary is rejected, not spun on") {

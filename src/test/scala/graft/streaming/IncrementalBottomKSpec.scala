@@ -15,11 +15,12 @@ class IncrementalBottomKSpec extends SparkSpec {
   test("incremental folds equal the one-shot sketch over all arrivals; " +
       "empty update is a no-op") {
     val input = tempDir("bk_in_")
-    val inc = new IncrementalBottomK(
+    val inc = new Incremental(
       spark, input,
       StructType(Seq(StructField("k", LongType), StructField("v", LongType))),
       tempDir("bk_ck_"), tempDir("bk_st_"),
-      keyCol = "k", valueCol = "v", k = 8)
+      Maintenance.bottomKState(_, col("k"), col("v"), 8),
+      Maintenance.mergeBottomK(_, _, 8))
     val b1 = (0L until 200L).map(i => (i % 3, i * 7 % 500))
     val b2 = (0L until 150L).map(i => (i % 3, i * 11 % 500))
     Seq(b1, b2).foreach { b =>
@@ -37,7 +38,7 @@ class IncrementalBottomKSpec extends SparkSpec {
     inc.update()
     assert(rows(inc.state().get) === before)
     // the estimate reads off the same state
-    val est = inc.distinctEstimate().get.collect()
+    val est = Maintenance.distinctFromBottomK(inc.state().get, 8).collect()
     assert(est.length === 3)
     est.foreach(r => assert(r.getAs[Boolean]("saturated")))
   }

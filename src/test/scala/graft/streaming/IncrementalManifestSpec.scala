@@ -15,10 +15,11 @@ class IncrementalManifestSpec extends SparkSpec {
   test("folded manifest equals one-shot per-file stats; the range scan " +
       "opens only intersecting files and stays exact") {
     val input = tempDir("mf_in_")
-    val inc = new IncrementalManifest(
+    val inc = new Incremental(
       spark, input,
       StructType(Seq(StructField("k", LongType), StructField("p", LongType))),
-      tempDir("mf_ck_"), tempDir("mf_st_"), statsCol = "k")
+      tempDir("mf_ck_"), tempDir("mf_st_"),
+      DataSkipping.fileManifest(_, "k"), DataSkipping.mergeFileManifest)
     val batches = Seq(0L until 100L, 100L until 250L, 250L until 400L)
     batches.foreach { r =>
       r.map(i => (i, i * 3)).toDF("k", "p")

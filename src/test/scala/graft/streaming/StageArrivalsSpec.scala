@@ -21,7 +21,8 @@ class StageArrivalsSpec extends SparkSpec {
 
   test("each delivery moves its batch's files into the input directory") {
     val in = new File(tempDir("arrivals_"), "in").getPath
-    val deliver = StreamingQueries.stageArrivals(batches, in)
+    val (deliver, schema) = StreamingQueries.stageArrivals(batches, in)
+    assert(schema.fieldNames.toSeq == Seq("id"))
     deliver(0)
     assert(parquetFiles(in).nonEmpty && parquetFiles(in).forall(_.startsWith("b0_")))
     deliver(1)
@@ -34,7 +35,7 @@ class StageArrivalsSpec extends SparkSpec {
     conf.set("fs.hdfsrename.impl", classOf[HdfsRenameFs].getName)
     conf.setBoolean("fs.hdfsrename.impl.disable.cache", true)
     val in = new File(tempDir("arrivals_"), "in").getPath
-    val deliver = StreamingQueries.stageArrivals(batches, s"hdfsrename:$in")
+    val (deliver, _) = StreamingQueries.stageArrivals(batches, s"hdfsrename:$in")
     // the staging directory this call just wrote
     val staging = new File(graft.engine.GraftSession.scratchRoot).listFiles()
       .filter(_.getName.startsWith("arrstage_")).maxBy(_.lastModified)
