@@ -5,7 +5,7 @@ import java.io.ByteArrayOutputStream
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
-import Ipynb.{parseJson, JArr, JObj, JStr, JVal}
+import Json.{JArr, JObj, JStr, JVal}
 
 /** Avro RECORD decode — [[Avro]] stops at the container shell (block
   * counts, sync chain); this reads the data: the writer schema from
@@ -68,7 +68,7 @@ object AvroRecords {
         if (ni < 0) None
         else primOf(names(1 - ni)).map(t => TOpt(ni, t))
       }
-    case JObj(f) =>
+    case f: JObj =>
       (f.get("type"), f.get("items")) match {
         case (Some(JStr("array")), Some(it)) => typeOf(it).map(TArr.apply)
         case _ => None
@@ -78,13 +78,13 @@ object AvroRecords {
 
   /** Parse the writer schema: a flat record's (fieldName, type)s. */
   def parseSchema(json: String): Option[Vector[(String, AType)]] =
-    parseJson(json) match {
-      case Some(JObj(f)) if f.get("type").contains(JStr("record")) =>
+    Json.parse(json) match {
+      case Some(f: JObj) if f.get("type").contains(JStr("record")) =>
         f.get("fields") match {
           case Some(JArr(fields)) =>
             val out = Vector.newBuilder[(String, AType)]
             fields.foreach {
-              case JObj(ff) =>
+              case ff: JObj =>
                 (ff.get("name"), ff.get("type")) match {
                   case (Some(JStr(n)), Some(t)) =>
                     typeOf(t) match {

@@ -28,78 +28,11 @@ object Docx {
   final case class DocxMeta(title: Option[String], creator: Option[String],
       nParagraphs: Int, text: String)
 
-  import Ooxml.{decodeEntities, findTag}
-
-  /** The text of one paragraph body (between `<w:p...>` and `</w:p>`):
-    * all `<w:t>` runs concatenated, tabs/breaks rendered. None on a
-    * torn run. */
-  private def paragraphText(p0: String): Option[String] = {
-    // Drop paragraph-property blocks first: <w:pPr><w:tabs> carries
-    // <w:tab w:pos=.../> tab-stop DEFINITIONS, which must not render
-    // as text tabs (only <w:tab/> inside a run is a text tab).
-    val p = {
-      val sb = new StringBuilder
-      var k = 0
-      var go = true
-      while (go) {
-        val at = findTag(p0, "w:pPr", k)
-        if (at < 0) { sb.append(p0.substring(k)); go = false }
-        else {
-          sb.append(p0.substring(k, at))
-          val open = p0.indexOf('>', at)
-          if (open < 0) return None
-          if (p0.charAt(open - 1) == '/') k = open + 1
-          else {
-            val close = p0.indexOf("</w:pPr>", open)
-            if (close < 0) return None // torn properties block
-            k = close + 8
-          }
-        }
-      }
-      sb.toString
-    }
-    val out = new StringBuilder
-    var i = 0
-    var scanning = true
-    while (scanning) {
-      val t = findTag(p, "w:t", i)
-      val tab = findTag(p, "w:tab", i)
-      val br = findTag(p, "w:br", i)
-      val next = Seq(t, tab, br).filter(_ >= 0).sorted.headOption
-        .getOrElse(-1)
-      if (next < 0) scanning = false
-      else if (next == t) {
-        val open = p.indexOf('>', t)
-        if (open < 0) return None
-        if (p.charAt(open - 1) == '/') i = open + 1 // <w:t/> empty run
-        else {
-          val close = p.indexOf("</w:t>", open)
-          if (close < 0) return None // torn run
-          out.append(decodeEntities(p.substring(open + 1, close)))
-          i = close + 6
-        }
-      } else {
-        val open = p.indexOf('>', next)
-        if (open < 0) return None
-        out.append(if (next == tab) '\t' else '\n')
-        i = open + 1
-      }
-    }
-    Some(out.toString)
-  }
-
-  /** First `<tag>text</tag>` body in `s`, entity-decoded. */
-  private def tagText(s: String, tag: String): Option[String] = {
-    val k = findTag(s, tag, 0)
-    if (k < 0) return None
-    val open = s.indexOf('>', k)
-    if (open < 0) return None
-    if (s.charAt(open - 1) == '/') return Some("")
-    val close = s.indexOf(s"</$tag>", open)
-    if (close < 0) None
-    else Some(decodeEntities(s.substring(open + 1, close)))
-  }
-
+  /** What a paragraph walk renders besides `<w:t>` text: tabs, breaks,
+    * and the properties block, dropped whole (its
+    * `<w:tabs><w:tab w:pos=.../>` tab-stop DEFINITIONS must not render
+    * as text tabs — only `<w:tab/>` inside a run is a text tab). */
+  private val Rendered = Map("w:tab" -> "\t", "w:br" -> "\n", "w:pPr" -> "")
 
   def decodeDocx(b: Array[Byte]): Option[DocxMeta] =
     try {
@@ -109,43 +42,23 @@ object Docx {
       // WordprocessingML package MUST carry content types + rels
       val mainPath = Ooxml.mainPartPath(read).getOrElse(return None)
       val doc = read(mainPath).getOrElse(return None)
-      val bodyAt = findTag(doc, "w:body", 0)
+      val bodyAt = Xml.findTag(doc, "w:body", 0, doc.length)
       if (bodyAt < 0) return None
-      // paragraph walk
-      val paras = scala.collection.mutable.ArrayBuffer.empty[String]
-      var p = bodyAt
-      var scanning = true
-      while (scanning) {
-        val k = findTag(doc, "w:p", p)
-        if (k < 0) scanning = false
-        else {
-          val open = doc.indexOf('>', k)
-          if (open < 0) return None
-          if (doc.charAt(open - 1) == '/') { // <w:p/> empty paragraph
-            paras += ""
-            p = open + 1
-          } else {
-            val close = doc.indexOf("</w:p>", open)
-            if (close < 0) return None // torn paragraph
-            paras += paragraphText(doc.substring(open + 1, close))
-              .getOrElse(return None)
-            p = close + 6
-          }
-        }
-      }
+      // paragraph walk (<w:p/> is an empty paragraph)
+      val paras = Xml.blocks(doc, "w:p", bodyAt).getOrElse(return None)
+        .map(p => Ooxml.paragraphText(doc, p.bodyStart, p.bodyEnd, "w:t",
+          Rendered).getOrElse(return None))
       // core properties are OPTIONAL (per-field degradation)
       val core = read("docProps/core.xml")
       Some(DocxMeta(
-        core.flatMap(tagText(_, "dc:title")),
-        core.flatMap(tagText(_, "dc:creator")),
+        core.flatMap(Xml.text(_, "dc:title")),
+        core.flatMap(Xml.text(_, "dc:creator")),
         paras.length, paras.mkString("\n")))
     } catch { case _: Exception => None }
 
   // ------------------------------------------------------------------
   // fixture emitter
   // ------------------------------------------------------------------
-
-  private def esc(s: String): String = Ooxml.escapeEntities(s)
 
   /** Emit a structurally-conformant package: content types, package
     * rels resolving the main part at `mainPath` (exercises non-default
@@ -174,8 +87,8 @@ object Docx {
     val core =
       s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
          |<cp:coreProperties xmlns:cp="http://schemas.openxmlformats.org/package/2006/metadata/core-properties" xmlns:dc="http://purl.org/dc/elements/1.1/">
-         |<dc:title>${esc(title)}</dc:title>
-         |<dc:creator>${esc(creator)}</dc:creator>
+         |<dc:title>${Xml.escape(title)}</dc:title>
+         |<dc:creator>${Xml.escape(creator)}</dc:creator>
          |</cp:coreProperties>""".stripMargin
     def runs(text: String): String =
       if (text.isEmpty) "" // paragraph with no runs
@@ -189,7 +102,7 @@ object Docx {
           val ts = parts.zipWithIndex.map { case (part, j) =>
             val preserve =
               if (part != part.trim) " xml:space=\"preserve\"" else ""
-            (if (j == 0) tab else "") + s"<w:t$preserve>${esc(part)}</w:t>"
+            (if (j == 0) tab else "") + s"<w:t$preserve>${Xml.escape(part)}</w:t>"
           }
           ts.map(t => s"<w:r><w:rPr><w:b/></w:rPr>$t</w:r>").mkString
         }

@@ -22,97 +22,29 @@ object Epub {
       language: Option[String], identifier: Option[String],
       nManifest: Int, nSpine: Int, nEntries: Int, mimetypeOk: Boolean)
 
-  private def decodeEntities(s: String): String =
-    s.replace("&lt;", "<").replace("&gt;", ">")
-      .replace("&quot;", "\"").replace("&apos;", "'")
-      .replace("&amp;", "&")
-
-  /** First `<tag ...>text</tag>` text content (namespace-prefixed tag
-    * names passed verbatim, e.g. "dc:title"). */
-  private def tagText(s: String, tag: String): Option[String] = {
-    var i = 0
-    while (i < s.length) {
-      val k = s.indexOf("<" + tag, i)
-      if (k < 0) return None
-      val after = k + 1 + tag.length
-      if (after < s.length &&
-        (s.charAt(after) == '>' || s.charAt(after).isWhitespace)) {
-        val open = s.indexOf('>', k)
-        val close = if (open < 0) -1 else s.indexOf("</" + tag, open)
-        if (open < 0 || close < 0) return None
-        return Some(decodeEntities(s.substring(open + 1, close).trim))
-      }
-      i = k + 1
-    }
-    None
-  }
-
-  private def countTag(s: String, tag: String): Int = {
-    var n = 0
-    var i = 0
-    while (i >= 0 && i < s.length) {
-      val k = s.indexOf("<" + tag, i)
-      if (k < 0) i = -1
-      else {
-        val after = k + 1 + tag.length
-        if (after < s.length &&
-          (s.charAt(after).isWhitespace || s.charAt(after) == '/' ||
-            s.charAt(after) == '>')) n += 1
-        i = k + 1
-      }
-    }
-    n
-  }
-
-  private def attrValue(s: String, name: String): Option[String] = {
-    val k = s.indexOf(name + "=")
-    if (k < 0) return None
-    val q = s.charAt(k + name.length + 1)
-    if (q != '"' && q != '\'') return None
-    val start = k + name.length + 2
-    val e = s.indexOf(q, start)
-    if (e < 0) None else Some(s.substring(start, e))
-  }
-
   def decodeEpub(b: Array[Byte]): Option[EpubMeta] =
     try {
       val entries = Archive.zipEntries(b).getOrElse(return None)
-      def read(name: String): Option[String] =
-        entries.find(_.name == name)
-          .flatMap(Archive.unzipEntry(b, _))
-          .map(new String(_, "UTF-8"))
+      val read = Ooxml.readPart(b, entries) _
       val mimetypeOk = entries.find(_.name == "mimetype").exists { e =>
         e.method == 0 && Archive.unzipEntry(b, e)
           .map(new String(_, "US-ASCII"))
           .contains("application/epub+zip")
       }
       val container = read("META-INF/container.xml").getOrElse(return None)
-      // first <rootfile ...> carries full-path per OCF; the delimiter
-      // check keeps the <rootfiles> WRAPPER from matching
-      var rootAt = -1
-      var scan = 0
-      while (rootAt < 0 && scan < container.length) {
-        val k = container.indexOf("<rootfile", scan)
-        if (k < 0) scan = container.length
-        else {
-          val after = k + 9
-          if (after < container.length &&
-            (container.charAt(after).isWhitespace ||
-              container.charAt(after) == '/')) rootAt = k
-          else scan = k + 1
-        }
-      }
+      // first <rootfile ...> carries full-path per OCF; the name
+      // boundary keeps the <rootfiles> WRAPPER from matching
+      val rootAt = Xml.findTag(container, "rootfile", 0, container.length)
       if (rootAt < 0) return None
-      val rootEnd = container.indexOf('>', rootAt)
-      if (rootEnd < 0) return None
-      val opfPath = attrValue(
-        container.substring(rootAt, rootEnd), "full-path")
+      val opfPath = Xml.openTag(container, "rootfile", rootAt,
+        container.length).flatMap(_.attrs.get("full-path"))
         .getOrElse(return None)
       val opf = read(opfPath).getOrElse(return None)
+      def text(tag: String) = Xml.text(opf, tag).map(_.trim)
       Some(EpubMeta(
-        tagText(opf, "dc:title"), tagText(opf, "dc:creator"),
-        tagText(opf, "dc:language"), tagText(opf, "dc:identifier"),
-        countTag(opf, "item"), countTag(opf, "itemref"),
+        text("dc:title"), text("dc:creator"),
+        text("dc:language"), text("dc:identifier"),
+        Xml.count(opf, "item"), Xml.count(opf, "itemref"),
         entries.size, mimetypeOk))
     } catch { case _: Exception => None }
 
@@ -123,7 +55,7 @@ object Epub {
   def encodeEpub(title: String, creator: String, language: String,
       identifier: String, nChapters: Int): Array[Byte] = {
     require(nChapters >= 1)
-    val esc = title.replace("&", "&amp;").replace("<", "&lt;")
+    val esc = Xml.escape(title)
     val container =
       """<?xml version="1.0"?>
         |<container version="1.0" xmlns="urn:oasis:names:tc:opendocument:xmlns:container">

@@ -17,38 +17,6 @@ object Feed {
   final case class FeedMeta(kind: String, title: Option[String],
       nEntries: Int, nLinks: Int, maxDate: Option[String])
 
-  private def decodeEntities(s: String): String =
-    s.replace("&lt;", "<").replace("&gt;", ">")
-      .replace("&quot;", "\"").replace("&apos;", "'")
-      .replace("&amp;", "&")
-
-  /** Text content of the FIRST `<tag ...>text</tag>` at or after
-    * `from` within [from, until); CDATA unwrapped, entities decoded. */
-  private def tagText(s: String, tag: String, from: Int,
-      until: Int): Option[String] = {
-    var i = from
-    while (i < until) {
-      val k = s.indexOf("<" + tag, i)
-      if (k < 0 || k >= until) return None
-      val after = k + 1 + tag.length
-      if (after < s.length &&
-        (s.charAt(after) == '>' || s.charAt(after).isWhitespace)) {
-        val open = s.indexOf('>', k)
-        if (open < 0 || open >= until) return None
-        val close = s.indexOf("</" + tag, open)
-        if (close < 0 || close > until) return None
-        val raw = s.substring(open + 1, close).trim
-        val body =
-          if (raw.startsWith("<![CDATA[") && raw.endsWith("]]>"))
-            raw.substring(9, raw.length - 3)
-          else decodeEntities(raw)
-        return Some(body.trim)
-      }
-      i = k + 1
-    }
-    None
-  }
-
   def decodeFeed(b: Array[Byte]): Option[FeedMeta] =
     try {
       if (b == null || b.length < 10) return None
@@ -60,34 +28,24 @@ object Feed {
       if (!isRss && !isAtom) return None
       val (entryTag, dateTag, kind) =
         if (isRss) ("item", "pubDate", "rss") else ("entry", "updated", "atom")
+      def text(tag: String, from: Int, until: Int) =
+        Xml.text(s, tag, from, until).map(_.trim)
       // channel/feed title = first <title> BEFORE the first entry
-      val firstEntry = s.indexOf("<" + entryTag)
-      val headEnd = if (firstEntry < 0) s.length else firstEntry
-      val title = tagText(s, "title", 0, headEnd)
-      var nEntries = 0
-      var nLinks = 0
-      var maxDate: Option[String] = None
-      var i = firstEntry
-      while (i >= 0 && i < s.length) {
-        val open = s.indexOf('>', i)
-        val close = s.indexOf("</" + entryTag, i)
-        if (open < 0 || close < 0) return None // unterminated entry
-        nEntries += 1
-        // links: RSS <link>url</link>; Atom <link href="..."/>
-        if (isRss) {
-          if (tagText(s, "link", open, close).exists(_.nonEmpty)) nLinks += 1
-        } else {
-          val lk = s.indexOf("<link", open)
-          if (lk >= 0 && lk < close) {
-            val (attrs, _) = HtmlExtract.tagAttrs(s, lk + 5)
-            if (attrs.get("href").exists(_.nonEmpty)) nLinks += 1
-          }
+      val firstEntry = Xml.findTag(s, entryTag, 0, s.length)
+      val title = text("title", 0, if (firstEntry < 0) s.length else firstEntry)
+      val entries = Xml.blocks(s, entryTag).getOrElse(return None)
+      val nEntries = entries.length
+      // links: RSS <link>url</link>; Atom <link href="..."/>
+      val nLinks = entries.count { e =>
+        if (isRss) text("link", e.bodyStart, e.bodyEnd).exists(_.nonEmpty)
+        else {
+          val lk = Xml.findTag(s, "link", e.bodyStart, e.bodyEnd)
+          lk >= 0 && Xml.openTag(s, "link", lk, e.bodyEnd)
+            .flatMap(_.attrs.get("href")).exists(_.nonEmpty)
         }
-        tagText(s, dateTag, open, close).foreach { d =>
-          if (maxDate.forall(_ < d)) maxDate = Some(d)
-        }
-        i = s.indexOf("<" + entryTag, close)
       }
+      val maxDate = entries.flatMap(e => text(dateTag, e.bodyStart, e.bodyEnd))
+        .maxOption
       if (nEntries == 0) return None // a feed with no entries is not useful
       Some(FeedMeta(kind, title, nEntries, nLinks, maxDate))
     } catch { case _: Exception => None }
@@ -96,14 +54,14 @@ object Feed {
     * title/link/pubDate with a CDATA title on every third item. */
   def encodeRss(title: String, items: Seq[(String, String, String)])
       : Array[Byte] = {
-    val esc = title.replace("&", "&amp;").replace("<", "&lt;")
+    val esc = Xml.escape(title)
     val sb = new StringBuilder(
       s"""<?xml version="1.0"?>\n<rss version="2.0"><channel>\n""" +
         s"<title>$esc</title><link>https://example.test/</link>\n")
     items.zipWithIndex.foreach { case ((t, link, date), k) =>
       val it =
         if (k % 3 == 2) s"<![CDATA[$t]]>"
-        else t.replace("&", "&amp;").replace("<", "&lt;")
+        else Xml.escape(t)
       sb.append(s"<item><title>$it</title><link>$link</link>" +
         s"<pubDate>$date</pubDate></item>\n")
     }
@@ -115,14 +73,13 @@ object Feed {
     * href-style link, RFC 3339 updated stamp. */
   def encodeAtom(title: String, entries: Seq[(String, String, String)])
       : Array[Byte] = {
-    val esc = title.replace("&", "&amp;").replace("<", "&lt;")
+    val esc = Xml.escape(title)
     val sb = new StringBuilder(
       """<?xml version="1.0" encoding="utf-8"?>""" + "\n" +
         s"""<feed xmlns="http://www.w3.org/2005/Atom">\n""" +
         s"<title>$esc</title>\n")
     entries.foreach { case (t, href, updated) =>
-      val te = t.replace("&", "&amp;").replace("<", "&lt;")
-      sb.append(s"""<entry><title>$te</title><link href="$href"/>""" +
+      sb.append(s"""<entry><title>${Xml.escape(t)}</title><link href="$href"/>""" +
         s"<updated>$updated</updated></entry>\n")
     }
     sb.append("</feed>\n")

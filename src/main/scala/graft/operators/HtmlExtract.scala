@@ -231,7 +231,7 @@ object HtmlExtract {
 
   /** Entity decode over a whole string, via [[entityAt]] (same rules
     * as the block parse, same bounded window, astral-safe append). */
-  private def decodeEntities(s: String): String = {
+  private def decodeCharRefs(s: String): String = {
     if (s.indexOf('&') < 0) return s
     val b = new StringBuilder(s.length)
     var i = 0
@@ -301,14 +301,14 @@ object HtmlExtract {
                     val q = html.charAt(k)
                     val end = html.indexOf(q, k + 1)
                     if (end > 0) {
-                      href = Some(decodeEntities(html.substring(k + 1, end)))
+                      href = Some(decodeCharRefs(html.substring(k + 1, end)))
                       j = end + 1
                     } else j = n
                   } else { // unquoted value: to whitespace or '>'
                     val vs = k
                     while (k < n && !html.charAt(k).isWhitespace &&
                       html.charAt(k) != '>') k += 1
-                    href = Some(decodeEntities(html.substring(vs, k)))
+                    href = Some(decodeCharRefs(html.substring(vs, k)))
                     j = k
                   }
                 } else j += 4
@@ -350,17 +350,17 @@ object HtmlExtract {
             val q = html.charAt(i)
             val end = html.indexOf(q, i + 1)
             if (end < 0) { // unterminated quote: consume to end
-              attrs += key -> decodeEntities(html.substring(i + 1))
+              attrs += key -> decodeCharRefs(html.substring(i + 1))
               i = n
             } else {
-              attrs += key -> decodeEntities(html.substring(i + 1, end))
+              attrs += key -> decodeCharRefs(html.substring(i + 1, end))
               i = end + 1
             }
           } else {
             val vs = i
             while (i < n && !html.charAt(i).isWhitespace &&
               html.charAt(i) != '>') i += 1
-            attrs += key -> decodeEntities(html.substring(vs, i))
+            attrs += key -> decodeCharRefs(html.substring(vs, i))
           }
         } else if (key.nonEmpty) attrs += key -> ""
       }
@@ -497,7 +497,7 @@ object HtmlExtract {
             val end = if (close < 0) n else close
             if (title.isEmpty) {
               val sb = new StringBuilder(
-                decodeEntities(html.substring(after, end)))
+                decodeCharRefs(html.substring(after, end)))
               title = Some(normalize(sb))
             }
             i = if (close < 0) n else skipTag(html, close + 7)

@@ -1,7 +1,6 @@
 package graft.operators
 
 import java.io.ByteArrayOutputStream
-import java.util.zip.CRC32
 
 import graft.operators.Bytes.{i32le, le16, le24, le32, putBe32, u16be, u16le,
   u24le, u32be, u32le, u8}
@@ -324,9 +323,9 @@ object ImageHeaders {
     val ihdr = new Array[Byte](13)
     putBe32(ihdr, 0, width); putBe32(ihdr, 4, height)
     ihdr(8) = bitDepth.toByte; ihdr(9) = 2 // color type 2 = truecolor
-    writeChunk(out, "IHDR", ihdr)
-    writeChunk(out, "IDAT", payload)
-    writeChunk(out, "IEND", Array.emptyByteArray)
+    out.write(PngMeta.chunk("IHDR", ihdr))
+    out.write(PngMeta.chunk("IDAT", payload))
+    out.write(PngMeta.chunk("IEND", Array.emptyByteArray))
     out.toByteArray
   }
 
@@ -428,20 +427,5 @@ object ImageHeaders {
         le24(out, width - 1); le24(out, height - 1)
     }
     out.toByteArray
-  }
-
-  private def writeChunk(out: ByteArrayOutputStream, typ: String,
-      payload: Array[Byte]): Unit = {
-    val len = new Array[Byte](4)
-    putBe32(len, 0, payload.length)
-    out.write(len, 0, 4)
-    val t = typ.getBytes("US-ASCII")
-    out.write(t, 0, 4)
-    out.write(payload, 0, payload.length)
-    val crc = new CRC32()
-    crc.update(t); crc.update(payload)
-    val c = new Array[Byte](4)
-    putBe32(c, 0, crc.getValue.toInt)
-    out.write(c, 0, 4)
   }
 }

@@ -15,127 +15,12 @@ package graft.operators
   *    executed-ness signal;
   *  - the kernel language lives at `metadata.language_info.name`.
   *
-  * Parsing uses a strict, depth-bounded JSON value parser written for
-  * this module (string escapes incl. \\uXXXX surrogate pairs, no
+  * Parsing is [[Json.parse]] (strict RFC 8259, depth-bounded, no
   * trailing garbage). Not-a-notebook JSON (no nbformat / no cells) or
   * malformed JSON → None. */
 object Ipynb {
 
-  // ---- minimal strict JSON value parser ----------------------------
-
-  private[operators] sealed trait JVal
-  private[operators] final case class JStr(v: String) extends JVal
-  private[operators] final case class JNum(v: Double) extends JVal
-  private[operators] final case class JBool(v: Boolean) extends JVal
-  private[operators] case object JNull extends JVal
-  private[operators] final case class JArr(items: Vector[JVal]) extends JVal
-  private[operators] final case class JObj(fields: Map[String, JVal])
-      extends JVal
-
-  /** Parse a COMPLETE JSON document (no trailing non-ws bytes). */
-  private[operators] def parseJson(s: String): Option[JVal] = {
-    var i = 0
-    val n = s.length
-    def ws(): Unit = { while (i < n && s.charAt(i).isWhitespace) i += 1 }
-    def str(): Option[String] = {
-      if (i >= n || s.charAt(i) != '"') return None
-      i += 1
-      val sb = new StringBuilder
-      while (i < n && s.charAt(i) != '"') {
-        val c = s.charAt(i)
-        if (c == '\\') {
-          if (i + 1 >= n) return None
-          s.charAt(i + 1) match {
-            case '"' => sb.append('"'); i += 2
-            case '\\' => sb.append('\\'); i += 2
-            case '/' => sb.append('/'); i += 2
-            case 'n' => sb.append('\n'); i += 2
-            case 't' => sb.append('\t'); i += 2
-            case 'r' => sb.append('\r'); i += 2
-            case 'b' => sb.append('\b'); i += 2
-            case 'f' => sb.append('\f'); i += 2
-            case 'u' =>
-              if (i + 6 > n) return None
-              val hex = s.substring(i + 2, i + 6)
-              if (!hex.forall(h => h.isDigit || (h >= 'a' && h <= 'f') ||
-                (h >= 'A' && h <= 'F'))) return None
-              sb.append(Integer.parseInt(hex, 16).toChar)
-              i += 6
-            case _ => return None
-          }
-        } else { sb.append(c); i += 1 }
-      }
-      if (i >= n) return None // unterminated
-      i += 1
-      Some(sb.toString)
-    }
-    def value(depth: Int): Option[JVal] = {
-      if (depth > 64) return None
-      ws()
-      if (i >= n) return None
-      s.charAt(i) match {
-        case '"' => str().map(JStr.apply)
-        case '{' =>
-          i += 1
-          val fields = Map.newBuilder[String, JVal]
-          ws()
-          if (i < n && s.charAt(i) == '}') { i += 1; return Some(JObj(fields.result())) }
-          while (true) {
-            ws()
-            val k = str().getOrElse(return None)
-            ws()
-            if (i >= n || s.charAt(i) != ':') return None
-            i += 1
-            val v = value(depth + 1).getOrElse(return None)
-            fields += k -> v
-            ws()
-            if (i >= n) return None
-            s.charAt(i) match {
-              case ',' => i += 1
-              case '}' => i += 1; return Some(JObj(fields.result()))
-              case _ => return None
-            }
-          }
-          None
-        case '[' =>
-          i += 1
-          val items = Vector.newBuilder[JVal]
-          ws()
-          if (i < n && s.charAt(i) == ']') { i += 1; return Some(JArr(items.result())) }
-          while (true) {
-            val v = value(depth + 1).getOrElse(return None)
-            items += v
-            ws()
-            if (i >= n) return None
-            s.charAt(i) match {
-              case ',' => i += 1
-              case ']' => i += 1; return Some(JArr(items.result()))
-              case _ => return None
-            }
-          }
-          None
-        case 't' =>
-          if (s.startsWith("true", i)) { i += 4; Some(JBool(true)) }
-          else None
-        case 'f' =>
-          if (s.startsWith("false", i)) { i += 5; Some(JBool(false)) }
-          else None
-        case 'n' =>
-          if (s.startsWith("null", i)) { i += 4; Some(JNull) } else None
-        case c if c == '-' || c.isDigit =>
-          val st = i
-          if (c == '-') i += 1
-          while (i < n && (s.charAt(i).isDigit || s.charAt(i) == '.' ||
-            s.charAt(i) == 'e' || s.charAt(i) == 'E' ||
-            s.charAt(i) == '+' || s.charAt(i) == '-')) i += 1
-          s.substring(st, i).toDoubleOption.map(JNum.apply)
-        case _ => None
-      }
-    }
-    val v = value(0)
-    ws()
-    if (i != n) None else v // trailing garbage rejects
-  }
+  import Json.{JArr, JNum, JObj, JStr}
 
   // ---- notebook extraction -----------------------------------------
 
@@ -148,30 +33,30 @@ object Ipynb {
   def decodeIpynb(b: Array[Byte]): Option[IpynbMeta] =
     try {
       if (b == null || b.length < 20) return None
-      val top = parseJson(new String(b, "UTF-8")) match {
+      val top = Json.parse(new String(b, "UTF-8")) match {
         case Some(o: JObj) => o
         case _ => return None
       }
-      val nbformat = top.fields.get("nbformat") match {
+      val nbformat = top.get("nbformat") match {
         case Some(JNum(v)) if v >= 1 && v <= 100 && v == v.floor =>
           v.toInt
         case _ => return None // not notebook-shaped
       }
-      val cells = top.fields.get("cells") match {
+      val cells = top.get("cells") match {
         case Some(JArr(cs)) => cs
         case _ => return None
       }
       val language = for {
-        JObj(meta) <- top.fields.get("metadata")
-        JObj(li) <- meta.get("language_info")
-        JStr(name) <- li.get("name")
+        meta <- top.get("metadata").collect { case o: JObj => o }
+        li <- meta.get("language_info").collect { case o: JObj => o }
+        name <- li.get("name").collect { case JStr(n) => n }
       } yield name
       var nCode = 0
       var nMd = 0
       var nRaw = 0
       var nOutputs = 0
       val texts = cells.map {
-        case JObj(cell) =>
+        case cell: JObj =>
           cell.get("cell_type") match {
             case Some(JStr("code")) =>
               nCode += 1
@@ -204,19 +89,6 @@ object Ipynb {
   // fixture emitter
   // ------------------------------------------------------------------
 
-  private def jstr(s: String): String = {
-    val sb = new StringBuilder("\"")
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\t' => sb.append("\\t")
-      case c if c < 32 => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.append('"').toString
-  }
-
   /** One fixture cell: (cellType, source, nOutputs). Even-indexed
     * cells emit `source` as an ARRAY of lines (trailing newlines kept
     * on each element, the wild-common shape), odd-indexed as one
@@ -230,23 +102,23 @@ object Ipynb {
           // split into lines, each keeping its '\n' (except the last)
           val parts = src.split("\n", -1)
           val lines = parts.zipWithIndex.map { case (l, j) =>
-            jstr(if (j < parts.length - 1) l + "\n" else l)
+            Json.quote(if (j < parts.length - 1) l + "\n" else l)
           }.filter(_ != "\"\"")
           "[" + lines.mkString(",") + "]"
-        } else jstr(src)
+        } else Json.quote(src)
       val outputs =
         if (tpe == "code") {
           val os = (0 until nOut).map(k =>
-            s"""{"output_type":"stream","name":"stdout","text":${jstr(s"out $k\n")}}""")
+            s"""{"output_type":"stream","name":"stdout","text":${Json.quote(s"out $k\n")}}""")
           s""","execution_count":${i + 1},"outputs":[${os.mkString(",")}]"""
         } else ""
-      s"""{"cell_type":${jstr(tpe)},"metadata":{"collapsed":false},""" +
+      s"""{"cell_type":${Json.quote(tpe)},"metadata":{"collapsed":false},""" +
         s""""source":$sourceJson$outputs}"""
     }
     val json =
       s"""{"nbformat":4,"nbformat_minor":5,"metadata":{""" +
         s""""kernelspec":{"display_name":"K","name":"k1"},""" +
-        s""""language_info":{"name":${jstr(language)},"version":"3.11"}},""" +
+        s""""language_info":{"name":${Json.quote(language)},"version":"3.11"}},""" +
         s""""cells":[${cellJson.mkString(",")}]}"""
     json.getBytes("UTF-8")
   }

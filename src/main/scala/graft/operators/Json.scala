@@ -5,8 +5,11 @@ import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
 
-/** JSONL schema profiling — what shape is this corpus, and did it
-  * change between batches. A 100 TB JSONL drop has no declared schema;
+/** The one JSON reader ([[parse]], building a [[JVal]] tree) and
+  * string emitter ([[quote]]) of the decoders that read JSON
+  * ([[Ipynb]], [[SourceMap]], [[AvroRecords]], [[JsonLd]]), plus JSONL
+  * schema profiling — what shape is this corpus, and did it change
+  * between batches. A 100 TB JSONL drop has no declared schema;
   * before `spark.read.json` (whose inference is a full extra pass) a
   * pipeline wants the path/type census: every JSON path present, its
   * value types, how many documents carry it. Batch-over-batch, the
@@ -14,80 +17,94 @@ import graft.engine.Tables
   * shifted) that catches producer changes before they poison a
   * training run.
   *
-  * The walk is a from-scratch RFC 8259 recursive-descent pass emitting
-  * (path, type) pairs without materializing a tree; array elements
-  * collapse to `[]` (schema convention), object keys append verbatim.
+  * The parser is a from-scratch RFC 8259 recursive-descent pass: the
+  * four RFC whitespace characters only, no raw control characters in
+  * strings, strict numbers (no leading zeros, digits on both sides of
+  * the point), nothing after the value, nesting at most 256 deep.
   * Malformed input yields None — one bad line is a counted casualty,
-  * never a failed job. Per-row map work; the profile shuffle is
-  * bounded by ǀdistinct (path, type)ǀ — schema-sized, not data-sized.
+  * never a failed job. The census walks the tree in pre-order: array
+  * elements collapse to `[]` (schema convention), object keys append
+  * verbatim. Per-row map work; the profile shuffle is bounded by
+  * ǀdistinct (path, type)ǀ — schema-sized, not data-sized.
   */
 object Json {
 
-  private final class Walker(s: String) {
+  sealed trait JVal
+  final case class JStr(v: String) extends JVal
+  final case class JNum(v: Double) extends JVal
+  final case class JBool(v: Boolean) extends JVal
+  case object JNull extends JVal
+  final case class JArr(items: Vector[JVal]) extends JVal
+  /** Fields in document order, duplicates kept. */
+  final case class JObj(fields: Vector[(String, JVal)]) extends JVal {
+    /** The value of `key`; the last duplicate wins. */
+    def get(key: String): Option[JVal] =
+      fields.reverseIterator.collectFirst { case (`key`, v) => v }
+  }
+
+  private val MaxDepth = 256
+
+  private final class Parser(s: String) {
     var i = 0
-    var ok = true
-    val out = Vector.newBuilder[(String, String)]
 
     def ws(): Unit = {
       while (i < s.length && (s.charAt(i) == ' ' || s.charAt(i) == '\t' ||
         s.charAt(i) == '\n' || s.charAt(i) == '\r')) i += 1
     }
 
-    def fail(): Unit = { ok = false; i = s.length }
+    private def at(c: Char): Boolean = i < s.length && s.charAt(i) == c
 
-    def value(path: String, depth: Int): Unit = {
-      if (!ok) return
-      if (depth > 256) { fail(); return }
+    def value(depth: Int): Option[JVal] = {
+      if (depth > MaxDepth) return None
       ws()
-      if (i >= s.length) { fail(); return }
+      if (i >= s.length) return None
       s.charAt(i) match {
-        case '{' => obj(path, depth)
-        case '[' => arr(path, depth)
-        case '"' => if (string().isDefined) out += ((path, "string")) else fail()
-        case 't' => literal("true"); if (ok) out += ((path, "boolean"))
-        case 'f' => literal("false"); if (ok) out += ((path, "boolean"))
-        case 'n' => literal("null"); if (ok) out += ((path, "null"))
-        case c if c == '-' || (c >= '0' && c <= '9') =>
-          number(); if (ok) out += ((path, "number"))
-        case _ => fail()
+        case '{' => obj(depth)
+        case '[' => arr(depth)
+        case '"' => string().map(JStr.apply)
+        case 't' => literal("true", JBool(true))
+        case 'f' => literal("false", JBool(false))
+        case 'n' => literal("null", JNull)
+        case c if c == '-' || (c >= '0' && c <= '9') => number()
+        case _ => None
       }
     }
 
-    def obj(path: String, depth: Int): Unit = {
-      out += ((path, "object"))
+    private def obj(depth: Int): Option[JVal] = {
+      val fields = Vector.newBuilder[(String, JVal)]
       i += 1; ws()
-      if (i < s.length && s.charAt(i) == '}') { i += 1; return }
-      var more = true
-      while (ok && more) {
+      if (at('}')) { i += 1; return Some(JObj(fields.result())) }
+      while (true) {
         ws()
-        val key = string().getOrElse { fail(); return }
+        val key = string().getOrElse(return None)
         ws()
-        if (i >= s.length || s.charAt(i) != ':') { fail(); return }
+        if (!at(':')) return None
         i += 1
-        value(path + "." + key, depth + 1)
+        fields += key -> value(depth + 1).getOrElse(return None)
         ws()
-        if (i < s.length && s.charAt(i) == ',') i += 1
-        else if (i < s.length && s.charAt(i) == '}') { i += 1; more = false }
-        else fail()
+        if (at(',')) i += 1
+        else if (at('}')) { i += 1; return Some(JObj(fields.result())) }
+        else return None
       }
+      None
     }
 
-    def arr(path: String, depth: Int): Unit = {
-      out += ((path, "array"))
+    private def arr(depth: Int): Option[JVal] = {
+      val items = Vector.newBuilder[JVal]
       i += 1; ws()
-      if (i < s.length && s.charAt(i) == ']') { i += 1; return }
-      var more = true
-      while (ok && more) {
-        value(path + "[]", depth + 1)
+      if (at(']')) { i += 1; return Some(JArr(items.result())) }
+      while (true) {
+        items += value(depth + 1).getOrElse(return None)
         ws()
-        if (i < s.length && s.charAt(i) == ',') i += 1
-        else if (i < s.length && s.charAt(i) == ']') { i += 1; more = false }
-        else fail()
+        if (at(',')) i += 1
+        else if (at(']')) { i += 1; return Some(JArr(items.result())) }
+        else return None
       }
+      None
     }
 
-    def string(): Option[String] = {
-      if (i >= s.length || s.charAt(i) != '"') return None
+    private def string(): Option[String] = {
+      if (!at('"')) return None
       i += 1
       val sb = new StringBuilder
       while (i < s.length) {
@@ -116,45 +133,78 @@ object Json {
       None // unterminated
     }
 
-    def number(): Unit = {
+    private def digits(): Int = {
       val start = i
-      if (i < s.length && s.charAt(i) == '-') i += 1
+      while (i < s.length && s.charAt(i) >= '0' && s.charAt(i) <= '9') i += 1
+      i - start
+    }
+
+    private def number(): Option[JVal] = {
+      val start = i
+      if (at('-')) i += 1
       val intStart = i
-      var digits = 0
-      while (i < s.length && Character.isDigit(s.charAt(i))) { i += 1; digits += 1 }
-      if (digits == 0) { fail(); return }
+      val n = digits()
+      if (n == 0) return None
       // RFC 8259: int = zero / digit1-9 *DIGIT — no leading zeros
-      if (digits > 1 && s.charAt(intStart) == '0') { fail(); return }
-      if (i < s.length && s.charAt(i) == '.') {
+      if (n > 1 && s.charAt(intStart) == '0') return None
+      if (at('.')) { i += 1; if (digits() == 0) return None }
+      if (at('e') || at('E')) {
         i += 1
-        var fd = 0
-        while (i < s.length && Character.isDigit(s.charAt(i))) { i += 1; fd += 1 }
-        if (fd == 0) { fail(); return }
+        if (at('+') || at('-')) i += 1
+        if (digits() == 0) return None
       }
-      if (i < s.length && (s.charAt(i) == 'e' || s.charAt(i) == 'E')) {
-        i += 1
-        if (i < s.length && (s.charAt(i) == '+' || s.charAt(i) == '-')) i += 1
-        var ed = 0
-        while (i < s.length && Character.isDigit(s.charAt(i))) { i += 1; ed += 1 }
-        if (ed == 0) { fail(); return }
-      }
-      if (i == start) fail()
+      Some(JNum(s.substring(start, i).toDouble))
     }
 
-    def literal(lit: String): Unit = {
-      if (s.regionMatches(i, lit, 0, lit.length)) i += lit.length else fail()
-    }
+    private def literal(lit: String, v: JVal): Option[JVal] =
+      if (s.startsWith(lit, i)) { i += lit.length; Some(v) } else None
   }
 
-  /** (path, type) pairs for one JSON text, or None when malformed
-    * (trailing garbage counts as malformed). */
-  def pathTypes(json: String): Option[Vector[(String, String)]] = {
+  /** One complete JSON text as a tree, or None when malformed
+    * (trailing non-whitespace counts as malformed). */
+  def parse(json: String): Option[JVal] = {
     if (json == null) return None
-    val w = new Walker(json)
-    w.value("$", 0)
-    w.ws()
-    if (w.ok && w.i == json.length) Some(w.out.result()) else None
+    val p = new Parser(json)
+    val v = p.value(0)
+    p.ws()
+    if (p.i == json.length) v else None
   }
+
+  /** `s` as a JSON string literal: quote, backslash and every control
+    * character escaped. */
+  def quote(s: String): String = {
+    val sb = new StringBuilder("\"")
+    s.foreach {
+      case '"' => sb.append("\\\"")
+      case '\\' => sb.append("\\\\")
+      case '\n' => sb.append("\\n")
+      case '\t' => sb.append("\\t")
+      case c if c < 32 => sb.append(f"\\u${c.toInt}%04x")
+      case c => sb.append(c)
+    }
+    sb.append('"').toString
+  }
+
+  /** (path, type) pairs for one JSON text in pre-order, or None when
+    * malformed. */
+  def pathTypes(json: String): Option[Vector[(String, String)]] =
+    parse(json).map { root =>
+      val out = Vector.newBuilder[(String, String)]
+      def walk(path: String, v: JVal): Unit = v match {
+        case JObj(fields) =>
+          out += ((path, "object"))
+          fields.foreach { case (k, x) => walk(path + "." + k, x) }
+        case JArr(items) =>
+          out += ((path, "array"))
+          items.foreach(walk(path + "[]", _))
+        case _: JStr => out += ((path, "string"))
+        case _: JNum => out += ((path, "number"))
+        case _: JBool => out += ((path, "boolean"))
+        case JNull => out += ((path, "null"))
+      }
+      walk("$", root)
+      out.result()
+    }
 
   /** Corpus path/type census: one row per (path, type) with how many
     * rows carry it (`n_docs`) and total value occurrences

@@ -11,8 +11,8 @@ package graft.operators
   *
   * Extraction: the script-tag walk is case-insensitive on tag and
   * attribute, keyed on the exact `application/ld+json` type; payloads
-  * are parsed with a minimal JSON object reader that surfaces the
-  * TOP-LEVEL STRING fields (nested objects/arrays/numbers are
+  * are parsed with the strict [[Json.parse]], and only the
+  * TOP-LEVEL STRING fields surface (nested objects/arrays/numbers are
   * structurally skipped, not flattened — "author":{"name":...} is the
   * author object's field, not the document's). A payload that is not
   * a syntactically complete JSON object yields no block — broken
@@ -25,97 +25,16 @@ object JsonLd {
   final case class LdBlock(raw: String, atType: Option[String],
       fields: Map[String, String])
 
-  /** Minimal JSON object reader: top-level string fields of one
-    * object. None = not a complete well-formed object. */
-  def topLevelStrings(json: String): Option[Map[String, String]] = {
-    val s = json
-    var i = 0
-    val n = s.length
-    def ws(): Unit = { while (i < n && s.charAt(i).isWhitespace) i += 1 }
-    def str(): Option[String] = {
-      if (i >= n || s.charAt(i) != '"') return None
-      i += 1
-      val sb = new StringBuilder
-      while (i < n) {
-        val c = s.charAt(i)
-        if (c == '"') { i += 1; return Some(sb.toString) }
-        else if (c == '\\') {
-          if (i + 1 >= n) return None
-          s.charAt(i + 1) match {
-            case '"' => sb.append('"'); i += 2
-            case '\\' => sb.append('\\'); i += 2
-            case '/' => sb.append('/'); i += 2
-            case 'n' => sb.append('\n'); i += 2
-            case 't' => sb.append('\t'); i += 2
-            case 'r' => sb.append('\r'); i += 2
-            case 'b' => sb.append('\b'); i += 2
-            case 'f' => sb.append('\f'); i += 2
-            case 'u' =>
-              if (i + 6 > n) return None
-              try {
-                sb.append(Integer.parseInt(s.substring(i + 2, i + 6), 16)
-                  .toChar)
-              } catch { case _: NumberFormatException => return None }
-              i += 6
-            case _ => return None
-          }
-        } else { sb.append(c); i += 1 }
-      }
-      None // unterminated
-    }
-    // structural skip of any value; returns false on malformed input
-    def skipValue(): Boolean = {
-      ws()
-      if (i >= n) return false
-      s.charAt(i) match {
-        case '"' => str().isDefined
-        case '{' => skipDelim('{', '}')
-        case '[' => skipDelim('[', ']')
-        case _ =>
-          val start = i
-          while (i < n && !",}] \t\n\r".contains(s.charAt(i))) i += 1
-          i > start // number / true / false / null token
+  /** The top-level string fields of one JSON object (the first of
+    * duplicate keys wins), read with [[Json.parse]]. None = not a
+    * complete well-formed object. */
+  def topLevelStrings(json: String): Option[Map[String, String]] =
+    Json.parse(json).collect { case Json.JObj(fields) =>
+      fields.foldLeft(Map.empty[String, String]) {
+        case (m, (k, Json.JStr(v))) if !m.contains(k) => m + (k -> v)
+        case (m, _) => m
       }
     }
-    def skipDelim(open: Char, close: Char): Boolean = {
-      var depth = 0
-      while (i < n) {
-        val c = s.charAt(i)
-        if (c == '"') { if (str().isEmpty) return false }
-        else {
-          if (c == open) depth += 1
-          else if (c == close) { depth -= 1; if (depth == 0) { i += 1; return true } }
-          i += 1
-        }
-      }
-      false
-    }
-    ws()
-    if (i >= n || s.charAt(i) != '{') return None
-    i += 1
-    var fields = Map.empty[String, String]
-    ws()
-    var more = true
-    if (i < n && s.charAt(i) == '}') { i += 1; more = false }
-    while (more) {
-      ws()
-      val key = str().getOrElse(return None)
-      ws()
-      if (i >= n || s.charAt(i) != ':') return None
-      i += 1
-      ws()
-      if (i < n && s.charAt(i) == '"') {
-        val v = str().getOrElse(return None)
-        if (!fields.contains(key)) fields += key -> v
-      } else if (!skipValue()) return None
-      ws()
-      if (i < n && s.charAt(i) == ',') i += 1
-      else if (i < n && s.charAt(i) == '}') { i += 1; more = false }
-      else return None
-    }
-    ws()
-    if (i < n) None else Some(fields) // trailing garbage rejects
-  }
 
   /** All ld+json blocks of a page, in document order. Scripts with a
     * different (or no) type attribute are skipped; a matching script

@@ -1,89 +1,11 @@
 package graft.operators
 
-/** Shared scan primitives for the OOXML family ([[Docx]], [[Xlsx]],
-  * [[Pptx]]) and their purpose-built XML walks: boundary-checked tag
-  * search (a `<w:t` probe must never match `<w:tab`), block
-  * extraction, entity codec, and the attribute reader with
-  * attribute-NAME boundaries (`r:id` must not satisfy `id`). These
-  * are deliberately scanners, not a DOM — the decode contract is
-  * byte-faithful extraction with torn structures rejecting, and the
-  * scanners make every accept/reject decision explicit. */
+/** The OOXML package layer shared by [[Docx]], [[Xlsx]] and [[Pptx]]
+  * (and [[Epub]]'s part reader): part reads, the relationship hops and
+  * the run-text paragraph walk. Their XML walks run on the [[Xml]]
+  * scanners, whose contract is byte-faithful extraction; in these
+  * decoders a torn structure rejects the whole document. */
 private[operators] object Ooxml {
-
-  def decodeEntities(s: String): String =
-    s.replace("&lt;", "<").replace("&gt;", ">")
-      .replace("&quot;", "\"").replace("&apos;", "'")
-      .replace("&amp;", "&")
-
-  def escapeEntities(s: String): String =
-    s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-      .replace("\"", "&quot;")
-
-  /** Index of `<tag` at a word boundary (next char ws, '/', '>'). */
-  def findTag(s: String, tag: String, from: Int): Int = {
-    val pat = "<" + tag
-    var i = from
-    while (i >= 0) {
-      val k = s.indexOf(pat, i)
-      if (k < 0) return -1
-      val after = k + pat.length
-      if (after >= s.length) return -1
-      val c = s.charAt(after)
-      if (c.isWhitespace || c == '/' || c == '>') return k
-      i = k + 1
-    }
-    -1
-  }
-
-  /** All `<tag ...>body</tag>` (or self-closing, empty-body) blocks in
-    * order as (open-tag text, body). None on a torn block. No
-    * nesting of `tag` within itself. */
-  def blocks(s: String, tag: String): Option[Seq[(String, String)]] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var i = 0
-    var scanning = true
-    while (scanning) {
-      val k = findTag(s, tag, i)
-      if (k < 0) scanning = false
-      else {
-        val open = s.indexOf('>', k)
-        if (open < 0) return None
-        if (s.charAt(open - 1) == '/') {
-          out += ((s.substring(k, open), ""))
-          i = open + 1
-        } else {
-          val close = s.indexOf(s"</$tag>", open)
-          if (close < 0) return None
-          out += ((s.substring(k, open), s.substring(open + 1, close)))
-          i = close + tag.length + 3
-        }
-      }
-    }
-    Some(out.toSeq)
-  }
-
-  /** First `<tag>body</tag>` body inside `s` (self-closing → ""). */
-  def tagBody(s: String, tag: String): Option[String] = {
-    val k = findTag(s, tag, 0)
-    if (k < 0) return None
-    val open = s.indexOf('>', k)
-    if (open < 0) return None
-    if (s.charAt(open - 1) == '/') return Some("")
-    val close = s.indexOf(s"</$tag>", open)
-    if (close < 0) None else Some(s.substring(open + 1, close))
-  }
-
-  /** `name="value"` with an attribute-name boundary before `name`. */
-  def attrValue(tag: String, name: String): Option[String] = {
-    val k = tag.indexOf(name + "=\"")
-    if (k < 0) return None
-    if (k > 0 && { val c = tag.charAt(k - 1)
-      c.isLetterOrDigit || c == ':' })
-      return attrValue(tag.substring(k + 1), name)
-    val start = k + name.length + 2
-    val e = tag.indexOf('"', start)
-    if (e < 0) None else Some(tag.substring(start, e))
-  }
 
   val OfficeDocRel: String =
     "http://schemas.openxmlformats.org/officeDocument/2006/relationships/officeDocument"
@@ -100,8 +22,33 @@ private[operators] object Ooxml {
   def mainPartPath(read: String => Option[String]): Option[String] = {
     if (read("[Content_Types].xml").isEmpty) return None
     val rels = read("_rels/.rels").getOrElse(return None)
-    blocks(rels, "Relationship").getOrElse(return None)
-      .find(_._1.contains(s"$OfficeDocRel\""))
-      .flatMap(r => attrValue(r._1, "Target")).map(_.stripPrefix("/"))
+    Xml.blocks(rels, "Relationship").getOrElse(return None)
+      .find(_.attrs.get("Type").contains(OfficeDocRel))
+      .flatMap(_.attrs.get("Target")).map(_.stripPrefix("/"))
+  }
+
+  /** Id -> Target of a relationship part; None on a torn one. */
+  def relTargets(rels: String): Option[Map[String, String]] =
+    Xml.blocks(rels, "Relationship").map(_.flatMap { r =>
+      for (id <- r.attrs.get("Id"); t <- r.attrs.get("Target")) yield id -> t
+    }.toMap)
+
+  /** A paragraph body [from, until) in one forward pass: the text of
+    * its `textTag` runs concatenated, each element named in `rendered`
+    * replaced by its rendering (an empty one drops the element and all
+    * it holds). None on a torn element. */
+  def paragraphText(s: String, from: Int, until: Int, textTag: String,
+      rendered: Map[String, String]): Option[String] = {
+    val names = textTag :: rendered.keys.toList
+    val out = new StringBuilder
+    var i = from
+    while (true) Xml.nextTag(s, names, i, until) match {
+      case None => return Some(out.toString)
+      case Some((at, name)) =>
+        val e = Xml.elementAt(s, name, at, until).getOrElse(return None)
+        out.append(if (name == textTag) Xml.text(s, e) else rendered(name))
+        i = e.end
+    }
+    None
   }
 }

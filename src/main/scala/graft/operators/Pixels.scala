@@ -49,18 +49,6 @@ object Pixels {
   private val PngSig =
     Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
-  private def writeChunk(out: ByteArrayOutputStream, typ: String,
-      payload: Array[Byte]): Unit = {
-    val len = new Array[Byte](4); putBe32(len, 0, payload.length)
-    out.write(len, 0, 4)
-    val t = typ.getBytes("US-ASCII")
-    out.write(t, 0, 4)
-    out.write(payload, 0, payload.length)
-    val crc = new CRC32(); crc.update(t); crc.update(payload)
-    val c = new Array[Byte](4); putBe32(c, 0, crc.getValue.toInt)
-    out.write(c, 0, 4)
-  }
-
   /** RFC 2083 §6.6 Paeth predictor. */
   private def paeth(a: Int, b: Int, c: Int): Int = {
     val p = a + b - c
@@ -115,11 +103,11 @@ object Pixels {
     val ihdr = new Array[Byte](13)
     putBe32(ihdr, 0, width); putBe32(ihdr, 4, height)
     ihdr(8) = 8; ihdr(9) = 0 // bit depth 8, color type 0 = grayscale
-    writeChunk(out, "IHDR", ihdr)
-    writeChunk(out, "tEXt", "Comment".getBytes("US-ASCII") ++
-      Array(0.toByte) ++ comment)
-    writeChunk(out, "IDAT", zout.toByteArray)
-    writeChunk(out, "IEND", Array.emptyByteArray)
+    out.write(PngMeta.chunk("IHDR", ihdr))
+    out.write(PngMeta.chunk("tEXt", "Comment".getBytes("US-ASCII") ++
+      Array(0.toByte) ++ comment))
+    out.write(PngMeta.chunk("IDAT", zout.toByteArray))
+    out.write(PngMeta.chunk("IEND", Array.emptyByteArray))
     out.toByteArray
   }
 
@@ -361,11 +349,11 @@ object Pixels {
     val ihdr = new Array[Byte](13)
     putBe32(ihdr, 0, width); putBe32(ihdr, 4, height)
     ihdr(8) = 8; ihdr(9) = 2 // 8-bit, truecolor
-    writeChunk(out, "IHDR", ihdr)
-    writeChunk(out, "tEXt", "Comment".getBytes("US-ASCII") ++
-      Array(0.toByte) ++ comment)
-    writeChunk(out, "IDAT", zout.toByteArray)
-    writeChunk(out, "IEND", Array.emptyByteArray)
+    out.write(PngMeta.chunk("IHDR", ihdr))
+    out.write(PngMeta.chunk("tEXt", "Comment".getBytes("US-ASCII") ++
+      Array(0.toByte) ++ comment))
+    out.write(PngMeta.chunk("IDAT", zout.toByteArray))
+    out.write(PngMeta.chunk("IEND", Array.emptyByteArray))
     out.toByteArray
   }
 
@@ -414,7 +402,7 @@ object Pixels {
     val ihdr = new Array[Byte](13)
     putBe32(ihdr, 0, width); putBe32(ihdr, 4, height)
     ihdr(8) = 8; ihdr(9) = 3 // 8-bit, palette
-    writeChunk(out, "IHDR", ihdr)
+    out.write(PngMeta.chunk("IHDR", ihdr))
     val plte = new Array[Byte](palette.length * 3)
     var p = 0
     while (p < palette.length) {
@@ -423,11 +411,11 @@ object Pixels {
       plte(p * 3 + 2) = (palette(p) & 0xff).toByte
       p += 1
     }
-    writeChunk(out, "PLTE", plte)
-    writeChunk(out, "tEXt", "Comment".getBytes("US-ASCII") ++
-      Array(0.toByte) ++ comment)
-    writeChunk(out, "IDAT", zout.toByteArray)
-    writeChunk(out, "IEND", Array.emptyByteArray)
+    out.write(PngMeta.chunk("PLTE", plte))
+    out.write(PngMeta.chunk("tEXt", "Comment".getBytes("US-ASCII") ++
+      Array(0.toByte) ++ comment))
+    out.write(PngMeta.chunk("IDAT", zout.toByteArray))
+    out.write(PngMeta.chunk("IEND", Array.emptyByteArray))
     out.toByteArray
   }
 

@@ -123,7 +123,10 @@ object PngMeta {
   // them) and this walk see the same stream
   // ------------------------------------------------------------------
 
-  private def chunk(typ: String, payload: Array[Byte]): Array[Byte] = {
+  /** One PNG chunk: big-endian length, type, payload, and the CRC32
+    * over type + payload — the one chunk writer of the PNG emitters. */
+  private[operators] def chunk(typ: String,
+      payload: Array[Byte]): Array[Byte] = {
     val out = new ByteArrayOutputStream(payload.length + 12)
     be32(out, payload.length.toLong)
     val t = typ.getBytes("US-ASCII")

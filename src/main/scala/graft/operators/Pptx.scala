@@ -19,34 +19,6 @@ object Pptx {
     * '\n'-joined within a slide, slides '\n'-joined in deck order. */
   final case class PptxMeta(nSlides: Int, nShapes: Int, text: String)
 
-  import Ooxml.{attrValue, blocks, decodeEntities, findTag}
-
-  /** One DrawingML paragraph: `<a:t>` runs + `<a:br/>` breaks. */
-  private def paragraphText(p: String): Option[String] = {
-    val out = new StringBuilder
-    var i = 0
-    var scanning = true
-    while (scanning) {
-      val t = findTag(p, "a:t", i)
-      val br = findTag(p, "a:br", i)
-      val next = Seq(t, br).filter(_ >= 0).sorted.headOption.getOrElse(-1)
-      if (next < 0) scanning = false
-      else {
-        val open = p.indexOf('>', next)
-        if (open < 0) return None
-        if (next == br) { out.append('\n'); i = open + 1 }
-        else if (p.charAt(open - 1) == '/') i = open + 1 // <a:t/>
-        else {
-          val close = p.indexOf("</a:t>", open)
-          if (close < 0) return None // torn run
-          out.append(decodeEntities(p.substring(open + 1, close)))
-          i = close + 6
-        }
-      }
-    }
-    Some(out.toString)
-  }
-
   def decodePptx(b: Array[Byte]): Option[PptxMeta] =
     try {
       val entries = Archive.zipEntries(b).getOrElse(return None)
@@ -58,30 +30,26 @@ object Pptx {
         case k => mainPath.substring(0, k + 1)
       }
       // a PresentationML main part carries the slide-id list
-      val sldIds = blocks(pres, "p:sldId").getOrElse(return None)
+      val sldIds = Xml.blocks(pres, "p:sldId").getOrElse(return None)
       if (sldIds.isEmpty) return None
       val relsPath = presDir + "_rels/" +
         mainPath.substring(presDir.length) + ".rels"
       val rels = read(relsPath).getOrElse(return None)
-      val relTargets = blocks(rels, "Relationship").getOrElse(return None)
-        .flatMap { case (tag, _) =>
-          for {
-            id <- attrValue(tag, "Id")
-            t <- attrValue(tag, "Target")
-          } yield id -> t
-        }.toMap
+      val relTargets = Ooxml.relTargets(rels).getOrElse(return None)
       var nShapes = 0
       // deck order = sldIdLst order, slide paths via the rels hop
-      val slideTexts = sldIds.map { case (tag, _) =>
-        val rid = attrValue(tag, "r:id").getOrElse(return None)
+      val slideTexts = sldIds.map { sld =>
+        val rid = sld.attrs.getOrElse("r:id", return None)
         val target = relTargets.getOrElse(rid, return None)
         val xml = read(presDir + target.stripPrefix("/"))
           .getOrElse(return None)
-        val shapes = blocks(xml, "p:sp").getOrElse(return None)
+        val shapes = Xml.blocks(xml, "p:sp").getOrElse(return None)
         nShapes += shapes.length
-        shapes.map { case (_, body) =>
-          blocks(body, "a:p").getOrElse(return None)
-            .map(ap => paragraphText(ap._2).getOrElse(return None))
+        shapes.map { sp =>
+          Xml.blocks(xml, "a:p", sp.bodyStart, sp.bodyEnd)
+            .getOrElse(return None)
+            .map(ap => Ooxml.paragraphText(xml, ap.bodyStart, ap.bodyEnd,
+              "a:t", Map("a:br" -> "\n")).getOrElse(return None))
             .mkString("\n")
         }.mkString("\n")
       }
@@ -91,8 +59,6 @@ object Pptx {
   // ------------------------------------------------------------------
   // fixture emitter
   // ------------------------------------------------------------------
-
-  private def esc(s: String): String = Ooxml.escapeEntities(s)
 
   /** Each slide = (title, body paragraphs): two `<p:sp>` shapes, the
     * body runs SPLIT mid-text. The rId→slide-part assignment is
@@ -108,7 +74,7 @@ object Pptx {
         val cut = text.length / 2
         Seq(text.take(cut), text.drop(cut)).filter(_.nonEmpty)
           .map(part => s"<a:r><a:rPr lang=\"en-US\"/>" +
-            s"<a:t>${esc(part)}</a:t></a:r>")
+            s"<a:t>${Xml.escape(part)}</a:t></a:r>")
           .mkString
       }
     val slideXmls = slides.map { case (title, paras) =>

@@ -5,10 +5,10 @@ package graft.operators
   * sitemap enumerates canonical URLs with change metadata, and a
   * frontier prioritizes (lastmod, priority) before spending requests.
   *
-  * The parser is a lenient element walk in the family's byte/string
-  * discipline (no XML library): find each `<url>`/`<sitemap>` element,
-  * pull `<loc>`/`<lastmod>`/`<priority>` child text, decode the five
-  * XML entities. `<urlset>` vs `<sitemapindex>` handled separately —
+  * The parser is a lenient element walk on the [[Xml]] scanners (no
+  * XML library): find each `<url>`/`<sitemap>` element, pull
+  * `<loc>`/`<lastmod>`/`<priority>` child text, decode the five XML
+  * entities. `<urlset>` vs `<sitemapindex>` handled separately —
   * an index's children are sitemaps to fetch, not page URLs. Malformed
   * input yields the entries that DO parse (a half-written sitemap
   * still feeds the frontier); a block with no `<loc>` is skipped.
@@ -20,83 +20,35 @@ object Sitemap {
   final case class Entry(loc: String, lastmod: Option[String],
       priority: Option[Double])
 
-  private def decodeEntities(s: String): String =
-    s.replace("&lt;", "<").replace("&gt;", ">")
-      .replace("&quot;", "\"").replace("&apos;", "'")
-      .replace("&amp;", "&") // last, so &amp;lt; decodes to the literal &lt;
-
-  /** Find the opening tag `<name ...>` at or after `from`; returns the
-    * index just past its '>' or -1. Requires a delimiter after the
-    * name ('>' or whitespace before attributes) so prefixes of longer
-    * tag names never match. */
-  private def openTag(xml: String, name: String, from: Int): Int = {
-    var i = from
-    while (i >= 0) {
-      i = xml.indexOf("<" + name, i)
-      if (i < 0) return -1
-      val after = i + 1 + name.length
-      if (after < xml.length &&
-        (xml.charAt(after) == '>' || Character.isWhitespace(xml.charAt(after)))) {
-        val gt = xml.indexOf('>', after)
-        return if (gt < 0) -1 else gt + 1
-      }
-      i = after
-    }
-    -1
-  }
-
-  /** Text content of the first `<tag>text</tag>` inside [from, until). */
-  private def tagText(xml: String, tag: String, from: Int,
-      until: Int): Option[String] = {
-    val start = openTag(xml, tag, from)
-    if (start < 0 || start >= until) return None
-    val end = xml.indexOf("</" + tag, start)
-    if (end < 0 || end > until) return None
-    Some(decodeEntities(xml.substring(start, end).trim))
-  }
-
-  /** Walk every `<elem>...</elem>` block, mapping each through `f`. */
+  /** Every `<elem>...</elem>` block mapped through `f` with a reader
+    * of its children's trimmed text; a torn block ends the walk, and
+    * the blocks before it are kept. */
   private def blocks[A](xml: String, elem: String)(
-      f: (Int, Int) => Option[A]): Seq[A] = {
-    if (xml == null) return Seq.empty
-    val out = Seq.newBuilder[A]
-    var at = 0
-    var open = openTag(xml, elem, at)
-    while (open >= 0) {
-      val close = xml.indexOf("</" + elem, open)
-      if (close < 0) return out.result() // truncated: keep what parsed
-      f(open, close).foreach(out += _)
-      at = close + elem.length + 3
-      open = openTag(xml, elem, at)
+      f: (String => Option[String]) => Option[A]): Seq[A] =
+    if (xml == null) Seq.empty
+    else Xml.elements(xml, elem, 0, xml.length)._1.flatMap { e =>
+      f(tag => Xml.text(xml, tag, e.bodyStart, e.bodyEnd).map(_.trim))
     }
-    out.result()
-  }
 
   /** Page entries of a `<urlset>` sitemap. */
   def parse(xml: String): Seq[Entry] =
-    blocks(xml, "url") { (from, until) =>
-      tagText(xml, "loc", from, until).filter(_.nonEmpty).map { loc =>
-        Entry(loc,
-          tagText(xml, "lastmod", from, until).filter(_.nonEmpty),
-          tagText(xml, "priority", from, until)
-            .flatMap(p => scala.util.Try(p.toDouble).toOption))
+    blocks(xml, "url") { text =>
+      text("loc").filter(_.nonEmpty).map { loc =>
+        Entry(loc, text("lastmod").filter(_.nonEmpty),
+          text("priority").flatMap(p => scala.util.Try(p.toDouble).toOption))
       }
     }
 
   /** Child sitemap locations of a `<sitemapindex>`. */
   def parseIndex(xml: String): Seq[String] =
-    blocks(xml, "sitemap") { (from, until) =>
-      tagText(xml, "loc", from, until).filter(_.nonEmpty)
-    }
+    blocks(xml, "sitemap")(_("loc").filter(_.nonEmpty))
 
   /** Fixture emitter: a spec-shaped urlset with entities ENCODED in
     * loc (the parse must decode them) and optional fields omitted
     * per entry. */
   def emit(entries: Seq[(String, Option[String], Option[Double])]): String = {
     val body = entries.map { case (loc, lastmod, priority) =>
-      val encoded = loc.replace("&", "&amp;").replace("<", "&lt;")
-        .replace(">", "&gt;")
-      s"  <url>\n    <loc>$encoded</loc>\n" +
+      s"  <url>\n    <loc>${Xml.escape(loc)}</loc>\n" +
         lastmod.map(d => s"    <lastmod>$d</lastmod>\n").getOrElse("") +
         priority.map(p => s"    <priority>$p</priority>\n").getOrElse("") +
         "  </url>"

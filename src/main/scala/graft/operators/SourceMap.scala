@@ -7,8 +7,8 @@ package graft.operators
   * files/identifiers, which makes it the code-crawl analog of EXIF —
   * structured provenance riding next to the payload.
   *
-  * Container: JSON (reused: [[Ipynb.parseJson]] — the same strict,
-  * depth-bounded value parser the notebook decoder uses). The
+  * Container: JSON, read by [[Json.parse]] (strict RFC 8259,
+  * depth-bounded). The
   * `mappings` field is lines separated by ';', segments by ',', each
   * segment 1/4/5 base64-VLQ fields with RELATIVE values: generated
   * column resets per line; source index / original line / original
@@ -24,6 +24,8 @@ package graft.operators
   * line/column must stay in range / non-negative — a relative-delta
   * stream gone negative is corruption, not data. */
 object SourceMap {
+
+  import Json.{JArr, JNum, JObj, JStr}
 
   final case class SourceMapMeta(nSources: Int, nNames: Int,
       nLines: Int, nSegments: Int, nNamed: Int, sumOrigLines: Long)
@@ -61,27 +63,27 @@ object SourceMap {
   def decodeSourceMap(b: Array[Byte]): Option[SourceMapMeta] =
     try {
       if (b == null) return None
-      val root = Ipynb.parseJson(new String(b, "UTF-8")) match {
-        case Some(o: Ipynb.JObj) => o
+      val root = Json.parse(new String(b, "UTF-8")) match {
+        case Some(o: JObj) => o
         case _ => return None
       }
-      root.fields.get("version") match {
-        case Some(Ipynb.JNum(3.0)) =>
+      root.get("version") match {
+        case Some(JNum(3.0)) =>
         case _ => return None
       }
-      val nSources = root.fields.get("sources") match {
-        case Some(Ipynb.JArr(xs))
-            if xs.forall(_.isInstanceOf[Ipynb.JStr]) => xs.length
+      val nSources = root.get("sources") match {
+        case Some(JArr(xs))
+            if xs.forall(_.isInstanceOf[JStr]) => xs.length
         case _ => return None
       }
-      val nNames = root.fields.get("names") match {
-        case Some(Ipynb.JArr(xs))
-            if xs.forall(_.isInstanceOf[Ipynb.JStr]) => xs.length
+      val nNames = root.get("names") match {
+        case Some(JArr(xs))
+            if xs.forall(_.isInstanceOf[JStr]) => xs.length
         case None => 0
         case _ => return None
       }
-      val mappings = root.fields.get("mappings") match {
-        case Some(Ipynb.JStr(m)) => m
+      val mappings = root.get("mappings") match {
+        case Some(JStr(m)) => m
         case _ => return None
       }
       // relative-state accumulators (source/line/col/name persist
@@ -217,13 +219,11 @@ object SourceMap {
         }
       }
     }
-    def jstr(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-    val json = "{\"version\":3,\"file\":" + jstr(file) +
+    val json = "{\"version\":3,\"file\":" + Json.quote(file) +
       ",\"sourceRoot\":\"\",\"sources\":[" +
-      sources.map(jstr).mkString(",") + "],\"names\":[" +
-      names.map(jstr).mkString(",") + "],\"mappings\":" +
-      jstr(sb.toString) + "}"
+      sources.map(Json.quote).mkString(",") + "],\"names\":[" +
+      names.map(Json.quote).mkString(",") + "],\"mappings\":" +
+      Json.quote(sb.toString) + "}"
     json.getBytes("UTF-8")
   }
 }

@@ -10,9 +10,9 @@ package graft.operators
   * separates a real illustration from a tracking pixel or an empty
   * placeholder.
   *
-  * Parsing is a purpose-built scan, not a DOM: XML decl / comments /
-  * DOCTYPE hopped, the root must be `<svg`, attributes read with
-  * either quote kind in any order, `px` units accepted and others
+  * Parsing is a purpose-built scan on the [[Xml]] scanners, not a DOM:
+  * XML decl / comments / DOCTYPE hopped, the root must be `<svg`,
+  * attributes read with either quote kind in any order, `px` units accepted and others
   * rejected (em/%/pt are context-relative — a dimension filter must
   * not guess), viewBox split on whitespace-or-comma per spec.
   * Corrupt/non-SVG → None.
@@ -26,11 +26,6 @@ object Svg {
   final case class SvgMeta(width: Option[Double], height: Option[Double],
       viewBoxW: Option[Double], viewBoxH: Option[Double],
       title: Option[String], nPaths: Int, nShapes: Int)
-
-  private def decodeEntities(s: String): String =
-    s.replace("&lt;", "<").replace("&gt;", ">")
-      .replace("&quot;", "\"").replace("&apos;", "'")
-      .replace("&amp;", "&") // last, so &amp;lt; decodes to the literal &lt;
 
   def decodeSvg(b: Array[Byte]): Option[SvgMeta] =
     try {
@@ -51,48 +46,15 @@ object Svg {
           val e = s.indexOf('>', i); if (e < 0) return None; i = e + 1
         } else scanning = false
       }
-      if (!s.startsWith("<svg", i)) return None
-      if (i + 4 < s.length && !s.charAt(i + 4).isWhitespace &&
-        s.charAt(i + 4) != '>') return None // <svgfoo is not <svg
-      // Root-tag attribute TOKENIZER (quote-aware, single pass): a
-      // name occurring inside another attribute's quoted value must
-      // never be matched as an attribute, and a '>' inside a quoted
-      // value must not end the tag. Strict XML shape — every
-      // attribute is name = "value" with either quote kind; a
-      // valueless, unquoted, or unterminated attribute makes the root
-      // tag non-well-formed → None (decode-to-None, never
-      // plausible-wrong). First occurrence wins on duplicates.
-      def rootAttrs(from: Int): Option[(Map[String, String], Int)] = {
-        val out = Map.newBuilder[String, String]
-        val seen = scala.collection.mutable.Set.empty[String]
-        var j = from
-        while (j < s.length) {
-          while (j < s.length && s.charAt(j).isWhitespace) j += 1
-          if (j >= s.length) return None
-          if (s.charAt(j) == '>') return Some((out.result(), j + 1))
-          if (s.charAt(j) == '/' && j + 1 < s.length &&
-            s.charAt(j + 1) == '>') return Some((out.result(), j + 2))
-          val ks = j
-          while (j < s.length && !s.charAt(j).isWhitespace &&
-            s.charAt(j) != '=' && s.charAt(j) != '>' &&
-            s.charAt(j) != '/') j += 1
-          if (j == ks) return None
-          val key = s.substring(ks, j)
-          while (j < s.length && s.charAt(j).isWhitespace) j += 1
-          if (j >= s.length || s.charAt(j) != '=') return None
-          j += 1
-          while (j < s.length && s.charAt(j).isWhitespace) j += 1
-          if (j >= s.length ||
-            (s.charAt(j) != '"' && s.charAt(j) != '\'')) return None
-          val qc = s.charAt(j)
-          val e = s.indexOf(qc, j + 1)
-          if (e < 0) return None
-          if (seen.add(key)) out += key -> s.substring(j + 1, e)
-          j = e + 1
-        }
-        None // tag never closed
-      }
-      val (attrMap, tagEnd) = rootAttrs(i + 4).getOrElse(return None)
+      // the root tag's attributes through the one quote-aware
+      // tokenizer: a name inside another attribute's quoted value is
+      // never an attribute, and a valueless, unquoted or unterminated
+      // attribute makes the root tag non-well-formed → None
+      // (decode-to-None, never plausible-wrong)
+      if (!Xml.tagAt(s, "svg", i, s.length)) return None // <svgfoo
+      val root = Xml.openTag(s, "svg", i, s.length).getOrElse(return None)
+      val attrMap = root.attrs
+      val tagEnd = root.end
       def attr(name: String): Option[String] = attrMap.get(name)
       def num(v: String): Option[Double] = {
         val t0 = v.trim
@@ -111,34 +73,8 @@ object Svg {
       val vbw = vb.flatMap(a => num(a(2)))
       val vbh = vb.flatMap(a => num(a(3)))
 
-      val title = {
-        val t0 = s.indexOf("<title", tagEnd)
-        if (t0 < 0) None
-        else {
-          val open = s.indexOf('>', t0)
-          val close = if (open < 0) -1 else s.indexOf("</title", open)
-          if (open < 0 || close < 0) None
-          else Some(decodeEntities(s.substring(open + 1, close).trim))
-        }
-      }
-
-      // element count: "<name" followed by a delimiter (ws, '/', '>')
-      def countTag(name: String): Int = {
-        val pat = "<" + name
-        var n = 0
-        var j = tagEnd
-        while (j >= 0) {
-          val k = s.indexOf(pat, j)
-          if (k < 0) j = -1
-          else {
-            val after = k + pat.length
-            if (after >= s.length || s.charAt(after).isWhitespace ||
-              s.charAt(after) == '/' || s.charAt(after) == '>') n += 1
-            j = k + 1
-          }
-        }
-        n
-      }
+      val title = Xml.text(s, "title", tagEnd).map(_.trim)
+      def countTag(name: String) = Xml.count(s, name, tagEnd)
       val nPaths = countTag("path")
       val nShapes = Seq("rect", "circle", "ellipse", "line", "polygon",
         "polyline").map(countTag).sum
@@ -153,8 +89,7 @@ object Svg {
   def encodeSvg(width: Int, height: Int, title: String, nPaths: Int,
       nRects: Int, variant: Int): Array[Byte] = {
     require(width >= 1 && height >= 1 && nPaths >= 0 && nRects >= 0)
-    val esc = title.replace("&", "&amp;").replace("<", "&lt;")
-      .replace(">", "&gt;")
+    val esc = Xml.escape(title)
     val body = new StringBuilder
     var i = 0
     while (i < nPaths) {

@@ -27,32 +27,11 @@ object Xlsx {
   final case class XlsxMeta(nSheets: Int, firstSheetName: String,
       nRows: Int, nCells: Int, numericSum: Double, text: String)
 
-  import Ooxml.{attrValue, blocks, decodeEntities, findTag, tagBody}
-
-  /** Concatenated text of every `<t>` element inside `s` (the shared-
-    * string-item / inlineStr shape: plain or rich-text runs). None on
-    * a torn `<t>`. */
-  private def tTexts(s: String): Option[String] = {
-    val out = new StringBuilder
-    var i = 0
-    var scanning = true
-    while (scanning) {
-      val k = findTag(s, "t", i)
-      if (k < 0) scanning = false
-      else {
-        val open = s.indexOf('>', k)
-        if (open < 0) return None
-        if (s.charAt(open - 1) == '/') i = open + 1
-        else {
-          val close = s.indexOf("</t>", open)
-          if (close < 0) return None
-          out.append(decodeEntities(s.substring(open + 1, close)))
-          i = close + 4
-        }
-      }
-    }
-    Some(out.toString)
-  }
+  /** Concatenated text of every `<t>` element in [from, until) (the
+    * shared-string-item / inlineStr shape: plain or rich-text runs).
+    * None on a torn `<t>`. */
+  private def tTexts(s: String, from: Int, until: Int): Option[String] =
+    Xml.blocks(s, "t", from, until).map(_.map(Xml.text(s, _)).mkString)
 
   def decodeXlsx(b: Array[Byte]): Option[XlsxMeta] =
     try {
@@ -69,27 +48,21 @@ object Xlsx {
       val wbRelsPath = wbDir + "_rels/" +
         wbPath.substring(wbDir.length) + ".rels"
       val wbRels = read(wbRelsPath).getOrElse(return None)
-      val relTargets = blocks(wbRels, "Relationship")
-        .getOrElse(return None)
-        .flatMap { case (tag, _) =>
-          for {
-            id <- attrValue(tag, "Id")
-            t <- attrValue(tag, "Target")
-          } yield id -> t
-        }.toMap
-      val sheets = blocks(wb, "sheet").getOrElse(return None)
-        .map { case (tag, _) =>
-          val name = attrValue(tag, "name").getOrElse(return None)
-          val rid = attrValue(tag, "r:id").getOrElse(return None)
-          val target = relTargets.getOrElse(rid, return None)
+      val targets = Ooxml.relTargets(wbRels).getOrElse(return None)
+      val sheets = Xml.blocks(wb, "sheet").getOrElse(return None)
+        .map { sheet =>
+          val name = sheet.attrs.getOrElse("name", return None)
+          val rid = sheet.attrs.getOrElse("r:id", return None)
+          val target = targets.getOrElse(rid, return None)
           (name, wbDir + target.stripPrefix("/"))
         }
       if (sheets.isEmpty) return None
       // shared strings (optional part; rich runs concatenate)
       val shared: IndexedSeq[String] = read(wbDir + "sharedStrings.xml")
         .map { sst =>
-          blocks(sst, "si").getOrElse(return None)
-            .map(si => tTexts(si._2).getOrElse(return None))
+          Xml.blocks(sst, "si").getOrElse(return None)
+            .map(si => tTexts(sst, si.bodyStart, si.bodyEnd)
+              .getOrElse(return None))
             .toIndexedSeq
         }.getOrElse(IndexedSeq.empty)
       var nRows = 0
@@ -97,25 +70,26 @@ object Xlsx {
       var sum = 0.0d
       val sheetTexts = sheets.map { case (_, path) =>
         val xml = read(path).getOrElse(return None)
-        val rows = blocks(xml, "row").getOrElse(return None)
+        val rows = Xml.blocks(xml, "row").getOrElse(return None)
         nRows += rows.length
-        val rowTexts = rows.map { case (_, rowBody) =>
-          val cells = blocks(rowBody, "c").getOrElse(return None)
+        val rowTexts = rows.map { row =>
+          val cells = Xml.blocks(xml, "c", row.bodyStart, row.bodyEnd)
+            .getOrElse(return None)
           nCells += cells.length
-          val strs = cells.flatMap { case (cTag, cBody) =>
-            attrValue(cTag, "t") match {
+          val strs = cells.flatMap { c =>
+            def v = Xml.text(xml, "v", c.bodyStart, c.bodyEnd)
+            c.attrs.get("t") match {
               case Some("s") =>
-                val idx = tagBody(cBody, "v").getOrElse(return None)
+                val idx = v.getOrElse(return None)
                   .trim.toIntOption.getOrElse(return None)
                 if (idx < 0 || idx >= shared.length) return None
                 Some(shared(idx))
               case Some("inlineStr") =>
-                Some(tTexts(cBody).getOrElse(return None))
-              case Some("str") =>
-                Some(decodeEntities(tagBody(cBody, "v").getOrElse("")))
+                Some(tTexts(xml, c.bodyStart, c.bodyEnd).getOrElse(return None))
+              case Some("str") => Some(v.getOrElse(""))
               case Some(_) => None // b/e/d cell types: not text
               case None =>
-                tagBody(cBody, "v").foreach { v =>
+                v.foreach { v =>
                   sum += v.trim.toDoubleOption.getOrElse(return None)
                 }
                 None
@@ -132,8 +106,6 @@ object Xlsx {
   // ------------------------------------------------------------------
   // fixture emitter
   // ------------------------------------------------------------------
-
-  private def esc(s: String): String = Ooxml.escapeEntities(s)
 
   /** A fixture cell: Left = string (even shared indexes emit as PLAIN
     * `<t>`, odd as RICH runs; every third string cell inline instead
@@ -162,9 +134,9 @@ object Xlsx {
         if (i % 2 == 1 && s.nonEmpty) {
           // rich text: split across two runs
           val cut = s.length / 2
-          s"<si><r><rPr><b/></rPr><t>${esc(s.take(cut))}</t></r>" +
-            s"<r><t>${esc(s.drop(cut))}</t></r></si>"
-        } else s"<si><t>${esc(s)}</t></si>"
+          s"<si><r><rPr><b/></rPr><t>${Xml.escape(s.take(cut))}</t></r>" +
+            s"<r><t>${Xml.escape(s.drop(cut))}</t></r></si>"
+        } else s"<si><t>${Xml.escape(s)}</t></si>"
       }.mkString
       s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>
          |<sst xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main" count="${sstOrder.size}" uniqueCount="${sstOrder.size}">$items</sst>"""
@@ -183,7 +155,7 @@ object Xlsx {
             case ("shared", _, idx) =>
               s"""<c r="$ref" t="s"><v>$idx</v></c>"""
             case ("inline", s, _) =>
-              s"""<c r="$ref" t="inlineStr"><is><t>${esc(s)}</t></is></c>"""
+              s"""<c r="$ref" t="inlineStr"><is><t>${Xml.escape(s)}</t></is></c>"""
             case (_, v, _) => s"""<c r="$ref"><v>$v</v></c>"""
           }
         }.mkString
@@ -195,7 +167,7 @@ object Xlsx {
          |</worksheet>""".stripMargin
     }
     val wbSheets = sheets.zipWithIndex.map { case ((name, _), i) =>
-      s"""<sheet name="${esc(name)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
+      s"""<sheet name="${Xml.escape(name)}" sheetId="${i + 1}" r:id="rId${i + 1}"/>"""
     }.mkString
     val workbook =
       s"""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>

@@ -297,6 +297,21 @@ object StreamingQueries {
     graft.engine.Tables.normalizeEventTime(raw)
   }
 
+  /** The two keys that split `o`'s `o_orderkey` range into thirds,
+    * min-anchored: arrivals `<= b1`, `(b1, b2]` and `> b2`. Derived from
+    * the key RANGE, not fixed literals, so no arrival is empty at any
+    * scale (the sf0.001 fixture's keys stop at 1,499; an empty arrival
+    * writes no file and no manifest version). One bounded two-scalar
+    * aggregate to the driver; the oracles replay the same integer
+    * arithmetic. */
+  private def keyThirds(o: DataFrame): (Long, Long) = {
+    val kr = o.agg(min(col("o_orderkey")), max(col("o_orderkey"))).head
+    val (mn, span) =
+      if (kr.isNullAt(0)) (0L, 0L)
+      else (kr.getLong(0), kr.getLong(1) - kr.getLong(0))
+    (mn + span / 3, mn + (2 * span) / 3)
+  }
+
   val defs: Seq[QueryDef] = Seq(
 
     // ----- incremental ingest: the reference's hold_state ----------------
@@ -581,9 +596,10 @@ object StreamingQueries {
     // ingest appends files in orderkey ranges; the manifest fold stats
     // ONLY each new file (checkpointed exactly-once), and a range query
     // then prunes against the manifest without touching history: three
-    // single-file arrivals, a [6000, 9000] probe inside the second, so
-    // exactly one of three files opens. The oracle replays the
-    // aggregate and the file-count constants the arrival layout pins.
+    // single-file arrivals split at the key-range thirds, a (b1, b2]
+    // probe that is exactly the second, so one of three files opens.
+    // The oracle replays the thirds, the aggregate and the file-count
+    // constants the arrival layout pins.
     QueryDef(
       "q276_incremental_skipping_manifest",
       (s, dir) => {
@@ -598,11 +614,12 @@ object StreamingQueries {
           batch.repartition(1).write.mode("append").parquet(input)
           inc.update()
         }
-        arrive(o.filter($"o_orderkey" < 5000))
-        arrive(o.filter($"o_orderkey" >= 5000 && $"o_orderkey" < 10000))
-        arrive(o.filter($"o_orderkey" >= 10000))
+        val (b1, b2) = keyThirds(o)
+        arrive(o.filter($"o_orderkey" <= b1))
+        arrive(o.filter($"o_orderkey" > b1 && $"o_orderkey" <= b2))
+        arrive(o.filter($"o_orderkey" > b2))
         val (rows, nSel, nTot) = DataSkipping.skippingFileRangeScan(s,
-          inc.state().get, "o_orderkey", 6000L, 9000L, emptyLike = o)
+          inc.state().get, "o_orderkey", b1 + 1, b2, emptyLike = o)
         rows.groupBy($"o_orderpriority")
           .agg(count(lit(1)).as("n_orders"),
             round(sum($"o_totalprice"), 4).as("total_price"))
@@ -611,13 +628,19 @@ object StreamingQueries {
           .orderBy($"o_orderpriority")
       },
       Some("""
+        WITH b AS (SELECT min(o_orderkey)
+                          + (max(o_orderkey) - min(o_orderkey)) // 3 AS b1,
+                          min(o_orderkey)
+                          + (2 * (max(o_orderkey) - min(o_orderkey))) // 3
+                            AS b2
+                   FROM orders)
         SELECT o_orderpriority,
                count(*) AS n_orders,
                round(sum(o_totalprice), 4) AS total_price,
                CAST(1 AS BIGINT) AS n_files_scanned,
                CAST(3 AS BIGINT) AS n_files_total
-        FROM orders
-        WHERE o_orderkey BETWEEN 6000 AND 9000
+        FROM orders, b
+        WHERE o_orderkey > b.b1 AND o_orderkey <= b.b2
         GROUP BY o_orderpriority
         ORDER BY o_orderpriority""")),
 
@@ -643,19 +666,7 @@ object StreamingQueries {
           batch.repartition(1).write.mode("append").parquet(input)
           inc.update()
         }
-        // arrival boundaries derive from the key RANGE (min + thirds of
-        // the span) instead of fixed literals: the r18 fixture regen
-        // shrank sf0.001 to keys 0..1499, leaving the old >=5000
-        // arrivals EMPTY (no file, no manifest version — 'oldest'
-        // collapsed onto 'current'). min-anchored so an offset key
-        // space cannot recreate the empty-first-batch class. One
-        // bounded 2-scalar aggregate to the driver; the oracle replays
-        // the identical integer arithmetic.
-        val kr = o.agg(min($"o_orderkey"), max($"o_orderkey")).head
-        val (mn, span) =
-          if (kr.isNullAt(0)) (0L, 0L)
-          else (kr.getLong(0), kr.getLong(1) - kr.getLong(0))
-        val (b1, b2) = (mn + span / 3, mn + (2 * span) / 3)
+        val (b1, b2) = keyThirds(o)
         arrive(o.filter($"o_orderkey" <= b1))
         arrive(o.filter($"o_orderkey" > b1 && $"o_orderkey" <= b2))
         arrive(o.filter($"o_orderkey" > b2))
@@ -718,14 +729,7 @@ object StreamingQueries {
           batch.repartition(1).write.mode("append").parquet(input)
           inc.update()
         }
-        // key-range-derived arrival boundaries — same rationale and
-        // arithmetic as q278 (fixed >=5000 splits were empty at the
-        // regenerated sf0.001, collapsing the version chain)
-        val kr = o.agg(min($"o_orderkey"), max($"o_orderkey")).head
-        val (mn, span) =
-          if (kr.isNullAt(0)) (0L, 0L)
-          else (kr.getLong(0), kr.getLong(1) - kr.getLong(0))
-        val (b1, b2) = (mn + span / 3, mn + (2 * span) / 3)
+        val (b1, b2) = keyThirds(o)
         arrive(o.filter($"o_orderkey" <= b1))
         arrive(o.filter($"o_orderkey" > b1 && $"o_orderkey" <= b2))
         arrive(o.filter($"o_orderkey" > b2))

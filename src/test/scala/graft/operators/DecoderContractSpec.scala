@@ -10,8 +10,8 @@ import graft.SparkSpec
 
 /** The hostile-input contract of every decoder that inflates, reads
   * fixed-width integers or decodes prefix codes through [[Bytes]], of
-  * the other stream codecs and of the media header sniffs: on ANY
-  * input it returns
+  * the other stream codecs, of the media header sniffs and of the
+  * markup decoders on [[Xml]] and [[Json]]: on ANY input it returns
   * (`None` or a value) without throwing, within 2 s of wall clock and
   * 256 MiB allocated on the calling thread.
   *
@@ -20,7 +20,9 @@ import graft.SparkSpec
   * length (0x7FFFFFF0 or 0xFFFFFFFF, either byte order). The fixed cases
   * are streams built to hang or exhaust a decoder: a zlib header asking
   * for a preset dictionary, a zip entry declaring a ~2 GiB size, and a
-  * gzip member inflating past the 64 MiB cap. */
+  * gzip member inflating past the 64 MiB cap; and markup whose size
+  * alone (tens of thousands of elements, attributes or nesting levels)
+  * once made a scan quadratic or recursive. */
 class DecoderContractSpec extends SparkSpec {
   import DecoderContractSpec._
 
@@ -224,6 +226,56 @@ class DecoderContractSpec extends SparkSpec {
         VideoHeaders.decodeAvifItems _))
   }
 
+  private def utf8(f: String => Any): Array[Byte] => Any =
+    b => f(new String(b, "UTF-8"))
+
+  /** (name, valid document, decode): the text-format decoders. */
+  private lazy val markupDecoders: Seq[Case] = {
+    val feed = Seq(("first & post", "https://h.test/1", "2020-01-05"),
+      ("second <b>", "https://h.test/2", "2021-03-11"),
+      ("cdata & <raw>", "https://h.test/3", "2019-12-31"))
+    val ld = """<html><head><script type="application/ld+json">""" +
+      """{"@type":"Article","headline":"h","n":[1,{"a":null}]}""" +
+      "</script></head><body>b</body></html>"
+    Seq(
+      ("Docx.decodeDocx", Docx.encodeDocx("T & t", "A", Seq("one\ttab",
+        "", "two <three>")), Docx.decodeDocx _),
+      ("Xlsx.decodeXlsx", Xlsx.encodeXlsx(Seq(("S", Seq(
+        Seq(Left("a & b"), Right(3L), Left("rich run")),
+        Seq(Left("c"), Left("a & b"), Right(-2L)))))), Xlsx.decodeXlsx _),
+      ("Pptx.decodePptx", Pptx.encodePptx(Seq(("Title", Seq("p1", "p <2>")),
+        ("Two", Nil))), Pptx.decodePptx _),
+      ("Epub.decodeEpub", Epub.encodeEpub("Book & Tome", "A", "en", "urn:x",
+        3), Epub.decodeEpub _),
+      ("Feed.decodeFeed rss", Feed.encodeRss("chan & co", feed),
+        Feed.decodeFeed _),
+      ("Feed.decodeFeed atom", Feed.encodeAtom("atom <feed>", feed),
+        Feed.decodeFeed _),
+      ("Sitemap.parse", Sitemap.emit(Seq(("https://a.test/p?x=1&y=2",
+        Some("2024-03-01"), Some(0.8)), ("https://a.test/<odd>", None, None)))
+        .getBytes("UTF-8"), utf8(Sitemap.parse)),
+      ("Svg.decodeSvg", Svg.encodeSvg(64, 48, "icon & <logo>", 3, 2, 1),
+        Svg.decodeSvg _),
+      ("Ipynb.decodeIpynb", Ipynb.encodeIpynb("python", Seq(
+        ("markdown", "# head\nbody", 0), ("code", "x = 1\n", 2))),
+        Ipynb.decodeIpynb _),
+      ("SourceMap.decodeSourceMap", SourceMap.encodeSourceMap("a.min.js",
+        Seq("a.js", "b.js"), Seq("f"), Seq(Seq(SourceMap.Segment(0, 1, 4, 2, 0)),
+          Nil, Seq(SourceMap.Segment(3, 0, 1, 1)))), SourceMap.decodeSourceMap _),
+      ("JsonLd.extract", ld.getBytes("UTF-8"), utf8(JsonLd.extract)),
+      ("Json.pathTypes", """{"a":[1,2.5e3,{"b":"x\u00e9"}],"c":null}"""
+        .getBytes("UTF-8"), utf8(Json.pathTypes)))
+  }
+
+  /** `zip` with each named part's text rewritten by `f`. */
+  private def repack(zip: Array[Byte], part: String)(
+      f: String => String): Array[Byte] =
+    Archive.encodeZip(Archive.zipEntries(zip).get.map { e =>
+      val body = Archive.unzipEntry(zip, e).get
+      (e.name, if (e.name == part) f(new String(body, "UTF-8"))
+        .getBytes("UTF-8") else body, true)
+    })
+
   private def decodesValid(cases: Seq[Case]) =
     cases.foreach { case (name, blob, decode) =>
       val got = withinBudget(name)(decode(blob))
@@ -256,6 +308,62 @@ class DecoderContractSpec extends SparkSpec {
 
   test("truncated, bit-flipped and length-overwritten headers stay in budget") {
     staysInBudget(sniffs)
+  }
+
+  test("every valid markup document decodes to a value") {
+    decodesValid(markupDecoders)
+  }
+
+  test("truncated, bit-flipped and length-overwritten markup stays in budget") {
+    staysInBudget(markupDecoders)
+  }
+
+  test("an officeDocument relationship with 20,000 xTarget= attributes " +
+      "is read in one pass") {
+    val docx = repack(Docx.encodeDocx("t", "a", Seq("p")), "_rels/.rels")(
+      _.replace("Target=\"word/document.xml\"",
+        "xTarget=\"" * 20000 + " Target=\"word/document.xml\""))
+    assert(withinBudget("docx xTarget")(Docx.decodeDocx(docx))
+      .map(_.text) === Some("p"))
+    withinBudget("xlsx xTarget")(Xlsx.decodeXlsx(docx))
+    withinBudget("pptx xTarget")(Pptx.decodePptx(docx))
+  }
+
+  test("a paragraph of 40,000 runs is read in one pass") {
+    val docx = repack(Docx.encodeDocx("t", "a", Seq("p")),
+      "word/document.xml")(_.replace("<w:body>",
+        "<w:body><w:p>" + "<w:r><w:t>x</w:t></w:r>" * 40000 + "</w:p>"))
+    val m = withinBudget("docx runs")(Docx.decodeDocx(docx)).get
+    assert(m.nParagraphs === 2 && m.text === "x" * 40000 + "\np")
+  }
+
+  test("feeds of 50,000 items or entries are read in one pass") {
+    val rss = ("""<rss version="2.0"><channel><title>t</title>""" +
+      "<item></item>" * 50000 + "</channel></rss>").getBytes("UTF-8")
+    assert(withinBudget("rss 50k")(Feed.decodeFeed(rss)).map(_.nEntries)
+      === Some(50000))
+    val atom = ("""<feed xmlns="http://www.w3.org/2005/Atom"><title>t</title>""" +
+      "<entry></entry>" * 50000 + "</feed>").getBytes("UTF-8")
+    assert(withinBudget("atom 50k")(Feed.decodeFeed(atom)).map(_.nEntries)
+      === Some(50000))
+  }
+
+  test("a sitemap of 50,000 URLs is read in one pass") {
+    val xml = "<urlset>" + "<url><loc>x</loc></url>" * 50000 + "</urlset>"
+    assert(withinBudget("sitemap 50k")(Sitemap.parse(xml)).length === 50000)
+  }
+
+  test("JSON nested 100,000 deep is rejected, not recursed into") {
+    val deep = "[" * 100000 + "]" * 100000
+    assert(withinBudget("json deep")(Json.pathTypes(deep)) === None)
+    val nb = s"""{"nbformat":4,"cells":$deep}""".getBytes("UTF-8")
+    assert(withinBudget("ipynb deep")(Ipynb.decodeIpynb(nb)) === None)
+    val map = s"""{"version":3,"sources":$deep,"mappings":""}"""
+    assert(withinBudget("source map deep")(
+      SourceMap.decodeSourceMap(map.getBytes("UTF-8"))) === None)
+    assert(withinBudget("json-ld deep")(JsonLd.extract(
+      s"""<script type="application/ld+json">{"a":$deep}</script>""")) ===
+      Vector.empty)
   }
 
   test("a PDF stream asking for a preset dictionary is rejected, not spun on") {

@@ -43,13 +43,14 @@ class IpynbSpec extends AnyFunSuite {
 
   test("strict JSON: escapes decode, trailing garbage and torn " +
       "structures reject") {
-    assert(parseJson("""{"a":"qA\n\"z\""}""")
-      === Some(JObj(Map("a" -> JStr("qA\n\"z\"")))))
-    assert(parseJson("""{"a":1}x""") === None)
-    assert(parseJson("""{"a":}""") === None)
-    assert(parseJson("""[1,2""") === None)
-    assert(parseJson("""{"a":"unterminated}""") === None)
-    assert(parseJson("-12.5e2") === Some(JNum(-1250.0)))
+    import Json.{parse, JNum, JObj, JStr}
+    assert(parse("""{"a":"qA\n\"z\""}""")
+      === Some(JObj(Vector("a" -> JStr("qA\n\"z\"")))))
+    assert(parse("""{"a":1}x""") === None)
+    assert(parse("""{"a":}""") === None)
+    assert(parse("""[1,2""") === None)
+    assert(parse("""{"a":"unterminated}""") === None)
+    assert(parse("-12.5e2") === Some(JNum(-1250.0)))
   }
 
   test("not-a-notebook JSON and malformed notebooks reject") {

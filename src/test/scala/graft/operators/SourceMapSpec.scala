@@ -96,4 +96,18 @@ class SourceMapSpec extends AnyFunSuite {
     assert(inlineMapBytes("https://cdn/app.map") === None)
     assert(inlineMapBytes("data:application/json;base64,!!!") === None)
   }
+
+  test("source names with control characters emit valid JSON") {
+    val names = Seq("dir\nname.js", "tab\there.js", "quote\"back\\slash.js")
+    val blob = encodeSourceMap("app\r.min.js", names, Nil,
+      Seq(Seq(Segment(0, 2, 0, 0))))
+    Json.parse(new String(blob, "UTF-8")) match {
+      case Some(o: Json.JObj) =>
+        assert(o.get("sources") === Some(Json.JArr(names.map(Json.JStr(_))
+          .toVector)))
+        assert(o.get("file") === Some(Json.JStr("app\r.min.js")))
+      case other => fail(s"invalid JSON: $other")
+    }
+    assert(decodeSourceMap(blob).map(_.nSources) === Some(3))
+  }
 }
