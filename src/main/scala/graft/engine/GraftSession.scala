@@ -88,18 +88,22 @@ object GraftSession {
 
   private val ArtifactIsolation = "spark.sql.artifact.isolation.enabled"
 
-  /** Codegen settings of a local session: each generated class compiles
-    * once per JVM. Spark keys its compile cache by the thread's context
-    * class loader; the driver compiles every whole-stage class under the
-    * app loader, and without these settings the first task compiles it
-    * again under its own loader. Repeats `base`'s isolation switch so
-    * that the test session, which is not built from `base`, gets it. */
-  private[graft] def localCodegen(b: SparkSession.Builder): SparkSession.Builder =
+  /** Settings of a local session, which the test session (not built
+    * from `base`) takes too:
+    *  - each generated class compiles once per JVM. Spark keys its
+    *    compile cache by the thread's context class loader; the driver
+    *    compiles every whole-stage class under the app loader, and
+    *    without the loader plugin the first task compiles it again under
+    *    its own loader. Repeats `base`'s isolation switch;
+    *  - `file:` paths go through [[LocalFs]], which forks no process to
+    *    set a permission or read a link status. */
+  private[graft] def localSettings(b: SparkSession.Builder): SparkSession.Builder =
     b.config(ArtifactIsolation, "false")
       .config("spark.plugins", classOf[TaskLoaderPlugin].getName)
+      .config(LocalFs.settings)
 
   def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
-    localCodegen(base)
+    localSettings(base)
       .master(master)
       .config("spark.local.dir", scratchRoot)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)

@@ -1,7 +1,6 @@
 package graft.operators
 
 import java.io.ByteArrayOutputStream
-import java.util.zip.{CRC32, Deflater}
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -443,184 +442,125 @@ object Archive {
           }
         case _ => return None // no other methods emitted or accepted
       }
-      val crc = new CRC32(); crc.update(data)
-      if (data.length.toLong == e.uncompSize && crc.getValue == e.crc32)
+      if (data.length.toLong == e.uncompSize && Bytes.crc32(data) == e.crc32)
         Some(data)
       else None
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** Fixture emitter: byte-valid single-disk zip. `deflate` per entry;
-    * real CRCs, real deflate streams, central dir + EOCD. */
-  def encodeZip(entries: Seq[(String, Array[Byte], Boolean)]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(entries.map(_._2.length + 128).sum + 64)
-    val metas = entries.map { case (name, payload, deflate) =>
-      val nb = name.getBytes("UTF-8")
-      val crc = new CRC32(); crc.update(payload)
-      val comp =
-        if (!deflate) payload
-        else {
-          val d = new Deflater(Deflater.DEFAULT_COMPRESSION, true)
-          d.setInput(payload); d.finish()
-          val bos = new ByteArrayOutputStream(payload.length / 2 + 32)
-          val buf = new Array[Byte](8192)
-          while (!d.finished()) { val k = d.deflate(buf); bos.write(buf, 0, k) }
-          d.end()
-          bos.toByteArray
-        }
-      val localOff = out.size().toLong
-      out.write('P'); out.write('K'); out.write(3); out.write(4)
-      le16(out, 20); le16(out, 0); le16(out, if (deflate) 8 else 0)
-      le16(out, 0); le16(out, 0x21) // fixed DOS time/date (1980-01-01 00:01)
-      le32(out, crc.getValue); le32(out, comp.length.toLong)
-      le32(out, payload.length.toLong)
-      le16(out, nb.length); le16(out, 0)
-      out.write(nb, 0, nb.length)
-      out.write(comp, 0, comp.length)
-      ZipEntryMeta(name, if (deflate) 8 else 0, comp.length.toLong,
-        payload.length.toLong, crc.getValue, localOff)
-    }
-    val cdOff = out.size().toLong
-    metas.foreach { m =>
-      val nb = m.name.getBytes("UTF-8")
-      out.write('P'); out.write('K'); out.write(1); out.write(2)
-      le16(out, 20); le16(out, 20); le16(out, 0); le16(out, m.method)
-      le16(out, 0); le16(out, 0x21)
-      le32(out, m.crc32); le32(out, m.compSize); le32(out, m.uncompSize)
-      le16(out, nb.length); le16(out, 0); le16(out, 0); le16(out, 0)
-      le16(out, 0); le32(out, 0)
-      le32(out, m.localOffset)
-      out.write(nb, 0, nb.length)
-    }
-    val cdSize = out.size().toLong - cdOff
-    out.write('P'); out.write('K'); out.write(5); out.write(6)
-    le16(out, 0); le16(out, 0); le16(out, metas.size); le16(out, metas.size)
-    le32(out, cdSize); le32(out, cdOff); le16(out, 0)
-    out.toByteArray
-  }
+  /** Fixture emitter: byte-valid single-disk zip, each entry deflated
+    * or stored. */
+  def encodeZip(entries: Seq[(String, Array[Byte], Boolean)]): Array[Byte] =
+    writeZip(entries.map { case (n, d, z) => (n, d, if (z) 8 else 0) },
+      zip64 = false)
 
-  /** Fixture emitter: byte-valid FORCED-ZIP64 archive — every u32
-    * size/offset field pinned to 0xFFFFFFFF with the real values in
-    * 0x0001 extra fields, ZIP64 EOCD record + locator ahead of the
-    * classic EOCD (whose counts pin to 0xFFFF). APPNOTE permits ZIP64
-    * structures regardless of actual sizes, which is how a testable
-    * fixture exercises the >4 GB layout without 4 GB of bytes; the
-    * JDK's own ZipFile referees the output in `ArchiveSpec`. */
+  /** Fixture emitter: byte-valid FORCED-ZIP64 archive. APPNOTE permits
+    * ZIP64 structures regardless of actual sizes, which is how a
+    * testable fixture exercises the >4 GB layout without 4 GB of
+    * bytes; the JDK's own ZipFile referees the output in
+    * `ArchiveSpec`. */
+  def encodeZip64(entries: Seq[(String, Array[Byte], Boolean)]): Array[Byte] =
+    writeZip(entries.map { case (n, d, z) => (n, d, if (z) 8 else 0) },
+      zip64 = true)
+
   /** Fixture emitter for the modern compression methods: per entry
     * (name, data, method) with method 0 (store), 12 (bzip2), or 14
-    * (LZMA — version header + 5-byte props + raw known-size stream,
-    * no EOS marker so general-purpose bit 1 stays 0). */
-  def encodeZipMethods(entries: Seq[(String, Array[Byte], Int)]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(512)
-    val centrals = Vector.newBuilder[(String, Int, Long, Long, Long, Long)]
-    entries.foreach { case (name, data, method) =>
+    * (LZMA). */
+  def encodeZipMethods(entries: Seq[(String, Array[Byte], Int)]): Array[Byte] =
+    writeZip(entries, zip64 = false)
+
+  /** The one zip writer: per entry (name, data, method), local headers
+    * with real CRCs, then the central directory and the EOCD record.
+    * Methods: 0 store, 8 deflate, 12 bzip2 (one .bz2 stream), 14 LZMA
+    * (version header + 5-byte props + raw known-size stream, no EOS
+    * marker, so general-purpose bit 1 stays 0). With `zip64` every u32
+    * size and offset field is pinned to 0xFFFFFFFF with the real values
+    * in 0x0001 extra fields, and a ZIP64 EOCD record and locator come
+    * ahead of the classic EOCD, whose counts pin to 0xFFFF.
+    *
+    * Version needed (and made by) follows from the entries: the
+    * highest of 2.0, 4.5 for zip64, 4.6 for bzip2 and 6.3 for LZMA.
+    * Every entry carries the DOS time 00:00 of 1980-01-01. */
+  private def writeZip(entries: Seq[(String, Array[Byte], Int)],
+      zip64: Boolean): Array[Byte] = {
+    val version = (entries.map(_._3 match {
+      case 12 => 46
+      case 14 => 63
+      case _ => 20
+    }) :+ (if (zip64) 45 else 20)).max
+    val out = new ByteArrayOutputStream(entries.map(_._2.length + 192).sum + 160)
+    def sizes(comp: Long, uncomp: Long): Unit =
+      if (zip64) { le32(out, 0xffffffffL); le32(out, 0xffffffffL) }
+      else { le32(out, comp); le32(out, uncomp) }
+    val metas = entries.map { case (name, data, method) =>
       val comp: Array[Byte] = method match {
         case 0 => data
+        case 8 => Bytes.deflate(data, nowrap = true)
         case 12 => Bzip2.bzip2Compress(data, level = 5)
         case 14 =>
-          val raw = XzCodec.lzmaLiteralRaw(data)
           val hdr = new ByteArrayOutputStream(9)
           hdr.write(9); hdr.write(20) // LZMA SDK version tag
           hdr.write(5); hdr.write(0)  // properties size
           hdr.write(93)               // lc=3 lp=0 pb=2
-          var k = 0
-          while (k < 4) { hdr.write(((1 << 16) >> (8 * k)) & 0xff); k += 1 }
-          hdr.toByteArray ++ raw
+          le32(hdr, 1L << 16)         // dictionary size
+          hdr.toByteArray ++ XzCodec.lzmaLiteralRaw(data)
         case m => throw new IllegalArgumentException(s"method $m")
       }
-      val crc = new CRC32(); crc.update(data)
-      val localOff = out.size.toLong
-      out.write('P'); out.write('K'); out.write(3); out.write(4)
-      le16(out, 63); le16(out, 0); le16(out, method)
-      le16(out, 0); le16(out, 0) // time, date
-      le32(out, crc.getValue); le32(out, comp.length.toLong)
-      le32(out, data.length.toLong)
+      val crc = Bytes.crc32(data)
       // length fields count UTF-8 BYTES, not UTF-16 chars
       val nb = name.getBytes("UTF-8")
-      le16(out, nb.length); le16(out, 0)
-      out.write(nb, 0, nb.length)
-      out.write(comp, 0, comp.length)
-      centrals += ((name, method, crc.getValue, comp.length.toLong,
-        data.length.toLong, localOff))
-    }
-    val cdStart = out.size.toLong
-    centrals.result().foreach { case (name, method, crc, cs, us, off) =>
-      out.write('P'); out.write('K'); out.write(1); out.write(2)
-      le16(out, 63); le16(out, 63); le16(out, 0); le16(out, method)
-      le16(out, 0); le16(out, 0)
-      le32(out, crc); le32(out, cs); le32(out, us)
-      val nb = name.getBytes("UTF-8")
-      le16(out, nb.length); le16(out, 0); le16(out, 0)
-      le16(out, 0); le16(out, 0); le32(out, 0)
-      le32(out, off)
-      out.write(nb, 0, nb.length)
-    }
-    val cdSize = out.size.toLong - cdStart
-    out.write('P'); out.write('K'); out.write(5); out.write(6)
-    le16(out, 0); le16(out, 0); le16(out, entries.length)
-    le16(out, entries.length)
-    le32(out, cdSize); le32(out, cdStart); le16(out, 0)
-    out.toByteArray
-  }
-
-  def encodeZip64(entries: Seq[(String, Array[Byte], Boolean)]): Array[Byte] = {
-    val out = new ByteArrayOutputStream(entries.map(_._2.length + 192).sum + 160)
-    val metas = entries.map { case (name, payload, deflate) =>
-      val nb = name.getBytes("UTF-8")
-      val crc = new CRC32(); crc.update(payload)
-      val comp =
-        if (!deflate) payload
-        else {
-          val d = new Deflater(Deflater.DEFAULT_COMPRESSION, true)
-          d.setInput(payload); d.finish()
-          val bos = new ByteArrayOutputStream(payload.length / 2 + 32)
-          val buf = new Array[Byte](8192)
-          while (!d.finished()) { val k = d.deflate(buf); bos.write(buf, 0, k) }
-          d.end()
-          bos.toByteArray
-        }
-      val localOff = out.size().toLong
+      val localOff = out.size.toLong
       out.write('P'); out.write('K'); out.write(3); out.write(4)
-      // version 4.5
-      le16(out, 45); le16(out, 0); le16(out, if (deflate) 8 else 0)
-      le16(out, 0); le16(out, 0x21)
-      le32(out, crc.getValue); le32(out, 0xffffffffL); le32(out, 0xffffffffL)
-      le16(out, nb.length); le16(out, 20) // zip64 extra: id+len+two u64s
+      le16(out, version); le16(out, 0); le16(out, method)
+      le16(out, 0); le16(out, 0x21) // DOS time, date
+      le32(out, crc); sizes(comp.length.toLong, data.length.toLong)
+      le16(out, nb.length); le16(out, if (zip64) 20 else 0)
       out.write(nb, 0, nb.length)
-      le16(out, 1); le16(out, 16); le64(out, payload.length.toLong)
-      le64(out, comp.length.toLong)
+      if (zip64) {
+        le16(out, 1); le16(out, 16)
+        le64(out, data.length.toLong); le64(out, comp.length.toLong)
+      }
       out.write(comp, 0, comp.length)
-      ZipEntryMeta(name, if (deflate) 8 else 0, comp.length.toLong,
-        payload.length.toLong, crc.getValue, localOff)
+      ZipEntryMeta(name, method, comp.length.toLong, data.length.toLong,
+        crc, localOff)
     }
-    val cdOff = out.size().toLong
+    val cdOff = out.size.toLong
     metas.foreach { m =>
       val nb = m.name.getBytes("UTF-8")
       out.write('P'); out.write('K'); out.write(1); out.write(2)
-      le16(out, 45); le16(out, 45); le16(out, 0); le16(out, m.method)
+      le16(out, version); le16(out, version); le16(out, 0); le16(out, m.method)
       le16(out, 0); le16(out, 0x21)
-      le32(out, m.crc32); le32(out, 0xffffffffL); le32(out, 0xffffffffL)
-      le16(out, nb.length); le16(out, 28); le16(out, 0); le16(out, 0)
-      le16(out, 0); le32(out, 0)
-      le32(out, 0xffffffffL)
+      le32(out, m.crc32); sizes(m.compSize, m.uncompSize)
+      le16(out, nb.length); le16(out, if (zip64) 28 else 0)
+      le16(out, 0); le16(out, 0); le16(out, 0); le32(out, 0) // comment, disk, attrs
+      le32(out, if (zip64) 0xffffffffL else m.localOffset)
       out.write(nb, 0, nb.length)
-      le16(out, 1); le16(out, 24)
-      le64(out, m.uncompSize); le64(out, m.compSize); le64(out, m.localOffset)
+      if (zip64) {
+        le16(out, 1); le16(out, 24)
+        le64(out, m.uncompSize); le64(out, m.compSize); le64(out, m.localOffset)
+      }
     }
-    val cdSize = out.size().toLong - cdOff
-    val z64Off = out.size().toLong
-    // ZIP64 EOCD record (56 bytes, "size of record" excludes sig+size)
-    out.write('P'); out.write('K'); out.write(6); out.write(6)
-    le64(out, 44); le16(out, 45); le16(out, 45); le32(out, 0); le32(out, 0)
-    le64(out, metas.size.toLong); le64(out, metas.size.toLong)
-    le64(out, cdSize); le64(out, cdOff)
-    // ZIP64 EOCD locator
-    out.write('P'); out.write('K'); out.write(6); out.write(7)
-    le32(out, 0); le64(out, z64Off); le32(out, 1)
-    // classic EOCD, counts/offsets pinned
+    val cdSize = out.size.toLong - cdOff
+    if (zip64) {
+      val z64Off = out.size.toLong
+      // ZIP64 EOCD record (56 bytes, "size of record" excludes sig+size)
+      out.write('P'); out.write('K'); out.write(6); out.write(6)
+      le64(out, 44); le16(out, version); le16(out, version)
+      le32(out, 0); le32(out, 0)
+      le64(out, metas.size.toLong); le64(out, metas.size.toLong)
+      le64(out, cdSize); le64(out, cdOff)
+      // ZIP64 EOCD locator
+      out.write('P'); out.write('K'); out.write(6); out.write(7)
+      le32(out, 0); le64(out, z64Off); le32(out, 1)
+    }
+    // classic EOCD; zip64 pins its counts and offsets
     out.write('P'); out.write('K'); out.write(5); out.write(6)
-    le16(out, 0); le16(out, 0); le16(out, 0xffff); le16(out, 0xffff)
-    le32(out, 0xffffffffL); le32(out, 0xffffffffL); le16(out, 0)
+    le16(out, 0); le16(out, 0)
+    val n = if (zip64) 0xffff else metas.size
+    le16(out, n); le16(out, n)
+    if (zip64) { le32(out, 0xffffffffL); le32(out, 0xffffffffL) }
+    else { le32(out, cdSize); le32(out, cdOff) }
+    le16(out, 0)
     out.toByteArray
   }
 

@@ -172,11 +172,8 @@ object AvroRecords {
     case "snappy" =>
       if (b.length < 4) return None
       val comp = java.util.Arrays.copyOfRange(b, 0, b.length - 4)
-      SnappyCodec.decompressRaw(comp, 1 << 26).filter { raw =>
-        val crc = new java.util.zip.CRC32
-        crc.update(raw)
-        crc.getValue == Bytes.u32be(b, b.length - 4)
-      }
+      SnappyCodec.decompressRaw(comp, 1 << 26).filter(raw =>
+        Bytes.crc32(raw) == Bytes.u32be(b, b.length - 4))
     case _ => None
   }
 
@@ -291,17 +288,6 @@ object AvroRecords {
     case _ => throw new IllegalArgumentException("type/value mismatch")
   }
 
-  private def deflateRaw(data: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater(6, true)
-    d.setInput(data)
-    d.finish()
-    val out = new ByteArrayOutputStream(data.length / 2 + 16)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
-  }
-
   /** Emit a container file the reference implementation reads. */
   def encodeRecordFile(schemaJson: String, codec: String,
       sync: Array[Byte], recs: Seq[Seq[AV]]): Array[Byte] = {
@@ -329,12 +315,10 @@ object AvroRecords {
       val raw = body.toByteArray
       val payload = codec match {
         case "null"    => raw
-        case "deflate" => deflateRaw(raw)
+        case "deflate" => Bytes.deflate(raw, nowrap = true)
         case "snappy" =>
           val comp = SnappyCodec.compressRawLiteral(raw)
-          val crc = new java.util.zip.CRC32
-          crc.update(raw)
-          val v = crc.getValue
+          val v = Bytes.crc32(raw)
           comp ++ Array[Byte](((v >>> 24) & 0xff).toByte,
             ((v >>> 16) & 0xff).toByte, ((v >>> 8) & 0xff).toByte,
             (v & 0xff).toByte)

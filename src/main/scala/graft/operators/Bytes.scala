@@ -1,10 +1,11 @@
 package graft.operators
 
 import java.io.ByteArrayOutputStream
-import java.util.zip.{DataFormatException, Inflater}
+import java.util.zip.{DataFormatException, Deflater, Inflater}
 
-/** The byte primitives every decoder shares: one bounded inflate loop,
-  * fixed-width integer readers and writers, the unsigned LEB128 varint,
+/** The byte primitives every codec shares: one bounded inflate loop and
+  * the one deflate, CRC-32, fixed-width integer readers and writers,
+  * the unsigned LEB128 varint,
   * a bit reader and writer per bit order, the canonical prefix code and
   * the length-limited Huffman builder. Decoders inflate, read integers
   * and bits and decode prefix codes only through here, so the
@@ -65,6 +66,20 @@ object Bytes {
     } finally inf.end()
   }
 
+  /** Deflate `raw` at level 6 (zlib's default) into a zlib stream, or
+    * raw deflate with `nowrap` (gzip, zip, Avro): the [[inflate]]
+    * mirror every encoder uses. */
+  def deflate(raw: Array[Byte], nowrap: Boolean = false): Array[Byte] = {
+    val d = new Deflater(6, nowrap)
+    try {
+      d.setInput(raw); d.finish()
+      val out = new ByteArrayOutputStream(raw.length / 2 + 32)
+      val buf = new Array[Byte](8192)
+      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
+      out.toByteArray
+    } finally d.end()
+  }
+
   /** CRC-32 (ISO-HDLC, the zip/gzip/PNG/XZ/git-idx polynomial) of
     * `b(off until off + len)`. */
   def crc32(b: Array[Byte], off: Int, len: Int): Long = {
@@ -72,6 +87,7 @@ object Bytes {
     c.update(b, off, len)
     c.getValue
   }
+  def crc32(b: Array[Byte]): Long = crc32(b, 0, b.length)
 
   // ---- fixed-width readers -------------------------------------------
 

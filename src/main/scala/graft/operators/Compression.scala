@@ -1,7 +1,6 @@
 package graft.operators
 
 import java.io.ByteArrayOutputStream
-import java.util.zip.{CRC32, Deflater}
 
 import graft.operators.Bytes.{i32le, le32, u16le, u32le}
 
@@ -90,9 +89,8 @@ object Compression {
         val trailer = start + deflateLen
         if (trailer + 8 > b.length) None
         else {
-          val crc = new CRC32(); crc.update(data)
           val isize = u32le(b, trailer + 4)
-          if (crc.getValue == u32le(b, trailer) &&
+          if (Bytes.crc32(data) == u32le(b, trailer) &&
             (data.length.toLong & 0xffffffffL) == isize)
             Some((data, GzipMeta(mtime, os, fn, fc, isize), trailer + 8))
           else None
@@ -249,16 +247,8 @@ object Compression {
     fcomment.foreach { s =>
       out.write(s.getBytes("ISO-8859-1")); out.write(0)
     }
-    val def8 = new Deflater(Deflater.DEFAULT_COMPRESSION, true)
-    def8.setInput(data); def8.finish()
-    val buf = new Array[Byte](8192)
-    while (!def8.finished()) {
-      val n = def8.deflate(buf)
-      out.write(buf, 0, n)
-    }
-    def8.end()
-    val crc = new CRC32(); crc.update(data)
-    le32(out, crc.getValue)
+    out.write(Bytes.deflate(data, nowrap = true))
+    le32(out, Bytes.crc32(data))
     le32(out, data.length.toLong & 0xffffffffL)
     out.toByteArray
   }

@@ -551,13 +551,7 @@ object Font {
     val packed = tables.map { case (tag, data, compress) =>
       val comp =
         if (compress) {
-          val d = new java.util.zip.Deflater()
-          d.setInput(data); d.finish()
-          val bos = new ByteArrayOutputStream(data.length + 32)
-          val buf = new Array[Byte](4096)
-          while (!d.finished()) bos.write(buf, 0, d.deflate(buf))
-          d.end()
-          val c = bos.toByteArray
+          val c = Bytes.deflate(data)
           if (c.length < data.length) c else data // stored if larger
         } else data
       (tag, comp, data.length)

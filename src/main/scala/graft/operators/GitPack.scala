@@ -5,7 +5,7 @@ import java.io.ByteArrayOutputStream
 import org.apache.spark.sql.functions._
 
 import graft.engine.Tables
-import graft.operators.Bytes.{crc32, u32be}
+import graft.operators.Bytes.{crc32, deflate, u32be}
 
 /** Git packfile + pack-index DECODER — pure JVM, from the public
   * format documentation (git's Documentation/gitformat-pack.txt).
@@ -310,17 +310,6 @@ object GitPack {
       extends PackEntry
   final case class RefDelta(baseShaHex: String, delta: Array[Byte])
       extends PackEntry
-
-  private def deflate(data: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    d.setInput(data)
-    d.finish()
-    val out = new ByteArrayOutputStream(data.length / 2 + 16)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
-  }
 
   private def writeTypeSize(out: ByteArrayOutputStream, otypeId: Int,
       size: Long): Unit = {

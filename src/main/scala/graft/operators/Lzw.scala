@@ -1,166 +1,165 @@
 package graft.operators
 
-import java.io.ByteArrayOutputStream
-
-/** TIFF/PDF-variant LZW codec (MSB-first, ClearCode 256, EOD 257,
-  * 9→12-bit code widths) — the scheme behind LZW-compressed TIFF
-  * strips (TIFF 6.0 §13) and the PDF LZWDecode filter (ISO 32000-1
-  * 7.4.4). NOT the GIF variant ([[Pixels]] has that one): codes pack
-  * most-significant-bit first and the width bump happens one code
-  * EARLY when EarlyChange=1 (the TIFF behavior and the PDF default).
+/** The one LZW codec, in the two variants the formats use:
   *
-  * Refereed against the JDK's ImageIO TIFF plugin (it writes
-  * LZW-compressed strips this decoder must reproduce, and reads
-  * strips this encoder produces — TiffLzwSpec) and CPython's PDF-free
-  * reimplementation is not needed: the PDF filter chain in Pdf.scala
-  * composes this with the python-refereed ASCII85 layer. Corrupt
-  * codes, references past the table, and a stream that ends without
-  * EOD → None.
+  *  - TIFF (6.0 §13) and the PDF LZWDecode filter (ISO 32000-1 7.4.4):
+  *    8-bit symbols, codes packed most significant bit first, and the
+  *    width bumped one code early (EarlyChange 1, the TIFF behaviour
+  *    and the PDF default; PDF may say 0);
+  *  - GIF (89a appendix F): a minimum code size of 2–8 bits, codes
+  *    packed least significant bit first, no early change.
+  *
+  * Both start at `minCodeSize + 1` bits, grow to 12, put ClearCode at
+  * `1 << minCodeSize` and the end code (EOI/EOD) one above it, and lead
+  * with a ClearCode. Bits go through the [[Bytes]] readers and writers.
+  *
+  * Refereed against the JDK's ImageIO TIFF and GIF plugins in LzwSpec
+  * and PixelsSpec. Corrupt codes, references past the table, output
+  * past the caller's limit and a stream that ends without its end code
+  * → None.
   */
 object Lzw {
 
-  private val Clear = 256
-  private val Eod = 257
-
-  /** Decode a TIFF/PDF LZW stream. `earlyChange = 1` (default) bumps
-    * the code width one entry early. */
-  def lzwDecode(b: Array[Byte], maxOut: Int = 1 << 26,
-      earlyChange: Int = 1): Option[Array[Byte]] = {
-    if (b == null || b.isEmpty) return None
-    val out = new ByteArrayOutputStream(math.min(b.length * 4, 1 << 16))
-    // entries 0-255 are single bytes; dynamic entries from 258
-    val prefix = new Array[Int](4096)
-    val suffix = new Array[Byte](4096)
-    val stack = new Array[Byte](4096)
-    var next = 258
-    var width = 9
-    var bitPos = 0L
-    val nBits = b.length.toLong * 8
-
-    def read(): Int = {
-      if (bitPos + width > nBits) return -1
-      var v = 0
-      var k = 0
-      while (k < width) {
-        val at = bitPos + k
-        v = (v << 1) | ((b((at >>> 3).toInt) >>> (7 - (at & 7).toInt)) & 1)
-        k += 1
-      }
-      bitPos += width
-      v
-    }
-
-    // entries always reference strictly smaller codes -> no cycles
-    def firstByteOf(code0: Int): Byte = {
-      var c = code0
-      while (c >= 258) c = prefix(c)
-      c.toByte
-    }
-
-    def emit(code0: Int): Unit = {
-      var sp = 0
-      var c = code0
-      while (c >= 258) { stack(sp) = suffix(c); sp += 1; c = prefix(c) }
-      out.write(c)
-      while (sp > 0) { sp -= 1; out.write(stack(sp)) }
-    }
-
-    var prev = -1
-    var done = false
-    var ok = true
-    while (!done && ok) {
-      val code = read()
-      if (code < 0) ok = false // bits ran out before EOD
-      else if (code == Eod) done = true
-      else if (code == Clear) {
-        next = 258
-        width = 9
-        prev = -1
-      } else if (prev < 0) {
-        // first code after a clear: must be a literal
-        if (code > 255) ok = false
-        else { out.write(code); prev = code }
-      } else if (code < 256 || (code >= 258 && code <= next)) {
-        if (next >= 4096 && code == next) ok = false
-        else {
-          // add entry prev + firstByte(this code's string); for the
-          // KwKwK case (code == next) the first byte is prev's own
-          val first =
-            if (code == next) firstByteOf(prev) else firstByteOf(code)
-          if (next < 4096) {
-            prefix(next) = prev
-            suffix(next) = first
-            next += 1
-          }
-          emit(code)
-          if (out.size > maxOut) ok = false
-          prev = code
-          if (next + earlyChange >= (1 << width) && width < 12) width += 1
-        }
-      } else ok = false // 256/257 handled above; anything else invalid
-    }
-    if (ok && done) Some(out.toByteArray) else None
+  /** A format's LZW parameters. */
+  final case class Variant(msbFirst: Boolean, earlyChange: Int,
+      minCodeSize: Int) {
+    require(earlyChange == 0 || earlyChange == 1, s"earlyChange $earlyChange")
+    require(minCodeSize >= 2 && minCodeSize <= 8, s"minCodeSize $minCodeSize")
+    private[Lzw] val clear = 1 << minCodeSize
+    private[Lzw] val end = clear + 1
+    /** The encoder clears when its table reaches this size: GIF's full
+      * table, or libtiff's 4094 with early change. */
+    private[Lzw] val limit = 4096 - 2 * earlyChange
   }
 
-  /** Encode (leads with Clear, ends with EOD, resets the dictionary
-    * on overflow). The code-width schedule SIMULATES the decoder's
-    * table — the decoder adds its entry one code later than the
-    * encoder does, so widths are driven off that mirrored count. */
-  def lzwEncode(data: Array[Byte], earlyChange: Int = 1): Array[Byte] = {
-    val out = new ByteArrayOutputStream(data.length / 2 + 16)
-    var acc = 0L
-    var nAcc = 0
-    var width = 9
-    var decNext = 258 // the decoder's table size, mirrored
-    var firstSinceClear = true
-    def rawWrite(code: Int): Unit = {
-      acc = (acc << width) | code
-      nAcc += width
-      while (nAcc >= 8) {
-        out.write(((acc >>> (nAcc - 8)) & 0xff).toInt)
-        nAcc -= 8
+  /** TIFF strips and PDF LZWDecode with EarlyChange 1. */
+  val Tiff: Variant = Variant(msbFirst = true, earlyChange = 1, minCodeSize = 8)
+
+  /** PDF LZWDecode with its /EarlyChange (0 or 1). */
+  def pdf(earlyChange: Int): Variant = Tiff.copy(earlyChange = earlyChange)
+
+  /** GIF image data with its LZW minimum code size (2–8). */
+  def gif(minCodeSize: Int): Variant =
+    Variant(msbFirst = false, earlyChange = 0, minCodeSize = minCodeSize)
+
+  private val MaxCodes = 4096
+
+  /** Decode one stream up to its end code. The output grows as codes
+    * decode, so a declared size costs nothing until the data fills it;
+    * more than `maxOut` bytes is None. Callers with a declared size pass
+    * it as `maxOut` and check the result's length. */
+  def decode(b: Array[Byte], v: Variant,
+      maxOut: Int = Bytes.MaxInflate): Option[Array[Byte]] =
+    try {
+      if (b == null || b.isEmpty || maxOut < 0) return None
+      val read: Int => Int =
+        if (v.msbFirst) new Bytes.BitReader(b).bits
+        else new Bytes.LsbBitReader(b, 0, b.length).bits
+      val prefix = new Array[Int](MaxCodes)
+      val suffix = new Array[Byte](MaxCodes)
+      val length = new Array[Int](MaxCodes)
+      var c = 0
+      while (c < v.clear) { prefix(c) = -1; suffix(c) = c.toByte; length(c) = 1; c += 1 }
+      var out = new Array[Byte](math.min(maxOut.toLong, math.max(64L,
+        b.length * 4L)).toInt)
+      var n = 0
+      // appends the string of `code`, filling right to left; false past
+      // maxOut
+      def put(code: Int): Boolean = {
+        val len = length(code)
+        if (len > maxOut - n) return false
+        if (n + len > out.length) out = java.util.Arrays.copyOf(out,
+          math.min(maxOut.toLong, math.max(n + len, out.length * 2L)).toInt)
+        var at = n + len - 1
+        var k = code
+        while (k >= 0) { out(at) = suffix(k); at -= 1; k = prefix(k) }
+        n += len
+        true
       }
+      val first = v.end + 1
+      var next = first
+      var width = v.minCodeSize + 1
+      var prev = -1
+      while (true) {
+        val code = read(width)
+        if (code == v.clear) {
+          next = first; width = v.minCodeSize + 1; prev = -1
+        } else if (code == v.end) {
+          return Some(if (n == out.length) out else java.util.Arrays.copyOf(out, n))
+        } else if (prev < 0) {
+          // first code after a clear: must be a literal
+          if (code >= v.clear || !put(code)) return None
+          prev = code
+        } else {
+          if (code > next || code == next && next >= MaxCodes) return None
+          if (next < MaxCodes) {
+            // entry prev + first byte of this code's string; for the
+            // KwKwK case (code == next) that is prev's own first byte
+            var f = if (code == next) prev else code
+            while (prefix(f) >= 0) f = prefix(f)
+            prefix(next) = prev
+            suffix(next) = suffix(f)
+            length(next) = length(prev) + 1
+            next += 1
+            if (next + v.earlyChange == (1 << width) && width < 12) width += 1
+          }
+          if (!put(code)) return None
+          prev = code
+        }
+      }
+      None
+    } catch { case _: ArrayIndexOutOfBoundsException => None } // no end code
+
+  /** Encode `data` (each byte below `1 << minCodeSize`): ClearCode
+    * first, a ClearCode whenever the table reaches the variant's limit,
+    * the end code last. The encoder adds its entry one code before the
+    * decoder does, so its width bumps one entry later. */
+  def encode(data: Array[Byte], v: Variant): Array[Byte] = {
+    val msb = new Bytes.BitWriter
+    val lsb = new Bytes.LsbBitWriter
+    var width = v.minCodeSize + 1
+    def emit(code: Int): Unit =
+      if (v.msbFirst) msb.bits(code, width) else lsb.bits(code, width)
+    // (prefix code << 8 | symbol) + 1 → code, open addressing over
+    // twice the table size; a key of 0 marks an empty slot
+    val keys = new Array[Int](2 * MaxCodes)
+    val codes = new Array[Int](2 * MaxCodes)
+    def slot(key: Int): Int = {
+      var h = (key * 0x9e3779b1) >>> 19
+      while (keys(h) != 0 && keys(h) != key) h = (h + 1) & (2 * MaxCodes - 1)
+      h
     }
-    def writeSym(code: Int): Unit = {
-      rawWrite(code)
-      if (!firstSinceClear && decNext < 4096) decNext += 1
-      firstSinceClear = false
-      if (decNext + earlyChange >= (1 << width) && width < 12) width += 1
-    }
-    val dict = new java.util.HashMap[Long, Integer]()
-    var next = 258
-    rawWrite(Clear)
-    var cur = -1
+    var next = v.end + 1
+    emit(v.clear)
+    var prev = -1
     var i = 0
     while (i < data.length) {
-      val c = data(i) & 0xff
-      if (cur < 0) cur = c
+      val sym = data(i) & 0xff
+      if (prev < 0) prev = sym
       else {
-        val key = (cur.toLong << 8) | c
-        val hit = dict.get(key)
-        if (hit != null) cur = hit.intValue()
+        val key = ((prev << 8) | sym) + 1
+        val h = slot(key)
+        if (keys(h) == key) prev = codes(h)
         else {
-          writeSym(cur)
-          if (next < 4096) { dict.put(key, Integer.valueOf(next)); next += 1 }
-          cur = c
-          if (next >= 4096) {
-            // emit pending, clear, restart
-            writeSym(cur)
-            rawWrite(Clear)
-            dict.clear()
-            next = 258
-            decNext = 258
-            width = 9
-            firstSinceClear = true
-            cur = -1
+          emit(prev)
+          keys(h) = key; codes(h) = next
+          next += 1
+          if (next + v.earlyChange - 1 == (1 << width) && width < 12) width += 1
+          if (next == v.limit) {
+            emit(v.clear)
+            java.util.Arrays.fill(keys, 0)
+            next = v.end + 1; width = v.minCodeSize + 1
           }
+          prev = sym
         }
       }
       i += 1
     }
-    if (cur >= 0) writeSym(cur)
-    rawWrite(Eod)
-    if (nAcc > 0) { out.write(((acc << (8 - nAcc)) & 0xff).toInt); nAcc = 0 }
-    out.toByteArray
+    if (prev >= 0) emit(prev)
+    // the last code adds no entry here but does in the decoder, so the
+    // end code follows the decoder's bump rule
+    if (next + v.earlyChange == (1 << width) && width < 12) width += 1
+    emit(v.end)
+    if (v.msbFirst) msb.toBytes else lsb.toBytes
   }
 }

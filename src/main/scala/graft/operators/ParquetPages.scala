@@ -415,9 +415,7 @@ object ParquetPages {
         val dataOff = off + ph.headerLen
         if (dataOff + ph.compSize > file.length) return None
         ph.crc.foreach { c =>
-          val crc = new java.util.zip.CRC32
-          crc.update(file, dataOff, ph.compSize)
-          if (crc.getValue.toInt != c) return None
+          if (Bytes.crc32(file, dataOff, ph.compSize).toInt != c) return None
         }
         // v2 pages carry RAW level bytes before the codec region, so
         // the whole-page decompress applies only to v1/dict pages
@@ -790,9 +788,7 @@ object ParquetPages {
         val dataOff = off + ph.headerLen
         if (dataOff + ph.compSize > file.length) return None
         ph.crc.foreach { c =>
-          val crc = new java.util.zip.CRC32
-          crc.update(file, dataOff, ph.compSize)
-          if (crc.getValue.toInt != c) return None
+          if (Bytes.crc32(file, dataOff, ph.compSize).toInt != c) return None
         }
         ph.ptype match {
           case 2 => // dictionary page

@@ -2,6 +2,8 @@ package graft.operators
 
 import java.io.ByteArrayOutputStream
 
+import graft.operators.Bytes.deflate
+
 /** Pure-JVM PDF structure sniff: parse (and, for fixtures, emit) the
   * cross-reference skeleton of a classic-xref PDF (public spec, ISO
   * 32000-1) — no PDF libraries, no native deps.
@@ -1004,16 +1006,6 @@ object Pdf {
     }
     ops.append("ET")
     ops.toString
-  }
-
-  private def deflate(raw: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    d.setInput(raw); d.finish()
-    val bos = new ByteArrayOutputStream(raw.length + 32)
-    val buf = new Array[Byte](4096)
-    while (!d.finished()) bos.write(buf, 0, d.deflate(buf))
-    d.end()
-    bos.toByteArray
   }
 
   /** Text-bearing fixture emitter: one content stream PER PAGE with a

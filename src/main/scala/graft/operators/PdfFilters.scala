@@ -212,22 +212,13 @@ object PdfFilters {
           case "ASCIIHexDecode"  => asciiHexDecode(data)
           case "ASCII85Decode"   => ascii85Decode(data)
           case "RunLengthDecode" => runLengthDecode(data)
-          case "LZWDecode"       => Lzw.lzwDecode(data, earlyChange = earlyChange)
+          case "LZWDecode" if earlyChange == 0 || earlyChange == 1 =>
+            Lzw.decode(data, Lzw.pdf(earlyChange))
           case "FlateDecode" => Bytes.inflate(data, 0, data.length).map(_._1)
           case _ => None
         }
       }
     }
-
-  private def flate(data: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    d.setInput(data); d.finish()
-    val out = new ByteArrayOutputStream(data.length / 2 + 16)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
-    out.toByteArray
-  }
 
   // ------------------------------------------------------------------
   // queries
@@ -256,9 +247,9 @@ object PdfFilters {
                 Seq("ASCII85Decode"), "a85")
               case 2 => (ascii85Encode(runLengthEncode(content)),
                 Seq("ASCII85Decode", "RunLengthDecode"), "a85+rl")
-              case 3 => (ascii85Encode(Lzw.lzwEncode(content)),
+              case 3 => (ascii85Encode(Lzw.encode(content, Lzw.Tiff)),
                 Seq("ASCII85Decode", "LZWDecode"), "a85+lzw")
-              case _ => (ascii85Encode(flate(content)),
+              case _ => (ascii85Encode(Bytes.deflate(content)),
                 Seq("ASCII85Decode", "FlateDecode"), "a85+flate")
             }
             val dec = decodeChain(stored, chain)

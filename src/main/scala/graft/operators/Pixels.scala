@@ -1,7 +1,6 @@
 package graft.operators
 
 import java.io.ByteArrayOutputStream
-import java.util.zip.{CRC32, Deflater}
 
 import org.apache.spark.sql.functions._
 
@@ -13,7 +12,7 @@ import graft.operators.Bytes.{i32be, i32le, le16, le32, putBe32, u16, u16le,
   *
   * Everything before this module stopped at headers (q229 reads IHDR
   * dims; the IDAT was opaque payload). Here the fixture emitter writes
-  * byte-valid grayscale PNGs — zlib-wrapped IDAT (JDK Deflater), one
+  * byte-valid grayscale PNGs — zlib-wrapped IDAT (`Bytes.deflate`), one
   * filter byte per scanline cycling ALL FIVE filter types (None / Sub /
   * Up / Average / Paeth, RFC 2083 §6), chunk CRC32s, and a variable-
   * length tEXt chunk the walk must hop — and the decoder recovers the
@@ -56,27 +55,39 @@ object Pixels {
     if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
   }
 
-  /** Byte-valid grayscale PNG: signature, IHDR (8-bit, color type 0),
-    * a tEXt chunk carrying `comment` (variable length — the decoder's
-    * chunk walk must hop it), zlib-deflated IDAT with the scanline
-    * filter cycling y % 5 over all five filter types, IEND. `pixels`
-    * is row-major, values 0–255. */
+  /** Byte-valid grayscale PNG (color type 0). `pixels` is row-major,
+    * values 0–255. */
   def encodeGrayPng(width: Int, height: Int, pixels: Array[Int],
       comment: Array[Byte]): Array[Byte] = {
     require(pixels.length == width * height,
       s"pixel buffer ${pixels.length} != ${width}x$height")
-    // filtered stream: per row, 1 filter-type byte + width sample bytes
-    val raw = new Array[Byte]((1 + width) * height)
+    encodePng(width, height, 1, 0, pixels, None, comment)
+  }
+
+  /** The one PNG writer (8-bit samples, not interlaced): signature,
+    * IHDR, a PLTE of 0xRRGGBB entries when `palette` is given, a tEXt
+    * chunk carrying `comment` (variable length — the decoder's chunk
+    * walk must hop it), one zlib IDAT, IEND. Each scanline's filter
+    * cycles y % 5 over all five filter types (None / Sub / Up /
+    * Average / Paeth, RFC 2083 §6), predicting from the sample `spp`
+    * bytes back. `samples` is row-major, `spp` values 0–255 a pixel. */
+  private def encodePng(width: Int, height: Int, spp: Int, colorType: Int,
+      samples: Array[Int], palette: Option[Array[Int]],
+      comment: Array[Byte]): Array[Byte] = {
+    val rowBytes = width * spp
+    // filtered stream: per row, 1 filter-type byte + the row's samples
+    val raw = new Array[Byte]((1 + rowBytes) * height)
     var y = 0
     while (y < height) {
       val f = y % 5
-      raw(y * (width + 1)) = f.toByte
+      raw(y * (rowBytes + 1)) = f.toByte
       var x = 0
-      while (x < width) {
-        val cur = pixels(y * width + x)
-        val left = if (x > 0) pixels(y * width + x - 1) else 0
-        val up = if (y > 0) pixels((y - 1) * width + x) else 0
-        val ul = if (x > 0 && y > 0) pixels((y - 1) * width + x - 1) else 0
+      while (x < rowBytes) {
+        val cur = samples(y * rowBytes + x)
+        val left = if (x >= spp) samples(y * rowBytes + x - spp) else 0
+        val up = if (y > 0) samples((y - 1) * rowBytes + x) else 0
+        val ul = if (x >= spp && y > 0) samples((y - 1) * rowBytes + x - spp)
+          else 0
         val v = f match {
           case 0 => cur
           case 1 => cur - left
@@ -84,31 +95,39 @@ object Pixels {
           case 3 => cur - (left + up) / 2
           case _ => cur - paeth(left, up, ul)
         }
-        raw(y * (width + 1) + 1 + x) = (v & 0xff).toByte
+        raw(y * (rowBytes + 1) + 1 + x) = (v & 0xff).toByte
         x += 1
       }
       y += 1
     }
-    // zlib wrapper (NOT nowrap): PNG's IDAT is RFC 1950 zlib, header +
-    // adler32, unlike gzip's raw-deflate-with-own-framing
-    val defl = new Deflater(Deflater.DEFAULT_COMPRESSION, false)
-    defl.setInput(raw); defl.finish()
-    val zout = new ByteArrayOutputStream(raw.length / 2 + 32)
-    val buf = new Array[Byte](4096)
-    while (!defl.finished()) zout.write(buf, 0, defl.deflate(buf))
-    defl.end()
-
-    val out = new ByteArrayOutputStream(zout.size() + comment.length + 96)
+    val out = new ByteArrayOutputStream(raw.length / 2 + comment.length + 900)
     out.write(PngSig, 0, PngSig.length)
     val ihdr = new Array[Byte](13)
     putBe32(ihdr, 0, width); putBe32(ihdr, 4, height)
-    ihdr(8) = 8; ihdr(9) = 0 // bit depth 8, color type 0 = grayscale
+    ihdr(8) = 8; ihdr(9) = colorType.toByte
     out.write(PngMeta.chunk("IHDR", ihdr))
+    palette.foreach(p => out.write(PngMeta.chunk("PLTE",
+      rgbSamples(p).map(_.toByte))))
     out.write(PngMeta.chunk("tEXt", "Comment".getBytes("US-ASCII") ++
       Array(0.toByte) ++ comment))
-    out.write(PngMeta.chunk("IDAT", zout.toByteArray))
+    // zlib wrapper (NOT nowrap): PNG's IDAT is RFC 1950 zlib, header +
+    // adler32, unlike gzip's raw-deflate-with-own-framing
+    out.write(PngMeta.chunk("IDAT", Bytes.deflate(raw)))
     out.write(PngMeta.chunk("IEND", Array.emptyByteArray))
     out.toByteArray
+  }
+
+  /** 0xRRGGBB ints as R, G, B samples. */
+  private def rgbSamples(rgb: Array[Int]): Array[Int] = {
+    val out = new Array[Int](rgb.length * 3)
+    var i = 0
+    while (i < rgb.length) {
+      out(i * 3) = (rgb(i) >> 16) & 0xff
+      out(i * 3 + 1) = (rgb(i) >> 8) & 0xff
+      out(i * 3 + 2) = rgb(i) & 0xff
+      i += 1
+    }
+    out
   }
 
   // Adam7 pass geometry (RFC 2083 §2.6): origin and step per pass
@@ -146,9 +165,8 @@ object Pixels {
         val len = i32be(bytes, off)
         if (len < 0 || off + 12 + len > bytes.length) return None
         val typ = new String(bytes, off + 4, 4, "US-ASCII")
-        val crc = new CRC32()
-        crc.update(bytes, off + 4, 4 + len)
-        if (crc.getValue.toInt != i32be(bytes, off + 8 + len)) return None
+        if (Bytes.crc32(bytes, off + 4, 4 + len).toInt !=
+          i32be(bytes, off + 8 + len)) return None
         typ match {
           case "IHDR" =>
             if (len != 13) return None
@@ -297,69 +315,17 @@ object Pixels {
         }))
     }
 
-  /** Byte-valid truecolor PNG (color type 2): same chunk layout and
-    * filter cycling as the gray encoder, 3 samples per pixel with the
-    * spec's bpp-offset filter predictions. `rgb` is row-major
-    * 0xRRGGBB ints. */
+  /** Byte-valid truecolor PNG (color type 2), 3 samples per pixel.
+    * `rgb` is row-major 0xRRGGBB ints. */
   def encodeRgbPng(width: Int, height: Int, rgb: Array[Int],
       comment: Array[Byte]): Array[Byte] = {
     require(rgb.length == width * height,
       s"pixel buffer ${rgb.length} != ${width}x$height")
-    val rowBytes = width * 3
-    val samples = new Array[Int](rowBytes * height)
-    var i = 0
-    while (i < rgb.length) {
-      samples(i * 3) = (rgb(i) >> 16) & 0xff
-      samples(i * 3 + 1) = (rgb(i) >> 8) & 0xff
-      samples(i * 3 + 2) = rgb(i) & 0xff
-      i += 1
-    }
-    val raw = new Array[Byte]((1 + rowBytes) * height)
-    var y = 0
-    while (y < height) {
-      val f = y % 5
-      raw(y * (rowBytes + 1)) = f.toByte
-      var x = 0
-      while (x < rowBytes) {
-        val cur = samples(y * rowBytes + x)
-        val left = if (x >= 3) samples(y * rowBytes + x - 3) else 0
-        val up = if (y > 0) samples((y - 1) * rowBytes + x) else 0
-        val ul = if (x >= 3 && y > 0) samples((y - 1) * rowBytes + x - 3)
-          else 0
-        val v = f match {
-          case 0 => cur
-          case 1 => cur - left
-          case 2 => cur - up
-          case 3 => cur - (left + up) / 2
-          case _ => cur - paeth(left, up, ul)
-        }
-        raw(y * (rowBytes + 1) + 1 + x) = (v & 0xff).toByte
-        x += 1
-      }
-      y += 1
-    }
-    val defl = new Deflater(Deflater.DEFAULT_COMPRESSION, false)
-    defl.setInput(raw); defl.finish()
-    val zout = new ByteArrayOutputStream(raw.length / 2 + 32)
-    val buf = new Array[Byte](4096)
-    while (!defl.finished()) zout.write(buf, 0, defl.deflate(buf))
-    defl.end()
-    val out = new ByteArrayOutputStream(zout.size() + comment.length + 96)
-    out.write(PngSig, 0, PngSig.length)
-    val ihdr = new Array[Byte](13)
-    putBe32(ihdr, 0, width); putBe32(ihdr, 4, height)
-    ihdr(8) = 8; ihdr(9) = 2 // 8-bit, truecolor
-    out.write(PngMeta.chunk("IHDR", ihdr))
-    out.write(PngMeta.chunk("tEXt", "Comment".getBytes("US-ASCII") ++
-      Array(0.toByte) ++ comment))
-    out.write(PngMeta.chunk("IDAT", zout.toByteArray))
-    out.write(PngMeta.chunk("IEND", Array.emptyByteArray))
-    out.toByteArray
+    encodePng(width, height, 3, 2, rgbSamples(rgb), None, comment)
   }
 
   /** Byte-valid palette PNG (color type 3): PLTE of 0xRRGGBB entries
-    * between IHDR and IDAT, index bytes filtered exactly like the
-    * gray encoder (bpp = 1). */
+    * between IHDR and IDAT, index bytes filtered like gray samples. */
   def encodePalettePng(width: Int, height: Int, indices: Array[Int],
       palette: Array[Int], comment: Array[Byte]): Array[Byte] = {
     require(indices.length == width * height,
@@ -368,184 +334,12 @@ object Pixels {
       s"palette size ${palette.length}")
     indices.foreach(i => require(i >= 0 && i < palette.length,
       s"index $i out of palette"))
-    val raw = new Array[Byte]((1 + width) * height)
-    var y = 0
-    while (y < height) {
-      val f = y % 5
-      raw(y * (width + 1)) = f.toByte
-      var x = 0
-      while (x < width) {
-        val cur = indices(y * width + x)
-        val left = if (x > 0) indices(y * width + x - 1) else 0
-        val up = if (y > 0) indices((y - 1) * width + x) else 0
-        val ul = if (x > 0 && y > 0) indices((y - 1) * width + x - 1) else 0
-        val v = f match {
-          case 0 => cur
-          case 1 => cur - left
-          case 2 => cur - up
-          case 3 => cur - (left + up) / 2
-          case _ => cur - paeth(left, up, ul)
-        }
-        raw(y * (width + 1) + 1 + x) = (v & 0xff).toByte
-        x += 1
-      }
-      y += 1
-    }
-    val defl = new Deflater(Deflater.DEFAULT_COMPRESSION, false)
-    defl.setInput(raw); defl.finish()
-    val zout = new ByteArrayOutputStream(raw.length / 2 + 32)
-    val buf = new Array[Byte](4096)
-    while (!defl.finished()) zout.write(buf, 0, defl.deflate(buf))
-    defl.end()
-    val out = new ByteArrayOutputStream(zout.size() + comment.length + 900)
-    out.write(PngSig, 0, PngSig.length)
-    val ihdr = new Array[Byte](13)
-    putBe32(ihdr, 0, width); putBe32(ihdr, 4, height)
-    ihdr(8) = 8; ihdr(9) = 3 // 8-bit, palette
-    out.write(PngMeta.chunk("IHDR", ihdr))
-    val plte = new Array[Byte](palette.length * 3)
-    var p = 0
-    while (p < palette.length) {
-      plte(p * 3) = ((palette(p) >> 16) & 0xff).toByte
-      plte(p * 3 + 1) = ((palette(p) >> 8) & 0xff).toByte
-      plte(p * 3 + 2) = (palette(p) & 0xff).toByte
-      p += 1
-    }
-    out.write(PngMeta.chunk("PLTE", plte))
-    out.write(PngMeta.chunk("tEXt", "Comment".getBytes("US-ASCII") ++
-      Array(0.toByte) ++ comment))
-    out.write(PngMeta.chunk("IDAT", zout.toByteArray))
-    out.write(PngMeta.chunk("IEND", Array.emptyByteArray))
-    out.toByteArray
+    encodePng(width, height, 1, 3, indices, Some(palette), comment)
   }
 
   // ------------------------------------------------------------------
   // GIF87a grayscale codec (8-bit palette, real LZW both directions)
   // ------------------------------------------------------------------
-
-  /** GIF-variant LZW compress (LSB-first variable-width codes, clear
-    * code emitted up front and on dictionary overflow at 4096). Input
-    * is 8-bit pixel indices; minimum code size is fixed at 8. */
-  private def lzwCompress(data: Array[Int], minCode: Int = 8): Array[Byte] = {
-    val ClearCode = 1 << minCode; val EoiCode = ClearCode + 1
-    val out = new ByteArrayOutputStream(data.length / 2 + 16)
-    var bitBuf = 0L; var bitCnt = 0
-    var codeWidth = minCode + 1
-    def emit(code: Int): Unit = {
-      bitBuf |= code.toLong << bitCnt; bitCnt += codeWidth
-      while (bitCnt >= 8) {
-        out.write((bitBuf & 0xff).toInt); bitBuf >>>= 8; bitCnt -= 8
-      }
-    }
-    // dictionary: string→code. Strings grow by one symbol at a time, so
-    // (prefixCode, nextSymbol) is a complete key.
-    var dict = scala.collection.mutable.HashMap.empty[(Int, Int), Int]
-    var nextCode = EoiCode + 1
-    emit(ClearCode)
-    var prev = -1
-    var i = 0
-    while (i < data.length) {
-      val sym = data(i)
-      if (prev < 0) prev = sym
-      else dict.get((prev, sym)) match {
-        case Some(code) => prev = code
-        case None =>
-          emit(prev)
-          dict((prev, sym)) = nextCode
-          nextCode += 1
-          if (nextCode - 1 == (1 << codeWidth) && codeWidth < 12)
-            codeWidth += 1
-          if (nextCode == 4096) { // table full: reset, per GIF spec
-            emit(ClearCode)
-            dict = scala.collection.mutable.HashMap.empty
-            nextCode = EoiCode + 1; codeWidth = minCode + 1
-          }
-          prev = sym
-      }
-      i += 1
-    }
-    if (prev >= 0) emit(prev)
-    // tail: the final emit above makes NO dictionary add, but the
-    // decoder DOES add on reading it — if that lands exactly on the
-    // decoder's bump boundary (nextCode == 2^w in the GIF schedule),
-    // the EOI must be written one bit wider. Caught live by the q371
-    // sf1 sweep at ~1000-symbol small-palette streams; the TIFF LZW
-    // pair has the same rule at ITS (early-change) boundary.
-    if (nextCode == (1 << codeWidth) && codeWidth < 12) codeWidth += 1
-    emit(EoiCode)
-    if (bitCnt > 0) out.write((bitBuf & 0xff).toInt)
-    out.toByteArray
-  }
-
-  /** GIF-variant LZW decompress. `expected` bounds the output (w*h for
-    * an image); returns None on malformed streams.
-    *
-    * Width schedule: the decoder's slot counter LAGS the encoder's by
-    * one data code (the first code after a clear defines nothing), so
-    * the symmetric-looking bump rules differ by one on purpose —
-    * encoder bumps at nextCode−1 == 2^W, decoder at nextCode == 2^W.
-    * That pairing is the standard GIF schedule (giflib / stb_image /
-    * ImageIO agree); `PixelsSpec` referees BOTH directions against
-    * the JDK's own ImageIO GIF codec. */
-  private def lzwDecompress(data: Array[Byte], expected: Int,
-      minCode: Int = 8): Option[Array[Int]] = {
-    val ClearCode = 1 << minCode; val EoiCode = ClearCode + 1
-    val out = new Array[Int](expected)
-    var n = 0
-    // code → string of symbols, stored as (prefix chain, last symbol)
-    val suffix = new Array[Int](4096); val prefix = new Array[Int](4096)
-    val length = new Array[Int](4096)
-    var c0 = 0
-    while (c0 < ClearCode) { suffix(c0) = c0; prefix(c0) = -1; length(c0) = 1; c0 += 1 }
-    var nextCode = EoiCode + 1
-    var codeWidth = minCode + 1
-    var bitBuf = 0L; var bitCnt = 0; var pos = 0
-    var prevCode = -1
-    def writeCode(code: Int): Boolean = {
-      // walk the chain backwards, filling right-to-left
-      var c = code; val end = n + length(code)
-      if (end > expected) return false
-      var w = end - 1
-      while (c >= 0) { out(w) = suffix(c); w -= 1; c = prefix(c) }
-      n = end
-      true
-    }
-    while (pos < data.length || bitCnt >= codeWidth) {
-      while (bitCnt < codeWidth && pos < data.length) {
-        bitBuf |= (data(pos) & 0xffL) << bitCnt; bitCnt += 8; pos += 1
-      }
-      if (bitCnt < codeWidth) return None // truncated mid-code
-      val code = (bitBuf & ((1 << codeWidth) - 1)).toInt
-      bitBuf >>>= codeWidth; bitCnt -= codeWidth
-      if (code == ClearCode) {
-        nextCode = EoiCode + 1; codeWidth = minCode + 1; prevCode = -1
-      } else if (code == EoiCode) {
-        return if (n == expected) Some(out) else None
-      } else if (prevCode < 0) {
-        if (code >= ClearCode) return None // first after clear is a root
-        if (!writeCode(code)) return None
-        prevCode = code
-      } else {
-        if (code > nextCode) return None
-        if (code == nextCode && nextCode >= 4096) return None
-        // first symbol of the string this code denotes (for KwKwK the
-        // string is prev + first(prev), so walk prev instead)
-        var f = if (code == nextCode) prevCode else code
-        while (prefix(f) >= 0) f = prefix(f)
-        if (nextCode < 4096) {
-          prefix(nextCode) = prevCode
-          suffix(nextCode) = suffix(f)
-          length(nextCode) = length(prevCode) + 1
-          nextCode += 1
-          if (nextCode == (1 << codeWidth) && codeWidth < 12) codeWidth += 1
-        }
-        // post-define, a KwKwK code is an ordinary defined code
-        if (!writeCode(code)) return None
-        prevCode = code
-      }
-    }
-    None // ran out of bits without EOI
-  }
 
   /** Byte-valid grayscale GIF87a: header, logical screen descriptor, a
     * 256-entry grayscale global color table (palette index == pixel
@@ -575,7 +369,7 @@ object Pixels {
     out.write(0x2c); le16(out, 0); le16(out, 0); le16(out, width)
     le16(out, height); out.write(0)
     out.write(8) // LZW minimum code size
-    val lzw = lzwCompress(pixels)
+    val lzw = Lzw.encode(pixels.map(_.toByte), Lzw.gif(8))
     off = 0
     while (off < lzw.length) {
       val n = math.min(255, lzw.length - off)
@@ -613,7 +407,7 @@ object Pixels {
     out.write(0x2c); le16(out, 0); le16(out, 0); le16(out, width)
     le16(out, height); out.write(0)
     out.write(mc)
-    val lzw = lzwCompress(indices, mc)
+    val lzw = Lzw.encode(indices.map(_.toByte), Lzw.gif(mc))
     var off = 0
     while (off < lzw.length) {
       val n = math.min(255, lzw.length - off)
@@ -625,9 +419,10 @@ object Pixels {
   }
 
   /** Decode a grayscale GIF87a/89a back to pixels: sub-block
-    * reassembly, extension hops, real LZW decompression, palette
-    * lookup through the grayscale GCT. Corrupt / unsupported (local
-    * color tables, interlace) → None. */
+    * reassembly, extension hops, LZW decompression sized by the data
+    * (at most the declared w×h), palette lookup through the grayscale
+    * GCT or the image's local color table, interlaced rows reordered.
+    * Corrupt → None. */
   def decodeGrayGif(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
     try {
       if (bytes.length < 13 + 10) return None
@@ -672,8 +467,8 @@ object Pixels {
               off += 1 + n
             }
             if (w <= 0 || h <= 0 || w.toLong * h > (1 << 26)) return None
-            return lzwDecompress(lzw.toByteArray, w * h, minCode)
-              .map { idx =>
+            return Lzw.decode(lzw.toByteArray, Lzw.gif(minCode), w * h)
+              .filter(_.length == w * h).map { idx =>
                 // GIF89a appendix E interlace: rows arrive in four
                 // passes (every 8th from 0, every 8th from 4, every
                 // 4th from 2, every 2nd from 1)
@@ -686,7 +481,7 @@ object Pixels {
                 rows.foreach { r =>
                   var x = 0
                   while (x < w) {
-                    val i = idx(src * w + x)
+                    val i = idx(src * w + x) & 0xff
                     px(r * w + x) = if (i < pal.length) pal(i) else 0
                     x += 1
                   }
@@ -736,7 +531,7 @@ object Pixels {
       out.write(0x2c); le16(out, 0); le16(out, 0); le16(out, width)
       le16(out, height); out.write(0)
       out.write(8)
-      val lzw = lzwCompress(px)
+      val lzw = Lzw.encode(px.map(_.toByte), Lzw.gif(8))
       var o = 0
       while (o < lzw.length) {
         val n = math.min(255, lzw.length - o)
@@ -806,10 +601,11 @@ object Pixels {
               off += 1 + n
             }
             off += 1 // data terminator
-            lzwDecompress(lzw.toByteArray, w * h, minCode) match {
+            Lzw.decode(lzw.toByteArray, Lzw.gif(minCode), w * h)
+                .filter(_.length == w * h) match {
               case Some(idx) =>
-                val px = idx.map(i => if (i < palette.length) palette(i)
-                  else return None)
+                val px = idx.map(i => if ((i & 0xff) < palette.length)
+                  palette(i & 0xff) else return None)
                 frames += ((pendingDelay, px))
                 pendingDelay = 0
               case None => return None
@@ -857,9 +653,11 @@ object Pixels {
   }
 
   /** PackBits decompress; `expected` bounds the output. None on
-    * malformed or over/underrun streams. */
+    * malformed or over/underrun streams, and before allocating when
+    * `data` cannot fill `expected` (at most 128 bytes per 2). */
   def unpackBits(data: Array[Byte], expected: Int): Option[Array[Byte]] =
     try {
+      if (expected.toLong > 64L * data.length) return None
       val out = new Array[Byte](expected)
       var i = 0; var n = 0
       while (i < data.length) {
@@ -907,7 +705,7 @@ object Pixels {
       }
       compression match {
         case 1 => raw
-        case 5 => tiffLzwCompress(raw)
+        case 5 => Lzw.encode(raw, Lzw.Tiff)
         case _ => packBits(raw)
       }
     }
@@ -949,118 +747,6 @@ object Pixels {
     }
     le32(out, 0) // next IFD
     out.toByteArray
-  }
-
-  /** TIFF 6.0 §13 LZW compress: MSB-first variable-width codes with
-    * the spec's EARLY width change — the width bumps at table size
-    * 2^w−1, one code sooner than GIF's LSB-first variant. */
-  def tiffLzwCompress(data: Array[Byte]): Array[Byte] = {
-    val Clear = 256; val Eoi = 257
-    val out = new ByteArrayOutputStream(data.length / 2 + 16)
-    var bitBuf = 0L; var bitCnt = 0; var width = 9
-    def emit(code: Int): Unit = {
-      bitBuf = (bitBuf << width) | code; bitCnt += width
-      while (bitCnt >= 8) {
-        out.write(((bitBuf >> (bitCnt - 8)) & 0xff).toInt); bitCnt -= 8
-      }
-    }
-    var dict = scala.collection.mutable.HashMap.empty[(Int, Int), Int]
-    var nextCode = 258
-    emit(Clear)
-    var prev = -1
-    var i = 0
-    while (i < data.length) {
-      val sym = data(i) & 0xff
-      if (prev < 0) prev = sym
-      else dict.get((prev, sym)) match {
-        case Some(c) => prev = c
-        case None =>
-          emit(prev)
-          dict((prev, sym)) = nextCode; nextCode += 1
-          // the encoder runs one entry AHEAD of the decoder (it adds
-          // on emit; the decoder adds on the NEXT read), so its bump
-          // fires at 2^w where the decoder's fires at 2^w − 1 — one
-          // code earlier than the GIF variant either way
-          if (nextCode == (1 << width) && width < 12) width += 1
-          if (nextCode >= 4094) { // table nearly full: restart
-            emit(Clear); width = 9
-            dict = scala.collection.mutable.HashMap.empty
-            nextCode = 258
-          }
-          prev = sym
-      }
-      i += 1
-    }
-    if (prev >= 0) emit(prev)
-    // tail: the final emit above makes NO dictionary add, but the
-    // decoder DOES add on reading it — so for the EOI the two sit at
-    // the same count and the DECODER's bump rule (2^w − 1) applies
-    if (nextCode == (1 << width) - 1 && width < 12) width += 1
-    emit(Eoi)
-    if (bitCnt > 0) out.write(((bitBuf << (8 - bitCnt)) & 0xff).toInt)
-    out.toByteArray
-  }
-
-  /** TIFF LZW decompress (MSB-first, early change); `expected` bounds
-    * the output. None on overrun, bad code, or missing EOI. */
-  def tiffLzwDecompress(data: Array[Byte],
-      expected: Int): Option[Array[Byte]] = {
-    val Clear = 256; val Eoi = 257
-    val out = new Array[Byte](expected)
-    var n = 0
-    val suffix = new Array[Int](4096); val prefix = new Array[Int](4096)
-    val length = new Array[Int](4096)
-    var i = 0
-    while (i < 256) { suffix(i) = i; prefix(i) = -1; length(i) = 1; i += 1 }
-    var width = 9; var nextCode = 258; var prevCode = -1
-    var bitPos = 0
-    def readCode(): Int = {
-      if ((bitPos + width + 7) / 8 > data.length) return -1
-      var v = 0
-      var k = 0
-      while (k < width) {
-        val b = (data(bitPos >> 3) >> (7 - (bitPos & 7))) & 1
-        v = (v << 1) | b
-        bitPos += 1; k += 1
-      }
-      v
-    }
-    def writeCode(code: Int): Boolean = {
-      val len = length(code)
-      if (n + len > expected) return false
-      var at = n + len - 1
-      var c = code
-      while (c >= 0) { out(at) = suffix(c).toByte; at -= 1; c = prefix(c) }
-      n += len
-      true
-    }
-    while (true) {
-      val code = readCode()
-      if (code < 0) return None
-      if (code == Eoi) return if (n == expected) Some(out) else None
-      else if (code == Clear) { width = 9; nextCode = 258; prevCode = -1 }
-      else if (prevCode < 0) {
-        if (code > 255) return None
-        if (!writeCode(code)) return None
-        prevCode = code
-      } else {
-        if (code > nextCode || nextCode >= 4096) return None
-        // define (prevCode + first symbol of current string); for the
-        // KwKwK case the current string IS the new entry
-        var f = if (code == nextCode) prevCode else code
-        while (prefix(f) >= 0) f = prefix(f)
-        if (nextCode < 4096) {
-          prefix(nextCode) = prevCode
-          suffix(nextCode) = suffix(f)
-          length(nextCode) = length(prevCode) + 1
-          nextCode += 1
-          if (nextCode == (1 << width) - 1 && width < 12) width += 1
-        }
-        if (!writeCode(code)) return None
-        prevCode = code
-      }
-    }
-    None
   }
 
   /** Decode a grayscale 8-bit TIFF (II or MM): IFD walk, strip
@@ -1116,6 +802,8 @@ object Pixels {
       if (comp != 1 && comp != 32773 && comp != 5) return None
       if (predictor != 1) return None // differencing out of contract
       if (offCnt != cntCnt || offCnt <= 0) return None
+      // more strips than rows, or strip arrays longer than the file
+      if (offCnt > h || offCnt > 1 && offCnt * 4 > bytes.length) return None
       if (w.toLong * h > (1 << 26)) return None
       val nStrips = offCnt.toInt
       def arr(cntN: Int, inline: Long, atOff: Long): Array[Long] =
@@ -1123,7 +811,7 @@ object Pixels {
         else Array.tabulate(cntN)(i => u32(bytes, (atOff + i * 4L).toInt, be))
       val offs = arr(nStrips, offInline, offAt)
       val cnts = arr(nStrips, cntInline, cntAt)
-      val px = new Array[Int](w * h)
+      val strips = new Array[Array[Byte]](nStrips)
       var y0 = 0
       var s = 0
       while (s < nStrips) {
@@ -1139,8 +827,9 @@ object Pixels {
             java.util.Arrays.copyOfRange(bytes, offs(s).toInt,
               (offs(s) + cnts(s)).toInt)
           } else if (comp == 5) {
-            tiffLzwDecompress(java.util.Arrays.copyOfRange(bytes,
-              offs(s).toInt, (offs(s) + cnts(s)).toInt), rawLen) match {
+            Lzw.decode(java.util.Arrays.copyOfRange(bytes, offs(s).toInt,
+              (offs(s) + cnts(s)).toInt), Lzw.Tiff, rawLen)
+              .filter(_.length == rawLen) match {
               case Some(d) => d
               case None => return None
             }
@@ -1151,12 +840,18 @@ object Pixels {
               case None => return None
             }
           }
-        var i = 0
-        while (i < rawLen) { px((y0 + i / w) * w + i % w) = strip(i) & 0xff; i += 1 }
+        strips(s) = strip
         y0 += rows
         s += 1
       }
       if (y0 != h) return None
+      // the raster only once the strips have filled it, row after row
+      val px = new Array[Int](w * h)
+      var at = 0
+      strips.foreach { st =>
+        var i = 0
+        while (i < st.length) { px(at) = st(i) & 0xff; at += 1; i += 1 }
+      }
       Some((w, h, px))
     } catch { case _: Exception => None }
 
@@ -1289,11 +984,13 @@ object Pixels {
       val palAt = 14 + hdrSize
       if (palAt + palSize * 4 > offBits) return None
       val palette = Array.tabulate(palSize)(i => bytes(palAt + i * 4) & 0xff)
-      val px = new Array[Int](w * h)
       if (compression == 1) {
-        // BI_RLE8: bottom-up only (the spec forbids top-down RLE)
+        // BI_RLE8: bottom-up only (the spec forbids top-down RLE), and
+        // no larger than the stream's runs can fill (255 pixels a run)
         if (topDown) return None
-        val idx = new Array[Int](w * h) // palette indices, default 0
+        if (w.toLong * h > (bytes.length - offBits).toLong / 2 * 255)
+          return None
+        val px = new Array[Int](w * h) // palette indices, default 0
         var x = 0; var y = h - 1
         var i2 = offBits
         var done = false
@@ -1304,7 +1001,7 @@ object Pixels {
           if (b0 > 0) { // encoded run
             if (y < 0 || x + b0 > w) return None
             var k = 0
-            while (k < b0) { idx(y * w + x + k) = b1; k += 1 }
+            while (k < b0) { px(y * w + x + k) = b1; k += 1 }
             x += b0
           } else b1 match {
             case 0 => x = 0; y -= 1 // end of line
@@ -1318,22 +1015,24 @@ object Pixels {
               if (y < 0 || x + n > w) return None
               if (i2 + n + (n % 2) > bytes.length) return None
               var k = 0
-              while (k < n) { idx(y * w + x + k) = bytes(i2 + k) & 0xff; k += 1 }
+              while (k < n) { px(y * w + x + k) = bytes(i2 + k) & 0xff; k += 1 }
               i2 += n + (n % 2)
               x += n
           }
         }
         // the decode loop wrote the FIRST encoded row (the image
-        // bottom) at idx row h-1, so idx is already top-down
+        // bottom) at row h-1, so px is already top-down
         var j = 0
         while (j < w * h) {
-          if (idx(j) >= palSize) return None
-          px(j) = palette(idx(j))
+          if (px(j) >= palSize) return None
+          px(j) = palette(px(j))
           j += 1
         }
+        Some((w, h, px))
       } else {
         val stride = (w + 3) / 4 * 4
         if (offBits.toLong + stride.toLong * h > bytes.length) return None
+        val px = new Array[Int](w * h)
         var row = 0
         while (row < h) {
           val srcY = if (topDown) row else h - 1 - row
@@ -1345,8 +1044,8 @@ object Pixels {
           }
           row += 1
         }
+        Some((w, h, px))
       }
-      Some((w, h, px))
     } catch { case _: Exception => None }
 
   // ------------------------------------------------------------------

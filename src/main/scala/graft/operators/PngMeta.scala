@@ -1,9 +1,8 @@
 package graft.operators
 
 import java.io.ByteArrayOutputStream
-import java.util.zip.{CRC32, Deflater}
 
-import graft.operators.Bytes.{be32, u32be}
+import graft.operators.Bytes.{be32, crc32, deflate, u32be}
 
 /** PNG metadata chunks (public spec, PNG third edition / RFC 2083):
   * tEXt (Latin-1 keyword/value), zTXt (Latin-1, zlib-deflated value),
@@ -62,11 +61,7 @@ object PngMeta {
         val p = off + 8
         val e = p + len.toInt
         nChunks += 1
-        def crcOk: Boolean = {
-          val crc = new CRC32()
-          crc.update(b, off + 4, 4 + len.toInt)
-          crc.getValue == u32be(b, e)
-        }
+        def crcOk: Boolean = crc32(b, off + 4, 4 + len.toInt) == u32be(b, e)
         def keywordEnd: Int = {
           val k = nulAt(b, p, e)
           if (k < 0 || k == p || k - p > 79) -1 else k
@@ -129,23 +124,9 @@ object PngMeta {
       payload: Array[Byte]): Array[Byte] = {
     val out = new ByteArrayOutputStream(payload.length + 12)
     be32(out, payload.length.toLong)
-    val t = typ.getBytes("US-ASCII")
-    out.write(t, 0, 4)
-    out.write(payload, 0, payload.length)
-    val crc = new CRC32()
-    crc.update(t, 0, 4)
-    crc.update(payload, 0, payload.length)
-    be32(out, crc.getValue)
-    out.toByteArray
-  }
-
-  private def deflate(raw: Array[Byte]): Array[Byte] = {
-    val d = new Deflater()
-    d.setInput(raw); d.finish()
-    val out = new ByteArrayOutputStream(raw.length / 2 + 32)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-    d.end()
+    val body = typ.getBytes("US-ASCII") ++ payload
+    out.write(body, 0, body.length)
+    be32(out, crc32(body))
     out.toByteArray
   }
 

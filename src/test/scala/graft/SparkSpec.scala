@@ -53,8 +53,8 @@ trait SparkSpec extends AnyFunSuite with TempDirs {
 object SparkSpec {
 
   lazy val session: SparkSession = {
-    // the local codegen settings every GraftSession.builder session gets
-    val s = GraftSession.localCodegen(SparkSession.builder())
+    // the local settings every GraftSession.builder session gets
+    val s = GraftSession.localSettings(SparkSession.builder())
       .master("local[2]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")

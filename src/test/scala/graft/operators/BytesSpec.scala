@@ -9,6 +9,8 @@ import scala.jdk.CollectionConverters._
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.SourceGuard
+
 class BytesSpec extends AnyFunSuite {
 
   private def checkProp(p: Prop, n: Int = 100): Unit = {
@@ -37,6 +39,18 @@ class BytesSpec extends AnyFunSuite {
       Bytes.inflate(framed, 2, framed.length - 2, nowrap = nowrap)
         .exists { case (out, used) => out.sameElements(raw) && used == z.length }
     })
+  }
+
+  test("deflate writes zlib's default-level stream, with or without the " +
+      "zlib wrapper, and inflate reverses it") {
+    checkProp(Prop.forAll(Gen.choose(0, 70000), Gen.choose(1, 255),
+        Gen.oneOf(true, false)) { (n, alphabet, nowrap) =>
+      val raw = Array.tabulate(n)(i => ((i * 31 + i / 7) % alphabet).toByte)
+      val z = Bytes.deflate(raw, nowrap)
+      z.sameElements(deflate(raw, nowrap)) &&
+        Bytes.inflate(z, 0, z.length, nowrap = nowrap)
+          .exists(_._1.sameElements(raw))
+    }, n = 30)
   }
 
   test("output is capped: at the cap it decodes, one byte past it is None") {
@@ -260,6 +274,21 @@ class BytesSpec extends AnyFunSuite {
       """(put|read|write)(U|I)?(Le|Be)?(16|24|32|64)(le|be)?)\(""").r
     val offenders = outsideBytes(line => line.contains("Inflater(") ||
       helper.findFirstIn(line).isDefined)
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  /** The encoders' kernels: the one deflate loop and every CRC-32 live
+    * in operators/Bytes.scala, the one LZW coder (the ClearCode and
+    * end-code arithmetic) in operators/Lzw.scala. Snappy's CRC-32C is
+    * another checksum. */
+  test("no Deflater or CRC32 outside operators/Bytes, no LZW coder " +
+      "outside operators/Lzw") {
+    val offenders = SourceGuard.matching(Seq(
+      ("""Deflater\(|\bnew (java\.util\.zip\.)?CRC32\b|""" +
+        """java\.util\.zip\.(\{[^}]*)?\bCRC32\b""").r ->
+        Some("graft/operators/Bytes.scala"),
+      """(?i)\b(clear|eoi|eod)(code)?\s*=\s*(25[67]\b|1\s*<<)""".r ->
+        Some("graft/operators/Lzw.scala")))
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 

@@ -10,17 +10,19 @@ import graft.SparkSpec
 
 /** The hostile-input contract of every decoder that inflates, reads
   * fixed-width integers or decodes prefix codes through [[Bytes]], of
-  * the other stream codecs, of the media header sniffs and of the
-  * markup decoders on [[Xml]] and [[Json]]: on ANY input it returns
-  * (`None` or a value) without throwing, within 2 s of wall clock and
-  * 256 MiB allocated on the calling thread.
+  * the other stream codecs (LZW included), of the raster decoders, of
+  * the media header sniffs and of the markup decoders on [[Xml]] and
+  * [[Json]]: on ANY input it returns (`None` or a value) without
+  * throwing, within 2 s of wall clock and 256 MiB allocated on the
+  * calling thread.
   *
   * Inputs are valid blobs from each module's own encoder, then
   * truncated, bit-flipped, or with four bytes overwritten by a hostile
   * length (0x7FFFFFF0 or 0xFFFFFFFF, either byte order). The fixed cases
   * are streams built to hang or exhaust a decoder: a zlib header asking
-  * for a preset dictionary, a zip entry declaring a ~2 GiB size, and a
-  * gzip member inflating past the 64 MiB cap; and markup whose size
+  * for a preset dictionary, a zip entry declaring a ~2 GiB size, a
+  * gzip member inflating past the 64 MiB cap, GIF, TIFF and BMP files
+  * of a few bytes declaring 8192×8192 pixels; and markup whose size
   * alone (tens of thousands of elements, attributes or nesting levels)
   * once made a scan quadratic or recursive. */
 class DecoderContractSpec extends SparkSpec {
@@ -226,6 +228,46 @@ class DecoderContractSpec extends SparkSpec {
         VideoHeaders.decodeAvifItems _))
   }
 
+  /** (name, valid image or LZW stream, decode): the raster decoders,
+    * which size their output from a header, and the LZW codec under
+    * them. */
+  private lazy val imageDecoders: Seq[Case] = {
+    val px = Array.tabulate(24 * 40)(i => (i * 7 + i / 24 * 3) % 256)
+    val runs = Array.tabulate(24 * 40)(i => if (i % 24 < 9) 40 else i % 5)
+    val lzwText = ("graft lzw contract " * 60).getBytes("UTF-8")
+    Seq(
+      ("Pixels.decodeGrayGif still", Pixels.encodeGrayGif(24, 40, px,
+        "contract".getBytes("UTF-8")), Pixels.decodeGrayGif _),
+      ("Pixels.decodeGrayGif animated", Pixels.encodeAnimatedGif(24, 40,
+        Seq((px, 5), (px.reverse, 7)), Array.emptyByteArray),
+        Pixels.decodeGrayGif _),
+      ("Pixels.decodeAnimatedGif", Pixels.encodeAnimatedGif(24, 40,
+        Seq((px, 5), (runs, 7)), Array.emptyByteArray),
+        Pixels.decodeAnimatedGif _),
+      ("Pixels.decodeGrayTiff none", Pixels.encodeGrayTiff(24, 40, px, 1),
+        Pixels.decodeGrayTiff _),
+      ("Pixels.decodeGrayTiff PackBits", Pixels.encodeGrayTiff(24, 40, runs,
+        32773), Pixels.decodeGrayTiff _),
+      ("Pixels.decodeGrayTiff LZW", Pixels.encodeGrayTiff(24, 40, px, 5),
+        Pixels.decodeGrayTiff _),
+      ("Pixels.decodeGrayBmp RGB", Pixels.encodeGrayBmp(23, 40, px.take(920)),
+        Pixels.decodeGrayBmp _),
+      ("Pixels.decodeGrayBmp RLE8", Pixels.encodeRle8Bmp(24, 40, runs),
+        Pixels.decodeGrayBmp _),
+      ("Pixels.decodeGrayPgm", Pixels.encodePgm(24, 40, px, "contract"),
+        Pixels.decodeGrayPgm _),
+      ("Pixels.decodePpmLuma", Pixels.encodePpm(24, 40, px.map(_ * 0x010203),
+        "contract"), Pixels.decodePpmLuma _),
+      ("Lzw.decode EarlyChange 1", Lzw.encode(lzwText, Lzw.pdf(1)),
+        (b: Array[Byte]) => Lzw.decode(b, Lzw.pdf(1))),
+      ("Lzw.decode EarlyChange 0", Lzw.encode(lzwText, Lzw.pdf(0)),
+        (b: Array[Byte]) => Lzw.decode(b, Lzw.pdf(0))),
+      ("PdfFilters.decodeChain LZWDecode",
+        PdfFilters.ascii85Encode(Lzw.encode(lzwText, Lzw.Tiff)),
+        (b: Array[Byte]) => PdfFilters.decodeChain(b,
+          Seq("ASCII85Decode", "LZWDecode"))))
+  }
+
   private def utf8(f: String => Any): Array[Byte] => Any =
     b => f(new String(b, "UTF-8"))
 
@@ -308,6 +350,58 @@ class DecoderContractSpec extends SparkSpec {
 
   test("truncated, bit-flipped and length-overwritten headers stay in budget") {
     staysInBudget(sniffs)
+  }
+
+  test("every valid image and LZW stream decodes to a value") {
+    decodesValid(imageDecoders)
+  }
+
+  test("truncated, bit-flipped and length-overwritten images and LZW " +
+      "streams stay in budget") {
+    staysInBudget(imageDecoders)
+  }
+
+  test("images declaring 8192x8192 over a few bytes of data are rejected " +
+      "without allocating the raster") {
+    val side = 8192
+    def le16(v: Int) = Array(v.toByte, (v >> 8).toByte)
+    // GIF: screen and image 8192x8192, no colour table, minimum code
+    // size 8, one sub-block holding ClearCode then EOI (9-bit codes,
+    // LSB first), the block terminator and the trailer: 30 bytes
+    val gif = "GIF89a".getBytes("US-ASCII") ++ le16(side) ++ le16(side) ++
+      Array[Byte](0, 0, 0, 0x2c, 0, 0, 0, 0) ++ le16(side) ++ le16(side) ++
+      Array[Byte](0, 8, 3, 0x00, 0x03, 0x02, 0, 0x3b)
+    assert(gif.length == 30)
+    // an LZW TIFF of 4x4 pixels with ImageWidth and ImageLength patched
+    val tiff = tiffSized(Pixels.encodeGrayTiff(4, 4,
+      Array.tabulate(16)(_ * 9), 5), side, side)
+    // 8-bit BMPs, 16x16 uncompressed and RLE8, with the size patched
+    def bmpSized(b: Array[Byte]) =
+      overwrite(overwrite(b, 18, side, be = false), 22, side, be = false)
+    val bmp = bmpSized(Pixels.encodeGrayBmp(16, 16, Array.tabulate(256)(identity)))
+    val rle = bmpSized(Pixels.encodeRle8Bmp(16, 16,
+      Array.tabulate(256)(i => i / 16 * 16)))
+    Seq(("GIF", gif, Pixels.decodeGrayGif _), ("LZW TIFF", tiff,
+      Pixels.decodeGrayTiff _), ("BMP", bmp, Pixels.decodeGrayBmp _),
+      ("RLE8 BMP", rle, Pixels.decodeGrayBmp _)).foreach {
+      case (name, blob, decode) =>
+        assert(withinBudget(s"$name ${blob.length} B")(decode(blob)).isEmpty,
+          s"$name decoded")
+    }
+  }
+
+  /** `tiff` (little-endian, one IFD) with its ImageWidth and ImageLength
+    * entries set to `w` and `h`. */
+  private def tiffSized(tiff: Array[Byte], w: Int, h: Int): Array[Byte] = {
+    val bb = java.nio.ByteBuffer.wrap(tiff).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val ifd = bb.getInt(4)
+    (0 until bb.getShort(ifd).toInt).map(ifd + 2 + 12 * _).foldLeft(tiff) {
+      (t, at) => bb.getShort(at) match {
+        case 256 => overwrite(t, at + 8, w, be = false)
+        case 257 => overwrite(t, at + 8, h, be = false)
+        case _ => t
+      }
+    }
   }
 
   test("every valid markup document decodes to a value") {

@@ -3,11 +3,11 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
-/** TIFF/PDF-variant LZW, refereed two ways: against the
-  * independently-refereed strip codec in [[Pixels]] (whose streams
-  * the JDK ImageIO TIFF writer validates in PixelsSpec), and against
-  * ImageIO's own LZW-compressed TIFF output directly — plus property
-  * round-trips across the 9→12-bit widths and dictionary resets. */
+/** The one LZW codec: property round-trips of both variants across the
+  * width bumps and dictionary resets, the TIFF variant refereed against
+  * ImageIO's own LZW-compressed TIFF output (the GIF variant and the JDK
+  * TIFF reader are refereed through the image codecs in PixelsSpec),
+  * and hostile input. */
 class LzwSpec extends AnyFunSuite {
 
   private def checkProp(p: Prop, n: Int = 40): Unit = {
@@ -34,21 +34,20 @@ class LzwSpec extends AnyFunSuite {
     checkProp(Prop.forAll(Gen.choose(0, 3), Gen.choose(0, 60000),
         Gen.choose(0L, 9999L), Gen.oneOf(0, 1)) { (kind, n, seed, early) =>
       val data = payload(kind, n, seed)
-      Lzw.lzwDecode(Lzw.lzwEncode(data, early), earlyChange = early)
+      Lzw.decode(Lzw.encode(data, Lzw.pdf(early)), Lzw.pdf(early))
         .exists(_.sameElements(data))
     })
   }
 
-  test("agrees with the Pixels strip codec both directions (that codec " +
-      "is ImageIO-refereed in PixelsSpec)") {
-    checkProp(Prop.forAll(Gen.choose(0, 3), Gen.choose(1, 20000),
-        Gen.choose(0L, 9999L)) { (kind, n, seed) =>
-      val data = payload(kind, n, seed)
-      Lzw.lzwDecode(Pixels.tiffLzwCompress(data))
-        .exists(_.sameElements(data)) &&
-        Pixels.tiffLzwDecompress(Lzw.lzwEncode(data), data.length)
-          .exists(_.sameElements(data))
-    }, n = 30)
+  test("GIF variant round-trips at every minimum code size, and the " +
+      "output cap holds at the exact length") {
+    checkProp(Prop.forAll(Gen.choose(2, 8), Gen.choose(0, 3),
+        Gen.choose(0, 40000), Gen.choose(0L, 9999L)) { (mc, kind, n, seed) =>
+      val data = payload(kind, n, seed).map(b => (b & ((1 << mc) - 1)).toByte)
+      val enc = Lzw.encode(data, Lzw.gif(mc))
+      Lzw.decode(enc, Lzw.gif(mc), data.length).exists(_.sameElements(data)) &&
+        Lzw.decode(enc, Lzw.gif(mc), data.length - 1).isEmpty
+    })
   }
 
   test("ImageIO LZW TIFF strips decode directly") {
@@ -69,30 +68,28 @@ class LzwSpec extends AnyFunSuite {
     writer.write(null, new javax.imageio.IIOImage(img, null, null), param)
     ios.close()
     val tiff = bos.toByteArray
-    // the repo's own TIFF walk finds the LZW strips; decode each with
-    // Lzw and reassemble the raster
+    // the repo's own TIFF walk finds the LZW strips, decodes each with
+    // Lzw and reassembles the raster
     val decoded = Pixels.decodeGrayTiff(tiff)
     assume(decoded.isDefined, "Pixels TIFF walk handles this layout")
     val (w, h, gray) = decoded.get
     assert(w == 64 && h == 48)
     assert(gray.toSeq == px.toSeq)
-    // cross-check: Lzw.lzwDecode on a strip equals Pixels' strip decode
-    // (indirect — full-image equality above already pins the pipeline)
   }
 
   test("hostile input: truncation sweep, missing EOD, bad first code, " +
       "reference past table, output cap") {
     val data = payload(1, 5000, 3L)
-    val enc = Lzw.lzwEncode(data)
-    (0 until enc.length by 3).foreach(k => Lzw.lzwDecode(enc.take(k)))
-    assert(Lzw.lzwDecode(null).isEmpty)
-    assert(Lzw.lzwDecode(Array.emptyByteArray).isEmpty)
+    val enc = Lzw.encode(data, Lzw.Tiff)
+    (0 until enc.length by 3).foreach(k => Lzw.decode(enc.take(k), Lzw.Tiff))
+    assert(Lzw.decode(null, Lzw.Tiff).isEmpty)
+    assert(Lzw.decode(Array.emptyByteArray, Lzw.Tiff).isEmpty)
     // stream that never reaches EOD
-    assert(Lzw.lzwDecode(enc.dropRight(2)).isEmpty)
+    assert(Lzw.decode(enc.dropRight(2), Lzw.Tiff).isEmpty)
     // first code after clear must be a literal: craft 9-bit codes
     // [256 (clear), 300 (dynamic)] -> 100000000 100101100 padded
     val bad = Array[Byte](0x80.toByte, 0x4b, 0x00)
-    assert(Lzw.lzwDecode(bad).isEmpty)
-    assert(Lzw.lzwDecode(Lzw.lzwEncode(data), maxOut = 100).isEmpty)
+    assert(Lzw.decode(bad, Lzw.Tiff).isEmpty)
+    assert(Lzw.decode(enc, Lzw.Tiff, maxOut = 100).isEmpty)
   }
 }

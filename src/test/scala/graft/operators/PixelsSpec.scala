@@ -484,8 +484,8 @@ class PixelsSpec extends AnyFunSuite {
           case 2 => ((i / 9) % 2 * 255).toByte
         }
       }
-      val c = Pixels.tiffLzwCompress(raw)
-      assert(Pixels.tiffLzwDecompress(c, n).exists(_.toSeq == raw.toSeq),
+      val c = Lzw.encode(raw, Lzw.Tiff)
+      assert(Lzw.decode(c, Lzw.Tiff, n).exists(_.toSeq == raw.toSeq),
         s"n=$n shape=$shape")
     }
   }
@@ -531,8 +531,8 @@ class PixelsSpec extends AnyFunSuite {
     // a strip that runs out of bits before EOI rejects (TIFF LZW has
     // no checksum, so mid-strip bit flips are undetectable by design
     // — but truncation is structural and must be)
-    assert(Pixels.tiffLzwDecompress(
-      Pixels.tiffLzwCompress(px.map(_.toByte)).dropRight(3), 64).isEmpty)
+    assert(Lzw.decode(
+      Lzw.encode(px.map(_.toByte), Lzw.Tiff).dropRight(3), Lzw.Tiff, 64).isEmpty)
   }
 
   // ---- BMP RLE8 (round 13) -----------------------------------------------
